@@ -17,8 +17,7 @@ Import-only is fork-safe here: nothing below starts threads or touches
 BLAS compute in the daemon process (the known fork hazard is forking
 AFTER a parent has run threaded BLAS kernels, not after a plain import).
 
-Activated by ``spark.python.daemon.module`` in session.get_spark;
-``SPARK_GRAFT_WARM_DAEMON=0`` reverts to the stock daemon for A/B.
+Activated by ``spark.python.daemon.module`` in session.get_spark.
 """
 
 try:  # never fail worker startup over a missing warm import

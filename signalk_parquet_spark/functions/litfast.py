@@ -18,15 +18,11 @@ Non-finite doubles (inf/nan) have no portable SQL literal — those fall
 back to the classic per-element path (no engine call site produces
 them; embeddings/centroids/codewords/bloom words are all finite by
 construction).
-
-``SPARK_GRAFT_LITFAST=0`` forces the classic path — the A/B switch for
-tools/ab_bench.py, like SPARK_GRAFT_LOCALREL.
 """
 
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Iterable
 
 from pyspark.sql import Column
@@ -51,13 +47,8 @@ def lit_array(vals: Iterable, elem: str) -> Column:
     """
     render = _RENDER[elem]
     vals = list(vals)
-    if os.environ.get("SPARK_GRAFT_LITFAST") == "0" or (
-        elem == "double" and any(not math.isfinite(float(v)) for v in vals)
-    ):
-        if elem == "double":
-            return F.array(*[F.lit(float(v)) for v in vals])
-        cast = "int" if elem == "int" else "long"
-        return F.array(*[F.lit(int(v)).cast(cast) for v in vals])
+    if elem == "double" and any(not math.isfinite(float(v)) for v in vals):
+        return F.array(*[F.lit(float(v)) for v in vals])
     if not vals:
         return F.expr(f"cast(array() as array<{elem}>)")
     return F.expr("array(" + ",".join(render(v) for v in vals) + ")")

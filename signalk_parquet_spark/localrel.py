@@ -49,17 +49,10 @@ def local_frame(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
     DataFrame with ``schema`` (StructType, DDL string, or column-name
     list). Columns are built dtype=object so pandas never coerces (an int
     column with a None must not become float64 NaN); Arrow casts each
-    column to the declared type exactly.
-
-    ``SPARK_GRAFT_LOCALREL=0`` forces the classic pickled-rows path — the
-    A/B switch tools/ab_bench.py flips to time the two lifts on one host."""
-    import os
-
+    column to the declared type exactly."""
     import pandas as pd
 
     rows = list(rows)
-    if os.environ.get("SPARK_GRAFT_LOCALREL") == "0":
-        return spark.createDataFrame(rows, schema)
     names = _schema_names(spark, schema)
     if not rows or names is None:
         # empty frames and unparseable schemas keep the classic path (an

@@ -8,7 +8,7 @@ on 48-bit integer-hashed shingle sets (see SCALE.md).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -52,6 +52,16 @@ def verify_pairs(cand: DataFrame, docs: DataFrame, threshold: float) -> DataFram
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def prefix_len(sz: Column, t: float) -> Column:
+    """Pigeonhole prefix length ``sz − ⌈t·sz⌉ + 1`` (bigint): a set that
+    must share ≥ ⌈t·sz⌉ of its sz tokens with a partner shares at least
+    one of any sz − ⌈t·sz⌉ + 1 of them taken in a common order. The 1e-9
+    absorbs float error in t·sz (0.07·100 = 7.000000000000001 must ceil
+    to 7, not 8 — 8 would cut the prefix one token short and lose true
+    pairs); it can only lengthen a prefix, which the verify absorbs."""
+    return sz - F.ceil(sz * F.lit(t) - F.lit(1e-9)).cast("long") + 1
 
 
 def minhash_lsh_pairs(
@@ -215,7 +225,7 @@ def prefix_jaccard_pairs(
         d.select("id", *block_cols, shl0.alias("shl"))
         .withColumn("sz", F.size("shl"))
     )
-    pre_len = (F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1).cast("int")
+    pre_len = prefix_len(F.col("sz"), threshold).cast("int")
     if not rare_first:
         d = d.withColumn("pre", F.slice(F.col("shl"), 1, pre_len))
     if materialize:
@@ -411,8 +421,7 @@ def containment_join(
         if materialize:
             ix = ix.persist()
             ix.count()
-    m_req = F.ceil(F.col("sz") * F.lit(threshold) - F.lit(1e-9)).cast("long")
-    pre_len = F.col("sz") - m_req + 1
+    pre_len = prefix_len(F.col("sz"), threshold)
     if rare_first:
         # Rarest-INDEX-shingle-first prefix, computed ON the exploded
         # stream: rank each probe's tokens by (index df, tok) and keep the

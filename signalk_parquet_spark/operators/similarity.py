@@ -9,8 +9,6 @@ for determinism (see SCALE.md).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -270,7 +268,7 @@ def _cell_dist_structs(
     parse to the identical tree (same aggregate/zip_with lambdas, same
     literal doubles — functions/litfast rationale), so results and plans
     match; a Column stays on the classic builder."""
-    if isinstance(emb, str) and os.environ.get("SPARK_GRAFT_LITFAST") != "0":
+    if isinstance(emb, str):
         ecol = f"`{emb}`"
         parts = []
         for r in cent_rows:
@@ -1219,19 +1217,22 @@ def kmeans_centroids(
 def _local_lloyd(pdf, k: int, seed: int, max_iter: int) -> list[list[float]]:
     """Seeded Lloyd's algorithm over an already-collected (id, v) frame —
     the driver-local rung of :func:`kmeans_centroids`. Deterministic by
-    construction: rows id-sorted (summation order fixed by data), init =
-    a seeded choice of k distinct input vectors, assignment argmin ties
-    to the lowest centroid id (numpy first-occurrence), empty cells keep
-    their previous centroid (MLlib's behavior). Exactness-of-algorithm is
+    construction: rows sorted by (id, vector components), a total order
+    on the data, so the summation order never depends on partition
+    arrival order (not even for repeated ids); init = a seeded choice of
+    k distinct input vectors, assignment argmin ties to the lowest
+    centroid id (numpy first-occurrence), empty cells keep their previous
+    centroid (MLlib's behavior). Exactness-of-algorithm is
     pinned by a pure-Python reference differential
     (tests/test_similarity_ops.py)."""
     import numpy as np
 
-    order = np.argsort(np.asarray(pdf["id"].tolist()))
-    x = np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
+    x = np.asarray(pdf["v"].tolist(), dtype=np.float64)
     n = len(x)
     if n == 0:
         raise ValueError("k-means fit input is empty")
+    # np.lexsort's LAST key is primary: id, then component 0, 1, ...
+    x = x[np.lexsort((*x.T[::-1], np.asarray(pdf["id"].tolist())))]
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(n, size=min(k, n), replace=False)].copy()
     for _ in range(max_iter):

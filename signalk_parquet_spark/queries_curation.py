@@ -725,11 +725,7 @@ def _with_bloom_hit(
     map-column form was not."""
     pos_cols = _bloom_pos_cols(bits=bits)
     n_words = (int(bits) + 31) // 32
-    # env override of the literal cap: the in-session A/B loop
-    # (tools/ab_bench.py) flips it to 0 to time the join path against the
-    # literal path on identical host conditions
-    cap = int(os.environ.get("SPARK_GRAFT_BLOOM_LIT_CAP", _LIT_WORD_CAP))
-    if n_words <= cap:
+    if n_words <= _LIT_WORD_CAP:
         if callable(dense):
             dense = dense()
         # lit_array, not F.lit(list): py4j converts a Python list one

@@ -322,18 +322,14 @@ def dedup_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
     sharing an actual shingle, not a length coincidence."""
     from .operators.dedup import prefix_jaccard_pairs
 
-    import os
-
     return prefix_jaccard_pairs(
         load(spark, sf, "documents"), "doc_id", "text", ["lang"], 0.5,
         prepared=_shingled_docs(spark, sf).select("id", "lang", "shl"),
         # prepared is the session-cached shingle memo (r12, see
         # containment_pairs): consumers re-derive from cache, no 2nd cache.
-        # rare_first on since r13 (the gate's window slot landed with the
-        # flip — prefix ranked by corpus df on the exploded stream, the
-        # containment_join r12 form); SPARK_GRAFT_RAREFIRST=0 keeps the
-        # hash-order path timeable (the r12 A/B-switch pattern).
-        rare_first=os.environ.get("SPARK_GRAFT_RAREFIRST", "1") != "0",
+        # rare_first since r13: prefix ranked by corpus df on the exploded
+        # stream (the containment_join r12 form)
+        rare_first=True,
         materialize=False,
     )
 

@@ -339,7 +339,7 @@ _WINDOW_FIRST: tuple[str, ...] = (
     "audio_dedup_decisions",
     "video_dedup_decisions",
     "image_dedup_decisions_phash",
-    # --- fill to 50: 24 of the r09 cohort in suggestion order ---
+    # --- fill to 50: 23 of the r09 cohort in suggestion order ---
     "angular_avg",
     "weighted_reagg_1h",
     "tier_rollup_stats_5m",

@@ -55,25 +55,21 @@ def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     )
-    if os.environ.get("SPARK_GRAFT_WARM_DAEMON", "1") not in ("0", "", "off"):
-        # fork-source module pre-import (see daemon_warm docstring): workers
-        # forked mid-session — e.g. the second Python eval of a chained
-        # mapInPandas stage, which the pool warmup cannot reach — inherit
-        # numpy/pandas/pyarrow + the media operators via COW instead of
-        # paying ~1 s of imports against ~30 ms of work per task. The daemon
-        # is spawned as `python -m signalk_parquet_spark.daemon_warm`, so the
-        # package root must be on the env PYTHONPATH the JVM inherits (the
-        # driver process's sys.path does not propagate to spawned daemons).
-        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_root not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_root + (os.pathsep + pp if pp else "")
-            )
-        builder = builder.config(
-            "spark.python.daemon.module", "signalk_parquet_spark.daemon_warm"
-        )
-    spark = builder.getOrCreate()
+    # fork-source module pre-import (see daemon_warm docstring): workers
+    # forked mid-session — e.g. the second Python eval of a chained
+    # mapInPandas stage, which the pool warmup cannot reach — inherit
+    # numpy/pandas/pyarrow + the media operators via COW instead of paying
+    # ~1 s of imports against ~30 ms of work per task. The daemon is
+    # spawned as `python -m signalk_parquet_spark.daemon_warm`, so the
+    # package root must be on the env PYTHONPATH the JVM inherits (the
+    # driver process's sys.path does not propagate to spawned daemons).
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if pkg_root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + pp if pp else "")
+    spark = builder.config(
+        "spark.python.daemon.module", "signalk_parquet_spark.daemon_warm"
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Reading a glob path (context=*) makes FileStreamSink probe the glob
     # for _spark_metadata; the FileNotFoundException it catches INTERNALLY
@@ -110,14 +106,10 @@ def ensure_query_confs(spark: SparkSession) -> None:
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Optional AQE floor on post-shuffle partition size. A floor keeps more
-    # tasks alive for CPU-bound post-shuffle stages, but A/B at sf0.1 showed
-    # it taxes every small query (+0.3-0.7 s each) for no net win once the
-    # CPU-heavy tables are pre-spread in registry.load — so default OFF;
-    # registry's map-side spreading is the right lever, not shuffle sizing.
-    floor = os.environ.get("SPARK_GRAFT_AQE_FLOOR", "off")
-    if floor not in ("0", "off", ""):
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", floor)
+    # No AQE floor on post-shuffle partition size: A/B at sf0.1 showed a
+    # floor taxes every small query (+0.3-0.7 s each) for no net win once
+    # the CPU-heavy tables are pre-spread in registry.load — map-side
+    # spreading is the right lever, not shuffle sizing.
 
 
 def warm_worker_pool(spark: SparkSession) -> None:

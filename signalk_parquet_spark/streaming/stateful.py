@@ -5,16 +5,32 @@ The reference keeps threshold hysteresis and EMA state in in-process JS Maps
 lost on restart, impossible to scale out. Structured Streaming state stores
 give the same semantics with checkpointed, partitioned state.
 
-Two operators:
+Series operators:
   - streaming_threshold_transitions: per-(context, path) hysteresis — emit
     only activated/deactivated transitions across micro-batches.
   - streaming_ema: per-series EMA whose previous value persists in state,
     so the recurrence continues seamlessly across micro-batches.
+
+Near-dup twins — one keep-first state machine (:func:`keep_first_fn`),
+bound per twin to a ``match``/``emit`` pair. Each bucket keeps its
+first-seen items; an arrival matching a kept item emits a match event
+instead of joining; an id the bucket already keeps is skipped, so
+redelivery never self-matches:
+  - streaming_neardup_minhash: MinHash signature agreement per LSH band;
+  - streaming_containment: shingle-set containment, probed by prefix;
+  - streaming_semantic_dedup: embedding cosine per SemDeDup cell;
+  - streaming_audio_neardup: fingerprint bit-error rate;
+  - streaming_image_neardup: dHash/pHash Hamming distance;
+  - streaming_video_neardup: aligned-frame dHash fraction.
+
+Curation sketches: streaming_bloom_screen (stateless), the Misra–Gries
+streaming_heavy_hitters / streaming_grouped_heavy_hitters, and A-ES
+streaming_weighted_sample.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -174,6 +190,106 @@ def streaming_ema(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _timeout(ttl_s: float | None) -> str:
+    """The GroupStateTimeout a ``ttl_s`` option selects."""
+    if ttl_s is None:
+        return GroupStateTimeout.NoTimeout
+    return GroupStateTimeout.ProcessingTimeTimeout
+
+
+# --- the keep-first near-dup state machine --------------------------------------------
+def _same(v):
+    return v
+
+
+def _split(joined: str) -> list[str]:
+    return joined.split("|")
+
+
+def _join(parts: list[str]) -> str:
+    return "|".join(parts)
+
+
+def keep_first_fn(
+    schema: T.StructType,
+    id_col: str,
+    item_col: str,
+    match: Callable[[Any, Any], Any],
+    emit: Callable[[tuple, int, int, Any], dict[str, Any]],
+    cap: int,
+    ttl_s: float | None = None,
+    *,
+    item: Callable[[Any], Any],
+    store: Callable[[Any], Any] = _same,
+    probe_col: str | None = None,
+):
+    """Lift one near-dup twin's ``match``/``emit`` pair into the
+    applyInPandasWithState function for one bucket of its stream.
+
+    Bucket state is two parallel arrays: the ids of the first-seen
+    arrivals the bucket keeps and their items (``item`` parses a state
+    value or an arriving ``item_col`` value into the form ``match``
+    compares; ``store`` renders it back for the state). Per trigger the
+    arrivals are taken in id order (deterministic within a batch), and
+    for each one:
+
+      - an id the bucket already keeps is skipped — no probe, no event,
+        no insert — so a redelivered batch (at-least-once sources,
+        replayed files) never matches an item against itself;
+      - otherwise the kept items are probed in insertion order; the first
+        ``match(item, kept)`` that is not None is the score, the arrival
+        emits ``emit(key, id, kept_id, score)`` and is NOT kept
+        (keep-first-seen, the batch family's keep-lowest-id rule);
+      - a miss joins the bucket while it holds fewer than ``cap`` items
+        (the winnowing max_df lesson: an uncapped hot bucket grows O(n)
+        state and O(n²) compares).
+
+    Rows whose boolean ``probe_col`` is false insert without probing.
+    With ``ttl_s`` the timeout is re-armed after every data trigger and a
+    bucket idle past it is evicted (state removed, empty output) — the
+    bounded-state mode: dedup then only promises to catch dups arriving
+    within the TTL window."""
+    cols = [f.name for f in schema.fields]
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            yield pd.DataFrame(columns=cols)
+            return
+        ids, items = state.get if state.exists else ([], [])
+        ids, items = [int(i) for i in ids], [item(v) for v in items]
+        kept = set(ids)
+        out: list[dict[str, Any]] = []
+        for pdf in pdfs:
+            pdf = pdf.sort_values(id_col)
+            probes = pdf[probe_col].tolist() if probe_col else [True] * len(pdf)
+            # zip over .tolist() columns, never iterrows (CLAUDE.md: a
+            # Series per row cost 1.6x end-to-end on this path)
+            for i, raw, probe in zip(pdf[id_col].tolist(), pdf[item_col].tolist(), probes):
+                i = int(i)
+                if i in kept:  # redelivered: already kept here
+                    continue
+                it = item(raw)
+                for kept_id, k in (zip(ids, items) if probe else ()):
+                    score = match(it, k)
+                    if score is not None:
+                        out.append(emit(key, i, kept_id, score))
+                        break
+                else:  # no match: keep it while the bucket has room
+                    if len(ids) < cap:
+                        ids.append(i)
+                        items.append(it)
+                        kept.add(i)
+        state.update((ids, [store(v) for v in items]))
+        if ttl_s is not None:
+            state.setTimeoutDuration(int(ttl_s * 1000))
+        yield pd.DataFrame(out, columns=cols)
+
+    return fn
+
+
 # --- streaming MinHash near-dup dedup -------------------------------------------------
 NEARDUP_MATCH_SCHEMA = T.StructType(
     [
@@ -194,56 +310,21 @@ _NEARDUP_STATE = T.StructType(
 
 
 def make_neardup_fn(agree: float, max_bucket: int, ttl_s: float | None = None):
-    """applyInPandasWithState function for one LSH (band, bucket) group.
+    """Keep-first function (:func:`keep_first_fn`) for one LSH (band,
+    bucket) group: an arriving doc whose full MinHash signature agrees
+    with a kept one on >= ``agree`` of its rows is a match."""
 
-    For each incoming doc (id order within the batch — deterministic):
-    compare its full MinHash signature against every signature kept in this
-    bucket; agreement fraction >= ``agree`` emits a match event and keeps
-    the state unchanged (the dup is NOT added — matching the batch family's
-    keep-lowest-id rule); otherwise the doc joins the bucket state, capped
-    at ``max_bucket`` entries (the winnowing max_df lesson: an uncapped hot
-    bucket grows O(n) state and O(n²) compares)."""
+    def match(sig, kept):
+        frac = sum(1 for a, b in zip(sig, kept) if a == b) / len(sig)
+        return frac if frac >= agree else None
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in NEARDUP_MATCH_SCHEMA.fields])
-            return
-        ids, sigs = state.get if state.exists else ([], [])
-        ids, sigs = list(ids), [s.split("|") for s in sigs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("doc_id")
-            # plain-list iteration: iterrows() costs a Series per row and
-            # dominated the whole stream's wall (measured 1.6x end-to-end)
-            for doc_id, joined in zip(pdf["doc_id"].tolist(), pdf["sig"].tolist()):
-                sig = joined.split("|")
-                hit = None
-                for kept_id, kept_sig in zip(ids, sigs):
-                    n_eq = sum(1 for a, b in zip(sig, kept_sig) if a == b)
-                    if n_eq / len(sig) >= agree:
-                        hit = (kept_id, n_eq / len(sig))
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "dup_of": int(hit[0]),
-                            "band": int(key[0]),
-                            "agreement": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(doc_id))
-                    sigs.append(sig)
-        state.update((ids, ["|".join(s) for s in sigs]))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in NEARDUP_MATCH_SCHEMA.fields])
+    def emit(key, doc_id, kept_id, frac):
+        return {"doc_id": doc_id, "dup_of": kept_id, "band": int(key[0]), "agreement": frac}
 
-    return fn
+    return keep_first_fn(
+        NEARDUP_MATCH_SCHEMA, "doc_id", "sig", match, emit, max_bucket, ttl_s,
+        item=_split, store=_join,
+    )
 
 
 def streaming_neardup_minhash(
@@ -294,12 +375,7 @@ def streaming_neardup_minhash(
     ).withColumnsRenamed({"pos": "band", "col": "bkey"})
     return exploded.groupBy("band", "bkey").applyInPandasWithState(
         make_neardup_fn(agree, max_bucket, ttl_s),
-        NEARDUP_MATCH_SCHEMA,
-        _NEARDUP_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        NEARDUP_MATCH_SCHEMA, _NEARDUP_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -324,67 +400,34 @@ _CONTAINMENT_STATE = T.StructType(
 
 
 def make_containment_fn(threshold: float, max_bucket: int, ttl_s: float | None = None):
-    """applyInPandasWithState function for one shingle-token group of the
-    streaming containment twin.
+    """Keep-first function (:func:`keep_first_fn`) for one shingle-token
+    group of the streaming containment twin.
 
     The group IS one posting of a state-store inverted index: it holds
     the full shingle sets of the first-seen docs containing this token.
     An arriving PREFIX row (in_prefix) probes every kept set — exact
-    containment |A∩B|/|A| ≥ ``threshold`` emits a match (first kept
-    match in insertion order, deterministic) and the doc does NOT join
-    this group; non-prefix rows and non-matching docs insert (capped at
-    ``max_bucket`` — the winnowing max_df lesson: a stop-shingle group
-    would otherwise grow O(n) state and O(n²) compares). The per-group
-    insert decision is the same relaxation the minhash twin makes per
-    band: a doc matched in one group may still enter others — consumers
-    drop distinct doc_ids, and the batch twin remains the exact
+    containment |A∩B|/|A| ≥ ``threshold`` emits a match and the doc does
+    NOT join this group; non-prefix rows and non-matching docs insert.
+    The per-group insert decision is the same relaxation the minhash twin
+    makes per band: a doc matched in one group may still enter others —
+    consumers drop distinct doc_ids, and the batch twin remains the exact
     arbiter."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in CONTAINMENT_MATCH_SCHEMA.fields])
-            return
-        ids, sets = state.get if state.exists else ([], [])
-        ids, sets = list(ids), list(sets)
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("doc_id")
-            for doc_id, sset, in_pre in zip(
-                pdf["doc_id"].tolist(), pdf["sset"].tolist(), pdf["in_prefix"].tolist()
-            ):
-                parts = sset.split("|")
-                a = set(parts)
-                size_a = len(parts)
-                hit = None
-                if in_pre:
-                    for kid, kset in zip(ids, sets):
-                        inter = len(a.intersection(kset.split("|")))
-                        if inter / size_a >= threshold:
-                            hit = (kid, inter)
-                            break
-                if hit is not None:
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "contained_in": int(hit[0]),
-                            "tok": int(key[0]),
-                            "inter": int(hit[1]),
-                            "size_a": int(size_a),
-                            "containment": hit[1] / size_a,
-                        }
-                    )
-                elif len(ids) < max_bucket and int(doc_id) not in ids:
-                    ids.append(int(doc_id))
-                    sets.append(sset)
-        state.update((ids, sets))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in CONTAINMENT_MATCH_SCHEMA.fields])
+    def match(parts, kept):
+        inter = len(set(parts).intersection(kept))
+        return (inter, len(parts)) if inter / len(parts) >= threshold else None
 
-    return fn
+    def emit(key, doc_id, kept_id, score):
+        inter, size_a = score
+        return {
+            "doc_id": doc_id, "contained_in": kept_id, "tok": int(key[0]),
+            "inter": inter, "size_a": size_a, "containment": inter / size_a,
+        }
+
+    return keep_first_fn(
+        CONTAINMENT_MATCH_SCHEMA, "doc_id", "sset", match, emit, max_bucket, ttl_s,
+        item=_split, store=_join, probe_col="in_prefix",
+    )
 
 
 def streaming_containment(
@@ -413,16 +456,14 @@ def streaming_containment(
     containment); consumers drop distinct doc_ids (one event per
     matching prefix group, like the minhash twin's per-band events)."""
     from ..functions.text import distinct_shingles, hashed_shingles
+    from ..operators.dedup import prefix_len
 
     shl = F.sort_array(hashed_shingles(distinct_shingles(text_col)))
     base = stream.select(
         F.col(id_col).alias("doc_id"), shl.alias("shl")
     ).filter(F.size("shl") > 0)
-    sz = F.size("shl")
-    m_req = F.ceil(sz * F.lit(threshold) - F.lit(1e-9)).cast("int")
-    pre_len = sz - m_req + F.lit(1)
     ex = (
-        base.withColumn("_pre_len", pre_len)
+        base.withColumn("_pre_len", prefix_len(F.size("shl"), threshold))
         .select(
             "doc_id",
             "_pre_len",
@@ -437,12 +478,7 @@ def streaming_containment(
     )
     return ex.groupBy("tok").applyInPandasWithState(
         make_containment_fn(threshold, max_bucket, ttl_s),
-        CONTAINMENT_MATCH_SCHEMA,
-        _CONTAINMENT_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        CONTAINMENT_MATCH_SCHEMA, _CONTAINMENT_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -464,59 +500,42 @@ _SEMANTIC_STATE = T.StructType(
 )
 
 
+def _with_norm(emb) -> tuple[list[float], float]:
+    # plain Python floats: numpy scalars in the state tuple break the
+    # JVM-side unpickler (net.razorvine ClassDict error)
+    v = [float(x) for x in emb]
+    n2 = 0.0
+    for x in v:  # dim-ordered: matches the batch/oracle forms
+        n2 += x * x
+    return v, n2
+
+
 def make_semantic_fn(tau: float, max_cell: int):
-    """applyInPandasWithState function for one SemDeDup cell.
+    """Keep-first function (:func:`keep_first_fn`) for one SemDeDup cell.
 
     Same contract as the batch operator's one-pass rule under arrival
     order: an arriving vector matching any KEPT vector in its cell at
     cosine >= tau emits a match event and is not added; otherwise it joins
     the cell state (capped — run the exact-dup screen upstream so floods
-    are genuine near-dup mass). Cosines accumulate dim-ordered, so a
-    stream fed in id order reproduces batch semantic_keep decisions
+    are genuine near-dup mass). Norms and dots accumulate dim-ordered, so
+    a stream fed in id order reproduces batch semantic_keep decisions
     exactly (pinned by test)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ids, embs = state.get if state.exists else ([], [])
-        ids, embs = list(ids), [list(e) for e in embs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("vec_id")
-            for vec_id, emb in zip(pdf["vec_id"].tolist(), pdf["emb"].tolist()):
-                # plain Python floats: numpy scalars in the state tuple break
-                # the JVM-side unpickler (net.razorvine ClassDict error)
-                emb = [float(x) for x in emb]
-                n2 = 0.0
-                for x in emb:  # dim-ordered: matches the batch/oracle forms
-                    n2 += x * x
-                hit = None
-                for kept_id, kept in zip(ids, embs):
-                    dacc = 0.0
-                    kn2 = 0.0
-                    for a, b in zip(emb, kept):
-                        dacc += a * b
-                        kn2 += b * b
-                    cos = dacc / (n2 * kn2) ** 0.5
-                    if cos >= tau:
-                        hit = (kept_id, cos)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "vec_id": int(vec_id),
-                            "dup_of": int(hit[0]),
-                            "cell": int(key[0]),
-                            "cos": hit[1],
-                        }
-                    )
-                elif len(ids) < max_cell:
-                    ids.append(int(vec_id))
-                    embs.append(emb)
-        state.update((ids, embs))
-        yield pd.DataFrame(out, columns=[f.name for f in SEMANTIC_MATCH_SCHEMA.fields])
+    def match(a, kept):
+        (v, n2), (kv, kn2) = a, kept
+        dacc = 0.0
+        for x, y in zip(v, kv):
+            dacc += x * y
+        cos = dacc / (n2 * kn2) ** 0.5
+        return cos if cos >= tau else None
 
-    return fn
+    def emit(key, vec_id, kept_id, cos):
+        return {"vec_id": vec_id, "dup_of": kept_id, "cell": int(key[0]), "cos": cos}
+
+    return keep_first_fn(
+        SEMANTIC_MATCH_SCHEMA, "vec_id", "emb", match, emit, max_cell,
+        item=_with_norm, store=lambda t: t[0],
+    )
 
 
 def streaming_semantic_dedup(
@@ -561,10 +580,7 @@ def streaming_semantic_dedup(
     ).withColumn("cell", cell_argmin_col(centroid_rows, "emb"))
     return assigned.groupBy("cell").applyInPandasWithState(
         make_semantic_fn(tau, max_cell),
-        SEMANTIC_MATCH_SCHEMA,
-        _SEMANTIC_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        SEMANTIC_MATCH_SCHEMA, _SEMANTIC_STATE, "append", GroupStateTimeout.NoTimeout,
     )
 
 
@@ -587,65 +603,26 @@ _AUDIO_STATE = T.StructType(
 
 
 def make_audio_neardup_fn(max_ber: float, max_bucket: int, ttl_s: float | None = None):
-    """applyInPandasWithState function for one (pos, sub-fingerprint)
-    bucket. An arriving clip is compared (aligned bit-error rate over the
-    common prefix — the same arithmetic as operators.audio.audio_neardup_
-    pairs' JVM verify) against every clip kept in this bucket; BER <=
-    ``max_ber`` emits a match event and leaves state unchanged (keep-
-    first-seen, the ladder's rule); otherwise the clip joins the bucket,
-    capped at ``max_bucket``. With ``ttl_s`` set, a bucket idle longer
-    than the TTL is EVICTED via processing-time timeout — the bounded-
-    state mode every long-running deployment needs (dedup only promises
-    to catch dups arriving within the TTL window)."""
-
+    """Keep-first function (:func:`keep_first_fn`) for one (pos,
+    sub-fingerprint) bucket: the score is the aligned bit-error rate over
+    the common prefix — the same arithmetic as operators.audio.
+    audio_neardup_pairs' JVM verify — and BER <= ``max_ber`` matches."""
     from ..operators.audio import fingerprint_bits
 
-    bits = float(fingerprint_bits())  # the ACTUAL bit width, not 32 —
-    # computed once here and captured by the closure (the fn runs once
-    # per occupied bucket per trigger)
+    bits = float(fingerprint_bits())  # the ACTUAL bit width, not 32
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in AUDIO_MATCH_SCHEMA.fields])
-            return
-        ids, fps = state.get if state.exists else ([], [])
-        ids, fps = list(ids), [list(f) for f in fps]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, fp in zip(pdf["media_id"].tolist(), pdf["fp"].tolist()):
-                fp = [int(v) for v in fp]
-                hit = None
-                for kid, kfp in zip(ids, fps):
-                    n = min(len(fp), len(kfp))
-                    errs = sum(
-                        bin(a ^ b).count("1") for a, b in zip(fp[:n], kfp[:n])
-                    )
-                    ber = errs / (bits * n)
-                    if ber <= max_ber:
-                        hit = (kid, ber)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "pos": int(key[0]),
-                            "ber": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    fps.append(fp)
-        state.update((ids, fps))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in AUDIO_MATCH_SCHEMA.fields])
+    def match(fp, kept):
+        n = min(len(fp), len(kept))
+        ber = sum(bin(a ^ b).count("1") for a, b in zip(fp, kept)) / (bits * n)
+        return ber if ber <= max_ber else None
 
-    return fn
+    def emit(key, media_id, kept_id, ber):
+        return {"media_id": media_id, "dup_of": kept_id, "pos": int(key[0]), "ber": ber}
+
+    return keep_first_fn(
+        AUDIO_MATCH_SCHEMA, "media_id", "fp", match, emit, max_bucket, ttl_s,
+        item=lambda fp: [int(v) for v in fp],
+    )
 
 
 def streaming_audio_neardup(
@@ -698,12 +675,7 @@ def streaming_audio_neardup(
     )
     return exploded.groupBy("pos", "sub").applyInPandasWithState(
         make_audio_neardup_fn(max_ber, max_bucket, ttl_s),
-        AUDIO_MATCH_SCHEMA,
-        _AUDIO_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        AUDIO_MATCH_SCHEMA, _AUDIO_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -726,50 +698,25 @@ _IMAGE_STATE = T.StructType(
 )
 
 
+def _hamming64(a: int, b: int) -> int:
+    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+
 def make_image_neardup_fn(max_hamming: int, max_bucket: int, ttl_s: float | None = None):
-    """applyInPandasWithState function for one (band, value) dHash bucket:
-    an arriving image within ``max_hamming`` of any kept hash emits a
-    match event; otherwise it joins the bucket (capped). TTL as in the
-    audio rung."""
+    """Keep-first function (:func:`keep_first_fn`) for one (band, value)
+    dHash bucket: an arriving image within ``max_hamming`` of a kept hash
+    matches."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in IMAGE_MATCH_SCHEMA.fields])
-            return
-        ids, hs = state.get if state.exists else ([], [])
-        ids, hs = list(ids), list(hs)
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, h in zip(pdf["media_id"].tolist(), pdf["h"].tolist()):
-                h = int(h)
-                hit = None
-                for kid, kh in zip(ids, hs):
-                    ham = bin((h ^ int(kh)) & ((1 << 64) - 1)).count("1")
-                    if ham <= max_hamming:
-                        hit = (kid, ham)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "band": int(key[0]),
-                            "hamming": int(hit[1]),
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    hs.append(h)
-        state.update((ids, hs))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in IMAGE_MATCH_SCHEMA.fields])
+    def match(h, kept):
+        ham = _hamming64(h, kept)
+        return ham if ham <= max_hamming else None
 
-    return fn
+    def emit(key, media_id, kept_id, ham):
+        return {"media_id": media_id, "dup_of": kept_id, "band": int(key[0]), "hamming": ham}
+
+    return keep_first_fn(
+        IMAGE_MATCH_SCHEMA, "media_id", "h", match, emit, max_bucket, ttl_s, item=int
+    )
 
 
 def streaming_image_neardup(
@@ -820,12 +767,7 @@ def streaming_image_neardup(
     )
     return exploded.groupBy("band", "bval").applyInPandasWithState(
         make_image_neardup_fn(max_hamming, max_bucket, ttl_s),
-        IMAGE_MATCH_SCHEMA,
-        _IMAGE_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        IMAGE_MATCH_SCHEMA, _IMAGE_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -851,65 +793,29 @@ def make_video_neardup_fn(
     min_frac: float, max_hamming: int, max_bucket: int,
     ttl_s: float | None = None, min_aligned: int = 2,
 ):
-    """applyInPandasWithState function for one (frame_idx, band, value)
-    bucket: an arriving clip is scored against every kept clip as the
-    fraction of aligned frames within ``max_hamming`` (the batch verify's
-    arithmetic); frac >= ``min_frac`` emits a match, else the clip joins
-    the bucket (capped). TTL as in the audio rung."""
+    """Keep-first function (:func:`keep_first_fn`) for one (frame_idx,
+    band, value) bucket: the score is the fraction of aligned frames
+    within ``max_hamming`` (the batch verify's arithmetic) over at least
+    ``min_aligned`` frames; frac >= ``min_frac`` matches.
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in VIDEO_MATCH_SCHEMA.fields])
-            return
-        ids, fhs = state.get if state.exists else ([], [])
-        # slot-dense hash lists: None marks an undecodable frame, so
-        # alignment is by FRAME SLOT, not list position — one corrupt
-        # frame must not shift every later comparison (state arrays hold
-        # the None slots as SQL nulls)
-        ids = list(ids)
-        fhs = [[None if v is None else int(v) for v in f] for f in fhs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, fh in zip(pdf["media_id"].tolist(), pdf["fh"].tolist()):
-                fh = [None if v is None else int(v) for v in fh]
-                hit = None
-                for kid, kfh in zip(ids, fhs):
-                    pairs = [
-                        (a, b)
-                        for a, b in zip(fh, kfh)
-                        if a is not None and b is not None
-                    ]
-                    n = len(pairs)
-                    m = sum(
-                        1
-                        for a, b in pairs
-                        if bin((a ^ b) & ((1 << 64) - 1)).count("1") <= max_hamming
-                    )
-                    if n >= min_aligned and m / n >= min_frac:
-                        hit = (kid, m / n)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "frame_pos": int(key[0]),
-                            "frac": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    fhs.append(fh)
-        state.update((ids, fhs))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in VIDEO_MATCH_SCHEMA.fields])
+    Hash lists are slot-dense: None marks an undecodable frame, so
+    alignment is by FRAME SLOT, not list position — one corrupt frame
+    must not shift every later comparison (state arrays hold the None
+    slots as SQL nulls)."""
 
-    return fn
+    def match(fh, kept):
+        pairs = [(a, b) for a, b in zip(fh, kept) if a is not None and b is not None]
+        n = len(pairs)
+        m = sum(1 for a, b in pairs if _hamming64(a, b) <= max_hamming)
+        return m / n if n >= min_aligned and m / n >= min_frac else None
+
+    def emit(key, media_id, kept_id, frac):
+        return {"media_id": media_id, "dup_of": kept_id, "frame_pos": int(key[0]), "frac": frac}
+
+    return keep_first_fn(
+        VIDEO_MATCH_SCHEMA, "media_id", "fh", match, emit, max_bucket, ttl_s,
+        item=lambda fh: [None if v is None else int(v) for v in fh],
+    )
 
 
 def streaming_video_neardup(
@@ -978,12 +884,7 @@ def streaming_video_neardup(
     )
     return exploded.groupBy("frame_pos", "band", "bval").applyInPandasWithState(
         make_video_neardup_fn(min_frac, max_hamming, max_bucket, ttl_s, min_aligned),
-        VIDEO_MATCH_SCHEMA,
-        _VIDEO_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        VIDEO_MATCH_SCHEMA, _VIDEO_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -1175,12 +1076,7 @@ def streaming_heavy_hitters(
     )
     return toks.groupBy("grp").applyInPandasWithState(
         make_heavy_hitters_fn(m, ttl_s),
-        HH_SKETCH_SCHEMA,
-        _HH_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        HH_SKETCH_SCHEMA, _HH_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -1252,12 +1148,7 @@ def streaming_grouped_heavy_hitters(
             GHH_SKETCH_SCHEMA,
             lambda key: {"g": str(key[0]), "grp": int(key[1])},
         ),
-        GHH_SKETCH_SCHEMA,
-        _HH_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        GHH_SKETCH_SCHEMA, _HH_STATE, "append", _timeout(ttl_s),
     )
 
 
@@ -1415,10 +1306,5 @@ def streaming_weighted_sample(
     )
     return keyed.groupBy("grp").applyInPandasWithState(
         make_weighted_sample_fn(k, ttl_s),
-        WSAMPLE_SCHEMA,
-        _WSAMPLE_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        WSAMPLE_SCHEMA, _WSAMPLE_STATE, "append", _timeout(ttl_s),
     )

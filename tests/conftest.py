@@ -105,6 +105,7 @@ SLOWTAIL = {
     "test_streaming.py::test_streaming_image_neardup_phash_method",  # 6.2s
     "test_streaming.py::test_streaming_ingest_to_buffer",  # 2.6s
     "test_streaming.py::test_streaming_neardup_minhash_across_batches",  # 23.3s
+    "test_streaming.py::test_streaming_neardup_minhash_redelivered_file",  # 5.1s (4 cores, warm session)
     "test_streaming.py::test_streaming_neardup_ttl_evicts_idle_state",  # 32.9s
     "test_streaming.py::test_streaming_rollup_angular_matches_batch_tier",  # 7.8s
     "test_streaming.py::test_streaming_rollup_windowed",  # 6.7s

@@ -150,6 +150,40 @@ def test_kmeans_local_rung_matches_python_reference(spark):
         )
 
 
+def test_local_lloyd_independent_of_row_order():
+    """The driver-local Lloyd rung sorts by (id, vector components), so
+    with REPEATED ids the centroids still cannot depend on arrival order
+    (which follows scan partitioning): two permutations of one frame give
+    bit-identical centroids."""
+    import numpy as np
+    import pandas as pd
+
+    from signalk_parquet_spark.operators.similarity import _local_lloyd
+
+    rng = np.random.default_rng(5)
+    ids = [i // 3 for i in range(60)]  # every id three times
+    vecs = [[float(v) for v in rng.normal(size=4)] for _ in ids]
+    pdf = pd.DataFrame({"id": ids, "v": vecs})
+    runs = [
+        _local_lloyd(pdf.iloc[perm].reset_index(drop=True), 4, 7, 5)
+        for perm in (np.arange(60), rng.permutation(60))
+    ]
+    assert runs[0] == runs[1]
+
+
+def test_prefix_len_absorbs_float_error(spark):
+    """0.07 * 100 is 7.000000000000001 in IEEE doubles; the pigeonhole
+    prefix must still require 7 shared tokens, not 8: 100 - 7 + 1 = 94."""
+    from pyspark.sql import functions as F
+
+    from signalk_parquet_spark.operators.dedup import prefix_len
+
+    row = spark.range(1).select(
+        prefix_len(F.lit(100), 0.07).alias("a"), prefix_len(F.lit(10), 0.5).alias("b")
+    ).first()
+    assert (row["a"], row["b"]) == (94, 6)
+
+
 def test_kmeans_both_rungs_serve_ivf(spark):
     """The distributed MLlib rung (local_threshold=0) and the driver-local
     rung produce different-but-valid quantizers: both must carry the IVF

@@ -37,10 +37,9 @@ def _canon(rows):
     )
 
 
-def test_local_frame_values_match_classic(spark, monkeypatch):
+def test_local_frame_values_match_classic(spark):
     lifted = local_frame(spark, _ROWS, _SCHEMA)
-    monkeypatch.setenv("SPARK_GRAFT_LOCALREL", "0")
-    classic = local_frame(spark, _ROWS, _SCHEMA)
+    classic = spark.createDataFrame(_ROWS, _SCHEMA)
     assert lifted.schema == classic.schema
     assert _canon(lifted.collect()) == _canon(classic.collect())
     # spot-check the hazard values survived exactly
@@ -51,14 +50,13 @@ def test_local_frame_values_match_classic(spark, monkeypatch):
     assert by_id[2**62]["id"] == 2**62                  # no int truncation
 
 
-def test_local_frame_plan_is_local_not_pickled_rdd(spark, monkeypatch):
+def test_local_frame_plan_is_local_not_pickled_rdd(spark):
     lifted = local_frame(spark, _ROWS, _SCHEMA)
     plan = lifted._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan, plan
     assert "LocalTableScan" in plan, plan
-    # the A/B switch really does restore the classic pickled-RDD lift
-    monkeypatch.setenv("SPARK_GRAFT_LOCALREL", "0")
-    classic = local_frame(spark, _ROWS, _SCHEMA)
+    # the classic list lift this replaces scans a pickled Python RDD
+    classic = spark.createDataFrame(_ROWS, _SCHEMA)
     assert "ExistingRDD" in classic._jdf.queryExecution().executedPlan().toString()
 
 

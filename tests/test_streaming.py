@@ -389,6 +389,38 @@ def test_streaming_neardup_minhash_across_batches(spark, tmp_path):
     assert not any(d in (2, 4) for d, _, _ in got)
 
 
+def test_streaming_neardup_minhash_redelivered_file(spark, tmp_path):
+    """An upstream retry lands the same rows again under a new file name,
+    so the file source delivers them twice. The replayed docs must not
+    match themselves: the only events are the genuine near-copy's."""
+    from signalk_parquet_spark.streaming.stateful import streaming_neardup_minhash
+
+    a = "the quick brown fox jumps over the lazy dog again and again today"
+    rows = [(1, a), (2, a.replace("today", "tonight"))]
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "redeliver_src")
+    for _ in range(2):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    )
+    q = (
+        streaming_neardup_minhash(stream, k=8, bands=4, agree=0.5)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("redeliver_out")
+        .option("checkpointLocation", str(tmp_path / "redeliver_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {
+        (r["doc_id"], r["dup_of"])
+        for r in spark.sql("SELECT * FROM redeliver_out").collect()
+    }
+    assert got == {(2, 1)}
+
+
 def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
     """Streaming SemDeDup fed in id order: its greedy keeper-rule drop set
     must equal a driver-side replication of the greedy rule EXACTLY (same
@@ -703,6 +735,7 @@ def test_stateful_fns_timeout_branches_evict():
 
     from signalk_parquet_spark.streaming.stateful import (
         make_audio_neardup_fn,
+        make_containment_fn,
         make_image_neardup_fn,
         make_neardup_fn,
         make_video_neardup_fn,
@@ -711,6 +744,8 @@ def test_stateful_fns_timeout_branches_evict():
     cases = [
         (make_neardup_fn(0.5, 64, ttl_s=2.0), (0, "k"),
          pd.DataFrame({"doc_id": [1], "sig": ["a|b|c|d"]})),
+        (make_containment_fn(0.8, 64, ttl_s=2.0), (7,),
+         pd.DataFrame({"doc_id": [1], "sset": ["1|2|3"], "in_prefix": [True]})),
         (make_audio_neardup_fn(0.35, 64, ttl_s=2.0), (0, 7),
          pd.DataFrame({"media_id": [1], "fp": [[5, 6]]})),
         (make_image_neardup_fn(3, 64, ttl_s=2.0), (0, 7),
@@ -738,8 +773,10 @@ def test_stateful_fns_match_path_keeps_state_unchanged():
 
     from signalk_parquet_spark.streaming.stateful import (
         make_audio_neardup_fn,
+        make_containment_fn,
         make_image_neardup_fn,
         make_neardup_fn,
+        make_semantic_fn,
         make_video_neardup_fn,
     )
 
@@ -747,6 +784,12 @@ def test_stateful_fns_match_path_keeps_state_unchanged():
         (make_neardup_fn(0.5, 64), (0, "k"),
          pd.DataFrame({"doc_id": [1], "sig": ["a|b|c|d"]}),
          pd.DataFrame({"doc_id": [9], "sig": ["a|b|c|X"]})),   # 3/4 agree
+        (make_containment_fn(0.8, 64), (7,),
+         pd.DataFrame({"doc_id": [1], "sset": ["1|2|3|4|5"], "in_prefix": [True]}),
+         pd.DataFrame({"doc_id": [9], "sset": ["1|2|3|4"], "in_prefix": [True]})),
+        (make_semantic_fn(0.9, 64), (7,),
+         pd.DataFrame({"vec_id": [1], "emb": [[1.0, 0.0]]}),
+         pd.DataFrame({"vec_id": [9], "emb": [[0.99, 0.1]]})),  # cos ~0.995
         (make_audio_neardup_fn(0.35, 64), (0, 7),
          pd.DataFrame({"media_id": [1], "fp": [[5, 6]]}),
          pd.DataFrame({"media_id": [9], "fp": [[5, 7]]})),     # few bit errors
@@ -773,21 +816,84 @@ def test_stateful_fns_bucket_cap_stops_growth():
     O(n^2) compares)."""
     import pandas as pd
 
-    from signalk_parquet_spark.streaming.stateful import make_image_neardup_fn
+    from signalk_parquet_spark.streaming.stateful import (
+        make_containment_fn,
+        make_image_neardup_fn,
+        make_semantic_fn,
+    )
 
-    fn = make_image_neardup_fn(0, max_bucket=2)  # exact-match only, cap 2
-    st = _FakeState()
-    far = [0, 1 << 20, 1 << 40]  # pairwise Hamming 2 > 0: never match
-    for k, h in enumerate(far):
-        out = [r for o in fn((0, 7), iter([pd.DataFrame({"media_id": [k], "h": [h]})]), st)
-               for _, r in o.iterrows()]
-        assert out == []
-    ids, hs = st.get
-    assert list(ids) == [0, 1] and list(hs) == far[:2]  # third never joined
-    # an exact copy of a KEPT entry still matches even with the bucket full
-    out = [r for o in fn((0, 7), iter([pd.DataFrame({"media_id": [9], "h": [far[1]]})]), st)
-           for _, r in o.iterrows()]
-    assert len(out) == 1 and out[0].iloc[1] == 1
+    cases = [  # three pairwise non-matching items per twin, cap 2
+        (make_image_neardup_fn(0, max_bucket=2), "media_id", "h",  # exact-match only
+         [0, 1 << 20, 1 << 40], {}),                # pairwise Hamming 2 > 0
+        (make_containment_fn(0.8, max_bucket=2), "doc_id", "sset",
+         ["1|2", "3|4", "5|6"], {"in_prefix": [True]}),  # disjoint sets
+        (make_semantic_fn(0.9, max_cell=2), "vec_id", "emb",
+         [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]], {}),  # orthogonal
+    ]
+    for fn, id_col, item_col, items, extra in cases:
+        st = _FakeState()
+
+        def feed(i, it):
+            pdf = pd.DataFrame({id_col: [i], item_col: [it], **extra})
+            return [r for o in fn((0, 7), iter([pdf]), st) for _, r in o.iterrows()]
+
+        for k, it in enumerate(items):
+            assert feed(k, it) == [], fn
+        ids, kept = st.get
+        assert list(ids) == [0, 1] and list(kept) == items[:2], fn  # third never joined
+        # an exact copy of a KEPT entry still matches even with the bucket full
+        out = feed(9, items[1])
+        assert len(out) == 1 and out[0].iloc[1] == 1, fn
+
+
+def _redelivery_cases():
+    """One batch per near-dup twin holding a first-seen item (id 1) and a
+    near-copy of it (id 9), so a delivery both inserts and matches."""
+    import pandas as pd
+
+    from signalk_parquet_spark.streaming.stateful import (
+        make_audio_neardup_fn,
+        make_containment_fn,
+        make_image_neardup_fn,
+        make_neardup_fn,
+        make_semantic_fn,
+        make_video_neardup_fn,
+    )
+
+    return [
+        (make_neardup_fn(0.5, 64), (0, "k"),
+         pd.DataFrame({"doc_id": [1, 9], "sig": ["a|b|c|d", "a|b|c|X"]})),
+        (make_containment_fn(0.8, 64), (7,),
+         pd.DataFrame({"doc_id": [1, 9], "sset": ["1|2|3|4|5", "1|2|3|4"],
+                       "in_prefix": [True, True]})),
+        (make_semantic_fn(0.9, 64), (7,),
+         pd.DataFrame({"vec_id": [1, 9], "emb": [[1.0, 0.0], [0.99, 0.1]]})),
+        (make_audio_neardup_fn(0.35, 64), (0, 7),
+         pd.DataFrame({"media_id": [1, 9], "fp": [[5, 6], [5, 7]]})),
+        (make_image_neardup_fn(3, 64), (0, 7),
+         pd.DataFrame({"media_id": [1, 9], "h": [0b1000, 0b1001]})),
+        (make_video_neardup_fn(0.5, 3, 64), (0, 0, 7),
+         pd.DataFrame({"media_id": [1, 9], "fh": [[11, 12], [11, 13]]})),
+    ]
+
+
+def _rows(frames):
+    return [tuple(r) for o in frames for r in o.itertuples(index=False)]
+
+
+def test_stateful_fns_idempotent_under_redelivery():
+    """At-least-once sources redeliver: the same batch fed twice must not
+    make any twin match an item against itself (a consumer dropping the
+    distinct matched ids would otherwise drop the kept original), and the
+    second delivery must leave the bucket state unchanged."""
+    for fn, key, pdf in _redelivery_cases():
+        st = _FakeState()
+        first = _rows(fn(key, iter([pdf.copy()]), st))
+        assert [(r[0], r[1]) for r in first] == [(9, 1)], fn
+        state_after_first = st.get
+        second = _rows(fn(key, iter([pdf.copy()]), st))
+        assert all(r[0] != r[1] for r in second), (fn, second)
+        assert st.get == state_after_first, fn
 
 
 def test_streaming_bloom_screen_matches_batch_gate(spark, tmp_path):
