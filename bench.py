@@ -79,9 +79,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     # REGISTRATION order, not sorted(): the driver runs gates in
-    # registration order, and the session memos (_SHINGLED, _CC_LABELS …)
-    # make run order part of the cost model — alphabetical order put
-    # dedup_cluster_cc before the keep-gates, so IT paid the whole
+    # registration order, and the session memo (memo.MEMO: shingled corpus,
+    # CC labels …) makes run order part of the cost model — alphabetical
+    # order put dedup_cluster_cc before the keep-gates, so IT paid the whole
     # shingle+screen+CC build (2.4-5.2 s) that registration order charges
     # to dedup_keep_longest, and every per-query number shifted away from
     # what a driver session would see.

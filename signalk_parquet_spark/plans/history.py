@@ -50,8 +50,7 @@ class HistoryPlanner:
     # ------------------------------------------------------------------
     def available_tiers(self) -> set[str]:
         if self._tiers_cache is None:
-            rows = self.lake.read().select("tier").distinct().collect()
-            self._tiers_cache = {r[0] for r in rows}
+            self._tiers_cache = self.lake.tiers()
         return self._tiers_cache
 
     def _is_angular(self, path: str) -> bool:

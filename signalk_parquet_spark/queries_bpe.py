@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .localrel import local_frame
 
 from .functions.text import shingles
+from .memo import MEMO
 from .operators.bpe import train_bpe
 from .operators.tokenizer import word_freq
 from .registry import load, register
@@ -137,26 +138,20 @@ def unigram_seed_counts(spark: SparkSession, sf: str) -> DataFrame:
 #: tie-breaking are exercised
 _UG_SEED = 120
 
-#: collected seed-model memo: the unigram gates share ONE
-#: word_freq -> seed_pieces -> bounded-collect job per (session, sf) —
-#: the plain-object twin of SessionMemo (the value is a driver-side dict,
-#: not a frame), with the same stale-session eviction on store
-_UG_SEED_MEMO: dict[tuple[str, str], dict[str, float]] = {}
-
 
 def _seed_logp(spark: SparkSession, sf: str) -> dict[str, float]:
+    """Memoized seed model (a driver-side dict): the unigram gates share
+    ONE word_freq -> seed_pieces -> bounded-collect job per (session, sf)."""
     from .operators.unigram import _logp_from_counts, seed_vocab
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf)
-    if key not in _UG_SEED_MEMO:
-        for stale in [k for k in _UG_SEED_MEMO if k[0] != app]:
-            del _UG_SEED_MEMO[stale]
-        d = load(spark, sf, "documents")
-        _UG_SEED_MEMO[key] = _logp_from_counts(
-            seed_vocab(word_freq(d), _UG_SEED, _UG_LEN)
-        )
-    return _UG_SEED_MEMO[key]
+    return MEMO.get_or_build(
+        spark,
+        f"ug_seed:{sf}",
+        lambda: _logp_from_counts(
+            seed_vocab(word_freq(load(spark, sf, "documents")), _UG_SEED, _UG_LEN)
+        ),
+        materialize=False,
+    )
 
 
 @register(

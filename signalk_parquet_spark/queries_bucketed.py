@@ -18,14 +18,13 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .memo import MEMO
 from .registry import load, register
 from .sources.bucketed import cobucketed_join, write_bucketed
 
 #: bucket count — parallelism floor for bucketed scans; at 100 TB you'd size
 #: this so a bucket slice approaches spark.sql.files.maxPartitionBytes
 _N_BUCKETS = 16
-
-_READY: set[tuple[str, str]] = set()
 
 
 def _table_names(sf: str) -> tuple[str, str]:
@@ -40,9 +39,8 @@ def ensure_bucketed_facts(spark: SparkSession, sf: str) -> tuple[str, str]:
     import tempfile
 
     li_t, od_t = _table_names(sf)
-    app = spark.sparkContext.applicationId
-    key = (app, sf)
-    if key not in _READY:
+
+    def build() -> tuple[str, str]:
         li = load(spark, sf, "lineitem").select(
             F.col("l_orderkey").alias("orderkey"), "l_extendedprice", "l_discount"
         )
@@ -56,7 +54,7 @@ def ensure_bucketed_facts(spark: SparkSession, sf: str) -> tuple[str, str]:
         # session's overwrite (DROP + recursive delete) yanking files out
         # from under the other's live scans — and a predictable /tmp name is
         # pre-creatable by another local user (ADVICE r03).
-        app_tag = re.sub(r"\W+", "_", app)
+        app_tag = re.sub(r"\W+", "_", spark.sparkContext.applicationId)
         base = os.path.join(tempfile.gettempdir(), f"skps_bucketed_{app_tag}")
         # The two writes are independent jobs on disjoint tables: submit
         # them from a 2-thread pool so the orders write back-fills the
@@ -78,8 +76,9 @@ def ensure_bucketed_facts(spark: SparkSession, sf: str) -> tuple[str, str]:
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(_write, [(li, li_t), (od, od_t)]))
-        _READY.add(key)
-    return li_t, od_t
+        return li_t, od_t
+
+    return MEMO.get_or_build(spark, f"bucketed_facts:{sf}", build, materialize=False)
 
 
 @register(

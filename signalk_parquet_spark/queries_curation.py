@@ -33,7 +33,7 @@ from .functions.litfast import lit_array
 from .functions.vectors import as_double as as_double_vec
 from .functions.vectors import dot as vec_dot
 from .functions.vectors import norm_sq as vec_norm_sq
-from .memo import SessionMemo
+from .memo import MEMO
 from .registry import load, register
 
 _TRAIN_HI = "cd"  # md5 first byte < 0xcd -> train  (205/256 ~ 80.1%)
@@ -131,8 +131,8 @@ def _ngram_split_frame(spark: SparkSession, sf: str) -> DataFrame:
     xxhash64'd 8-gram shingle sets, val docs dropped (they join neither
     side of any decontamination rung). The n-gram ladder's ONE expensive
     pass, shared by the verbatim-overlap rung (decontaminate_ngram) and
-    the containment rung (decontaminate_containment). SessionMemo (not
-    an ad-hoc persist — judge finding, r5) materializes fully BEFORE any
+    the containment rung (decontaminate_containment). MEMO (not an
+    ad-hoc persist — judge finding, r5) materializes fully BEFORE any
     consumer forks branches: the tr/te map stages run concurrently, and
     racing an unbuilt cache recomputes the whole shingle pass per stage
     with per-partition lock contention (measured 69 s vs 15 s at
@@ -152,7 +152,7 @@ def _ngram_split_frame(spark: SparkSession, sf: str) -> DataFrame:
             .select("doc_id", "split", hashed.alias("sh"))
         )
 
-    return _BLOOM_MEMO.get_or_build(spark, f"decon_ngram_split:{sf}", _build_split)
+    return MEMO.get_or_build(spark, f"decon_ngram_split:{sf}", _build_split)
 
 
 @register(
@@ -579,15 +579,12 @@ def _bloom_words(df: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
     )
 
 
-_BLOOM_MEMO = SessionMemo()
-
-
 def _bloom_split(spark: SparkSession, sf: str) -> DataFrame:
     """Persisted (doc_id, split, sh) frame shared by the two bloom gates —
     the shingle pass is the expensive stage; everything downstream is
     probe-sized. Same split/shingle semantics as decontaminate_ngram.
-    SessionMemo keys by applicationId, so a new session after a stopped
-    one never receives a frame bound to a dead context (memo.py)."""
+    MEMO keys by applicationId, so a new session after a stopped one never
+    receives a frame bound to a dead context (memo.py)."""
     from .functions.text import shingles
 
     def build() -> DataFrame:
@@ -604,7 +601,7 @@ def _bloom_split(spark: SparkSession, sf: str) -> DataFrame:
 
     # materialize=True counts before the te/tr branches fork (see
     # decontaminate_ngram for the measured race cost)
-    return _BLOOM_MEMO.get_or_build(spark, f"bloom_split:{sf}", build)
+    return MEMO.get_or_build(spark, f"bloom_split:{sf}", build)
 
 
 def _bloom_test_shingles(s: DataFrame) -> DataFrame:
@@ -624,7 +621,7 @@ def _bloom_te(spark: SparkSession, sf: str) -> DataFrame:
     so without the memo the explode+distinct exchange ran four times per
     session (r12 measurement: it was the dominant repeated stage of
     bloom_fp_rate)."""
-    return _BLOOM_MEMO.get_or_build(
+    return MEMO.get_or_build(
         spark,
         f"bloom_te:{sf}",
         lambda: _bloom_test_shingles(_bloom_split(spark, sf)),
@@ -677,24 +674,19 @@ def _bloom_dense_words(filt: DataFrame, bits: int) -> list[int]:
     return dense
 
 
-#: session-scoped dense filter memo, the list twin of SessionMemo: the
-#: word-table build + collect is a ~1.3 s job chain at bench scale and
-#: both gates need the identical filter (same te frame), so the second
-#: build bought nothing (r12 phase timing). Keyed by applicationId like
-#: SessionMemo so a new session never sees a dead session's filter.
-_BLOOM_DENSE: dict[tuple[str, str], list[int]] = {}
-
-
 def _bloom_dense(spark: SparkSession, sf: str) -> list[int]:
-    app = spark.sparkContext.applicationId
-    key = (app, sf)
-    if key not in _BLOOM_DENSE:
-        for stale in [k for k in _BLOOM_DENSE if k[0] != app]:
-            del _BLOOM_DENSE[stale]
-        _BLOOM_DENSE[key] = _bloom_dense_words(
+    """Memoized dense filter of the bloom_te frame: the word-table build +
+    collect is a ~1.3 s job chain at bench scale and both gates need the
+    identical filter (same te frame), so the second build bought nothing
+    (r12 phase timing)."""
+    return MEMO.get_or_build(
+        spark,
+        f"bloom_dense:{sf}",
+        lambda: _bloom_dense_words(
             _bloom_filter_words(_bloom_te(spark, sf)), _BLOOM_BITS
-        )
-    return _BLOOM_DENSE[key]
+        ),
+        materialize=False,
+    )
 
 
 def _with_bloom_hit(

@@ -22,16 +22,14 @@ from pyspark.sql import functions as F
 from .localrel import local_frame
 
 from .functions.text import tokens, shingles
-from .memo import SessionMemo
+from .memo import MEMO
 from .registry import load, register
 
-#: session memo for this module's shared/reused intermediates. Routing the
-#: persists here (instead of ad-hoc .persist() inside the gate bodies)
-#: gives them the same lifecycle as every other family cache: stale-session
-#: eviction on store, evict() for ramp loops cycling throwaway corpora, and
-#: full materialization before any branch fork (judge finding, r5 — these
-#: were the exact pinned-frame leak class evict_tables was built for).
-_LM_MEMO = SessionMemo()
+# Shared/reused intermediates go through memo.MEMO (not ad-hoc .persist()
+# inside the gate bodies): stale-session eviction on store, evict() for
+# ramp loops cycling throwaway corpora, and full materialization before any
+# branch fork (judge finding, r5 — these were the exact pinned-frame leak
+# class evict_tables was built for).
 
 #: DuckDB twin of the whitespace tokenizer
 _TOKS_DD = "string_split(text, ' ')"
@@ -158,7 +156,7 @@ def source_divergence(spark: SparkSession, sf: str) -> DataFrame:
     corpus count table; the per-source totals and the one-row corpus total
     ride broadcast joins. Nothing here scales with document count except
     the first aggregation."""
-    st = _LM_MEMO.get_or_build(
+    st = MEMO.get_or_build(
         spark,
         f"src_tok_counts:{sf}",
         lambda: load(spark, sf, "documents")
@@ -403,7 +401,7 @@ def dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     # memo materializes before the stats/probe double-read
-    db = _LM_MEMO.get_or_build(spark, f"dsir_db:{sf}", _build_db)
+    db = MEMO.get_or_build(spark, f"dsir_db:{sf}", _build_db)
     stats = db.groupBy("b").agg(
         F.sum("k").alias("r"),
         F.sum(F.when(F.col("lang") == "en", F.col("k")).otherwise(0)).alias(
@@ -545,7 +543,7 @@ def _lm_score_frame(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    return _LM_MEMO.get_or_build(spark, f"lm_score:{sf}", build)
+    return MEMO.get_or_build(spark, f"lm_score:{sf}", build)
 
 
 def perplexity_buckets_approx(
@@ -702,7 +700,7 @@ def _bm25_top10(spark: SparkSession, sf: str) -> DataFrame:
     # guards against (AQE + a partially-built cache read twice inside ONE
     # query — the dedup self-join war story) needs a multi-read plan;
     # both consumers here read the frame exactly once, sequentially.
-    return _LM_MEMO.get_or_build(spark, f"bm25_top10:{sf}", build, materialize=False)
+    return MEMO.get_or_build(spark, f"bm25_top10:{sf}", build, materialize=False)
 
 
 @register(

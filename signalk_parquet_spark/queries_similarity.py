@@ -16,12 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.vectors import as_double, cosine, dot, hyperplane_bits, make_planes, norm_sq
-from .memo import SessionMemo
+from .memo import MEMO
 from .registry import load, register
 
-#: ranked top-k frames shared across similarity gates (multitable ANN by
-#: ann_lsh_multitable + ann_recall; exact knn by knn_bruteforce + ann_recall)
-_RANKED_MEMO = SessionMemo()
+# ranked top-k frames shared across similarity gates are memoized in MEMO
+# (multitable ANN by ann_lsh_multitable + ann_recall; exact knn by
+# knn_bruteforce + ann_recall)
 
 _NQ = 20  # query set: vec_id < 20
 _TOPK = 5
@@ -78,7 +78,7 @@ def knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
         w = Window.partitionBy("query_id").orderBy(F.col("cos4").desc(), "neighbor_id")
         return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= _TOPK)
 
-    return _RANKED_MEMO.get_or_build(spark, f"knn_topk|{sf}", build)
+    return MEMO.get_or_build(spark, f"knn_topk|{sf}", build)
 
 
 _PLANES = make_planes(8, 64)
@@ -312,7 +312,7 @@ def ann_lsh_multitable(spark: SparkSession, sf: str) -> DataFrame:
         )
         return out.withColumnRenamed("cos", "cos4")
 
-    return _RANKED_MEMO.get_or_build(spark, f"mt_topk|{sf}", build)
+    return MEMO.get_or_build(spark, f"mt_topk|{sf}", build)
 
 
 def _dd_recall_sql() -> str:
@@ -512,11 +512,11 @@ def ann_scalar_quant(spark: SparkSession, sf: str) -> DataFrame:
 _KMEANS_K = 8
 _KM_NPROBE = 2  # the approximate setting the recall gate measures
 
-#: fitted centroid frame shared by both kmeans gates (one MLlib fit/session)
-_KMEANS_MEMO = SessionMemo()
-
 
 def _kmeans_cents(spark: SparkSession, sf: str) -> DataFrame:
+    """Fitted centroid frame shared by both kmeans gates (one MLlib
+    fit/session)."""
+
     def build() -> DataFrame:
         from .operators.similarity import kmeans_centroids
 
@@ -525,7 +525,7 @@ def _kmeans_cents(spark: SparkSession, sf: str) -> DataFrame:
         # counts the built frame itself
         return kmeans_centroids(e, "vec_id", "embedding", k=_KMEANS_K, seed=7)
 
-    return _KMEANS_MEMO.get_or_build(spark, f"kmeans_cents|{sf}", build)
+    return MEMO.get_or_build(spark, f"kmeans_cents|{sf}", build)
 
 
 @register(

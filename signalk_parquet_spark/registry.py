@@ -47,18 +47,7 @@ def registration_order() -> list[str]:
 #: tables (events/lineitem/orders) are NOT spread: their queries shuffle
 #: almost immediately, and 32 cached partitions just tax every tiny stage
 #: with task-scheduling overhead (measured +0.4-0.7 s/query at sf0.1).
-_SPREAD_TABLES_DEFAULT = "documents,embeddings"
-
-
-def _should_spread(table: str) -> bool:
-    import os
-
-    conf = os.environ.get("SPARK_GRAFT_SPREAD", _SPREAD_TABLES_DEFAULT)
-    if conf == "all":
-        return True
-    if conf in ("none", ""):
-        return False
-    return table in conf.split(",")
+_SPREAD_TABLES = ("documents", "embeddings")
 
 
 _NANO_COLS_CACHE: dict[str, list[str]] = {}
@@ -138,7 +127,7 @@ def load(
         # cache the unfiltered table for the session (driver runs ~60 queries
         # against the same few tables); ts_range reads stay uncached so
         # their filters keep reaching the parquet scan
-        if _should_spread(table):
+        if table in _SPREAD_TABLES:
             target = spark.sparkContext.defaultParallelism
             if df.rdd.getNumPartitions() < target:
                 # a single small parquet file (one row group) scans as ONE

@@ -14,7 +14,7 @@ instead of appending dupes — same guarantee, no per-row state.
 from __future__ import annotations
 
 import os
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,8 +56,7 @@ class HotBuffer:
         reference proves the same property via its exported flag,
         write-read-pipeline.test.ts:211-222)."""
         start = day.replace(hour=0, minute=0, second=0, microsecond=0)
-        end = start.replace(hour=23, minute=59, second=59, microsecond=999999)
-        rows = self.read(from_ts=start, to_ts=end)
+        rows = self.read(from_ts=start, to_ts=start + timedelta(days=1))
         n = rows.count()
         if n:
             lake.write_records(rows, tier="raw", mode="overwrite")

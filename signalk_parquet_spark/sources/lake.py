@@ -219,6 +219,12 @@ class Lake:
             # degrade to the surviving roots, matching reference behavior
             return []
 
+    def tiers(self) -> set[str]:
+        """Tier names with a ``tier=*`` directory under any root — a
+        listing, no Spark job. A tier directory without a given path's data
+        is fine for routing: the planner falls through to raw per path."""
+        return {d.rsplit("tier=", 1)[1] for root in self.roots for d in self._tier_dirs(root)}
+
     def _read_subtree(self, root: str, sub: str) -> DataFrame | None:
         """Read one partition subtree; None when the subtree doesn't exist or
         its root is unreachable (the hybrid→local fallback: connectivity or
@@ -279,8 +285,9 @@ class Lake:
         return self.read(tier=tier).columns
 
     def discover_contexts(self) -> list[str]:
-        """DISTINCT context from partition metadata only — no file scan
-        (context-discovery.ts:250-256)."""
+        """DISTINCT context over every tier (context-discovery.ts:250-256).
+        Not metadata-only: the distinct plans a scan of every tier's files
+        plus an exchange."""
         rows = self.read().select("context").distinct().collect()
         from .hive_paths import unsanitize_context
 

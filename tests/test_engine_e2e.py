@@ -111,11 +111,14 @@ def test_export_day_exactly_once(spark, lake, tmp_path):
     root = str(tmp_path / "lake2")
     lk = Lake(spark, root)
     buf = HotBuffer(spark, str(tmp_path / "hot2"))
-    buf.append(records_df(spark, scalar_series(T0, [1.0, 2.0, 3.0])))
+    # the day's last microsecond belongs to the day: [start, start + 1 day)
+    last = T0.replace(hour=23, minute=59, second=59, microsecond=999999)
+    rows = scalar_series(T0, [1.0, 2.0, 3.0]) + scalar_series(last, [4.0])
+    buf.append(records_df(spark, rows))
     n1 = buf.export_day(lk, T0)
     n2 = buf.export_day(lk, T0)
-    assert n1 == n2 == 3
-    assert lk.read(tier="raw").count() == 3
+    assert n1 == n2 == 4
+    assert lk.read(tier="raw").count() == 4
 
 
 def test_smoothing_sma_and_ema(spark, lake):

@@ -27,8 +27,8 @@ import json
 import re
 import sys
 
-#: queries that share memoized builds (registry/_CC_LABELS memos + the
-#: shingle/signature frames): the FIRST of a group to run in bench order
+#: queries that share memoized builds (the memo.MEMO entries: CC labels +
+#: the shingle/signature frames): the FIRST of a group to run in bench order
 #: pays the group's shared build. Grouped by the memo they share, not by
 #: name prefix alone.
 MEMO_FAMILIES: dict[str, tuple[str, ...]] = {

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from signalk_parquet_spark import queries_curation as qc  # noqa: E402
 from signalk_parquet_spark import registry  # noqa: E402
+from signalk_parquet_spark.memo import MEMO  # noqa: E402
 from signalk_parquet_spark.session import get_spark  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -127,11 +128,12 @@ def main() -> None:
                 f"{t_exact:>8.2f} {pairs:>9}"
             )
         finally:
-            qc._BLOOM_MEMO.evict(spark, f"bloom_split:{tmp}")
-            # load() persisted this corpus's documents frame too — drop it
-            # before deleting the files under it (decontaminate_ngram's
-            # internal shingle persist is not tracked; it is never touched
-            # again after its gate returns, and its lineage roots here)
+            # every memo entry built over this corpus (the bloom gates'
+            # split, test-shingle and dense-filter entries, and
+            # decontaminate_ngram's shingle split), then the documents
+            # frame load() persisted — all before deleting the files
+            for tag in ("bloom_split", "bloom_te", "bloom_dense", "decon_ngram_split"):
+                MEMO.evict(spark, f"{tag}:{tmp}")
             registry.evict_tables(spark, tmp)
             shutil.rmtree(tmp, ignore_errors=True)
 
