@@ -102,17 +102,16 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Self-documenting host state: shared-tenancy CPU swings (±20-40%
-    # single-thread, up to 8x parallel — see tools/spin_check.py) dominate
-    # run-to-run bench deltas, so each bench line carries the probe that
-    # says whether its numbers came from a fast or degraded host window.
-    # Extra keys; the one-line JSON contract is unchanged.
+    # single-thread, up to 8x parallel) dominate run-to-run bench deltas,
+    # so each bench line carries the host probe (one spin, then the same
+    # spin in min(16, cpus) processes at once) that says whether its
+    # numbers came from a fast or degraded host window. Extra keys; the
+    # one-line JSON contract is unchanged.
     host = {}
     try:
-        from tools.spin_check import spin_once, spin_parallel
+        from perfbench.run import host_probe
 
-        s = round(min(spin_once() for _ in range(2)), 3)
-        p = round(spin_parallel(), 3)
-        host = {"spin_sec": s, "par16_sec": p, "par_ratio": round(p / s, 2)}
+        host = {k: round(v, 3) for k, v in host_probe().items()}
     except Exception:
         pass
     print(

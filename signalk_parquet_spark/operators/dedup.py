@@ -311,7 +311,7 @@ def containment_pairs(
     sort each probe set RAREST-shingle-first (classic AllPairs
     ordering, Bayardo WWW'07): the prefix then holds the tokens least
     likely to collide. Measured on a stopword-heavy corpus
-    (tools/containment_ramp.py): candidates collapse to essentially
+    (python tools/ramp.py containment): candidates collapse to essentially
     the true pair count — 33.8k vs the hash order's 23.4M at 320k docs
     (693x) — and candidate growth turns LINEAR where both hash-prefix
     and full-probe grow quadratically with corpus heat. Honest local

@@ -104,12 +104,13 @@ def rollup_incremental(
     bounded by the late data's (series, day) spread, never by history.
     Returns the number of touched partitions (0 = nothing to do, no write).
 
-    ``roll_kwargs`` forwards to the tier's rollup operator — pass
-    {'exact_avg': True} (scalar) / {'exact_partials': True} (angular) to
-    make incremental == full-recompute exact BY CONSTRUCTION (integer
-    partials are summation-order-independent, so the rebuilt partitions
-    are bit-identical to what a from-scratch run writes; the float default
-    matches only up to partial-aggregation order)."""
+    ``roll_kwargs`` forwards to the tier's rollup operator. Only the
+    angular rollup has integer partials: pass {'exact_partials': True}
+    there to make incremental == full-recompute exact BY CONSTRUCTION
+    (integer partials are summation-order-independent, so the rebuilt
+    partitions are bit-identical to what a from-scratch run writes).
+    rollup_scalar has no such option: its float average matches a full
+    recompute only up to partial-aggregation order."""
     from ..sources.lake import _sanitize_context_col, _sanitize_path_col
     from .rollup import rollup_angular, rollup_position, rollup_scalar
 

@@ -64,7 +64,7 @@ def topk_per_key(
     Window ranks only survivors. The first version of this operator
     hand-built the same bound as a salted two-window pass; the ramp
     measured it strictly LOSING to the built-in (extra exchange, same
-    bound — tools/retrieval_ramp.py table 2, SCALE.md r11), so the
+    bound — python tools/ramp.py retrieval_topk, SCALE.md r11), so the
     operator's job is to pin the optimization, not re-implement it:
     tests/test_retrieval.py plan-asserts both WindowGroupLimit phases, so
     a refactor that breaks the rewrite (e.g. swapping row_number for a

@@ -147,7 +147,7 @@ def grouped_kth_smallest(
     exchange) and exactly the wrong one at per-host/per-URL cardinality:
     measured at G=1000/N=2M the width-G expression alone costs 33 s of
     analysis+codegen against the sorted path's 1.6 s
-    (tools/selection_ramp.py --groups). Above ``max_groups`` (checked
+    (python tools/ramp.py selection_groups). Above ``max_groups`` (checked
     against the seed aggregate's row count, before any per-round work)
     the call fails loudly; use :func:`grouped_kth_smallest_sorted` there
     — at high G each group is small enough that the hash-partitioned
@@ -185,8 +185,8 @@ def grouped_kth_smallest_sorted(
     the frame, parallelism is the group count, and each task externally
     sorts only its own groups' rows; the full-data exchange this pays is
     the honest price, amortized over G-way parallelism (the banded path's
-    win is real only while G is small — tools/selection_ramp.py --groups
-    measures the crossover).
+    win is real only while G is small — python tools/ramp.py
+    selection_groups measures the crossover).
 
     ``ranks_sql`` is a SQL expression over the BIGINT column ``n`` (the
     group's nulls-excluded count) returning ARRAY<BIGINT> — e.g.

@@ -62,12 +62,13 @@ def ensure_bucketed_facts(spark: SparkSession, sf: str) -> tuple[str, str]:
         # (guide §2.6 overlap-independent-jobs; measured 1.16 s + 0.85 s
         # sequential write jobs at sf0.1). InheritableThread is the
         # documented PySpark way to run driver threads (JVM thread-locals
-        # like the job group/description are inherited and cleaned up).
+        # like the job group/description are inherited and cleaned up);
+        # given the session it also carries the session's job tags over.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
 
-        @inheritable_thread_target
+        @inheritable_thread_target(spark)
         def _write(args) -> None:
             df, table = args
             write_bucketed(

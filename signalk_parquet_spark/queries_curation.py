@@ -561,8 +561,8 @@ def _bloom_pos_cols(g: str = "g", bits: int = _BLOOM_BITS) -> list:
     """The K probe positions of a shingle column: disjoint 8-hex slices of
     one md5 (matches _B_POS_DD). `bits` parameterizes the filter size —
     the gates pin _BLOOM_BITS so the oracle is fixed; deployments size it
-    as m ~ 16-24 bits per expected distinct benchmark n-gram (see
-    tools/bloom_ramp.py for the measured saturation when undersized)."""
+    as m ~ 16-24 bits per expected distinct benchmark n-gram (see python
+    tools/ramp.py bloom for the measured saturation when undersized)."""
     m = F.md5(F.col(g))
     return [
         F.conv(F.substring(m, 1 + 8 * i, 8), 16, 10).cast("long") % bits
@@ -712,7 +712,7 @@ def _with_bloom_hit(
     shuffle-free, but Spark MapType lookups are a LINEAR SCAN of the
     entries array, so at a deployment-sized m (2^23 bits = 262k words)
     the probe went quadratic-ish: measured 151 s vs 4.3 s at 150k docs
-    (tools/bloom_ramp.py). ARRAY element_at by index is a real O(1)
+    (python tools/ramp.py bloom). ARRAY element_at by index is a real O(1)
     GetArrayItem, which is what makes the literal path safe where the
     map-column form was not."""
     pos_cols = _bloom_pos_cols(bits=bits)
@@ -1205,7 +1205,7 @@ def decontaminate_semantic_ivf(
         # every row, then the same equi-join + exact verify. At K=277 /
         # 34k vectors: 1.7-4.4 s vs the expr path's 42-44 s and the exact
         # BNLJ's 25 s — the first point where the IVF screen actually
-        # beats brute force (tools/semdecon_ramp.py).
+        # beats brute force (python tools/ramp.py semdecon).
         probed = _fused_cell_probes(e, cent_rows, n_probe)
         train = probed.filter(F.col("split") == "train").select(
             F.col("vec_id").alias("train_vec"), "emb", "n2",

@@ -34,9 +34,9 @@ _GROUP = 4  # doc_id // _GROUP = planted content group
 #: evaluation-corpus bound, mirrored in every oracle (WHERE doc_id < cap):
 #: covers sf0.001/sf0.01 entirely (500 docs) and 600 planted groups at
 #: sf0.1 — the gate verifies pipeline correctness, not throughput (the
-#: _NQ/_SEM_SLICE precedent; scaling is measured by tools/media_ramp.py,
-#: which ramps the SAME operators uncapped). NOT a silent cap: stated
-#: here, in each docstring, and in the oracle text.
+#: _NQ/_SEM_SLICE precedent; scaling is measured by the media_* ramps of
+#: python tools/ramp.py, which ramp the SAME operators uncapped). NOT a
+#: silent cap: stated here, in each docstring, and in the oracle text.
 _CAP = 2400
 
 

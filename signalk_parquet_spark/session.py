@@ -40,10 +40,8 @@ def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
                 "-XX:MetaspaceSize=1g -XX:MaxMetaspaceSize=3g",
             ),
         )
-        # UI off by default (driver/bench sessions don't need it); the
-        # job-level profiling loop (tools/profile_query.py) flips it on via
-        # env to read per-job wall times from the REST API.
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # no UI: per-job timings come from the traced perfbench run
+        .config("spark.ui.enabled", "false")
         # PySpark 4 captures the user call site for every wrapped
         # DataFrame/Column API call when DataFrame debugging is on
         # (pyspark/errors/utils.py walks the Python stack per call —

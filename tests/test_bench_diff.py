@@ -73,6 +73,32 @@ def test_driver_artifact_truncated_tail(tmp_path):
     assert meta["order"] == "registration"
 
 
+def test_shared_probe_host_keys_read_against_an_old_record(tmp_path):
+    """bench.py now records perfbench's probe (cpus, par, spin_s, par_s,
+    par_ratio): its keys are never read as queries from a truncated tail,
+    and a diff against a spin_sec record compares spin and par_ratio."""
+    new = dict(FULL, host={"cpus": 4, "par": 4, "spin_s": 0.4, "par_s": 0.5,
+                           "par_ratio": 1.25})
+    line = json.dumps(new)
+    tail = line[line.index('"q_beta"'):]
+    p_new, p_old = tmp_path / "new.json", tmp_path / "old.json"
+    p_new.write_text(json.dumps({"parsed": None, "tail": tail}))
+    p_old.write_text(json.dumps(FULL))
+    qs, meta = bench_diff.load_queries(str(p_new))
+    assert set(qs) == {"q_beta", "q_gamma"} and meta["host"] == new["host"]
+    sys_argv = sys.argv
+    sys.argv = ["bench_diff.py", str(p_old), str(p_new)]
+    try:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            assert bench_diff.main() == 0
+    finally:
+        sys.argv = sys_argv
+    out = buf.getvalue()
+    assert "host-speed ratio new/old (spin): 0.50" in out
+    assert "host-speed ratio new/old (par_ratio): 0.83" in out
+
+
 def test_unrecognized_record_errors_clearly(tmp_path):
     p = tmp_path / "junk.json"
     p.write_text(json.dumps({"foo": 1}))

@@ -968,8 +968,8 @@ def test_decontaminate_semantic_ivf_subset_and_recall(spark, sf_smoke):
 
 def test_decontaminate_semantic_ivf_numpy_assignment(spark, sf_smoke):
     """The fused numpy assignment (the large-K path — 14-21x faster than
-    the exact BNLJ at 34k vectors, tools/semdecon_ramp.py) must keep the
-    same contract as the expr path: subset of the exact pairs, >= 0.7
+    the exact BNLJ at 34k vectors, python tools/ramp.py semdecon) must keep
+    the same contract as the expr path: subset of the exact pairs, >= 0.7
     recall at 2 probes, every pair recovered at 4."""
     from signalk_parquet_spark import registry
     from signalk_parquet_spark.queries_curation import decontaminate_semantic_ivf

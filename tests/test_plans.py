@@ -331,6 +331,22 @@ def test_cobucketed_gate_query_plan_and_shape(spark):
     assert len(rows) == 5  # all five TPC-H priorities survive the join
 
 
+def test_bucketed_writes_inherit_the_session(spark):
+    """The two bucketed-write threads are wrapped with the session, so its
+    job tags reach their jobs: PySpark warns when a thread target is
+    wrapped without one."""
+    import warnings
+
+    from signalk_parquet_spark.memo import MEMO
+    from signalk_parquet_spark.queries_bucketed import ensure_bucketed_facts
+
+    MEMO.evict(spark, f"bucketed_facts:{SF}")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ensure_bucketed_facts(spark, SF)
+    assert not [w for w in caught if "Spark session is not provided" in str(w.message)]
+
+
 def test_pipeline_gates_plan_shapes(spark):
     """The queries_pipeline gates keep their SCALE.md shapes: no cartesian
     or nested-loop joins anywhere; tfidf's vocabulary-sized df table joins

@@ -103,7 +103,8 @@ def load_queries(path: str) -> tuple[dict[str, float], dict]:
     if m:
         meta["order"] = m.group(1)
     # structural keys the regex scooped up from the tail's own metadata
-    for k in ("value", "n_queries", "sf", "spin_sec", "par16_sec", "par_ratio"):
+    for k in ("value", "n_queries", "sf", "cpus", "par", "spin_s", "par_s",
+              "par_ratio", "spin_sec", "par16_sec"):
         qs.pop(k, None)
     meta["partial"] = True
     return qs, meta
@@ -133,9 +134,13 @@ def main() -> int:
     new_q, new_m = load_queries(ns.new)
     args = (ns.old, ns.new)
 
+    def spin(h):
+        # bench.py records spin_s; records before the shared probe, spin_sec
+        return h.get("spin_s", h.get("spin_sec"))
+
     def fmt_host(m):
         h = m.get("host") or {}
-        return f"spin {h.get('spin_sec', '?')} par {h.get('par_ratio', '?')}"
+        return f"spin {spin(h) or '?'} par {h.get('par_ratio', '?')}"
 
     common = sorted(set(old_q) & set(new_q))
     old_common = sum(old_q[q] for q in common)
@@ -153,9 +158,9 @@ def main() -> int:
     oh, nh = (old_m.get("host") or {}), (new_m.get("host") or {})
     # compare BOTH probe numbers — parallel throughput degrades
     # independently of single-thread speed (the r4 lesson, CLAUDE.md)
-    for key, label in (("spin_sec", "spin"), ("par16_sec", "par16")):
-        if oh.get(key) and nh.get(key):
-            r = nh[key] / oh[key]
+    for label, probe in (("spin", spin), ("par_ratio", lambda h: h.get("par_ratio"))):
+        if probe(oh) and probe(nh):
+            r = probe(nh) / probe(oh)
             print(f"host-speed ratio new/old ({label}): {r:.2f}"
                   + ("  <-- host moved >15%: judge deltas against this first"
                      if abs(r - 1) > 0.15 else ""))

@@ -26,33 +26,26 @@ One JSON line per factor: exact wall (BroadcastNestedLoopJoin), IVF wall
 at 1 and 2 probes (cell equi-join), true/planted/screened pair counts and
 recall (screened/true — the twin is subset-by-construction).
 
-Run: python tools/semdecon_ramp.py            # factors 1,4,16
-     SPARK_GRAFT_RAMP=1,4 python tools/semdecon_ramp.py
+Run: python tools/ramp.py semdecon              # factors 1,4,16
+     python tools/ramp.py semdecon --sizes 1,4
 """
 
-from __future__ import annotations
-
-import json
 import os
 import shutil
-import sys
-import time
+from contextlib import contextmanager
+from functools import reduce
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from signalk_parquet_spark import registry  # noqa: E402
-from signalk_parquet_spark.queries_curation import (  # noqa: E402
-    decontaminate_semantic,
-    decontaminate_semantic_ivf,
-    hash_split,
-)
-from signalk_parquet_spark.session import get_spark  # noqa: E402
+from signalk_parquet_spark import registry
+from signalk_parquet_spark.queries_curation import (
+    decontaminate_semantic, decontaminate_semantic_ivf, hash_split)
+from tools.ramps import Ramp
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch_semdecon"
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch_semdecon",
 )
 PLANT_OFF = 10_000_000
 TAU = 0.9
@@ -76,8 +69,6 @@ def build_corpus(spark, n: int, out_dir: str) -> None:
             emb.withColumn("vec_id", F.col("vec_id") + F.lit(i * vec_ids))
             .withColumn("embedding", shifted)
         )
-    from functools import reduce
-
     base = reduce(lambda a, b: a.unionByName(b), parts)
     jitter = F.concat(
         F.array((F.col("embedding")[0] * F.lit(1.25)).cast("float")),
@@ -95,37 +86,48 @@ def build_corpus(spark, n: int, out_dir: str) -> None:
     open(f"{out_dir}/.done", "w").close()
 
 
-def main() -> int:
-    factors = [int(x) for x in os.environ.get("SPARK_GRAFT_RAMP", "1,4,16").split(",")]
-    spark = get_spark("semdecon-ramp")
-    for n in factors:
-        step = f"{SCRATCH}/x{n}"
-        if not os.path.exists(f"{step}/.done"):
-            shutil.rmtree(step, ignore_errors=True)
-            build_corpus(spark, n, step)
-        registry._TABLE_CACHE.clear()
-        spark.catalog.clearCache()
+@contextmanager
+def corpus(spark, n: int):
+    """The factor-n corpus, built once per source dir and kept under
+    SCRATCH for reuse."""
+    step = f"{SCRATCH}/{os.path.basename(SF_DIR.rstrip('/'))}_x{n}"
+    if not os.path.exists(f"{step}/.done"):
+        shutil.rmtree(step, ignore_errors=True)
+        build_corpus(spark, n, step)
+    try:
         e = registry.load(spark, step, "embeddings")
-        n_vec = e.count()
-        n_planted = e.filter(F.col("vec_id") >= PLANT_OFF).count()
-        t0 = time.monotonic()
-        n_true = decontaminate_semantic(spark, step, tau=TAU).count()
-        t_exact = time.monotonic() - t0
-        row = {
-            "factor": n, "n_vectors": n_vec, "planted": n_planted,
-            "true_pairs": n_true, "exact_s": round(t_exact, 2),
-        }
-        for assign in ("expr", "numpy"):
-            for p in (1, 2):
-                t0 = time.monotonic()
-                n_screen = decontaminate_semantic_ivf(
-                    spark, step, n_probe=p, tau=TAU, assign=assign
-                ).count()
-                row[f"ivf_{assign}_p{p}_s"] = round(time.monotonic() - t0, 2)
-                row[f"recall_{assign}_p{p}"] = round(n_screen / n_true, 3) if n_true else None
-        print(json.dumps(row), flush=True)
-    return 0
+        yield step, e.count(), e.filter(F.col("vec_id") >= PLANT_OFF).count()
+    finally:
+        registry.evict_tables(spark, step)
 
 
-if __name__ == "__main__":
-    raise SystemExit(main())
+def ivf(assign: str, n_probe: int):
+    return lambda spark, inp: decontaminate_semantic_ivf(
+        spark, inp[0], n_probe=n_probe, tau=TAU, assign=assign
+    ).count()
+
+
+def screened_subset(spark, inp, results: dict) -> dict:
+    """The exact screen finds exactly the planted pairs, and each IVF
+    screen at most those (its pairs are a subset by construction); recall
+    is screened / true."""
+    _, n_vectors, planted = inp
+    n_true = results["exact"]
+    screens = {k: v for k, v in results.items() if k != "exact"}
+    return {"n_vectors": n_vectors, "planted": planted, "true_pairs": n_true,
+            **{f"recall_{k}": round(v / n_true, 3) if n_true else None
+               for k, v in screens.items()},
+            "ok": n_true == planted and all(v <= n_true for v in screens.values())}
+
+
+RAMPS = {
+    "semdecon": Ramp(
+        sizes=(1, 4, 16),
+        build=corpus,
+        variants={
+            "exact": lambda spark, inp: decontaminate_semantic(spark, inp[0], tau=TAU).count(),
+            **{f"ivf_{a}_p{p}": ivf(a, p) for a in ("expr", "numpy") for p in (1, 2)},
+        },
+        check=screened_subset,
+    ),
+}

@@ -22,26 +22,20 @@ everything); incremental's recompute is snapshot-sized and its join
 probe is snapshot-sized — its only corpus-sized term is the scan of the
 persisted band index (4 metadata rows/doc), so the curve flattens hard.
 
-Run: python tools/snapshot_dedup_ramp.py   (~3-5 min; prints one table)
+Run: python tools/ramp.py snapshot_dedup   (~3-5 min; one line per size)
 """
 
-from __future__ import annotations
+from contextlib import contextmanager
 
-import os
-import sys
-import time
+from pyspark.sql import DataFrame, functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
-
-from signalk_parquet_spark.functions.text import minhash_signature  # noqa: E402
-from signalk_parquet_spark.operators.dedup import (  # noqa: E402
+from signalk_parquet_spark.functions.text import minhash_signature
+from signalk_parquet_spark.operators.dedup import (
     incremental_minhash_drops,
     minhash_lsh_pairs,
     shingled,
 )
-from signalk_parquet_spark.session import get_spark  # noqa: E402
+from tools.ramps import Ramp
 
 SNAPSHOT = 5_000
 DUP_EVERY = 5  # every 5th new doc copies an existing doc (near-dup load)
@@ -87,14 +81,14 @@ def index_form(docs: DataFrame):
     return bands, sh.select("id", "shl")
 
 
-def main() -> None:
-    spark = get_spark("snapshot-dedup-ramp")
-    print(f"snapshot={SNAPSHOT} dup_every={DUP_EVERY} k={K} bands={BANDS}")
-    print(f"{'corpus':>9} {'full_s':>7} {'incr_s':>7} {'drops':>6} {'mismatch':>8}")
-    for n_existing in (20_000, 80_000, 320_000, 1_280_000):
+@contextmanager
+def corpus(spark, n_existing: int):
+    """The existing corpus, its index (built OUTSIDE the timed region — a
+    production run reads it from the lake) and a new snapshot in which
+    every DUP_EVERY-th doc copies an existing text."""
+    try:
         existing = synth_docs(spark, n_existing, "corpus", 0).persist()
         existing.count()
-        # new snapshot: every DUP_EVERY-th doc copies an existing text
         fresh = synth_docs(spark, SNAPSHOT, "snap", 1_000_000)
         copies = (
             synth_docs(spark, SNAPSHOT, "corpus", 0)  # same seed => same texts
@@ -108,51 +102,39 @@ def main() -> None:
             .persist()
         )
         new.count()
-        try:
-            # the index for the existing corpus is built OUTSIDE the timed
-            # region — a production run reads it from the lake
-            eb, ed = index_form(existing)
-            ed = ed.persist(); ed.count()
-
-            t0 = time.time()
-            nb, nd = index_form(new)
-            drops = {
-                r["doc_id"]: r["dup_of"]
-                for r in incremental_minhash_drops(eb, nb, ed, nd).collect()
-            }
-            t_incr = time.time() - t0
-
-            t0 = time.time()
-            union = existing.unionByName(new)
-            pairs = minhash_lsh_pairs(union, "doc_id", "text", threshold=0.6)
-            # full-plan decisions for the new slice: existing ids < 1M <
-            # new ids here, so under existing-outranks-new + keep-first
-            # a verified pair drops exactly its larger (new) member
-            full_drops = set(
-                r["id_b"]
-                for r in pairs.filter(F.col("id_b") >= 1_000_000)
-                .select("id_b")
-                .distinct()
-                .collect()
-            )
-            t_full = time.time() - t0
-
-            mism = len(set(drops) ^ full_drops)
-            print(
-                f"{n_existing:>9} {t_full:>7.2f} {t_incr:>7.2f} "
-                f"{len(drops):>6} {mism:>8}"
-            )
-            if mism:
-                raise SystemExit(f"differential failed at corpus={n_existing}")
-        finally:
-            existing.unpersist()
-            new.unpersist()
-            # shingled()/index_form persist internally with no outer
-            # handle — clear the SQL CacheManager between iterations
-            # (catalog-level, NOT the forbidden RDD-level sweep) so a
-            # leaked cache can't skew the next row's memory headroom
-            spark.catalog.clearCache()
+        eb, ed = index_form(existing)
+        ed = ed.persist(); ed.count()
+        yield existing, new, eb, ed
+    finally:
+        # shingled()/index_form persist internally with no outer
+        # handle — clear the SQL CacheManager between sizes
+        # (catalog-level, NOT the forbidden RDD-level sweep) so a
+        # leaked cache can't skew the next size's memory headroom
+        spark.catalog.clearCache()
 
 
-if __name__ == "__main__":
-    main()
+def incremental(spark, inp) -> set:
+    _, new, eb, ed = inp
+    nb, nd = index_form(new)
+    return {r["doc_id"] for r in incremental_minhash_drops(eb, nb, ed, nd).collect()}
+
+
+def full(spark, inp) -> set:
+    """Full-plan decisions for the new slice: existing ids < 1M < new ids
+    here, so under existing-outranks-new + keep-first a verified pair
+    drops exactly its larger (new) member."""
+    existing, new, _, _ = inp
+    pairs = minhash_lsh_pairs(existing.unionByName(new), "doc_id", "text", threshold=0.6)
+    return {
+        r["id_b"]
+        for r in pairs.filter(F.col("id_b") >= 1_000_000).select("id_b").distinct().collect()
+    }
+
+
+RAMPS = {
+    "snapshot_dedup": Ramp(
+        sizes=(20_000, 80_000, 320_000, 1_280_000),
+        build=corpus,
+        variants={"incremental": incremental, "full": full},
+    ),
+}
