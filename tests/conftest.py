@@ -70,7 +70,7 @@ SLOWTAIL = {
     "test_properties.py::test_ivf_never_beats_exact_knn",  # 25.5s
     "test_properties.py::test_minhash_lsh_finds_all_exact_duplicates",  # 12.2s
     "test_properties.py::test_semantic_keep_modes_agree_on_ties",  # 23.6s
-    "test_ramp.py::test_registered_ramps_run_at_a_tiny_size",  # MEASURE (4 cores)
+    "test_ramp.py::test_registered_ramps_run_at_a_tiny_size",  # 196.6s (4 cores; all 23 ramps)
     "test_retrieval.py::test_bm25_duplicate_query_rows_deduped",  # 3.7s
     "test_retrieval.py::test_bm25_mode_agreement_cross_sf",  # 6.7s
     "test_retrieval.py::test_bm25_null_text_excluded_from_stats",  # 3.9s

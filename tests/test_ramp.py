@@ -74,7 +74,8 @@ def test_agreeing_variants_exit_zero(capsys):
 
 def test_disagreeing_variants_exit_nonzero(capsys):
     ramp = Ramp(sizes=(1, 2), build=logged_build([]),
-                variants={"a": lambda s, n: {1, 2}, "b": lambda s, n: {2, 3} if n == 2 else {1, 2}})
+                variants={"a": lambda s, n: {1, 2},
+                          "b": lambda s, n: {2, 3} if n == 2 else {1, 2}})
     code, lines = run(ramp, capsys)
     assert code == 1
     assert [(x["ok"], x["mismatches"]) for x in lines] == [(True, 0), (False, 2)]
