@@ -6,7 +6,7 @@ and hot/cold federation), re-expressed Spark-first.
 
 Layers (see SURVEY.md §7):
   - sources/   : Hive-partitioned Parquet lake (tier/context/path/year/day),
-                 hot staging buffer, schema inference & object flattening
+                 hot staging buffer, value typing & object flattening
   - functions/ : column-expression builders (time bucketing, angular math,
                  haversine geo, text analytics, vector similarity)
   - operators/ : composed DataFrame operators (bucketed aggregation, priority

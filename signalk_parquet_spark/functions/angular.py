@@ -2,15 +2,12 @@
 
 The reference vector-averages any path whose SignalK metadata says
 ``units == 'rad'``: ``ATAN2(AVG(SIN(v)), AVG(COS(v)))``
-(reference: src/HistoryAPI.ts:2543-2551, src/utils/angular-paths.ts:20-32),
-persists sin/cos partial state in rollup tiers
-(src/services/aggregation-service.ts:468-528) and re-aggregates losslessly
-with count-weighted partials (src/HistoryAPI.ts:2461-2468).
+(reference: src/HistoryAPI.ts:2543-2551, src/utils/angular-paths.ts:20-32).
+The sin/cos partial state persisted in rollup tiers and its lossless
+re-aggregation live with the tier definition in operators/rollup.py.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -21,40 +18,3 @@ def angular_avg(value: Column | str) -> Column:
     (-pi, pi], e.g. mean(10deg, 350deg) == 0deg, not 180deg."""
     v = F.col(value) if isinstance(value, str) else value
     return F.atan2(F.avg(F.sin(v)), F.avg(F.cos(v)))
-
-
-def angular_partials(value: Column | str) -> tuple[Column, Column]:
-    """(avg(sin), avg(cos)) partial-aggregate state persisted in rollup tiers
-    so coarser tiers can re-aggregate losslessly (A8/A11 in SURVEY §2)."""
-    v = F.col(value) if isinstance(value, str) else value
-    return F.avg(F.sin(v)), F.avg(F.cos(v))
-
-
-def angular_reagg(sin_avg: Column | str, cos_avg: Column | str, n: Column | str) -> Column:
-    """Lossless re-aggregation from stored partials:
-    ATAN2(SUM(sin_avg*n)/SUM(n), SUM(cos_avg*n)/SUM(n))."""
-    s = F.col(sin_avg) if isinstance(sin_avg, str) else sin_avg
-    c = F.col(cos_avg) if isinstance(cos_avg, str) else cos_avg
-    w = F.col(n) if isinstance(n, str) else n
-    return F.atan2(F.sum(s * w) / F.sum(w), F.sum(c * w) / F.sum(w))
-
-
-def weighted_mean(avg_col: Column | str, n: Column | str) -> Column:
-    """Count-weighted mean re-aggregation: SUM(avg*n)/SUM(n)
-    (reference: src/HistoryAPI.ts:2479, src/services/aggregation-service.ts:448)."""
-    a = F.col(avg_col) if isinstance(avg_col, str) else avg_col
-    w = F.col(n) if isinstance(n, str) else n
-    return F.sum(a * w) / F.sum(w)
-
-
-def normalize_0_2pi(v: Column) -> Column:
-    """Normalize radians into [0, 2pi) (reference: src/utils/angle-converter.ts)."""
-    two_pi = 2.0 * math.pi
-    return ((v % two_pi) + two_pi) % two_pi
-
-
-def angular_diff(a: Column, b: Column) -> Column:
-    """Smallest signed angular difference a-b in (-pi, pi]."""
-    d = a - b
-    pi = math.pi
-    return d - F.floor((d + pi) / (2 * pi)) * (2 * pi)

@@ -83,14 +83,3 @@ def bbox_from_radius(lat: float, lon: float, radius_m: float) -> tuple[float, fl
     west = (lon - dlon + 540.0) % 360.0 - 180.0
     east = (lon + dlon + 540.0) % 360.0 - 180.0
     return south, north, west, east
-
-
-def bearing_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Initial great-circle bearing in degrees [0, 360)
-    (reference: src/utils/geo-calculator.ts:49-76)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlon = F.radians(lon2 - lon1)
-    y = F.sin(dlon) * F.cos(rlat2)
-    x = F.cos(rlat1) * F.sin(rlat2) - F.sin(rlat1) * F.cos(rlat2) * F.cos(dlon)
-    deg = F.degrees(F.atan2(y, x))
-    return (deg + F.lit(360.0)) % F.lit(360.0)

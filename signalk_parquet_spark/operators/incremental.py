@@ -111,18 +111,13 @@ def rollup_incremental(
     partitions are bit-identical to what a from-scratch run writes).
     rollup_scalar has no such option: its float average matches a full
     recompute only up to partial-aggregation order."""
-    from ..sources.lake import _sanitize_context_col, _sanitize_path_col
+    from ..sources.lake import partition_values
     from .rollup import rollup_angular, rollup_position, rollup_scalar
 
     roll = {"scalar": rollup_scalar, "angular": rollup_angular,
             "position": rollup_position}[kind]
     touched = (
-        late_df.select(
-            _sanitize_context_col(F.col("context")).alias("context"),
-            _sanitize_path_col(F.col("path")).alias("path"),
-            F.year(ts_col).alias("year"),
-            F.lpad(F.dayofyear(ts_col).cast("string"), 3, "0").alias("day"),
-        )
+        late_df.select(*(c.alias(n) for n, c in partition_values(ts_col).items()))
         .distinct()
         .persist()
     )

@@ -18,11 +18,11 @@ from pyspark.sql import functions as F
 
 from ..schema import is_position_path
 from ..sources.lake import Lake
-from .rollup import rollup_angular, rollup_position
+from .rollup import TIER_MS, rollup_angular, rollup_position
 
 
 def migrate_vector_averaging(
-    lake: Lake, angular_paths: list[str], tiers: tuple[str, ...] = ("5s", "60s", "1h"), dry_run: bool = False
+    lake: Lake, angular_paths: list[str], tiers: tuple[str, ...] = tuple(TIER_MS), dry_run: bool = False
 ) -> dict[str, int]:
     """Rebuild angular paths' tier files from raw so they carry
     value_sin_avg/value_cos_avg partial state. Returns rows written per tier."""
@@ -40,7 +40,7 @@ def migrate_vector_averaging(
 
 
 def migrate_position_reaggregation(
-    lake: Lake, position_paths: list[str] | None = None, tiers: tuple[str, ...] = ("5s", "60s", "1h"), dry_run: bool = False
+    lake: Lake, position_paths: list[str] | None = None, tiers: tuple[str, ...] = tuple(TIER_MS), dry_run: bool = False
 ) -> dict[str, int]:
     """Rebuild position tiers with GPS-outlier-aware representative points
     (A12). ``dry_run`` counts what would be written without touching disk."""

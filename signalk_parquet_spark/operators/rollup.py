@@ -13,15 +13,18 @@ partitioned by the same key, so no extra shuffle boundary.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import haversine_m
+from ..functions.angular import angular_avg
+from ..functions.geo import haversine_m, valid_latlon
 from ..functions.time import bucket_ts
 
 #: GPS outlier cap — implied speed vs neighbor (reference src/constants.ts:17)
 POSITION_MAX_SPEED_MPS = 25.0
 
+#: the tier ladder — the one table of tier widths: rollups bucket by it,
+#: streaming windows size by it, plans/tiers routes against it
 TIER_MS = {"5s": 5_000, "60s": 60_000, "1h": 3_600_000}
 
 
@@ -29,20 +32,50 @@ def _bucketed(df: DataFrame, tier: str, ts_col: str) -> DataFrame:
     return df.withColumn("bucket_time", bucket_ts(ts_col, TIER_MS[tier]))
 
 
-def rollup_scalar(df: DataFrame, tier: str, ts_col: str = "signalk_timestamp") -> DataFrame:
-    """A10 — scalar tier rollup (aggregation-service.ts:423-439)."""
-    v = F.col("value").cast("double")
-    return (
-        _bucketed(df, tier, ts_col)
-        .groupBy("context", "path", "bucket_time")
-        .agg(
+def _tier_aggs(kind: str, v: Column, ts_col: str) -> list[Column]:
+    """The tier schema's named aggregates, in tier column order, for one
+    (context, path, bucket) group — the one definition batch rollups and
+    streaming/ingest.streaming_rollup share, so a tier has one schema
+    whichever job wrote it. ``kind`` is 'scalar', 'angular' (float sin/cos
+    partials) or 'angular_nano' (the exact_partials nano-integer SUMS;
+    rollup_angular projects the partial averages from them)."""
+    span = [F.min(ts_col).alias("first_timestamp"), F.max(ts_col).alias("last_timestamp")]
+    if kind == "scalar":
+        return [
             F.avg(v).alias("value_avg"),
             F.min(v).alias("value_min"),
             F.max(v).alias("value_max"),
             F.count(v).alias("sample_count"),
-            F.min(ts_col).alias("first_timestamp"),
-            F.max(ts_col).alias("last_timestamp"),
-        )
+            *span,
+        ]
+    common = [
+        F.lit(None).cast("double").alias("value_min"),
+        F.lit(None).cast("double").alias("value_max"),
+        F.count(v).alias("sample_count"),
+        *span,
+    ]
+    if kind == "angular":
+        return [
+            angular_avg(v).alias("value_avg"),
+            *common,
+            F.avg(F.sin(v)).alias("value_sin_avg"),
+            F.avg(F.cos(v)).alias("value_cos_avg"),
+        ]
+    if kind == "angular_nano":
+        return [
+            *common,
+            F.sum(F.round(F.sin(v) * 1_000_000_000).cast("long")).alias("value_sin_sum_nano"),
+            F.sum(F.round(F.cos(v) * 1_000_000_000).cast("long")).alias("value_cos_sum_nano"),
+        ]
+    raise ValueError(f"no tier aggregate set for kind {kind!r}")
+
+
+def rollup_scalar(df: DataFrame, tier: str, ts_col: str = "signalk_timestamp") -> DataFrame:
+    """A10 — scalar tier rollup (aggregation-service.ts:423-439)."""
+    return (
+        _bucketed(df, tier, ts_col)
+        .groupBy("context", "path", "bucket_time")
+        .agg(*_tier_aggs("scalar", F.col("value").cast("double"), ts_col))
     )
 
 
@@ -67,27 +100,9 @@ def rollup_angular(
     reference's persisted-float-partial state."""
     v = F.col("value").cast("double")
     base = _bucketed(df, tier, ts_col).groupBy("context", "path", "bucket_time")
-    common = [
-        F.lit(None).cast("double").alias("value_min"),
-        F.lit(None).cast("double").alias("value_max"),
-        F.count(v).alias("sample_count"),
-        F.min(ts_col).alias("first_timestamp"),
-        F.max(ts_col).alias("last_timestamp"),
-    ]
     if not exact_partials:
-        return base.agg(
-            F.atan2(F.avg(F.sin(v)), F.avg(F.cos(v))).alias("value_avg"),
-            *common,
-            F.avg(F.sin(v)).alias("value_sin_avg"),
-            F.avg(F.cos(v)).alias("value_cos_avg"),
-        )
-    sn = F.round(F.sin(v) * 1_000_000_000).cast("long")
-    cn = F.round(F.cos(v) * 1_000_000_000).cast("long")
-    out = base.agg(
-        *common,
-        F.sum(sn).alias("value_sin_sum_nano"),
-        F.sum(cn).alias("value_cos_sum_nano"),
-    )
+        return base.agg(*_tier_aggs("angular", v, ts_col))
+    out = base.agg(*_tier_aggs("angular_nano", v, ts_col))
     qs = F.col("value_sin_sum_nano").cast("double") / F.col("sample_count") / 1e9
     qc = F.col("value_cos_sum_nano").cast("double") / F.col("sample_count") / 1e9
     return out.select(
@@ -149,9 +164,7 @@ def rollup_position(
         *tiebreak_cols,
         F.col("value_latitude").cast("double").alias("lat"),
         F.col("value_longitude").cast("double").alias("lon"),
-    ).filter(
-        F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0)
-    )
+    ).filter(valid_latlon(F.col("lat"), F.col("lon")))
 
     w = Window.partitionBy("context", "path", "bucket_time").orderBy(F.col("ts"), *tb)
     with_nbrs = (

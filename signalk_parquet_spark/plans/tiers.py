@@ -12,22 +12,16 @@ Catalyst has no materialized-view rewriting, so this stays planner logic —
 
 from __future__ import annotations
 
+from ..operators.rollup import TIER_MS
 from ..schema import is_string_path
 from .pathspec import PathSpec
 
-TIER_SECONDS = {"1h": 3600, "60s": 60, "5s": 5}
 TIER_ORDER = ("1h", "60s", "5s", "raw")
 
 
 def ideal_tier(resolution_ms: int) -> str:
-    s = resolution_ms / 1000.0
-    if s >= 3600:
-        return "1h"
-    if s >= 60:
-        return "60s"
-    if s >= 5:
-        return "5s"
-    return "raw"
+    """The coarsest tier no wider than the resolution (widths: TIER_MS)."""
+    return next((t for t in TIER_ORDER[:-1] if resolution_ms >= TIER_MS[t]), "raw")
 
 
 def route_tier(

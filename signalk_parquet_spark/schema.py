@@ -1,4 +1,4 @@
-"""DataRecord schema, type inference, and object flattening.
+"""DataRecord schema, value typing, and object flattening.
 
 Reference semantics reimplemented (not ported):
   - DataRecord columns (src/types.ts:298-314): received/signalk timestamps,
@@ -6,10 +6,9 @@ Reference semantics reimplemented (not ported):
     flattened `value_*` columns for object values (data-handler.ts:681-694).
   - Types are DOUBLE | BOOLEAN | UTF8 only; BIGINT is deliberately banned
     ("always DOUBLE for maritime data", parquet-writer.ts:498-505).
-  - Value-based inference: all-numeric -> DOUBLE, all-boolean -> BOOLEAN,
-    else UTF8 (schema-service.ts:143-177), with a SignalK-metadata-units
-    fallback for empty columns (units in a fixed physical-unit set -> DOUBLE,
-    schema-service.ts:179-221).
+  - Value-based typing (schema-service.ts:143-177): each observation lands
+    in the column of its own type — numbers in DOUBLE `value`, booleans in
+    `value_bool`, strings in `value_text` (flatten_value).
   - IMPROVEMENT over the reference: timestamps are real TimestampType (Spark
     reads/writes Parquet TIMESTAMP natively); ISO-8601 strings only at the
     API edge (SURVEY §1.2 recommendation).
@@ -21,9 +20,6 @@ import json
 from typing import Any
 
 from pyspark.sql import types as T
-
-#: SignalK metadata units that imply a numeric column (schema-service.ts:179-221)
-NUMERIC_UNITS = {"m", "m/s", "rad", "K", "Pa", "V", "A", "Hz", "ratio", "kg", "J", "deg"}
 
 #: root-level / identity paths that are always strings (HistoryAPI.ts:2500-2512)
 STRING_PATHS = {"name", "mmsi", "uuid", "flag", "port", "callsignVhf"}
@@ -52,31 +48,6 @@ def record_schema(value_columns: dict[str, T.DataType] | None = None) -> T.Struc
     for name, dtype in (value_columns or {}).items():
         fields.append(T.StructField(f"value_{name}", dtype))
     return T.StructType(fields)
-
-
-def infer_value_type(samples: list[Any], units: str | None = None) -> T.DataType:
-    """Value-based inference with units fallback: the reference's 'look at the
-    string and see what it is' rule (schema-service.ts:143-221). Never BIGINT."""
-    non_null = [s for s in samples if s is not None]
-    if not non_null:
-        return T.DoubleType() if units in NUMERIC_UNITS else T.StringType()
-    if all(isinstance(s, bool) for s in non_null):
-        return T.BooleanType()
-
-    def numeric(s: Any) -> bool:
-        if isinstance(s, bool):
-            return False
-        if isinstance(s, (int, float)):
-            return True
-        try:
-            float(str(s))
-            return True
-        except ValueError:
-            return False
-
-    if all(numeric(s) for s in non_null):
-        return T.DoubleType()
-    return T.StringType()
 
 
 def flatten_value(value: Any) -> dict[str, Any]:
@@ -114,21 +85,6 @@ def flatten_value(value: Any) -> dict[str, Any]:
     else:  # lists etc.
         out["value_json"] = json.dumps(value, separators=(",", ":"))
     return out
-
-
-def units_for(meta: str | None) -> str | None:
-    """Extract units from a SignalK meta JSON blob."""
-    if not meta:
-        return None
-    try:
-        return json.loads(meta).get("units")
-    except (ValueError, AttributeError):
-        return None
-
-
-def is_angular(meta: str | None) -> bool:
-    """Angular = metadata units == 'rad' (angular-paths.ts:20-32)."""
-    return units_for(meta) == "rad"
 
 
 def is_position_path(path: str) -> bool:

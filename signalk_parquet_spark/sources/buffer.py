@@ -54,9 +54,15 @@ class HotBuffer:
         """Export one day's hot rows to the cold lake. Idempotent: overwrite
         of the day's partitions — running twice leaves one copy (the
         reference proves the same property via its exported flag,
-        write-read-pipeline.test.ts:211-222)."""
+        write-read-pipeline.test.ts:211-222).
+
+        Safe under replay: an at-least-once ingest sink re-appends a
+        replayed micro-batch to the buffer, so the day is read through
+        dropDuplicates(). Replay duplicates are bit-identical complete
+        rows; distinct real observations differ in at least timestamp,
+        source or value, so the collapse never merges genuine data."""
         start = day.replace(hour=0, minute=0, second=0, microsecond=0)
-        rows = self.read(from_ts=start, to_ts=start + timedelta(days=1))
+        rows = self.read(from_ts=start, to_ts=start + timedelta(days=1)).dropDuplicates()
         n = rows.count()
         if n:
             lake.write_records(rows, tier="raw", mode="overwrite")

@@ -18,7 +18,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import date, datetime, timedelta
 
-TIERS = ("raw", "5s", "60s", "1h")
 #: directories the reference excludes from every scan (HistoryAPI.ts:1452)
 EXCLUDED_SUBDIRS = ("processed", "quarantine", "failed", "repaired")
 

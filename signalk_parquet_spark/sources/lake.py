@@ -22,7 +22,7 @@ from __future__ import annotations
 import logging
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .hive_paths import (
@@ -35,6 +35,19 @@ from .hive_paths import (
 PARTITION_COLS = ("tier", "context", "path", "year", "day")
 
 _LOG = logging.getLogger(__name__)
+
+
+def partition_values(ts_col: str) -> dict[str, Column]:
+    """The (context, path, year, day) partition values of rows keyed by
+    ``ts_col`` — the column twins of hive_paths.sanitize_context/
+    sanitize_path/day_of_year. Every writer and the incremental
+    touched-partition set derive the layout here, so they cannot drift."""
+    return {
+        "context": F.regexp_replace(F.regexp_replace(F.col("context"), r"\.", "__"), ":", "-"),
+        "path": F.regexp_replace(F.col("path"), r"\.", "__"),
+        "year": F.year(ts_col),
+        "day": F.lpad(F.dayofyear(ts_col).cast("string"), 3, "0"),
+    }
 
 
 class Lake:
@@ -52,12 +65,8 @@ class Lake:
         """Append DataRecords, deriving partition columns from the data.
         Idempotent day re-export = mode='overwrite' with dynamic partition
         overwrite (replaces the buffer's `exported` flag semantics)."""
-        out = (
-            df.withColumn("tier", F.lit(tier))
-            .withColumn("context", _sanitize_context_col(F.col("context")))
-            .withColumn("path", _sanitize_path_col(F.col("path")))
-            .withColumn("year", F.year("signalk_timestamp"))
-            .withColumn("day", F.lpad(F.dayofyear("signalk_timestamp").cast("string"), 3, "0"))
+        out = df.withColumn("tier", F.lit(tier)).withColumns(
+            partition_values("signalk_timestamp")
         )
         # hash-partition by the partition keys so each (context, path, day)
         # is written by ONE task -> one file per partition per batch instead
@@ -92,10 +101,7 @@ class Lake:
         tier, see read().) A compaction pass can later fold epochs away."""
         out = (
             df.withColumn("tier", F.lit(tier))
-            .withColumn("context", _sanitize_context_col(F.col("context")))
-            .withColumn("path", _sanitize_path_col(F.col("path")))
-            .withColumn("year", F.year("bucket_time"))
-            .withColumn("day", F.lpad(F.dayofyear("bucket_time").cast("string"), 3, "0"))
+            .withColumns(partition_values("bucket_time"))
             .withColumn("epoch", F.lit(int(epoch)))
         )
         (
@@ -280,10 +286,6 @@ class Lake:
             self._excluded_cache = found
         return self._excluded_cache
 
-    def schema_probe(self, tier: str = "raw") -> list[str]:
-        """Column inventory (replaces parquet_schema() probing, S6)."""
-        return self.read(tier=tier).columns
-
     def discover_contexts(self) -> list[str]:
         """DISTINCT context over every tier (context-discovery.ts:250-256).
         Not metadata-only: the distinct plans a scan of every tier's files
@@ -299,11 +301,3 @@ class Lake:
         from .hive_paths import unsanitize_path
 
         return sorted(unsanitize_path(r[0]) for r in rows)
-
-
-def _sanitize_context_col(c):
-    return F.regexp_replace(F.regexp_replace(c, r"\.", "__"), ":", "-")
-
-
-def _sanitize_path_col(c):
-    return F.regexp_replace(c, r"\.", "__")

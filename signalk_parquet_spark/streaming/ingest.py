@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.rollup import TIER_MS, _tier_aggs
 from ..sources.buffer import HotBuffer
 
 
@@ -111,89 +112,35 @@ def start_file_ingest(
     return writer.trigger(processingTime="30 seconds").start()
 
 
-def _windowed_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    tier_seconds: int,
-    watermark: str,
-    agg_cols: dict,
-) -> DataFrame:
-    """Shared scaffolding of the scalar/angular streaming rollups: one
-    watermarked tumbling-window groupBy over (window, context, path) with
-    the caller's {name: aggregate} dict — scalar and angular twins differ
-    ONLY in their aggregates, so the watermark/window/reader shape lives
-    once."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg_names = list(agg_cols)
-    return (
-        stream.withWatermark("signalk_timestamp", watermark)
-        .groupBy(
-            F.window("signalk_timestamp", f"{tier_seconds} seconds").alias("w"),
-            "context",
-            "path",
-        )
-        .agg(*[c.alias(n) for n, c in agg_cols.items()])
-        .select(
-            F.col("w.start").alias("bucket_time"),
-            "context",
-            "path",
-            *agg_names,
-        )
-    )
-
-
 def streaming_rollup(
     spark: SparkSession,
     source_dir: str,
     schema,
-    tier_seconds: int = 5,
+    tier: str = "5s",
+    kind: str = "scalar",
     watermark: str = "10 seconds",
 ) -> DataFrame:
-    """Streaming tier rollup: windowed aggregate with watermark — the
-    declarative form of the reference's batch raw→5s job + its 48 h lateness
-    bound (SURVEY §2.8). Returns the streaming DataFrame for the caller to
-    sink (tests use format('memory') + availableNow)."""
-    v = F.col("value").cast("double")
-    return _windowed_rollup(
-        spark, source_dir, schema, tier_seconds, watermark,
-        {
-            "value_avg": F.avg(v),
-            "value_min": F.min(v),
-            "value_max": F.max(v),
-            "sample_count": F.count(v),
-        },
-    )
-
-
-def streaming_rollup_angular(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    tier_seconds: int = 5,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Streaming ANGULAR tier rollup — the streaming twin of
-    operators/rollup.rollup_angular (SURVEY A11; the reference's rollup
-    service materializes angular tiers alongside scalar ones,
-    aggregation-service.ts:468-528): vector average via
-    ATAN2(AVG(SIN), AVG(COS)), the sin/cos PARTIALS persisted alongside
-    (so reaggregate_angular consumes streaming-produced tiers unchanged —
-    the A8 lossless re-agg state), min/max NULLed (extrema are
-    meaningless on a circle). Same watermark/append semantics as
-    streaming_rollup: each window emits once, after the watermark closes
-    it, so the written tier is restart-safe."""
-    v = F.col("value").cast("double")
-    return _windowed_rollup(
-        spark, source_dir, schema, tier_seconds, watermark,
-        {
-            "value_avg": F.atan2(F.avg(F.sin(v)), F.avg(F.cos(v))),
-            "value_min": F.lit(None).cast("double"),
-            "value_max": F.lit(None).cast("double"),
-            "sample_count": F.count(v),
-            "value_sin_avg": F.avg(F.sin(v)),
-            "value_cos_avg": F.avg(F.cos(v)),
-        },
+    """Streaming tier rollup: a watermarked tumbling-window groupBy over
+    (context, path, window) — the declarative form of the reference's batch
+    raw→tier job + its 48 h lateness bound (SURVEY §2.8). The window width
+    is the tier's TIER_MS width and the aggregates are the batch rollup's
+    own (rollup._tier_aggs), so a streaming-written tier has exactly the
+    batch tier's columns: ``kind='angular'`` persists the sin/cos partials
+    reaggregate_angular consumes (A8/A11, aggregation-service.ts:468-528)
+    with min/max NULLed ('position' has no streaming form: its neighbor
+    windows need the whole bucket). Returns the streaming DataFrame for the
+    caller to sink (tests use format('memory') + availableNow); in append
+    mode each window emits once, after the watermark closes it."""
+    ts = "signalk_timestamp"
+    return (
+        spark.readStream.schema(schema).parquet(source_dir)
+        .withWatermark(ts, watermark)
+        .groupBy(
+            "context", "path",
+            F.window(ts, f"{TIER_MS[tier]} milliseconds").alias("bucket_time"),
+        )
+        .agg(*_tier_aggs(kind, F.col("value").cast("double"), ts))
+        .withColumn("bucket_time", F.col("bucket_time.start"))
     )
 
 
@@ -204,10 +151,9 @@ def start_rollup_job(
     lake,
     checkpoint_dir: str,
     tier: str = "5s",
-    tier_seconds: int = 5,
     watermark: str = "10 seconds",
     available_now: bool = True,
-    angular: bool = False,
+    kind: str = "scalar",
 ) -> StreamingQuery:
     """The reference's ingest→rollup lifecycle (§2.10) as ONE continuously
     running pipeline: readStream → watermarked tumbling-window rollup →
@@ -224,9 +170,7 @@ def start_rollup_job(
     Buckets still open at the watermark stay in the state store across
     restarts and emit when later data closes them — nothing is lost.
     """
-
-    rollup = streaming_rollup_angular if angular else streaming_rollup
-    agg = rollup(spark, source_dir, schema, tier_seconds, watermark)
+    agg = streaming_rollup(spark, source_dir, schema, tier, kind, watermark)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -260,20 +204,17 @@ def start_incremental_maintenance(
     watches the late-arrival feed instead and, per micro-batch:
 
       1. appends the batch to the hot buffer;
-      2. rebuilds each touched DAY buffer->raw as a dynamic partition
-         overwrite (the `exported`-flag equivalent) with exact-duplicate
-         collapse, a driver loop bounded by the batch's day spread;
+      2. re-exports each touched DAY buffer->raw (HotBuffer.export_day:
+         a dynamic partition overwrite, the `exported`-flag equivalent), a
+         driver loop bounded by the batch's day spread;
       3. refreshes ONLY the touched tier partitions
          (operators/incremental.rollup_incremental).
 
     Restart safety: at-least-once replay re-APPENDS the batch to the
-    buffer, so the day rebuild reads the buffer through dropDuplicates()
-    — replay duplicates are bit-identical complete rows, so the rebuilt
-    day, and hence the scoped recompute over it, converge to the
-    exactly-once result without a transactional table format. (Distinct
-    real observations always differ in at least signalk_timestamp /
-    source / value, so the collapse never merges genuine data; the main
-    ingest's debounce() suppresses same-ts same-source repeats anyway.)
+    buffer, and HotBuffer.export_day reads the day through
+    dropDuplicates(), so the rebuilt day, and hence the scoped recompute
+    over it, converge to the exactly-once result without a transactional
+    table format.
 
     Operating envelope (the reference's own): a late row must arrive
     within the buffer's retention of its day, because export_day rebuilds
@@ -281,7 +222,7 @@ def start_incremental_maintenance(
     and the 48 h buffer retention define the same window
     (sqlite-buffer.ts README: 48 h default).
     """
-    from datetime import datetime, timedelta, timezone
+    from datetime import datetime, timezone
 
     from ..operators.incremental import rollup_incremental
 
@@ -298,12 +239,7 @@ def start_incremental_maintenance(
             ).distinct().collect()
         ]
         for d in days:
-            start = datetime(d.year, d.month, d.day, tzinfo=timezone.utc)
-            rows = buffer.read(
-                from_ts=start, to_ts=start + timedelta(days=1)
-            ).dropDuplicates()
-            if not rows.isEmpty():
-                lake.write_records(rows, tier="raw", mode="overwrite")
+            buffer.export_day(lake, datetime(d.year, d.month, d.day, tzinfo=timezone.utc))
         rollup_incremental(lake, batch_df, tier, kind)
 
     writer = (

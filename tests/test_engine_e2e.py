@@ -107,13 +107,16 @@ def test_buffer_beats_parquet_per_bucket(spark, lake, tmp_path):
 
 
 def test_export_day_exactly_once(spark, lake, tmp_path):
-    # idempotent overwrite replaces the `exported` flag: export twice, count once
+    # idempotent overwrite replaces the `exported` flag: export twice, count
+    # once; an at-least-once sink's replay appends the same batch twice and
+    # the export still carries each row once
     root = str(tmp_path / "lake2")
     lk = Lake(spark, root)
     buf = HotBuffer(spark, str(tmp_path / "hot2"))
     # the day's last microsecond belongs to the day: [start, start + 1 day)
     last = T0.replace(hour=23, minute=59, second=59, microsecond=999999)
     rows = scalar_series(T0, [1.0, 2.0, 3.0]) + scalar_series(last, [4.0])
+    buf.append(records_df(spark, rows))
     buf.append(records_df(spark, rows))
     n1 = buf.export_day(lk, T0)
     n2 = buf.export_day(lk, T0)

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from signalk_parquet_spark.functions.time import parse_duration_ms, parse_iso
 from signalk_parquet_spark.operators.aggregate import METHODS
 from signalk_parquet_spark.plans.pathspec import parse_path_spec
-from signalk_parquet_spark.plans.tiers import TIER_SECONDS, ideal_tier, route_tier
+from signalk_parquet_spark.operators.rollup import TIER_MS
+from signalk_parquet_spark.plans.tiers import ideal_tier, route_tier
 from signalk_parquet_spark.sources.hive_paths import (
     day_of_year,
     sanitize_context,
@@ -105,7 +106,7 @@ def test_pathspec_roundtrip(path, method, smoothing, src):
 def test_tier_routing_never_coarser_than_resolution(res_ms):
     tier = ideal_tier(res_ms)
     if tier != "raw":
-        assert TIER_SECONDS[tier] * 1000 <= res_ms
+        assert TIER_MS[tier] <= res_ms
 
 
 @settings(max_examples=200)

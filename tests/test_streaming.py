@@ -92,9 +92,14 @@ def test_ingest_filters_mmsi_and_meta(spark):
 
 
 def test_streaming_rollup_windowed(spark, tmp_path):
+    """The streaming 5s tier is the batch rollup_scalar tier: same columns,
+    in the same order, and the same value in every column of every
+    bucket (first/last_timestamp included)."""
+    from signalk_parquet_spark.operators.rollup import rollup_scalar
+
     rows = scalar_series(T0, [float(i) for i in range(10)])  # 10 s of 1 Hz
     src = _write_source(spark, tmp_path, rows)
-    agg = streaming_rollup(spark, src, records_df(spark, rows).schema, tier_seconds=5)
+    agg = streaming_rollup(spark, src, records_df(spark, rows).schema, tier="5s")
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -103,9 +108,14 @@ def test_streaming_rollup_windowed(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {r["bucket_time"].second: r for r in spark.sql("SELECT * FROM rollup_out").collect()}
+    stream_tier = spark.sql("SELECT * FROM rollup_out")
+    got = {r["bucket_time"].second: r for r in stream_tier.collect()}
     assert got[0]["sample_count"] == 5 and got[0]["value_avg"] == 2.0
     assert got[5]["sample_count"] == 5 and got[5]["value_avg"] == 7.0
+    batch = rollup_scalar(records_df(spark, rows), "5s")
+    assert stream_tier.columns == batch.columns
+    want = {r["bucket_time"].second: r for r in batch.collect()}
+    assert {k: r.asDict() for k, r in got.items()} == {k: r.asDict() for k, r in want.items()}
 
 
 def test_streaming_rollup_angular_matches_batch_tier(spark, tmp_path):
@@ -119,14 +129,13 @@ def test_streaming_rollup_angular_matches_batch_tier(spark, tmp_path):
         reaggregate_angular,
         rollup_angular,
     )
-    from signalk_parquet_spark.streaming.ingest import streaming_rollup_angular
 
     # headings that wrap through 360° so naive averaging would be wrong
     degs = [350.0, 10.0, 20.0, 340.0, 0.0, 30.0, 355.0, 15.0, 5.0, 345.0]
     rows = scalar_series(T0, [math.radians(d) for d in degs])  # 1 Hz
     src = _write_source(spark, tmp_path, rows)
-    agg = streaming_rollup_angular(
-        spark, src, records_df(spark, rows).schema, tier_seconds=5
+    agg = streaming_rollup(
+        spark, src, records_df(spark, rows).schema, tier="5s", kind="angular"
     )
     q = (
         agg.writeStream.outputMode("complete")
@@ -137,28 +146,22 @@ def test_streaming_rollup_angular_matches_batch_tier(spark, tmp_path):
     )
     q.awaitTermination(120)
     stream_tier = spark.sql("SELECT * FROM rollup_ang_out")
-    got = {
-        r["bucket_time"]: (
-            r["value_avg"], r["value_min"], r["value_max"],
-            r["sample_count"], r["value_sin_avg"], r["value_cos_avg"],
-        )
-        for r in stream_tier.collect()
-    }
+    cols = (
+        "value_avg", "value_min", "value_max", "sample_count",
+        "value_sin_avg", "value_cos_avg", "first_timestamp", "last_timestamp",
+    )
+    got = {r["bucket_time"]: tuple(r[c] for c in cols) for r in stream_tier.collect()}
     batch = rollup_angular(records_df(spark, rows), "5s")
-    want = {
-        r["bucket_time"]: (
-            r["value_avg"], r["value_min"], r["value_max"],
-            r["sample_count"], r["value_sin_avg"], r["value_cos_avg"],
-        )
-        for r in batch.collect()
-    }
+    assert stream_tier.columns == batch.columns
+    want = {r["bucket_time"]: tuple(r[c] for c in cols) for r in batch.collect()}
     # floats pin to ~1 ulp, not bit-equality: the streaming path sums
     # partials in micro-batch order, the batch path in scan order, and
     # float addition is not associative (observed delta: 2 ulp)
     assert set(got) == set(want) and len(want) == 2
-    for k, (avg, vmin, vmax, n, s, c) in want.items():
-        g_avg, g_min, g_max, g_n, g_s, g_c = got[k]
+    for k, (avg, vmin, vmax, n, s, c, first, last) in want.items():
+        g_avg, g_min, g_max, g_n, g_s, g_c, g_first, g_last = got[k]
         assert (g_min, g_max, g_n) == (vmin, vmax, n) == (None, None, 5)
+        assert (g_first, g_last) == (first, last) == (k, k + timedelta(seconds=4))
         assert g_avg == pytest.approx(avg, rel=1e-12, abs=1e-15)
         assert g_s == pytest.approx(s, rel=1e-12, abs=1e-15)
         assert g_c == pytest.approx(c, rel=1e-12, abs=1e-15)
@@ -215,8 +218,7 @@ def test_rollup_job_end_to_end_restart_safe(spark, tmp_path):
 
     def run():
         q = start_rollup_job(
-            spark, src, schema, lake, ckpt, tier="5s", tier_seconds=5,
-            watermark="10 seconds",
+            spark, src, schema, lake, ckpt, tier="5s", watermark="10 seconds",
         )
         q.awaitTermination(120)
 

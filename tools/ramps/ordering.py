@@ -13,11 +13,13 @@ the IDENTICAL permutation position:
 
 Each row reports both walls plus a DISTRIBUTED differential (join on id,
 count positions that disagree — scalar to the driver, never the data).
-Measured shape (local[32], post-warmup): 2M rows 2.6 s vs 2.8 s, 8M
-3.0 s vs 9.9 s, 32M 9.3 s vs 39.6 s — the single-partition sort grows
-superlinearly while the bucketed plan tracks data volume; at cluster
-scale the window baseline is additionally the whole dataset funneled
-through one machine, i.e. not runnable at all.
+Measured shape (32-core host, local[32], post-warmup): 2M rows 2.6 s vs
+2.8 s, 8M 3.0 s vs 9.9 s, 32M 9.3 s vs 39.6 s — the single-partition
+sort grows superlinearly while the bucketed plan tracks data volume. On
+a 4-core host (two runs) the window sort wins at 2M (4.0/4.5 s vs
+7.9/18.5 s) and ties at 8M (13.9/15.2 s vs 15.0/14.0 s): four cores give
+the bucketed plan little to spread its exchange over. At cluster scale the window baseline is additionally
+the whole dataset funneled through one machine, i.e. not runnable at all.
 
 Run: python tools/ramp.py ordering   (~2-3 min; prints one table)
 """
