@@ -173,12 +173,12 @@ def main() -> None:
 
     # 2c. SEMANTIC dedup (SemDeDup): the lexical rungs above can't see
     # rephrasings — cluster the documents' embeddings into cells and drop
-    # any doc whose cell holds a lower-id doc at cosine >= 0.4 (numpy mode:
-    # map-only assignment + one groupBy, zero joins)
+    # any doc whose cell holds a lower-id doc at cosine >= 0.4 (map-only
+    # assignment + one groupBy, zero joins)
     emb = registry.load(spark, sf, "embeddings")
     sem = semantic_keep(
         emb, stride_centroids(emb, "vec_id", "embedding", 125),
-        "vec_id", "embedding", 0.4, mode="numpy",
+        "vec_id", "embedding", 0.4,
     )
     kept = kept.join(
         sem.filter("keep").select(F.col("id").alias("doc_id")), "doc_id"
@@ -206,8 +206,8 @@ def main() -> None:
     kept = kept.join(leaked, "doc_id", "left_anti")
     n3 = kept.count()
     # the paraphrase-robust rung (r8): embedding-cosine leak pairs across
-    # the same split — at pipeline scale the fused IVF screen
-    # (decontaminate_semantic_ivf(assign="numpy")) replaces the exact BNLJ
+    # the same split — at pipeline scale the IVF screen
+    # (decontaminate_semantic_ivf) replaces the exact BNLJ
     n_sem_pairs = q["decontaminate_semantic"](spark, sf).count()
     # the third response — redact the contaminated spans instead of
     # dropping the doc (what a pipeline does for long documents)

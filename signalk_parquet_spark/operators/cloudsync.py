@@ -40,8 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: the reference's excluded subtrees (data-handler.ts:962-975)
-DEFAULT_EXCLUDED = ("processed", "repaired", "failed", "quarantine")
+from ..sources.hive_paths import EXCLUDED_SUBDIRS
+
+#: the reference's excluded subtrees (data-handler.ts:962-975) — the same
+#: four names every lake scan skips
+DEFAULT_EXCLUDED = EXCLUDED_SUBDIRS
 
 _LIST_SCHEMA = T.StructType(
     [

@@ -255,8 +255,7 @@ def _cell_dist_structs(
     cent_rows, emb: Column | str, dim: int | None = None
 ) -> Column:
     """Array of (d, cid) structs over driver-collected centroid rows —
-    the ONE construction cell_argmin_col and cell_probes_col both rank, so
-    their probe-1 == argmin contract can't drift. d = |c|² − 2·e·c with
+    the construction cell_argmin_col ranks. d = |c|² − 2·e·c with
     |c|² accumulated on the driver in sequential IEEE order (same value as
     an oracle's list_dot_product(c, c)); ties resolve to the lowest cid
     via struct ordering, matching a (d, cid) row_number sort.
@@ -289,8 +288,6 @@ def _cell_dist_structs(
                 d = f"{cn2!r}D - 2.0D * {acc}"
             parts.append(f"struct({d} AS d, CAST({int(r['cid'])} AS BIGINT) AS cid)")
         return F.expr("array(" + ",".join(parts) + ")")
-    if isinstance(emb, str):
-        emb = F.col(emb)
     choices = []
     for r in cent_rows:
         cvec = [float(x) for x in r["cemb"]]
@@ -309,16 +306,6 @@ def cell_argmin_col(cent_rows, emb: Column | str, dim: int | None = None) -> Col
     tie order). Per-row cost grows with K — the numpy fused assignment is
     the large-K path."""
     return F.array_min(_cell_dist_structs(cent_rows, emb, dim))["cid"]
-
-
-def cell_probes_col(cent_rows, emb: Column | str, n_probe: int, dim: int | None = None) -> Column:
-    """The multi-probe sibling of :func:`cell_argmin_col`: the ``n_probe``
-    nearest centroid cell ids as an ARRAY Column, nearest first. Both
-    functions rank the SAME _cell_dist_structs array, so probe 1 always
-    equals cell_argmin_col by construction. Same literal-inlining broadcast
-    contract and per-row O(K) cost; K·log K extra for the sort."""
-    ranked = F.array_sort(_cell_dist_structs(cent_rows, emb, dim))
-    return F.transform(F.slice(ranked, 1, n_probe), lambda s: s["cid"])
 
 
 #: driver-side row bound for the ANN family's BROADCAST CONTRACT tables
@@ -351,7 +338,7 @@ def bounded_collect(df: DataFrame, what: str, max_rows: int = BROADCAST_MAX_ROWS
 
 
 #: default per-cell member cap for semantic_keep. The within-cell stage is
-#: m² in BOTH work and (fused path) memory — keep_group materializes an
+#: m² in BOTH work and memory — keep_group materializes an
 #: m×m float64 cosine matrix, so 8192 members is ~0.5 GB per matrix and a
 #: comfortable single-task bound; a duplicate-flood cell 10× that would be
 #: 50 GB on one task. K ~ sqrt(N) keeps NORMAL cells far below this; only
@@ -379,29 +366,12 @@ def _semantic_shard(n_over: Column, id_c: Column, max_cell: int) -> Column:
     ).otherwise(F.lit(0).cast("long"))
 
 
-def _raise_oversized(sizes: DataFrame, max_cell: int) -> None:
-    over = sizes.filter(F.col("m") > max_cell).orderBy(F.desc("m")).limit(5).collect()
-    if over:
-        worst = ", ".join(f"cid={r['cid']}: {r['m']}" for r in over)
-        raise ValueError(
-            f"semantic_keep: cell(s) exceed max_cell={max_cell} ({worst})."
-            " A flooded cell does m^2 work (and m^2 memory on the fused"
-            " path) on ONE task. Run exact_dedup first to remove"
-            " byte-identical copies, raise the centroid count K so cells"
-            " shrink, or pass on_oversize='shard' to accept a bounded"
-            " recall loss (near-dup pairs split across shards of an"
-            " oversized cell are not compared)."
-        )
-
-
 def semantic_keep(
     collection: DataFrame,
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
     tau: float,
-    dim: int | None = None,
-    mode: str = "expr",
     max_cell: int | None = SEMANTIC_MAX_CELL,
     on_oversize: str = "raise",
 ) -> DataFrame:
@@ -416,121 +386,41 @@ def semantic_keep(
 
     Scale shape: centroids are driver-collected BY CONTRACT (a coarse
     quantizer is k ~ sqrt(N) rows, same broadcast contract as the knn/ann
-    query sets) and inlined as literals, so cell assignment is a MAP-ONLY
-    argmin over K distance expressions — no crossJoin, no assignment
-    shuffle (the expr-path IVF pays a groupBy(id) for the same step). The
-    only shuffles are the within-cell equi-join on cid and the dropped-set
-    distinct; K grows with the corpus, so cells stay bounded and the
-    self-join never degenerates toward all-pairs — exactly the property
-    that makes SemDeDup tractable where embedding_neardup's blocking key
-    is given, not learned.
+    query sets) and broadcast as one numpy matrix. ONE Arrow-batched map
+    stage assigns cells, then ONE shuffle groups each cell and an
+    applyInPandas stage makes every keep/drop decision locally — zero
+    joins in the whole operator. K grows with the corpus, so cells stay
+    bounded and the within-cell work never degenerates toward all-pairs —
+    exactly the property that makes SemDeDup tractable where
+    embedding_neardup's blocking key is given, not learned.
 
-    Parity: distances are d = |c|² − 2·e·c with |c|² accumulated on the
-    driver in sequential IEEE order (same value as the oracle's
-    list_dot_product(c, c)); argmin ties resolve to the lowest cid via
-    struct ordering, matching the oracle's (d, cid) row_number sort.
-    Cosine-vs-tau is a threshold on a continuum (CLAUDE.md rule 4).
-
-    mode= picks the execution strategy (both BIT-IDENTICAL — measured
-    ramps in SCALE.md):
-      "expr"  — pure Column expressions. Assignment inlines K literal
-                distance chains, so per-row cost grows with K: fine for
-                the small-K oracle gate, quadratic-ish once K scales
-                with N (the SemDeDup contract).
-      "numpy" — the deployment path: ONE Arrow-batched map stage assigns
-                cells (dim-ordered accumulation, argmin over ascending
-                cids == the (d, cid) sort), then ONE shuffle groups each
-                cell and an applyInPandas stage makes every keep/drop
-                decision locally — zero joins in the whole operator.
-                Per-cell pairwise cosines accumulate dim-ordered, so
-                every value matches the expr/oracle form bit-for-bit
-                (the _fused_multitable_scan float discipline).
+    Parity: distances are d = |c|² − 2·e·c with |c|² and e·c accumulated in
+    dim order (the same sequential IEEE value as the oracle's
+    list_dot_product); the argmin over ascending cids resolves ties to the
+    lowest cid, matching the oracle's (d, cid) row_number sort. Per-cell
+    pairwise cosines also accumulate dim-ordered (the
+    _fused_multitable_scan float discipline). Cosine-vs-tau is a threshold
+    on a continuum (CLAUDE.md rule 4).
 
     max_cell / on_oversize guard the m² trap: a duplicate-flood cell of m
-    members does m² comparisons on ONE join partition (and allocates an
-    m×m matrix on the fused path), so the docstring prescription "run
-    exact_dedup first" is now ENFORCED rather than trusted to call-site
-    discipline. on_oversize="raise" (default) fails with that
-    prescription; "shard" deterministically splits any oversized cell
-    into ceil(1.25·m/max_cell) hash shards (the 25% headroom keeps the
-    EXPECTED shard size ≤ 0.8·max_cell — see _semantic_shard for the
-    tail-bound argument; size recall-loss estimates from the shard count,
-    not from m/max_cell) and compares within shards only —
-    bounded work per task, at the documented cost that near-dup pairs
-    straddling shards of an OVERSIZED cell are kept rather than compared
-    (under-dropping, never wrong drops). Results with no oversized cell
-    are identical under every setting. max_cell=None disables the guard
-    (the oracle gates run well under the cap either way)."""
+    members does m² comparisons and allocates an m×m float64 matrix on ONE
+    task, so the prescription "run exact_dedup first" (it removes
+    byte-identical copies with a hash-groupBy) is ENFORCED rather than
+    trusted to call-site discipline. on_oversize="raise" (default) fails
+    with that prescription, checked INSIDE the group task (zero extra
+    passes — the task already holds the whole cell); "shard" pays one
+    extra count+broadcast pass to split any oversized cell into
+    ceil(1.25·m/max_cell) hash shards (the 25% headroom keeps the EXPECTED
+    shard size ≤ 0.8·max_cell — see _semantic_shard for the tail-bound
+    argument; size recall-loss estimates from the shard count, not from
+    m/max_cell) and compares within shards only — bounded work per task,
+    at the documented cost that near-dup pairs straddling shards of an
+    OVERSIZED cell are kept rather than compared (under-dropping, never
+    wrong drops). Results with no oversized cell are identical under every
+    setting. max_cell=None disables the guard (the oracle gates run well
+    under the cap either way)."""
     if on_oversize not in ("raise", "shard"):
         raise ValueError(f"on_oversize must be 'raise' or 'shard', got {on_oversize!r}")
-    if mode == "numpy":
-        return _semantic_keep_fused(
-            collection, centroids, id_col, vec_col, tau,
-            max_cell=max_cell, on_oversize=on_oversize,
-        )
-    cent_rows = bounded_collect(centroids.orderBy("cid"), "semantic_keep centroid table")
-    e = _with_norms(collection, id_col, vec_col, dim)
-    # materialize the assignment once: it feeds BOTH sides of the self-join
-    # plus the final keep-join, and a persisted frame must be fully built
-    # before self-join reuse (CLAUDE.md: AQE + partial cache dropped pairs)
-    assign = e.withColumn("cid", cell_argmin_col(cent_rows, "emb", dim)).persist()
-    assign.count()
-    shard_a = shard_b = F.lit(0).cast("long")
-    if max_cell is not None:
-        sizes = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("m"))
-        if on_oversize == "raise":
-            _raise_oversized(sizes, max_cell)
-        else:
-            # annotate every member with its cell size (broadcast: one row
-            # per cell) and shard oversized cells deterministically
-            assign = assign.join(F.broadcast(sizes), "cid")
-            shard_a = _semantic_shard(F.col("m"), F.col("id_a"), max_cell)
-            shard_b = _semantic_shard(F.col("m"), F.col("id_b"), max_cell)
-    a = assign.select(
-        F.col("id").alias("id_a"), F.col("emb").alias("emb_a"),
-        F.col("n2").alias("n2_a"), "cid",
-        *([F.col("m")] if max_cell is not None and on_oversize == "shard" else []),
-    ).withColumn("shard", shard_a)
-    b = assign.select(
-        F.col("id").alias("id_b"), F.col("emb").alias("emb_b"),
-        F.col("n2").alias("n2_b"), "cid",
-        *([F.col("m")] if max_cell is not None and on_oversize == "shard" else []),
-    ).withColumn("shard", shard_b)
-    cos = dot(F.col("emb_a"), F.col("emb_b"), dim) / F.sqrt(F.col("n2_a") * F.col("n2_b"))
-    dropped = (
-        a.join(b, ["cid", "shard"])
-        .filter((F.col("id_a") < F.col("id_b")) & (cos >= tau))
-        .select(F.col("id_b").alias("dropped_id"))
-        .distinct()
-    )
-    return (
-        assign.select("id", "cid")
-        .join(dropped, assign["id"] == dropped["dropped_id"], "left")
-        .select("id", "cid", F.col("dropped_id").isNull().alias("keep"))
-    )
-
-
-def _semantic_keep_fused(
-    collection: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    tau: float,
-    max_cell: int | None = SEMANTIC_MAX_CELL,
-    on_oversize: str = "raise",
-) -> DataFrame:
-    """semantic_keep's numpy deployment path: map-only cell assignment +
-    one groupBy(cid) shuffle + per-cell local keep decisions. See
-    semantic_keep's docstring for the parity contract.
-
-    Skew note: a cell of m members costs m² local work AND an m×m float64
-    matrix, so a pathological concentration (exact-duplicate floods) lands
-    on one task — at corpus scale run exact_dedup FIRST (it removes
-    byte-identical copies with a hash-groupBy), which bounds concentration
-    to genuine near-dup mass. That prescription is now enforced by
-    max_cell: "raise" checks INSIDE the group task (zero extra passes —
-    the task already holds the whole cell); "shard" pays one extra
-    count+broadcast pass to split oversized cells before the shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -627,7 +517,6 @@ def pq_topk(
     n_sub: int = 4,
     sub_dim: int = 16,
     k: int = 5,
-    mode: str = "expr",
 ) -> DataFrame:
     """Product-Quantization top-k over int8-quantized embeddings — the
     16x-compression rung of the ANN ladder (exact → LSH → IVF → int8 SQ →
@@ -646,116 +535,19 @@ def pq_topk(
     of ``n_sub`` longs — no float summation order, no rounding, so an
     oracle hash-matches with zero tolerance (the ann_scalar_quant
     discipline extended to the compressed rung). Ties: encoding argmin
-    resolves to the lowest codeword id (struct ordering), ranking to the
-    lowest neighbor_id.
+    resolves to the lowest codeword id (first occurrence over id-ordered
+    codewords), ranking to the lowest neighbor_id.
 
     Scale shape: the codebook and query LUTs are driver-built BY CONTRACT
     (n_sub × K × queries integers — the broadcast contract of the ann
-    family); the collection encodes map-only against codeword literals and
-    scores map-only against the broadcast LUT frame, so the only shuffle
-    is the top-k window. At 100 TB the encoded table (n_sub bytes/vector
-    + id) is what a deployment persists — 16x smaller than the int8 cache,
-    64x smaller than float64.
+    family); ONE Arrow-batched map stage quantizes, encodes, and
+    ADC-scores each batch with n_sub (n x sub_dim) @ (sub_dim x K) int64
+    matmuls (exact at any summation order; 127^2 x 16 cannot overflow), so
+    the only shuffle is the top-k window. At 100 TB the encoded table
+    (n_sub bytes/vector + id) is what a deployment persists — 16x smaller
+    than the int8 cache, 64x smaller than float64.
 
-    mode= picks the encode/score strategy (the ivf_topk assign= pattern):
-      "expr"  — pure Column expressions; the encode argmin inlines every
-                codeword as a literal struct, so codegen cost grows with
-                K (measured ~5.5 s at 60k x 480 on local[32]).
-      "numpy" — ONE Arrow-batched map stage quantizes, encodes, and
-                ADC-scores each batch against the broadcast codebook+LUTs
-                (the _fused_ivf_topk shape). Because EVERY value is an
-                integer (int64 matmuls cannot overflow at 127^2 x 16) the
-                fused path is exactly equal to the expr path — no float
-                discipline needed, unlike the IVF fusion; argmin ties
-                resolve to the lowest codeword id on both (first
-                occurrence == lowest cid, codewords id-ordered)."""
-    from ..functions.vectors import int8_quantize, int_dot
-
-    if mode == "numpy":
-        return _fused_pq_topk(
-            collection, queries, id_col, vec_col, stride, n_sub, sub_dim, k
-        )
-    if mode != "expr":  # a typo must not silently run the slow path
-        raise ValueError(f"pq_topk mode must be 'expr' or 'numpy', got {mode!r}")
-
-    e = collection.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv"))
-    # codebook: stride-selected vectors' subvectors, ascending id == ascending
-    # codeword id, so argmin ties resolve identically in SQL (ORDER BY d, cid)
-    cw_rows = bounded_collect(
-        e.filter(F.col("id") % stride == 0).orderBy("id"), "PQ codebook"
-    )
-    cods = []  # per subspace: list of (cid, subvec, |c|^2)
-    for m in range(n_sub):
-        lo = m * sub_dim
-        cods.append(
-            [
-                (int(r["id"]), r["qv"][lo : lo + sub_dim],
-                 sum(c * c for c in r["qv"][lo : lo + sub_dim]))
-                for r in cw_rows
-            ]
-        )
-
-    enc = e
-    for m in range(n_sub):
-        sub = F.slice(F.col("qv"), m * sub_dim + 1, sub_dim)
-        choices = [
-            F.struct(
-                (F.lit(cc) - F.lit(2) * int_dot(sub, lit_array(cv, "int")))
-                .cast("long").alias("d"),
-                F.lit(cid).cast("long").alias("cid"),
-                F.lit(j).alias("j"),
-            )
-            for j, (cid, cv, cc) in enumerate(cods[m])
-        ]
-        enc = enc.withColumn(f"code{m}", F.array_min(F.array(*choices))["j"])
-    enc = enc.drop("qv")
-
-    # per-(query, subspace) ADC lookup tables, position-aligned with codes
-    q_rows = bounded_collect(
-        queries.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv"))
-        .orderBy("id"),
-        "PQ query set",
-    )
-    spark = collection.sparkSession
-    lut_rows = []
-    for r in q_rows:
-        luts = []
-        for m in range(n_sub):
-            lo = m * sub_dim
-            qsub = r["qv"][lo : lo + sub_dim]
-            luts.append([sum(int(a) * int(c) for a, c in zip(qsub, cv)) for _, cv, _ in cods[m]])
-        lut_rows.append((int(r["id"]), *luts))
-    lut_schema = "query_id long, " + ", ".join(f"lut{m} array<long>" for m in range(n_sub))
-    lut = local_frame(spark, lut_rows, lut_schema)
-
-    score = None
-    for m in range(n_sub):
-        term = F.element_at(F.col(f"lut{m}"), F.col(f"code{m}").cast("int") + 1)
-        score = term if score is None else score + term
-    pairs = enc.join(F.broadcast(lut), F.col("id") != F.col("query_id")).select(
-        "query_id", F.col("id").alias("neighbor_id"), score.alias("pq_score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(), "neighbor_id")
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _fused_pq_topk(
-    collection: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    stride: int,
-    n_sub: int,
-    sub_dim: int,
-    k: int,
-) -> DataFrame:
-    """PQ encode + ADC score as ONE Arrow-batched map stage + one top-k
-    shuffle. The expr path's per-row cost is n_sub x K inlined 16-dim
-    integer dots (codegen literal structs); here each batch runs n_sub
-    (n x sub_dim) @ (sub_dim x K) int64 matmuls instead. Integer matmul
-    has no summation-order hazard (exact at any order), so this is
-    bit-identical to the expr/oracle form by construction — the one fused
-    path in the ann family that needs NO float discipline notes."""
+    An empty query set returns an empty frame with the same columns."""
     import numpy as np
 
     from ..functions.vectors import int8_quantize
@@ -765,7 +557,7 @@ def _fused_pq_topk(
         e.filter(F.col("id") % stride == 0).orderBy("id"), "PQ codebook"
     )
     # (n_sub, K, sub_dim) codeword matrix + (n_sub, K) |c|^2, id-ordered so
-    # np.argmin's first-occurrence tie == the expr path's lowest-cid tie
+    # np.argmin's first-occurrence tie == the oracle's lowest-cid tie
     cmat = np.array([r["qv"] for r in cw_rows], dtype=np.int64)  # (K, dim)
     csub = np.stack(
         [cmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
@@ -778,7 +570,10 @@ def _fused_pq_topk(
         "PQ query set",
     )
     qids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r["qv"] for r in q_rows], dtype=np.int64)  # (Q, dim)
+    # explicit (Q, dim) shape: an empty query set is (0, dim), not (0,)
+    qmat = np.array([r["qv"] for r in q_rows], dtype=np.int64).reshape(
+        len(q_rows), cmat.shape[1]
+    )
     qsub = np.stack(
         [qmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
     )  # (n_sub, Q, sub_dim)
@@ -835,155 +630,27 @@ def ivfpq_topk(
     n_sub: int = 4,
     sub_dim: int = 16,
     k: int = 5,
-    mode: str = "expr",
 ) -> DataFrame:
     """IVF-PQ: the standard industrial vector index (FAISS's IVFx,PQy) as a
     composition of two proven parts — IVF cell pruning cuts the CANDIDATE
     SET (only vectors in the query's n_probe nearest cells are scored) and
     PQ/ADC cuts the BYTES PER CANDIDATE (integer lookup-table scores over
-    n_sub codes). Everything stays map-only over the collection: cell
-    assignment uses the inlined-centroid argmin (cell_argmin_col), the
-    probe set broadcasts inside the LUT frame, and PQ scoring reads codes —
-    the only shuffle is the final top-k window.
+    n_sub codes).
 
     Both quantizers are stride-built so the whole index is reproducible in
     SQL; the integer PQ discipline (see pq_topk) means composed scores are
     exact. Cells and codebooks are INDEPENDENT knobs: cell_stride sets the
     pruning fan-out, code_stride the score resolution.
 
-    mode= picks the execution strategy (the pq_topk/ivf_topk pattern):
-      "expr"  — pure Column expressions; codegen grows with the codebook.
-      "numpy" — ONE Arrow-batched map stage assigns cells, PQ-encodes, and
-                ADC-scores per batch (_fused_ivfpq_topk). Cell assignment
-                follows _fused_ivf_topk's dim-ordered float discipline
-                (bit-identical to the expr/oracle argmin); encode + score
-                are pure integers (order-free, exact at any order) — so
-                fused output == expr output (test_ivfpq_modes_agree)."""
-    from ..functions.vectors import int8_quantize, int_dot
-
-    if mode == "numpy":
-        return _fused_ivfpq_topk(
-            collection, queries, id_col, vec_col, cell_stride, code_stride,
-            n_probe, n_sub, sub_dim, k,
-        )
-    if mode != "expr":  # a typo must not silently run the slow path
-        raise ValueError(f"ivfpq_topk mode must be 'expr' or 'numpy', got {mode!r}")
-
-    # --- coarse (cell) quantizer: float-space argmin, inlined centroids
-    cent_rows = bounded_collect(
-        _with_norms(collection.filter(F.col(id_col) % cell_stride == 0), id_col, vec_col, None)
-        .select(F.col("id").alias("cid"), F.col("emb").alias("cemb"))
-        .orderBy("cid"),
-        "IVF-PQ coarse centroid table",
-    )
-    e = collection.select(
-        F.col(id_col).alias("id"),
-        as_double(vec_col).alias("emb"),
-        int8_quantize(vec_col).alias("qv"),
-    ).withColumn("cell", cell_argmin_col(cent_rows, "emb"))
-
-    # --- fine (code) quantizer: integer PQ encoding per subspace
-    cw_rows = bounded_collect(
-        collection.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv"))
-        .filter(F.col("id") % code_stride == 0)
-        .orderBy("id"),
-        "IVF-PQ fine codebook",
-    )
-    cods = []
-    for m in range(n_sub):
-        lo = m * sub_dim
-        cods.append(
-            [
-                (int(r["id"]), r["qv"][lo : lo + sub_dim],
-                 sum(c * c for c in r["qv"][lo : lo + sub_dim]))
-                for r in cw_rows
-            ]
-        )
-    for m in range(n_sub):
-        sub = F.slice(F.col("qv"), m * sub_dim + 1, sub_dim)
-        choices = [
-            F.struct(
-                (F.lit(cc) - F.lit(2) * int_dot(sub, lit_array(cv, "int")))
-                .cast("long").alias("d"),
-                F.lit(cid).cast("long").alias("cid"),
-                F.lit(j).alias("j"),
-            )
-            for j, (cid, cv, cc) in enumerate(cods[m])
-        ]
-        e = e.withColumn(f"code{m}", F.array_min(F.array(*choices))["j"])
-    enc = e.drop("qv", "emb")
-
-    # --- per-query probe cells (driver-side, same (d, cid) sort as the
-    # oracle forms) + integer ADC LUTs
-    q_rows = bounded_collect(
-        _with_norms(queries, id_col, vec_col, None)
-        .select("id", "emb")
-        .join(
-            queries.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv")),
-            "id",
-        )
-        .orderBy("id"),
-        "IVF-PQ query set",
-    )
-    spark = collection.sparkSession
-    lut_rows = []
-    for r in q_rows:
-        qe = r["emb"]
-        ds = []
-        for c in cent_rows:
-            acc = 0.0
-            for i, x in enumerate(c["cemb"]):
-                acc += qe[i] * x
-            cn2 = 0.0
-            for x in c["cemb"]:
-                cn2 += x * x
-            ds.append((cn2 - 2.0 * acc, int(c["cid"])))
-        probes = [cid for _, cid in sorted(ds)[:n_probe]]
-        luts = []
-        for m in range(n_sub):
-            lo = m * sub_dim
-            qsub = r["qv"][lo : lo + sub_dim]
-            luts.append([sum(int(a) * int(c) for a, c in zip(qsub, cv)) for _, cv, _ in cods[m]])
-        lut_rows.append((int(r["id"]), probes, *luts))
-    lut_schema = "query_id long, probes array<long>, " + ", ".join(
-        f"lut{m} array<long>" for m in range(n_sub)
-    )
-    lut = local_frame(spark, lut_rows, lut_schema)
-
-    score = None
-    for m in range(n_sub):
-        term = F.element_at(F.col(f"lut{m}"), F.col(f"code{m}").cast("int") + 1)
-        score = term if score is None else score + term
-    pairs = (
-        enc.join(
-            F.broadcast(lut),
-            (F.col("id") != F.col("query_id")) & F.array_contains(F.col("probes"), F.col("cell")),
-        )
-        .select("query_id", F.col("id").alias("neighbor_id"), F.col("cell"), score.alias("pq_score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(), "neighbor_id")
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _fused_ivfpq_topk(
-    collection: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_stride: int,
-    code_stride: int,
-    n_probe: int,
-    n_sub: int,
-    sub_dim: int,
-    k: int,
-) -> DataFrame:
-    """IVF-PQ as ONE Arrow-batched map stage + one top-k shuffle: per batch,
-    assign each vector's cell (dim-ordered float argmin — _fused_ivf_topk's
-    parity discipline, bit-identical to the expr/oracle form), drop vectors
-    no query probes, then int8-quantize, PQ-encode, and ADC-score the
-    survivors against the broadcast codebook + LUTs (_fused_pq_topk's
-    integer path, exact at any summation order). The collection never
-    shuffles; each surviving (query, neighbor) pair arises exactly once."""
+    Scale shape: ONE Arrow-batched map stage + one top-k shuffle. Per
+    batch, assign each vector's cell (dim-ordered float argmin —
+    _fused_ivf_topk's parity discipline, bit-identical to the oracle's
+    sequential sums), drop vectors no query probes, then int8-quantize,
+    PQ-encode, and ADC-score the survivors against the broadcast codebook
+    + LUTs (pq_topk's integer path, exact at any summation order). The
+    collection never shuffles; each surviving (query, neighbor) pair
+    arises exactly once. An empty query set returns an empty frame with
+    the same columns."""
     import numpy as np
 
     from ..functions.vectors import int8_quantize
@@ -1015,8 +682,8 @@ def _fused_ivfpq_topk(
     )  # (n_sub, K, sub_dim)
     ccn = np.einsum("mkd,mkd->mk", csub, csub)  # exact int64
 
-    # --- queries: float side picks probe cells (plain-Python, same (d, cid)
-    # sort as the expr window); int8 side builds the ADC LUTs
+    # --- queries: float side picks probe cells (plain-Python (d, cid)
+    # sort, the oracle's order); int8 side builds the ADC LUTs
     q_rows = bounded_collect(
         _with_norms(queries, id_col, vec_col, None)
         .select("id", "emb")
@@ -1032,7 +699,10 @@ def _fused_ivfpq_topk(
     # keeps the driver responsive once cells reach ~10^4+ (N/cell_stride)
     probe_mask = np.zeros((len(cids), len(qids)), dtype=bool)  # (Kc, Q)
     cid_to_idx = {int(c): j for j, c in enumerate(cids)}
-    qfmat = np.array([r["emb"] for r in q_rows], dtype=np.float64)  # (Q, d)
+    # explicit (Q, dim) shapes: an empty query set is (0, dim), not (0,)
+    qfmat = np.array([r["emb"] for r in q_rows], dtype=np.float64).reshape(
+        len(q_rows), d_
+    )
     qacc = np.zeros((len(qids), len(cids)), dtype=np.float64)
     for i in range(d_):
         qacc += qfmat[:, i : i + 1] * cmat[None, :, i]
@@ -1042,7 +712,9 @@ def _fused_ivfpq_topk(
         ds = list(zip(qdmat[qi].tolist(), cid_list))
         for _, cid in sorted(ds)[:n_probe]:
             probe_mask[cid_to_idx[cid], qi] = True
-    qmat = np.array([r["qv"] for r in q_rows], dtype=np.int64)  # (Q, dim)
+    qmat = np.array([r["qv"] for r in q_rows], dtype=np.int64).reshape(
+        len(q_rows), cwmat.shape[1]
+    )
     qsub = np.stack(
         [qmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
     )
@@ -1066,7 +738,7 @@ def _fused_ivfpq_topk(
             ids = pdf["id"].to_numpy()
             emb = np.array(pdf["emb"].tolist(), dtype=np.float64)  # (n, d)
             acc = np.zeros((len(ids), len(b_cids)), dtype=np.float64)
-            for i in range(dd):  # dim-ordered: bit-equal to the expr argmin
+            for i in range(dd):  # dim-ordered: bit-equal to the oracle argmin
                 acc += emb[:, i : i + 1] * b_cmat[None, :, i]
             pick = (b_cnorm[None, :] - 2.0 * acc).argmin(axis=1)
             hit = b_probe[pick]  # (n, Q)

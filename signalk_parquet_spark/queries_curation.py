@@ -1130,14 +1130,14 @@ _SEMDECON_PROBES = 2
 
 def _fused_cell_probes(df: DataFrame, cent_rows, n_probe: int) -> DataFrame:
     """Arrow-batched top-``n_probe`` cell assignment: one numpy matmul per
-    batch against the broadcast centroid matrix — the large-K path (the
-    ivf_topk assign="numpy" pattern). Same d = |c|² − 2·e·c distance
-    FORMULA and lowest-cid tie order as _cell_dist_structs (stable argsort
+    batch against the broadcast centroid matrix (the ivf_topk
+    assign="numpy" pattern). Same d = |c|² − 2·e·c distance FORMULA and
+    lowest-cid tie order as similarity._cell_dist_structs (stable argsort
     over cid-ordered centroids) — but numpy's pairwise-summed matmul can
-    differ from the expr path's sequential HOF dot by an ULP, so cell
-    assignments may diverge at exact distance ties (harmless under the
-    subset+recall contract). Probe 1 is the argmin cell. Adds ``cells``
-    (array<long>, nearest first)."""
+    differ from a sequential dot by an ULP, so cell assignments may
+    diverge at exact distance ties (harmless under the subset+recall
+    contract). Probe 1 is the argmin cell. Adds ``cells`` (array<long>,
+    nearest first)."""
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -1167,28 +1167,25 @@ def _fused_cell_probes(df: DataFrame, cent_rows, n_probe: int) -> DataFrame:
 
 def decontaminate_semantic_ivf(
     spark: SparkSession, sf: str, n_probe: int = _SEMDECON_PROBES,
-    tau: float = _SEMDECON_TAU, assign: str = "expr",
+    tau: float = _SEMDECON_TAU,
 ) -> DataFrame:
     """The 100 TB production form of decontaminate_semantic: when the eval
     set is too big to broadcast through a BroadcastNestedLoopJoin, screen
     with the IVF coarse quantizer first — assign every TRAIN embedding to
-    its nearest cell (map-only, centroids broadcast), assign every TEST
-    embedding to its ``n_probe`` nearest cells, equi-join on the cell id,
-    and run the exact cosine threshold only inside probed cells. The final
-    filter is the SAME cosine >= tau as the exact gate, so the result is
-    always a SUBSET of the exact pairs (no false positives, only cross-cell
-    misses) — recall rises with n_probe (1.0 at P=4 on the test SFs) and
-    with how tightly the corpus clusters.
+    its nearest cell and every TEST embedding to its ``n_probe`` nearest
+    cells in one Arrow matmul stage (centroids broadcast), equi-join on
+    the cell id, and run the exact cosine threshold only inside probed
+    cells. The final filter is the SAME cosine >= tau as the exact gate,
+    so the result is always a SUBSET of the exact pairs (no false
+    positives, only cross-cell misses) — recall rises with n_probe (1.0 at
+    P=4 on the test SFs) and with how tightly the corpus clusters. At
+    K=277 / 34k vectors the screen takes 1.7-4.4 s against the exact
+    BNLJ's 25 s (python tools/ramp.py semdecon).
 
     Not a gate (cell geometry is quantizer-specific); its contract is the
     subset + recall differential against the exact gate, pinned by
-    tests/test_dedup_operators.py::test_decontaminate_semantic_ivf_*."""
-    from .operators.similarity import (
-        bounded_collect,
-        cell_argmin_col,
-        cell_probes_col,
-        stride_centroids,
-    )
+    tests/test_dedup_operators.py::test_decontaminate_semantic_ivf_subset_and_recall."""
+    from .operators.similarity import bounded_collect, stride_centroids
 
     e = (
         load(spark, sf, "embeddings")
@@ -1200,38 +1197,16 @@ def decontaminate_semantic_ivf(
         stride_centroids(e, "vec_id", "emb", _SEMDECON_STRIDE).orderBy("cid"),
         "decontaminate_semantic_ivf centroid table",
     )
-    if assign == "numpy":
-        # the large-K path: one Arrow matmul stage assigns top-P cells for
-        # every row, then the same equi-join + exact verify. At K=277 /
-        # 34k vectors: 1.7-4.4 s vs the expr path's 42-44 s and the exact
-        # BNLJ's 25 s — the first point where the IVF screen actually
-        # beats brute force (python tools/ramp.py semdecon).
-        probed = _fused_cell_probes(e, cent_rows, n_probe)
-        train = probed.filter(F.col("split") == "train").select(
-            F.col("vec_id").alias("train_vec"), "emb", "n2",
-            F.col("cells")[0].alias("cell"),
-        )
-        test = probed.filter(F.col("split") == "test").select(
-            F.col("vec_id").alias("test_vec"), F.col("emb").alias("temb"),
-            F.col("n2").alias("tn2"),
-            F.explode("cells").alias("cell"),
-        )
-    else:
-        # expr assignment stays on the HOF dot (dim=None) DELIBERATELY:
-        # with K centroid arrays inlined as literals, the dim-unrolled dot
-        # builds a K x dim expression tree whose plan/codegen time explodes
-        # (measured 31 s vs 4 s at K=17, x1 — the opposite of the ivf_topk
-        # assign= lesson, which unrolls against a broadcast-JOINED centroid
-        # column, not literals).
-        train = e.filter(F.col("split") == "train").select(
-            F.col("vec_id").alias("train_vec"), "emb", "n2",
-            cell_argmin_col(cent_rows, "emb").alias("cell"),
-        )
-        test = e.filter(F.col("split") == "test").select(
-            F.col("vec_id").alias("test_vec"), F.col("emb").alias("temb"),
-            F.col("n2").alias("tn2"),
-            F.explode(cell_probes_col(cent_rows, "emb", n_probe)).alias("cell"),
-        )
+    probed = _fused_cell_probes(e, cent_rows, n_probe)
+    train = probed.filter(F.col("split") == "train").select(
+        F.col("vec_id").alias("train_vec"), "emb", "n2",
+        F.col("cells")[0].alias("cell"),
+    )
+    test = probed.filter(F.col("split") == "test").select(
+        F.col("vec_id").alias("test_vec"), F.col("emb").alias("temb"),
+        F.col("n2").alias("tn2"),
+        F.explode("cells").alias("cell"),
+    )
     cos = vec_dot(F.col("temb"), F.col("emb")) / F.sqrt(F.col("tn2") * F.col("n2"))
     return (
         train.join(test, "cell")

@@ -871,22 +871,23 @@ _SEM_STRIDE = 125  # stride quantizer: 4 cells at 500 vecs, 16 at 2k (SQL-expres
 def dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup semantic dedup of the documents corpus via its embeddings
     (Abbas et al. 2023): nearest-centroid cell assignment (map-only — the
-    coarse quantizer inlines as literals), within-cell cosine ≥ {tau}
+    coarse quantizer broadcasts), within-cell cosine ≥ {tau}
     against any lower-id member drops a document, keep/drop joined back to
     `documents` by id. The lexical family (exact/minhash/simhash) catches
     copies; this catches REPHRASINGS the others can't see — the remaining
     dedup rung of a training-data pipeline
     (operators.similarity.semantic_keep). The stride quantizer keeps the
     oracle SQL-expressible; production would swap in
-    operators.similarity.kmeans_centroids unchanged. Runs the fused numpy
-    mode — bit-identical to the expr form (dim-ordered accumulation; the
-    mode-equivalence test pins it) and the shape that scales: map-only
-    assignment + one groupBy(cid) + local per-cell decisions, zero joins."""
+    operators.similarity.kmeans_centroids unchanged. Dim-ordered
+    accumulation keeps every distance and cosine bit-equal to the oracle's
+    sequential sums, in the shape that scales: one Arrow map stage assigns
+    cells, one groupBy(cid) shuffle, local per-cell decisions, zero
+    joins."""
     from .operators.similarity import semantic_keep, stride_centroids
 
     e = load(spark, sf, "embeddings")
     cent = stride_centroids(e, "vec_id", "embedding", _SEM_STRIDE)
-    kept = semantic_keep(e, cent, "vec_id", "embedding", _SEM_TAU, mode="numpy")
+    kept = semantic_keep(e, cent, "vec_id", "embedding", _SEM_TAU)
     d = load(spark, sf, "documents").select("doc_id")
     return d.join(kept, d["doc_id"] == kept["id"]).select("doc_id", "cid", "keep")
 

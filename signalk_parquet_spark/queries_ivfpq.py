@@ -5,13 +5,12 @@ candidate — FAISS's IVFx,PQy as one differential-proved query.
 
 Added post-window in r4; rotated into the r5 driver window via
 registry._WINDOW_FIRST. Standing evidence: the local parity suite
-(sf0.01 + sf0.001) plus test_ivfpq_modes_agree /
-test_ivfpq_composes_pruning_and_codes.
+(sf0.01 + sf0.001) plus test_ivfpq_composes_pruning_and_codes.
 
 The oracle rebuilds BOTH quantizers in SQL: the float coarse quantizer in
 the exact `_dd_ivf_sql` form (list_dot_product distances, (d, cid)-ordered
-row_number — the form the fused numpy path reproduces bit-for-bit via
-dim-ordered accumulation), and the integer fine quantizer in the exact
+row_number — the form the operator's numpy stage reproduces bit-for-bit
+via dim-ordered accumulation), and the integer fine quantizer in the exact
 `_dd_pq_sql` form (int8 codewords, encode argmin, ADC group-sum). Scores
 are pure integers, so the hash match has zero tolerance.
 """
@@ -136,7 +135,7 @@ def ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 @register("ann_ivfpq", _dd_ivfpq_sql())
 def ann_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF-PQ top-k (operators.similarity.ivfpq_topk, fused numpy mode):
+    """IVF-PQ top-k (operators.similarity.ivfpq_topk):
     probes the {nprobe} nearest of the stride-{cell} coarse cells, scores
     only their members through {nsub} integer ADC lookup tables built from
     the stride-{code} codebook — one Arrow map stage over the collection,
@@ -150,5 +149,5 @@ def ann_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     q = e.filter(e["vec_id"] < _NQ)
     return ivfpq_topk(
         e, q, "vec_id", "embedding", _CELL_STRIDE, _CODE_STRIDE,
-        n_probe=_NPROBE, n_sub=_NSUB, k=_TOPK, mode="numpy",
+        n_probe=_NPROBE, n_sub=_NSUB, k=_TOPK,
     )

@@ -70,18 +70,16 @@ def ann_pq(spark: SparkSession, sf: str) -> DataFrame:
     score candidates through integer lookup tables, reading 4 codes per
     vector instead of 64 floats. The oracle rebuilds codebook, encoding,
     and ADC scores in SQL — a full differential proof of the compressed
-    index, exact because every value is an integer. The Spark plan is
-    map-only encode + broadcast-LUT score + one top-k shuffle (the ann
-    family shape); the oracle's join-per-subspace + group-sum is a
-    DIFFERENT plan for the same integers, which is the point."""
+    index, exact because every value is an integer. The Spark plan is one
+    Arrow map stage (quantize + encode + ADC score against the broadcast
+    codebook and LUTs) + one top-k shuffle, zero joins; the oracle's
+    join-per-subspace + group-sum is a DIFFERENT plan for the same
+    integers, which is the point."""
     from .operators.similarity import pq_topk
 
     e = load(spark, sf, "embeddings")
     q = e.filter(e["vec_id"] < _NQ)
-    # mode="numpy": fused encode+score (one Arrow map stage); integer-exact
-    # equal to the expr path (test_pq_modes_agree), ~4x faster at sf0.1
-    return pq_topk(e, q, "vec_id", "embedding", _STRIDE, n_sub=_NSUB, k=_TOPK,
-                   mode="numpy")
+    return pq_topk(e, q, "vec_id", "embedding", _STRIDE, n_sub=_NSUB, k=_TOPK)
 
 
 #: recall-gate codebook: stride 10 -> 50 codewords at the 500-vector gate
@@ -142,5 +140,5 @@ def pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     e = load(spark, sf, "embeddings")
     q = e.filter(e["vec_id"] < _NQ)
     approx = pq_topk(e, q, "vec_id", "embedding", _RECALL_STRIDE,
-                     n_sub=_NSUB, k=_TOPK, mode="numpy")
+                     n_sub=_NSUB, k=_TOPK)
     return topk_recall(approx, knn_bruteforce(spark, sf))

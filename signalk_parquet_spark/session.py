@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """The smaller of 48g and a quarter of physical memory, in MiB
+    (SPARK_GRAFT_DRIVER_MEM overrides it). The JVM grows its heap toward
+    the maximum before it collects fully, so a 48g maximum lets the
+    driver outgrow a small host: on 16 GB the full test suite lost its
+    JVM at a fixed 48g and passes at this default."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -25,7 +35,10 @@ def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # a many-query session (92 gate queries in one JVM) accumulates
         # whole-stage-codegen classes; with the default ~21 MB metaspace
         # high-water mark every growth step triggers a FULL GC with class

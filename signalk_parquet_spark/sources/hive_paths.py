@@ -15,7 +15,6 @@ partitions from ordinary filters — the reference's hand-built glob lists
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from datetime import date, datetime, timedelta
 
 #: directories the reference excludes from every scan (HistoryAPI.ts:1452)
@@ -42,25 +41,6 @@ def day_of_year(d: date | datetime) -> str:
     """Zero-padded 3-digit day-of-year (leap years reach 366; the reference's
     golden test pins 2024-06-01 -> day 153)."""
     return f"{d.timetuple().tm_yday:03d}"
-
-
-@dataclass(frozen=True)
-class PartitionKey:
-    tier: str
-    context: str  # unsanitized, e.g. vessels.urn:mrn:signalk:uuid:abc
-    path: str  # unsanitized, e.g. navigation.speedOverGround
-    year: int
-    day: int  # day-of-year
-
-    def dir_path(self, base: str) -> str:
-        return (
-            f"{base}/tier={self.tier}/context={sanitize_context(self.context)}/"
-            f"path={sanitize_path(self.path)}/year={self.year}/day={self.day:03d}"
-        )
-
-
-def partition_key_for(ts: datetime, tier: str, context: str, path: str) -> PartitionKey:
-    return PartitionKey(tier, context, path, ts.year, int(day_of_year(ts)))
 
 
 def days_in_range(from_ts: datetime, to_ts: datetime) -> list[tuple[int, int]]:

@@ -39,12 +39,10 @@ SLOWTAIL = {
     "test_bpe.py::test_trainer_differential_crafted",  # 8.7s
     "test_cloudsync.py::test_distributed_copy_round_trip_and_idempotence",  # 3.7s
     "test_dedup_operators.py::test_connected_components_matches_union_find[0]",  # 6.9s
-    "test_dedup_operators.py::test_decontaminate_semantic_ivf_numpy_assignment",  # 2.8s
     "test_dedup_operators.py::test_incremental_minhash_fuzz_matches_full_plan",  # 13.4s
     "test_dedup_operators.py::test_ivf_numpy_assignment_matches_expr",  # 3.8s
     "test_dedup_operators.py::test_ivf_operator_with_learned_and_stride_quantizers",  # 6.7s
     "test_dedup_operators.py::test_ivfpq_composes_pruning_and_codes",  # 16.6s
-    "test_dedup_operators.py::test_ivfpq_modes_agree",  # 6.8s
     "test_dedup_operators.py::test_kmeans_both_rungs_serve_ivf",  # 5.9s (MLlib arm; the local-rung reference differential stays in the gate tier)
     "test_dedup_operators.py::test_knn_and_ann_operators",  # 3.0s
     "test_dedup_operators.py::test_multitable_lsh_beats_single_table",  # 3.1s
@@ -69,7 +67,7 @@ SLOWTAIL = {
     "test_properties.py::test_interval_join_equals_theta_join",  # 8.0s
     "test_properties.py::test_ivf_never_beats_exact_knn",  # 25.5s
     "test_properties.py::test_minhash_lsh_finds_all_exact_duplicates",  # 12.2s
-    "test_properties.py::test_semantic_keep_modes_agree_on_ties",  # 23.6s
+    "test_properties.py::test_semantic_keep_matches_reference_on_ties",  # 23.6s
     "test_ramp.py::test_registered_ramps_run_at_a_tiny_size",  # 196.6s (4 cores; all 23 ramps)
     "test_retrieval.py::test_bm25_duplicate_query_rows_deduped",  # 3.7s
     "test_retrieval.py::test_bm25_mode_agreement_cross_sf",  # 6.7s
@@ -149,7 +147,6 @@ SLOWTAIL = {
     "test_dedup_operators.py::test_hard_negatives_operator",  # 2.1s (gate-tier profile)
     "test_dedup_operators.py::test_incremental_minhash_drops_decisions",  # 2.3s (gate-tier profile)
     "test_dedup_operators.py::test_ivf_recall_measured",  # 3.6s (gate-tier profile)
-    "test_dedup_operators.py::test_pq_modes_agree",  # 2.2s (gate-tier profile)
     "test_dedup_operators.py::test_semantic_keep_with_learned_quantizer",  # 2.2s (gate-tier profile)
     "test_engine_e2e.py::test_multi_path_alignment_and_methods",  # 2.6s (gate-tier profile)
     "test_incremental.py::test_bucket_level_merge_helpers",  # 3.4s (gate-tier profile)

@@ -579,14 +579,40 @@ def test_prefix_jaccard_matches_bruteforce(spark):
     assert got == want and (0, 100) in want
 
 
+def semantic_keep_reference(vecs, cents, tau):
+    """Driver-side brute force of the SemDeDup rule over ``{id: vec}`` and
+    ``[(cid, cvec)]``: argmin cell assignment (lowest-cid tie-break), drop
+    iff a lower-id same-cell vector has cosine >= tau. Every sum runs
+    sequentially in dim order, the arithmetic semantic_keep reproduces, so
+    the two agree bit for bit. Returns ``{id: (cid, keep)}``."""
+    import math
+
+    def assign(v):
+        return min(
+            (sum(c * c for c in ce) - 2 * sum(a * b for a, b in zip(v, ce)), cid)
+            for cid, ce in cents
+        )[1]
+
+    def cos(a, b):
+        return sum(x * y for x, y in zip(a, b)) / math.sqrt(
+            sum(x * x for x in a) * sum(y * y for y in b)
+        )
+
+    cells = {i: assign(v) for i, v in vecs.items()}
+    want = {}
+    for i, v in vecs.items():
+        dropped = any(
+            cells[j] == cells[i] and j < i and cos(vecs[j], v) >= tau for j in vecs
+        )
+        want[i] = (cells[i], not dropped)
+    return want
+
+
 def test_semantic_keep_matches_bruteforce(spark):
     """semantic_keep (SemDeDup) must equal a driver-side brute-force of the
     same rule — argmin cell assignment (lowest-cid tie-break), drop iff a
     lower-id same-cell vector has cosine >= tau — and the min-id member of
     every cell is always kept."""
-    import itertools
-    import math
-
     from signalk_parquet_spark.operators.similarity import semantic_keep
 
     vecs = {
@@ -609,65 +635,41 @@ def test_semantic_keep_matches_bruteforce(spark):
         r["id"]: (r["cid"], r["keep"])
         for r in semantic_keep(df, cdf, "vec_id", "embedding", tau).collect()
     }
-    fused = {
-        r["id"]: (r["cid"], r["keep"])
-        for r in semantic_keep(df, cdf, "vec_id", "embedding", tau, mode="numpy").collect()
-    }
-    assert fused == got  # the deployment path is decision-identical
-
-    def assign(v):
-        return min(
-            (sum(c * c for c in ce) - 2 * sum(a * b for a, b in zip(v, ce)), cid)
-            for cid, ce in cents
-        )[1]
-
-    def cos(a, b):
-        return sum(x * y for x, y in zip(a, b)) / math.sqrt(
-            sum(x * x for x in a) * sum(y * y for y in b)
-        )
-
-    cells = {i: assign(v) for i, v in vecs.items()}
-    want = {}
-    for i, v in vecs.items():
-        dropped = any(
-            cells[j] == cells[i] and j < i and cos(vecs[j], v) >= tau for j in vecs
-        )
-        want[i] = (cells[i], not dropped)
+    want = semantic_keep_reference(vecs, cents, tau)
     assert got == want
     # sanity on the fixture itself: both decisions occur, and every cell's
     # min-id member is kept
     assert {k for k, (_, kp) in want.items() if not kp} == {1, 3}
     for c in {0, 1}:
-        members = [i for i in vecs if cells[i] == c]
+        members = [i for i, (cid, _) in want.items() if cid == c]
         assert want[min(members)][1] is True
 
 
 def test_semantic_keep_with_learned_quantizer(spark):
     """The 'production swaps in kmeans_centroids unchanged' claim: the
-    learned quantizer must plug into both semantic_keep modes, and the two
-    modes must still agree decision-for-decision (bit-identical distances
-    are only guaranteed per mode-pair; the DECISIONS must match)."""
+    learned quantizer must plug into semantic_keep, whose decisions must
+    equal the driver-side reference over the same centroids."""
     from signalk_parquet_spark.operators.similarity import kmeans_centroids, semantic_keep
     from signalk_parquet_spark.registry import load
 
     e = load(spark, "/root/testdata/sf0.001", "embeddings")
     cents = kmeans_centroids(e, "vec_id", "embedding", k=4, seed=7, fit_fraction=0.5)
-    assert cents.count() == 4  # sampled fit still yields k centroids
-    expr = {(r["id"], r["cid"], r["keep"])
-            for r in semantic_keep(e, cents, "vec_id", "embedding", 0.4).collect()}
-    fused = {(r["id"], r["cid"], r["keep"])
-             for r in semantic_keep(e, cents, "vec_id", "embedding", 0.4, mode="numpy").collect()}
-    assert expr == fused
-    ids = {i for i, _, _ in expr}
-    assert len(ids) == e.count()  # exactly one decision per vector
-    assert any(not k for _, _, k in expr)  # the threshold actually bites
+    cent_rows = [(r["cid"], list(r["cemb"])) for r in cents.orderBy("cid").collect()]
+    assert len(cent_rows) == 4  # sampled fit still yields k centroids
+    got = {r["id"]: (r["cid"], r["keep"])
+           for r in semantic_keep(e, cents, "vec_id", "embedding", 0.4).collect()}
+    vecs = {r["vec_id"]: list(r["embedding"])
+            for r in e.select("vec_id", "embedding").collect()}
+    assert got == semantic_keep_reference(vecs, cent_rows, 0.4)
+    assert len(got) == len(vecs)  # exactly one decision per vector
+    assert any(not k for _, k in got.values())  # the threshold actually bites
 
 
 def test_semantic_keep_cell_cap_guards_duplicate_flood(spark):
     """The m² trap (VERDICT r6 Next #4): a duplicate-flood cell must not
     silently do m² work on one task. Crafted flood: 60 near-identical
     vectors all landing in one cell with max_cell=16. Contract:
-    (a) both modes RAISE by default, naming the prescription;
+    (a) it RAISES by default, naming the prescription;
     (b) on_oversize='shard' completes with bounded shards, keeps the
         cid/keep schema, decides every vector exactly once, and only ever
         UNDER-drops (every drop it makes is one the uncapped run makes);
@@ -687,11 +689,8 @@ def test_semantic_keep_cell_cap_guards_duplicate_flood(spark):
         "cid long, cemb array<double>",
     )
 
-    for mode in ("expr", "numpy"):
-        with pytest.raises(Exception, match="exact_dedup"):
-            semantic_keep(
-                df, cdf, "vec_id", "embedding", 0.9, mode=mode, max_cell=16
-            ).collect()
+    with pytest.raises(Exception, match="exact_dedup"):
+        semantic_keep(df, cdf, "vec_id", "embedding", 0.9, max_cell=16).collect()
 
     # uncapped ground truth (the flood is only 60 rows here, so max_cell=None
     # is safe in-test): every non-min flood member drops
@@ -703,27 +702,26 @@ def test_semantic_keep_cell_cap_guards_duplicate_flood(spark):
     }
     assert [k for k, (_, kp) in full.items() if kp and full[k][0] == 0] == [0]
 
-    for mode in ("expr", "numpy"):
-        sharded = {
-            r["id"]: (r["cid"], r["keep"])
-            for r in semantic_keep(
-                df, cdf, "vec_id", "embedding", 0.9,
-                mode=mode, max_cell=16, on_oversize="shard",
-            ).collect()
-        }
-        assert set(sharded) == set(full)  # one decision per vector
-        assert all(sharded[i][0] == full[i][0] for i in full)  # cells agree
-        # under-dropping only: sharding may KEEP a vector the full run
-        # drops (its near-dup landed in another shard), never the reverse
-        for i in full:
-            if not sharded[i][1]:
-                assert not full[i][1]
-        # each shard still collapses internally: at most one keeper per
-        # shard (ceil(1.25*60/16) = 5 shards with the headroom factor),
-        # far fewer than the 60-member flood; the tiny cell is untouched
-        assert sum(1 for i, (c, kp) in sharded.items() if c == 0 and kp) <= 5
-        # the under-capacity cell is bit-identical to the uncapped run
-        assert all(sharded[i] == full[i] for i in (100, 101, 102))
+    sharded = {
+        r["id"]: (r["cid"], r["keep"])
+        for r in semantic_keep(
+            df, cdf, "vec_id", "embedding", 0.9,
+            max_cell=16, on_oversize="shard",
+        ).collect()
+    }
+    assert set(sharded) == set(full)  # one decision per vector
+    assert all(sharded[i][0] == full[i][0] for i in full)  # cells agree
+    # under-dropping only: sharding may KEEP a vector the full run
+    # drops (its near-dup landed in another shard), never the reverse
+    for i in full:
+        if not sharded[i][1]:
+            assert not full[i][1]
+    # each shard still collapses internally: at most one keeper per
+    # shard (ceil(1.25*60/16) = 5 shards with the headroom factor),
+    # far fewer than the 60-member flood; the tiny cell is untouched
+    assert sum(1 for i, (c, kp) in sharded.items() if c == 0 and kp) <= 5
+    # the under-capacity cell is bit-identical to the uncapped run
+    assert all(sharded[i] == full[i] for i in (100, 101, 102))
 
     # no-oversized-cell corpora are identical under every setting
     small = df.filter(F.col("vec_id") >= 100)
@@ -794,43 +792,6 @@ def test_pq_topk_compression_and_recall(spark):
     assert r50 >= 0.2, r50
 
 
-def test_pq_modes_agree(spark):
-    """The fused numpy PQ path must equal the expr path EXACTLY — every
-    value in the pipeline is an integer, so there is no tolerance: same
-    codes, same ADC scores, same tie-broken ranks, on real embeddings."""
-    from pyspark.sql import functions as F
-    from signalk_parquet_spark.operators.similarity import pq_topk
-    from signalk_parquet_spark.registry import load
-
-    e = load(spark, "/root/testdata/sf0.001", "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    expr = {tuple(r) for r in
-            pq_topk(e, q, "vec_id", "embedding", stride=50, k=5).collect()}
-    fused = {tuple(r) for r in
-             pq_topk(e, q, "vec_id", "embedding", stride=50, k=5,
-                     mode="numpy").collect()}
-    assert expr == fused and len(expr) == 50
-
-
-def test_ivfpq_modes_agree(spark):
-    """Fused numpy IVF-PQ must equal the expr path EXACTLY: the float cell
-    assignment follows the dim-ordered discipline (bit-identical argmin)
-    and everything after it is integer — same cells, same codes, same ADC
-    scores, same tie-broken ranks, on real embeddings."""
-    from pyspark.sql import functions as F
-    from signalk_parquet_spark.operators.similarity import ivfpq_topk
-    from signalk_parquet_spark.registry import load
-
-    e = load(spark, "/root/testdata/sf0.01", "embeddings")
-    q = e.filter(F.col("vec_id") < 20)
-    kw = dict(cell_stride=125, code_stride=10, n_probe=2, k=5)
-    expr = {tuple(r) for r in
-            ivfpq_topk(e, q, "vec_id", "embedding", **kw).collect()}
-    fused = {tuple(r) for r in
-             ivfpq_topk(e, q, "vec_id", "embedding", mode="numpy", **kw).collect()}
-    assert expr == fused and len(expr) == 100
-
-
 def test_ivfpq_composes_pruning_and_codes(spark):
     """IVF-PQ: cell pruning must actually prune (every scored candidate sits
     in one of the query's n_probe cells) while PQ codes still rank
@@ -864,6 +825,50 @@ def test_ivfpq_composes_pruning_and_codes(spark):
     both = pruned.select("query_id", "neighbor_id").intersect(
         full.select("query_id", "neighbor_id")).count()
     assert pruned.count() == 100 and both >= 40, both
+
+
+_EMPTY_INPUT_CASES = [
+    pytest.param(
+        "pq_topk",
+        "struct<query_id:bigint,neighbor_id:bigint,pq_score:bigint,rank:int>",
+        id="pq_topk-empty-queries",
+    ),
+    pytest.param(
+        "ivfpq_topk",
+        "struct<query_id:bigint,neighbor_id:bigint,cell:bigint,pq_score:bigint,rank:int>",
+        id="ivfpq_topk-empty-queries",
+    ),
+    pytest.param(
+        "semantic_keep",
+        "struct<id:bigint,cid:bigint,keep:boolean>",
+        id="semantic_keep-empty-collection",
+    ),
+]
+
+
+@pytest.mark.parametrize("op,schema", _EMPTY_INPUT_CASES)
+def test_vector_index_empty_input_gives_empty_frame(spark, op, schema):
+    """An empty query set (PQ, IVF-PQ) or an empty collection (SemDeDup)
+    yields an empty frame with the documented columns, not an exception:
+    a driver-collected empty set must still broadcast as a (0, dim)
+    matrix."""
+    from signalk_parquet_spark.operators import similarity as sim
+
+    rows = [(i, [0.9 - 0.001 * i] * 32 + [0.1] * 32) for i in range(6)] + [
+        (i, [-0.1] * 32 + [0.8 + 0.001 * i] * 32) for i in range(6, 12)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    none = emb.filter(F.lit(False))
+    if op == "pq_topk":
+        out = sim.pq_topk(emb, none, "vec_id", "embedding", stride=6)
+    elif op == "ivfpq_topk":
+        out = sim.ivfpq_topk(emb, none, "vec_id", "embedding",
+                             cell_stride=6, code_stride=6, n_probe=1, k=3)
+    else:
+        cents = sim.stride_centroids(emb, "vec_id", "embedding", 6)
+        out = sim.semantic_keep(none, cents, "vec_id", "embedding", 0.9)
+    assert out.schema.simpleString() == schema
+    assert out.collect() == []
 
 
 def test_remove_duplicate_spans_transform(spark):
@@ -939,12 +944,13 @@ def test_remove_duplicate_spans_differential_random(spark):
 
 
 def test_decontaminate_semantic_ivf_subset_and_recall(spark, sf_smoke):
-    """The IVF-screened production twin must return a SUBSET of the exact
-    gate's pairs (the final cosine filter is identical — losses are only
-    cross-cell misses) with recall >= 0.7 at the test SFs for the default
-    2 probes (measured 0.75 / 0.78 at sf0.001 / sf0.01; 1.0 at n_probe=4 —
-    also asserted). The near-uniform synthetic embeddings make the
-    cross-cell loss PESSIMISTIC (the semdedup_recall caveat)."""
+    """The IVF-screened production twin (one Arrow matmul stage assigns the
+    cells) must return a SUBSET of the exact gate's pairs (the final
+    cosine filter is identical — losses are only cross-cell misses) with
+    recall >= 0.7 at the test SFs for the default 2 probes (measured
+    0.75 / 0.78 at sf0.001 / sf0.01; 1.0 at n_probe=4 — also asserted).
+    The near-uniform synthetic embeddings make the cross-cell loss
+    PESSIMISTIC (the semdedup_recall caveat)."""
     from signalk_parquet_spark import registry
     from signalk_parquet_spark.queries_curation import decontaminate_semantic_ivf
 
@@ -964,31 +970,6 @@ def test_decontaminate_semantic_ivf_subset_and_recall(spark, sf_smoke):
         for r in decontaminate_semantic_ivf(spark, sf_smoke, n_probe=4).collect()
     }
     assert full == exact  # measured: every pair recovered at P=4
-
-
-def test_decontaminate_semantic_ivf_numpy_assignment(spark, sf_smoke):
-    """The fused numpy assignment (the large-K path — 14-21x faster than
-    the exact BNLJ at 34k vectors, python tools/ramp.py semdecon) must keep
-    the same contract as the expr path: subset of the exact pairs, >= 0.7
-    recall at 2 probes, every pair recovered at 4."""
-    from signalk_parquet_spark import registry
-    from signalk_parquet_spark.queries_curation import decontaminate_semantic_ivf
-
-    exact = {
-        (r["test_vec"], r["train_vec"])
-        for r in registry.queries()["decontaminate_semantic"](spark, sf_smoke).collect()
-    }
-    screened = {
-        (r["test_vec"], r["train_vec"])
-        for r in decontaminate_semantic_ivf(spark, sf_smoke, assign="numpy").collect()
-    }
-    assert screened <= exact
-    assert len(screened) / len(exact) >= 0.7, (len(screened), len(exact))
-    full = {
-        (r["test_vec"], r["train_vec"])
-        for r in decontaminate_semantic_ivf(spark, sf_smoke, n_probe=4, assign="numpy").collect()
-    }
-    assert full == exact
 
 
 def _bands_and_shingles(spark, rows):

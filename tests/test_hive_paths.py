@@ -4,10 +4,8 @@ sanitize round-trips, leap-year day-of-year, partition dir shape."""
 from datetime import date, datetime, timezone
 
 from signalk_parquet_spark.sources.hive_paths import (
-    PartitionKey,
     day_of_year,
     days_in_range,
-    partition_key_for,
     sanitize_context,
     sanitize_path,
     unsanitize_context,
@@ -33,12 +31,16 @@ def test_leap_year_day_153():
     assert day_of_year(date(2024, 12, 31)) == "366"
 
 
-def test_partition_dir_shape():
+def test_partition_dir_shape(spark, tmp_path):
+    # the reference's golden path, as Lake.write_records lays it out
+    from signalk_parquet_spark.sources.lake import Lake
+    from tests.records import make_record, records_df
+
     ts = datetime(2024, 6, 1, 12, 0, tzinfo=timezone.utc)
-    key = partition_key_for(ts, "raw", "vessels.self", "navigation.position")
-    assert key == PartitionKey("raw", "vessels.self", "navigation.position", 2024, 153)
-    d = key.dir_path("/lake")
-    assert d == "/lake/tier=raw/context=vessels__self/path=navigation__position/year=2024/day=153"
+    rec = make_record(ts, "navigation.position", 1.0, context="vessels.self")
+    Lake(spark, str(tmp_path)).write_records(records_df(spark, [rec]), tier="raw")
+    d = tmp_path / "tier=raw/context=vessels__self/path=navigation__position/year=2024/day=153"
+    assert d.is_dir() and any(d.glob("*.parquet"))
 
 
 def test_days_in_range_spans_year_boundary():

@@ -410,33 +410,16 @@ def test_semantic_dedup_fused_is_single_exchange_no_joins(spark):
 
 
 def test_ann_pq_is_map_encode_broadcast_score_topk(spark):
-    """PQ/ADC must keep the ann-family scale shape. The gate runs the fused
-    numpy mode: ONE Arrow map stage (quantize + encode + ADC-score against
-    the broadcast codebook/LUTs), partial top-k, exactly one exchange —
-    zero joins of any kind. The expr mode keeps its own shape: map-only
-    encoding against codeword literals, broadcast LUT join (never a
-    shuffle join)."""
+    """PQ/ADC must keep the ann-family scale shape: ONE Arrow map stage
+    (quantize + encode + ADC-score against the broadcast codebook/LUTs),
+    partial top-k, exactly one exchange — zero joins of any kind."""
     plan = formatted_plan(registry.queries()["ann_pq"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
-    assert "Join" not in plan  # fused: the LUT ride along in the map stage
+    assert "Join" not in plan  # the LUTs ride along in the map stage
     assert "MapInPandas" in plan
     assert "WindowGroupLimit" in plan  # partial top-k before the exchange
-
-    from signalk_parquet_spark.operators.similarity import pq_topk
-    from signalk_parquet_spark.registry import load
-
-    e = load(spark, SF, "embeddings")
-    q = e.filter(e["vec_id"] < 20)
-    expr_plan = formatted_plan(
-        pq_topk(e, q, "vec_id", "embedding", 125, n_sub=4, k=5, mode="expr")
-    )
-    assert "CartesianProduct" not in expr_plan
-    assert "SortMergeJoin" not in expr_plan
-    assert "ShuffledHashJoin" not in expr_plan
-    assert "BroadcastNestedLoopJoin" in expr_plan  # the id != query_id LUT join
-    assert "WindowGroupLimit" in expr_plan
 
 
 def test_ann_ivfpq_is_single_map_stage_topk(spark):

@@ -267,7 +267,7 @@ def test_make_planes_seed_families(seed):
     assert any(w != 0 for plane in a for w in plane)  # never degenerate
 
 
-# --- SemDeDup mode equivalence on tie-prone inputs -----------------------------------
+# --- SemDeDup on tie-prone inputs ---------------------------------------------
 _VEC3 = st.lists(st.sampled_from([-1.0, 0.0, 1.0]), min_size=4, max_size=4)
 
 
@@ -276,15 +276,16 @@ _VEC3 = st.lists(st.sampled_from([-1.0, 0.0, 1.0]), min_size=4, max_size=4)
     st.lists(_VEC3.filter(lambda v: any(x != 0.0 for x in v)), min_size=2, max_size=10),
     st.integers(min_value=1, max_value=3),
 )
-def test_semantic_keep_modes_agree_on_ties(spark_global, vecs, n_cent):
-    """expr and numpy SemDeDup must make IDENTICAL decisions on adversarial
-    tie-prone data: components drawn from {-1, 0, 1} make equidistant
-    centroids and duplicate vectors common, exercising the lowest-cid
-    argmin tie-break and the cos=1 exact-duplicate drop on both paths.
-    (Zero vectors are excluded — embeddings are non-zero by contract;
-    cosine against a zero vector is NaN and NaN-vs-threshold ordering
-    differs between Spark SQL and numpy.)"""
+def test_semantic_keep_matches_reference_on_ties(spark_global, vecs, n_cent):
+    """SemDeDup must make the driver-side reference's decisions on
+    adversarial tie-prone data: components drawn from {-1, 0, 1} make
+    equidistant centroids and duplicate vectors common, exercising the
+    lowest-cid argmin tie-break and the cos=1 exact-duplicate drop. (Zero
+    vectors are excluded — embeddings are non-zero by contract; cosine
+    against a zero vector is NaN and NaN-vs-threshold ordering differs
+    between Python and numpy.)"""
     from signalk_parquet_spark.operators.similarity import semantic_keep
+    from tests.test_dedup_operators import semantic_keep_reference
 
     spark = spark_global
     df = spark.createDataFrame(
@@ -292,11 +293,9 @@ def test_semantic_keep_modes_agree_on_ties(spark_global, vecs, n_cent):
     )
     cents = [(j, vecs[j % len(vecs)]) for j in range(n_cent)]
     cdf = spark.createDataFrame(cents, "cid long, cemb array<double>")
-    expr = {(r["id"], r["cid"], r["keep"])
-            for r in semantic_keep(df, cdf, "vec_id", "embedding", 0.5).collect()}
-    fused = {(r["id"], r["cid"], r["keep"])
-             for r in semantic_keep(df, cdf, "vec_id", "embedding", 0.5, mode="numpy").collect()}
-    assert expr == fused
+    got = {r["id"]: (r["cid"], r["keep"])
+           for r in semantic_keep(df, cdf, "vec_id", "embedding", 0.5).collect()}
+    assert got == semantic_keep_reference(dict(enumerate(vecs)), cents, 0.5)
 
 
 # --- RIFF walker properties (operators/video) ---------------------------------

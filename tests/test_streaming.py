@@ -441,7 +441,7 @@ def test_streaming_semantic_dedup_matches_batch(spark, tmp_path):
     cent = stride_centroids(e, "vec_id", "embedding", 125)
     want_dropped = {
         r["id"]
-        for r in semantic_keep(e, cent, "vec_id", "embedding", 0.4, mode="numpy")
+        for r in semantic_keep(e, cent, "vec_id", "embedding", 0.4)
         .filter("NOT keep").collect()
     }
     assert want_dropped  # the fixture must exercise real drops

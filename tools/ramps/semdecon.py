@@ -101,9 +101,9 @@ def corpus(spark, n: int):
         registry.evict_tables(spark, step)
 
 
-def ivf(assign: str, n_probe: int):
+def ivf(n_probe: int):
     return lambda spark, inp: decontaminate_semantic_ivf(
-        spark, inp[0], n_probe=n_probe, tau=TAU, assign=assign
+        spark, inp[0], n_probe=n_probe, tau=TAU
     ).count()
 
 
@@ -126,7 +126,7 @@ RAMPS = {
         build=corpus,
         variants={
             "exact": lambda spark, inp: decontaminate_semantic(spark, inp[0], tau=TAU).count(),
-            **{f"ivf_{a}_p{p}": ivf(a, p) for a in ("expr", "numpy") for p in (1, 2)},
+            **{f"ivf_p{p}": ivf(p) for p in (1, 2)},
         },
         check=screened_subset,
     ),
