@@ -22,7 +22,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from ..sources.hive_paths import unsanitize_path
-from ..sources.lake import Lake
+from ..sources.lake import PARTITION_COLS, Lake, partition_values
 
 TIER_RETENTION_MULTIPLIER = {"raw": 1, "5s": 2, "60s": 4, "1h": 12}
 
@@ -81,20 +81,29 @@ def retention_cleanup(
 
 def compact_partition(lake: Lake, tier: str, context_s: str, path_s: str, year: int) -> int:
     """Merge one (tier, context, path, year)'s files into one time-sorted
-    file per day partition (coalesce(1) + dynamic partition overwrite — the
-    atomic-rename protocol is Spark's job commit). Returns rows compacted."""
+    file per leaf partition — per day, and per epoch in a rollup tier
+    (coalesce(1) + dynamic partition overwrite — the atomic-rename protocol
+    is Spark's job commit). The output keeps the writers' layout: the levels
+    down to year live only in the directory names, a rollup tier keeps its
+    trailing epoch level (a tier of mixed depth is unreadable, see
+    Lake.write_rollup) and day stays zero-padded. Returns rows compacted."""
     spark = lake.spark
-    base = lake.roots[0]
-    src = f"{base}/tier={tier}/context={context_s}/path={path_s}/year={year}"
-    df = spark.read.option("mergeSchema", "true").option("basePath", base).parquet(src)
+    src = f"{lake.roots[0]}/tier={tier}/context={context_s}/path={path_s}/year={year}"
+    # read at the year directory: the discovered partition columns are the
+    # leaf levels; dropping the upper ones also heals files an older
+    # compaction wrote with them as data columns
+    df = spark.read.option("mergeSchema", "true").parquet(src).drop(*PARTITION_COLS[:-1])
     n = df.count()
     ts_col = "signalk_timestamp" if tier == "raw" else "bucket_time"
+    leaf = [c for c in ("day", "epoch") if c in df.columns]
     (
-        df.sort(ts_col)
+        # discovery reads day=005 as the integer 5; derive the padded value
+        df.withColumn("day", partition_values(ts_col)["day"])
+        .sort(ts_col)
         .coalesce(1)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
+        .partitionBy(*leaf)
         .parquet(src + ".compact")
     )
     shutil.rmtree(src)

@@ -337,6 +337,16 @@ def bounded_collect(df: DataFrame, what: str, max_rows: int = BROADCAST_MAX_ROWS
     return rows
 
 
+def _index_rows(df: DataFrame, what: str):
+    """bounded_collect for a table every vector is scored against (coarse
+    centroids, PQ codewords): an empty one leaves nothing to assign a
+    vector to, so it is an error that names the table, not an empty result."""
+    rows = bounded_collect(df, what)
+    if not rows:
+        raise ValueError(f"{what} is empty: no rows to score vectors against")
+    return rows
+
+
 #: default per-cell member cap for semantic_keep. The within-cell stage is
 #: m² in BOTH work and memory — keep_group materializes an
 #: m×m float64 cosine matrix, so 8192 members is ~0.5 GB per matrix and a
@@ -424,7 +434,7 @@ def semantic_keep(
     import numpy as np
     import pandas as pd
 
-    cent_rows = bounded_collect(  # ascending order: argmin tie -> lowest cid
+    cent_rows = _index_rows(  # ascending order: argmin tie -> lowest cid
         centroids.orderBy("cid"), "semantic_keep centroid table"
     )
     cids = np.array([int(r["cid"]) for r in cent_rows], dtype=np.int64)
@@ -553,7 +563,7 @@ def pq_topk(
     from ..functions.vectors import int8_quantize
 
     e = collection.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv"))
-    cw_rows = bounded_collect(
+    cw_rows = _index_rows(
         e.filter(F.col("id") % stride == 0).orderBy("id"), "PQ codebook"
     )
     # (n_sub, K, sub_dim) codeword matrix + (n_sub, K) |c|^2, id-ordered so
@@ -656,7 +666,7 @@ def ivfpq_topk(
     from ..functions.vectors import int8_quantize
 
     # --- coarse quantizer: float centroids, |c|^2 in oracle order
-    cent_rows = bounded_collect(
+    cent_rows = _index_rows(
         _with_norms(collection.filter(F.col(id_col) % cell_stride == 0), id_col, vec_col, None)
         .select(F.col("id").alias("cid"), F.col("emb").alias("cemb"))
         .orderBy("cid"),
@@ -670,7 +680,7 @@ def ivfpq_topk(
         cnorm += cmat[:, i] * cmat[:, i]
 
     # --- fine quantizer: int8 codewords, id-ordered (argmin tie == lowest cid)
-    cw_rows = bounded_collect(
+    cw_rows = _index_rows(
         collection.select(F.col(id_col).alias("id"), int8_quantize(vec_col).alias("qv"))
         .filter(F.col("id") % code_stride == 0)
         .orderBy("id"),
@@ -1027,7 +1037,7 @@ def _fused_ivf_topk(
     leave the workers UNROUNDED so Spark's own round applies."""
     import numpy as np
 
-    cent_rows = bounded_collect(centroids.orderBy("cid"), "IVF centroid table")  # K x dim
+    cent_rows = _index_rows(centroids.orderBy("cid"), "IVF centroid table")  # K x dim
     cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
     cmat = np.array([r["cemb"] for r in cent_rows], dtype=np.float64)  # (K, d)
     d_ = cmat.shape[1]

@@ -1,6 +1,6 @@
-"""SparkSession factory tuned for the local[32] test box but configured the
-way a 1000-executor cluster job would be (AQE on, sane shuffle partitioning,
-UTC timestamps, Arrow for the pandas-UDF slow path).
+"""SparkSession factory: a local[N] session (N = SPARK_GRAFT_CPUS, default
+32) configured the way a 1000-executor cluster job would be (AQE on, sane
+shuffle partitioning, UTC timestamps, Arrow for the pandas-UDF slow path).
 
 The reference pins a singleton DuckDB pool with a 512 MB cap
 (reference: src/utils/duckdb-pool.ts:34-63); our equivalent is one
@@ -24,6 +24,38 @@ def _default_driver_mem() -> str:
     return f"{min(48 * 1024, phys // 4 // 2**20)}m"
 
 
+#: The driver JVM's flags. SPARK_GRAFT_DRIVER_JAVA_OPTS replaces the whole
+#: string (see driver_java_opts).
+#:
+#: Metaspace: a many-query session (92 gate queries in one JVM) accumulates
+#: whole-stage-codegen classes; with the default ~21 MB metaspace high-water
+#: mark every growth step triggers a FULL GC with class unloading — observed
+#: as random 10-20 s spikes attributed to whichever query was running. The
+#: threshold starts high enough that steady-state codegen churn never
+#: crosses it (512m sufficed for 88 queries in r2; the r3 set's churn
+#: crossed it again mid-session, hence 1g).
+#:
+#: TieredStopAtLevel=1 (C1 only, no C2): in local mode Catalyst, the
+#: codegen'd stages, the parquet writers and the streaming engine all run in
+#: this one JVM, and a session of minutes spends more CPU in the C2 compiler
+#: threads than in its tasks — one perfbench lifecycle pass at 4 cores spent
+#: 35 s of CPU in the C2 threads against 10 s in the task threads, and
+#: C1-only cut the pass's CPU from 81 s to 45 s (medians of 10 pairs). The
+#: cost is peak code speed on heavy work: at 4 cores the sf0.1 bench smoke
+#: spent 11% longer in its gates (59 s to 66 s) while its process-tree CPU
+#: fell 19%, and the full and slowtail test runs (one JVM for 11-20
+#: minutes) took 40% and 18% longer. A long-lived deployment that runs the
+#: same heavy plans for hours can turn C2 back on by setting
+#: SPARK_GRAFT_DRIVER_JAVA_OPTS without the flag.
+DRIVER_JAVA_OPTS = "-XX:MetaspaceSize=1g -XX:MaxMetaspaceSize=3g -XX:TieredStopAtLevel=1"
+
+
+def driver_java_opts() -> str:
+    """SPARK_GRAFT_DRIVER_JAVA_OPTS when set (it replaces every default
+    flag), else DRIVER_JAVA_OPTS."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", DRIVER_JAVA_OPTS)
+
+
 def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -39,20 +71,7 @@ def get_spark(app_name: str = "signalk-parquet-spark") -> SparkSession:
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
-        # a many-query session (92 gate queries in one JVM) accumulates
-        # whole-stage-codegen classes; with the default ~21 MB metaspace
-        # high-water mark every growth step triggers a FULL GC with class
-        # unloading — observed as random 10-20 s spikes attributed to
-        # whichever query was running. Start the threshold high enough that
-        # steady-state codegen churn never crosses it (512m sufficed for 88
-        # queries in r2; the r3 set's churn crossed it again mid-session).
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:MetaspaceSize=1g -XX:MaxMetaspaceSize=3g",
-            ),
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_opts())
         # no UI: per-job timings come from the traced perfbench run
         .config("spark.ui.enabled", "false")
         # PySpark 4 captures the user call site for every wrapped

@@ -98,7 +98,7 @@ class Lake:
         one subtree of a scan has the epoch level and another doesn't, so a
         tier written by both batch and streaming would otherwise become
         unreadable. (Raw stays epoch-free; tier=None reads go subtree-per-
-        tier, see read().) A compaction pass can later fold epochs away."""
+        tier, see read().) compact_partition keeps the epoch level."""
         out = (
             df.withColumn("tier", F.lit(tier))
             .withColumns(partition_values("bucket_time"))

@@ -871,6 +871,40 @@ def test_vector_index_empty_input_gives_empty_frame(spark, op, schema):
     assert out.collect() == []
 
 
+_EMPTY_TABLE_CASES = [
+    pytest.param("pq_topk", "PQ codebook", id="pq_topk-empty-codebook"),
+    pytest.param("ivfpq_topk-cells", "IVF-PQ coarse centroid table",
+                 id="ivfpq_topk-empty-cells"),
+    pytest.param("ivfpq_topk-codes", "IVF-PQ fine codebook", id="ivfpq_topk-empty-codebook"),
+    pytest.param("semantic_keep", "semantic_keep centroid table",
+                 id="semantic_keep-empty-centroids"),
+]
+
+
+@pytest.mark.parametrize("op,table", _EMPTY_TABLE_CASES)
+def test_vector_index_empty_table_raises_naming_it(spark, op, table):
+    """An empty codebook or centroid table (a stride above every id, an
+    empty centroid frame) leaves nothing to score against: a ValueError
+    that names the table, not an IndexError from a (0,) matrix."""
+    from signalk_parquet_spark.operators import similarity as sim
+
+    # ids 1..6: a stride of 100 selects no row (id 0 would be in every stride)
+    rows = [(i, [0.9 - 0.001 * i] * 32 + [0.1] * 32) for i in range(1, 7)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=f"{table} is empty"):
+        if op == "pq_topk":
+            sim.pq_topk(emb, emb, "vec_id", "embedding", stride=100)
+        elif op == "ivfpq_topk-cells":
+            sim.ivfpq_topk(emb, emb, "vec_id", "embedding",
+                           cell_stride=100, code_stride=2, n_probe=1, k=3)
+        elif op == "ivfpq_topk-codes":
+            sim.ivfpq_topk(emb, emb, "vec_id", "embedding",
+                           cell_stride=2, code_stride=100, n_probe=1, k=3)
+        else:
+            cents = sim.stride_centroids(emb, "vec_id", "embedding", 100)
+            sim.semantic_keep(emb, cents, "vec_id", "embedding", 0.9)
+
+
 def test_remove_duplicate_spans_transform(spark):
     """The Lee-et-al transform: two docs sharing an 8-word run lose every
     position covered by a duplicated window (including each doc's

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 from datetime import datetime, timedelta, timezone
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +16,7 @@ from signalk_parquet_spark.operators.lifecycle import (
     effective_retention_days,
     retention_cleanup,
 )
+from signalk_parquet_spark.operators.rollup import rollup_scalar
 from signalk_parquet_spark.operators.thresholds import (
     threshold_predicate,
     threshold_transitions,
@@ -89,6 +91,29 @@ def test_compaction_merges_files(spark, tmp_path):
     assert n == 4
     assert len(glob.glob(part_glob)) == 1  # one file now
     assert lake.read(tier="raw").count() == 4  # no data lost
+    # the partition values live only in the directory names, as the writers
+    # leave them (a copy in the file makes every later read warn
+    # COLUMN_ALREADY_EXISTS)
+    (compacted,) = glob.glob(part_glob)
+    assert not set(pq.read_schema(compacted).names) & {"tier", "context", "path", "year", "day"}
+
+    # a rollup tier keeps its trailing epoch level and zero-padded day, so
+    # the tier stays one depth and reads back equal (two paths: the
+    # uncompacted one must still read alongside); day 010 needs the padding
+    t_jan = datetime(2024, 1, 10, 12, tzinfo=UTC)
+    for path in ("navigation.speedOverGround", "environment.depth"):
+        for t in (T0, t_jan):
+            lake.write_records(records_df(spark, scalar_series(t, [1.0, 2.0], path=path)), tier="raw")
+    lake.write_rollup(rollup_scalar(lake.read(tier="raw"), "5s"), "5s")
+
+    def tier_5s():
+        return sorted(map(str, lake.read(tier="5s").collect()))
+
+    before = tier_5s()
+    assert compact_partition(lake, "5s", "vessels__test-self", "navigation__speedOverGround", 2024) == 2
+    assert tier_5s() == before
+    leaves = glob.glob(f"{lake.roots[0]}/tier=5s/context=*/path=navigation__speedOverGround/year=2024/*/*/")
+    assert sorted(p.split("/year=2024/")[1] for p in leaves) == ["day=010/epoch=0/", "day=153/epoch=0/"]
 
 
 # --- SQL passthrough --------------------------------------------------------------
