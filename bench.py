@@ -14,11 +14,13 @@ from __future__ import annotations
 
 import json
 import os
+import signal
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.run import _become_subreaper, _reap_children, _stop, host_probe  # noqa: E402
 from signalk_parquet_spark import registry  # noqa: E402
 from signalk_parquet_spark.session import get_spark  # noqa: E402
 
@@ -46,9 +48,23 @@ def smoke_tier(n: int = 20) -> list[str]:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # stop the JVM and wait for every process it started before exiting
+    # (a SIGTERM still runs the finally), so a caller that waits on this
+    # process also accounts the engine's CPU
+    _become_subreaper()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     spark = get_spark("signalk-parquet-spark-bench")
+    try:
+        _bench(spark)
+    finally:
+        try:
+            _stop(spark)
+        finally:
+            _reap_children()
 
+
+def _bench(spark) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     qs = registry.queries()
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if "--smoke" in sys.argv and not only:
@@ -109,8 +125,6 @@ def main() -> None:
     # one-line JSON contract is unchanged.
     host = {}
     try:
-        from perfbench.run import host_probe
-
         host = {k: round(v, 3) for k, v in host_probe().items()}
     except Exception:
         pass

@@ -87,28 +87,16 @@ def int_dot(a: Column, b: Column, dim: int | None = None) -> Column:
     return acc
 
 
-def hyperplane_bits(vec: Column, planes: list[list[int]], unroll: bool = False) -> Column:
+def hyperplane_bits(vec: Column, planes: list[list[int]]) -> Column:
     """LSH random-hyperplane bucket id: bit_j = (vec · plane_j) >= 0.
 
     Planes carry small INTEGER weights, so each product and the running sum
     are exactly representable doubles — the sign (and therefore the bucket)
     is deterministic across engines and summation orders.
-
-    unroll=True emits constant-folded multiply-add chains with zero-weight
-    terms dropped (bit-identical: acc + x*0.0 adds ±0.0, which never changes
-    the sum, and a ±0.0 total still passes >= 0). Only worth it at >~10^6
-    rows — the ~8x440-node tree costs seconds of Catalyst/codegen time.
     """
     bucket = None
     for j, w in enumerate(planes):
-        if unroll:
-            d = F.lit(0.0)
-            for i, x in enumerate(w):
-                if x != 0:
-                    d = d + vec.getItem(i) * F.lit(float(x))
-        else:
-            plane = lit_array([float(x) for x in w], "double")
-            d = dot(vec, plane)
+        d = dot(vec, lit_array([float(x) for x in w], "double"))
         term = F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     return bucket.cast("long")

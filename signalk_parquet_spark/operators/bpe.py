@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
-from .tokenizer import merge_pair  # the shared merge fold (tokenizer.py)
+from .tokenizer import merge_loop  # the shared merge loop (tokenizer.py)
 
 __all__ = ["train_bpe", "apply_bpe"]
 
@@ -88,38 +88,19 @@ def train_bpe(
     tie-break agrees with Spark's binary string ordering)."""
     if tiny if local is None else local:
         return _train_bpe_local(words, n_merges)
-    state = words.select(F.split("word", "").alias("syms"), "freq")
-    if tiny:
-        state = state.coalesce(1)
-    state = state.persist()
-    state.count()  # materialize before the loop reuses it (CLAUDE.md)
-    pinned = state
-    merges: list[tuple[str, str]] = []
-    try:
-        for i in range(n_merges):
-            top = (
-                state.select(F.explode(shingles(F.col("syms"), 2)).alias("pair"), "freq")
-                .groupBy("pair")
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.asc("pair"))
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break  # every word fully merged to one symbol
-            # symbols never contain spaces (whitespace tokenizer), so the
-            # 2-shingle join key splits back unambiguously
-            a, b = top[0]["pair"].split(" ", 1)
-            merges.append((a, b))
-            state = state.select(merge_pair(F.col("syms"), a, b).alias("syms"), "freq")
-            if (i + 1) % persist_every == 0:
-                state = state.persist()
-                state.count()
-                pinned.unpersist()
-                pinned = state
-    finally:
-        pinned.unpersist()
-    return merges
+    return merge_loop(
+        words.select(F.split("word", "").alias("syms"), "freq"),
+        n_merges,
+        lambda state: (
+            state.select(F.explode(shingles(F.col("syms"), 2)).alias("pair"), "freq")
+            .groupBy("pair")
+            .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("pair"))
+        ),
+        lambda a, b: a + b,
+        tiny,
+        persist_every,
+    )
 
 
 def _train_bpe_local(words: DataFrame, n_merges: int) -> list[tuple[str, str]]:

@@ -82,27 +82,54 @@ def minhash_lsh_pairs(
     for j in range(bands):
         parts = [F.col(f"mh{j * rows_per_band + r}") for r in range(rows_per_band)]
         sig = sig.withColumn(f"band{j}", F.md5(F.concat_ws("|", *parts)))
-    band_rows = sig.select(
-        "id",
+    cand = lsh_band_pairs(lsh_band_rows(sig, "id", bands), "id", "id_a", "id_b")
+    return verify_pairs(cand, docs, threshold)
+
+
+def lsh_band_rows(sig: DataFrame, id_col: str, bands: int) -> DataFrame:
+    """(id_col, band_idx, band_val): one row per LSH band of each
+    signature row, read from its ``band0 .. band{bands-1}`` columns."""
+    return sig.select(
+        id_col,
         F.explode(
             F.array(*[
                 F.struct(F.lit(j).alias("band_idx"), F.col(f"band{j}").alias("band_val"))
                 for j in range(bands)
             ])
         ).alias("b"),
-    ).select("id", "b.band_idx", "b.band_val")
+    ).select(id_col, "b.band_idx", "b.band_val")
+
+
+def lsh_band_pairs(band_rows: DataFrame, id_col: str, out_a: str, out_b: str) -> DataFrame:
+    """The LSH band self-join: distinct (out_a, out_b) id pairs, out_a <
+    out_b, that share some (band_idx, band_val) bucket."""
     a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .select(F.col(f"a.{id_col}").alias(out_a), F.col(f"b.{id_col}").alias(out_b))
         .distinct()
     )
-    return verify_pairs(cand, docs, threshold)
+
+
+def _shingle_frame(
+    prepared: DataFrame | None, df: DataFrame, id_col: str, text_col: str,
+    block_cols: list[str], *extra: Column,
+) -> DataFrame:
+    """``prepared`` when given, else ``df`` as the (id, *block_cols,
+    *extra, shl) hashed-shingle frame the pairwise screens consume."""
+    if prepared is not None:
+        return prepared
+    return df.select(
+        F.col(id_col).alias("id"),
+        *[F.col(c) for c in block_cols],
+        *extra,
+        hashed_shingles(distinct_shingles(text_col)).alias("shl"),
+    )
 
 
 def blocked_jaccard_pairs(
@@ -131,15 +158,12 @@ def blocked_jaccard_pairs(
     over one corpus in a session so the shingling (the dominant map-side
     cost) is computed once (see queries_dedup._shingled_docs).
     """
-    if prepared is not None:
-        d = prepared
-    else:
-        d = df.select(
-            F.col(id_col).alias("id"),
-            *[F.col(c) for c in block_cols],
-            F.floor(F.length(text_col) / len_bucket_width).alias("len_bucket"),
-            hashed_shingles(distinct_shingles(text_col)).alias("shl"),
-        ).persist()
+    d = _shingle_frame(
+        prepared, df, id_col, text_col, block_cols,
+        F.floor(F.length(text_col) / len_bucket_width).alias("len_bucket"),
+    )
+    if prepared is None:
+        d = d.persist()
         d.count()
     a = d.alias("a")
     b = d.withColumn(
@@ -208,14 +232,7 @@ def prefix_jaccard_pairs(
     sort_array projection from the cache (see containment_join; measured
     −6% warm, the sort recompute eats most of the persist saving here).
     """
-    if prepared is not None:
-        d = prepared
-    else:
-        d = df.select(
-            F.col(id_col).alias("id"),
-            *[F.col(c) for c in block_cols],
-            hashed_shingles(distinct_shingles(text_col)).alias("shl"),
-        )
+    d = _shingle_frame(prepared, df, id_col, text_col, block_cols)
     # rare_first keeps the INPUT arrays (the verify's Jaccard is
     # order-insensitive and its prefix is computed on the exploded stream
     # below); only the hash-order path still sorts, because ITS prefix is
@@ -340,14 +357,7 @@ def containment_pairs(
     ``prepared``: (id, *block_cols, shl) frame as in prefix_jaccard_pairs.
     Returns (id_a, id_b, inter, size_a, containment) — a is the
     contained side."""
-    if prepared is not None:
-        d = prepared
-    else:
-        d = df.select(
-            F.col(id_col).alias("id"),
-            *[F.col(c) for c in block_cols],
-            hashed_shingles(distinct_shingles(text_col)).alias("shl"),
-        )
+    d = _shingle_frame(prepared, df, id_col, text_col, block_cols)
     return containment_join(
         d, d, threshold, block_cols=block_cols, rare_first=rare_first,
         exclude_same_id=True, materialize=materialize,

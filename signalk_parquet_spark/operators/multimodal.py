@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .raster import GIF_MAGIC, resize_box
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -73,7 +75,7 @@ def sniff_format(payload: bytes) -> str | None:
         return "png"
     if payload.startswith(b"\xff\xd8\xff"):
         return "jpeg"
-    if payload.startswith((b"GIF87a", b"GIF89a")):
+    if payload.startswith(GIF_MAGIC):
         return "gif"
     if payload.startswith(b"BM"):
         return "bmp"
@@ -747,7 +749,7 @@ def _sampled_frames(payload: bytes, every_n: int, max_frames: int):
     or None. GIF decodes sequentially up to max_frames (the animation model
     composites, so n_frames counts DECODED frames) then samples; MJPEG-AVI
     counts all chunks but entropy-decodes only the sampled ones."""
-    if payload.startswith((b"GIF87a", b"GIF89a")):
+    if payload.startswith(GIF_MAGIC):
         from .raster import decode_gif_frames
 
         frames = decode_gif_frames(payload, max_frames=max_frames)
@@ -761,6 +763,28 @@ def _sampled_frames(payload: bytes, every_n: int, max_frames: int):
 
         return decode_avi_frames(payload, max_frames=max_frames, every_n=every_n)
     return None
+
+
+def _frame_rows(df, id_col, payload_col, every_n, max_frames, schema, row):
+    """One Arrow map stage over the container walk + per-frame decode
+    (multimodal._sampled_frames dispatch): ``row(id, frame_idx, n_frames,
+    px)`` gives each sampled frame's output row in ``schema``'s column
+    order. Undecodable payloads yield no rows (quarantine-by-omission)."""
+    cols = schema.fieldNames()
+
+    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+                sampled = _sampled_frames(bytes(payload), every_n, max_frames)
+                if sampled is None:
+                    continue
+                n_frames, frames = sampled
+                for idx, px in frames:
+                    rows.append(row(int(mid), int(idx), int(n_frames), px))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.select(id_col, payload_col).mapInPandas(_batches, schema=schema)
 
 
 def frame_sample_features(
@@ -794,39 +818,13 @@ def frame_sample_features(
     )
     th, tw = thumb
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .raster import resize_box
+    def row(media_id, idx, n_frames, px):
+        small = resize_box(px, th, tw).astype(np.float64)
+        if small.ndim == 3 and small.shape[2] >= 3:
+            luma = 0.299 * small[:, :, 0] + 0.587 * small[:, :, 1] + 0.114 * small[:, :, 2]
+        else:
+            luma = small.reshape(small.shape[0], small.shape[1], -1)[:, :, 0]
+        return (media_id, idx, n_frames, [float(luma.mean()), float(luma.std()),
+                                          float(luma.min()), float(luma.max())])
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                sampled = _sampled_frames(bytes(payload), every_n, max_frames)
-                if sampled is None:
-                    continue
-                n_frames, frames = sampled
-                for idx, px in frames:
-                    small = resize_box(px, th, tw).astype(np.float64)
-                    if small.ndim == 3 and small.shape[2] >= 3:
-                        luma = (
-                            0.299 * small[:, :, 0]
-                            + 0.587 * small[:, :, 1]
-                            + 0.114 * small[:, :, 2]
-                        )
-                    else:
-                        luma = small.reshape(small.shape[0], small.shape[1], -1)[:, :, 0]
-                    rows.append(
-                        (
-                            int(media_id),
-                            idx,
-                            n_frames,
-                            [
-                                float(luma.mean()),
-                                float(luma.std()),
-                                float(luma.min()),
-                                float(luma.max()),
-                            ],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "n_frames", "features"])
-
-    return df.select("media_id", "payload").mapInPandas(_batches, schema=out_schema)
+    return _frame_rows(df, "media_id", "payload", every_n, max_frames, out_schema, row)

@@ -19,6 +19,7 @@ layout; cross-validated against Java ImageIO on real files
 from __future__ import annotations
 
 import struct
+from itertools import islice
 
 
 def _lzw_decode(min_code_size: int, data: bytes) -> bytearray:
@@ -78,49 +79,64 @@ def _lzw_decode(min_code_size: int, data: bytes) -> bytearray:
 #: interlaced GIF row passes: (start, step)
 _INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
+#: the two GIF signatures (the first six bytes of every GIF file)
+GIF_MAGIC = (b"GIF87a", b"GIF89a")
 
-def decode_gif_pixels(payload: bytes):
-    """First frame of a GIF as (H, W, C) uint8 — C=4 (RGBA) when the frame
-    declares a transparent index, else C=3."""
+
+def _color_table(payload: bytes, i: int, flags: int):
+    """The (n, 3) colour table at ``i`` that ``flags`` announces, or None."""
     import numpy as np
 
-    if not payload.startswith((b"GIF87a", b"GIF89a")):
+    if not flags & 0x80:
+        return None, i
+    n = 2 << (flags & 0x07)
+    return np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3), i + 3 * n
+
+
+def _gif_walk(payload: bytes):
+    """Walk a GIF container: returns None for a non-GIF payload, else
+    ``(w, h, bg, gct, frames)``. ``frames`` lazily yields one
+    ``(left, top, fw, fh, index_frame, colour_table, transparent, disposal)``
+    per image block: the (fh, fw) uint8 colour indices LZW-decoded and
+    de-interlaced, the local table or else the global one, and the
+    graphic-control transparency index and disposal method of the GCE
+    that precedes the block. A trailer ends the walk; a block that is
+    neither extension nor image, or an image with no colour table, raises
+    ValueError."""
+    import numpy as np
+
+    if not payload.startswith(GIF_MAGIC):
         return None
-    try:
-        w, h, flags, bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
-        i = 13
-        gct = None
-        if flags & 0x80:
-            n = 2 << (flags & 0x07)
-            gct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
-            i += 3 * n
+    w, h, flags, bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
+    gct, start = _color_table(payload, 13, flags)
+
+    def frames():
+        i = start
         transparent = None
+        disposal = 0
         while i < len(payload):
             b = payload[i]
             if b == 0x3B:  # trailer
-                return None  # no image block found
+                return
             if b == 0x21:  # extension
                 label = payload[i + 1]
                 j = i + 2
                 if label == 0xF9 and payload[j] >= 4:  # graphic control
                     packed = payload[j + 1]
-                    if packed & 0x01:
-                        transparent = payload[j + 4]
+                    transparent = payload[j + 4] if packed & 0x01 else None
+                    disposal = (packed >> 2) & 0x07
                 while payload[j]:  # sub-blocks until terminator
                     j += 1 + payload[j]
                 i = j + 1
                 continue
             if b != 0x2C:  # image descriptor expected
-                return None
+                raise ValueError("unexpected GIF block")
             left, top, fw, fh, iflags = struct.unpack("<HHHHB", payload[i + 1 : i + 10])
-            i += 10
-            ct = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                ct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
-                i += 3 * n
+            ct, i = _color_table(payload, i + 10, iflags)
             if ct is None:
-                return None
+                ct = gct
+            if ct is None:
+                raise ValueError("GIF image without a colour table")
             min_code = payload[i]
             i += 1
             lzw = bytearray()
@@ -136,22 +152,42 @@ def decode_gif_pixels(payload: bytes):
             if iflags & 0x40:  # interlaced: reorder rows
                 out_rows = np.zeros_like(frame)
                 src = 0
-                for start, step in _INTERLACE:
-                    for row in range(start, fh, step):
+                for row_start, step in _INTERLACE:
+                    for row in range(row_start, fh, step):
                         out_rows[row] = frame[src]
                         src += 1
                 frame = out_rows
-            # canvas: background color (or 0), first frame blitted at offset
-            canvas = np.full((h, w), bg if gct is not None and bg < len(gct) else 0,
-                             dtype=np.uint8)
-            canvas[top : top + fh, left : left + fw] = frame
-            safe = np.minimum(canvas, len(ct) - 1)
-            rgb = ct[safe]
-            if transparent is None:
-                return rgb
-            alpha = np.where(canvas == transparent, 0, 255).astype(np.uint8)
-            return np.dstack([rgb, alpha])
-        return None
+            yield left, top, fw, fh, frame, ct, transparent, disposal
+            transparent = None
+            disposal = 0
+
+    return w, h, bg, gct, frames()
+
+
+def decode_gif_pixels(payload: bytes):
+    """First frame of a GIF as (H, W, C) uint8 — C=4 (RGBA) when the frame
+    declares a transparent index, else C=3."""
+    import numpy as np
+
+    try:
+        walk = _gif_walk(payload)
+        if walk is None:
+            return None
+        w, h, bg, gct, frames = walk
+        first = next(frames, None)
+        if first is None:
+            return None  # no image block found
+        left, top, fw, fh, frame, ct, transparent, _ = first
+        # canvas: background color (or 0), first frame blitted at offset
+        canvas = np.full((h, w), bg if gct is not None and bg < len(gct) else 0,
+                         dtype=np.uint8)
+        canvas[top : top + fh, left : left + fw] = frame
+        safe = np.minimum(canvas, len(ct) - 1)
+        rgb = ct[safe]
+        if transparent is None:
+            return rgb
+        alpha = np.where(canvas == transparent, 0, 255).astype(np.uint8)
+        return np.dstack([rgb, alpha])
     except (struct.error, IndexError, ValueError):
         return None
 
@@ -215,67 +251,17 @@ def decode_gif_frames(payload: bytes, max_frames: int = 64):
     None outside coverage (the decode_gif_pixels contract)."""
     import numpy as np
 
-    if not payload.startswith((b"GIF87a", b"GIF89a")):
-        return None
     try:
-        w, h, flags, bg, _aspect = struct.unpack("<HHBBB", payload[6:13])
-        i = 13
-        gct = None
-        if flags & 0x80:
-            n = 2 << (flags & 0x07)
-            gct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
-            i += 3 * n
+        walk = _gif_walk(payload)
+        if walk is None:
+            return None
+        w, h, bg, gct, blocks = walk
         bg_rgb = gct[bg] if gct is not None and bg < len(gct) else np.zeros(3, np.uint8)
         canvas = np.broadcast_to(bg_rgb, (h, w, 3)).astype(np.uint8).copy()
         frames = []
-        transparent = None
-        disposal = 0
-        while i < len(payload) and len(frames) < max_frames:
-            b = payload[i]
-            if b == 0x3B:
-                break
-            if b == 0x21:
-                label = payload[i + 1]
-                j = i + 2
-                if label == 0xF9 and payload[j] >= 4:
-                    packed = payload[j + 1]
-                    transparent = payload[j + 4] if packed & 0x01 else None
-                    disposal = (packed >> 2) & 0x07
-                while payload[j]:
-                    j += 1 + payload[j]
-                i = j + 1
-                continue
-            if b != 0x2C:
-                return None
-            left, top, fw, fh, iflags = struct.unpack("<HHHHB", payload[i + 1 : i + 10])
-            i += 10
-            ct = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                ct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
-                i += 3 * n
-            if ct is None:
-                return None
-            min_code = payload[i]
-            i += 1
-            lzw = bytearray()
-            while payload[i]:
-                ln = payload[i]
-                lzw += payload[i + 1 : i + 1 + ln]
-                i += 1 + ln
-            i += 1
-            idx = _lzw_decode(min_code, bytes(lzw))
-            if len(idx) < fw * fh:
-                idx = idx + bytearray(fw * fh - len(idx))
-            frame = np.frombuffer(bytes(idx[: fw * fh]), dtype=np.uint8).reshape(fh, fw)
-            if iflags & 0x40:
-                out_rows = np.zeros_like(frame)
-                src = 0
-                for start, step in _INTERLACE:
-                    for row in range(start, fh, step):
-                        out_rows[row] = frame[src]
-                        src += 1
-                frame = out_rows
+        for left, top, fw, fh, frame, ct, transparent, disposal in islice(
+            blocks, max(max_frames, 0)
+        ):
             before = canvas[top : top + fh, left : left + fw].copy()
             safe = np.minimum(frame, len(ct) - 1)
             rgb = ct[safe]
@@ -290,8 +276,6 @@ def decode_gif_frames(payload: bytes, max_frames: int = 64):
                 canvas[top : top + fh, left : left + fw] = bg_rgb
             elif disposal == 3:  # restore pre-draw canvas
                 canvas[top : top + fh, left : left + fw] = before
-            transparent = None
-            disposal = 0
         return frames if frames else None
     except (struct.error, IndexError, ValueError):
         return None

@@ -101,7 +101,6 @@ def _fused_multitable_scan(coll, qids, qmat, qn2, qprobes, tables):
     cosine leaves here UNROUNDED (raw IEEE quotient of bit-exact parts);
     rounding happens in Spark so the engine's own round semantics apply."""
     import numpy as np
-    import pandas as pd
 
     n_tables = len(tables)
     n_planes = len(tables[0])
@@ -112,9 +111,8 @@ def _fused_multitable_scan(coll, qids, qmat, qn2, qprobes, tables):
         dtype=np.float64,
     ).T  # (d, L*b)
     shifts = np.tile(np.arange(n_planes, dtype=np.int64), n_tables)
-    qprobe_arr = np.array(qprobes, dtype=np.int64)  # (L, Q, n_flips)
     bc = coll.sparkSession.sparkContext.broadcast(
-        (wflat, shifts, np.asarray(qids), qmat, qn2, qprobe_arr)
+        (wflat, shifts, np.asarray(qids, dtype=np.int64), qmat, qn2, qprobes)
     )
     schema = "query_id long, neighbor_id long, cos double"
 
@@ -136,22 +134,76 @@ def _fused_multitable_scan(coll, qids, qmat, qn2, qprobes, tables):
             for t in range(n_tables):
                 # (n, 1, 1) == (1, Q, n_flips) → any over probes
                 hit |= (buckets[:, t, None, None] == b_probes[t][None, :, :]).any(-1)
-            hit &= ids[:, None] != b_qids[None, :]
-            rows, cols = np.nonzero(hit)
-            if len(rows) == 0:
-                continue
-            a, b = emb[rows], b_qmat[cols]  # (P, d) each
-            dacc = np.zeros(len(rows), dtype=np.float64)
-            nacc = np.zeros(len(rows), dtype=np.float64)
-            for i in range(d):
-                dacc += a[:, i] * b[:, i]
-                nacc += a[:, i] * a[:, i]
-            cos = dacc / np.sqrt(b_qn2[cols] * nacc)
-            yield pd.DataFrame(
-                {"query_id": b_qids[cols], "neighbor_id": ids[rows], "cos": cos}
-            )
+            yield from _cos_pairs(hit, ids, emb, b_qids, b_qmat, b_qn2)
 
     return coll.select("id", "emb").mapInPandas(score_batches, schema=schema)
+
+
+def _cos_pairs(hit, ids, emb, qids, qmat, qn2):
+    """Score an (n, Q) candidate matrix of one batch: self-pairs dropped,
+    then cos = e·q / sqrt(|q|²·|e|²) with e·q and |e|² accumulated in dim
+    order, one add per element (the multitable float discipline). Yields
+    one unrounded (query_id, neighbor_id, cos) frame, or none without a
+    hit."""
+    import numpy as np
+    import pandas as pd
+
+    hit &= ids[:, None] != qids[None, :]
+    rows, cols = np.nonzero(hit)
+    if len(rows) == 0:
+        return
+    a, b = emb[rows], qmat[cols]  # (P, d) each
+    dacc = np.zeros(len(rows), dtype=np.float64)
+    nacc = np.zeros(len(rows), dtype=np.float64)
+    for i in range(qmat.shape[1]):
+        dacc += a[:, i] * b[:, i]
+        nacc += a[:, i] * a[:, i]
+    cos = dacc / np.sqrt(qn2[cols] * nacc)
+    yield pd.DataFrame({"query_id": qids[cols], "neighbor_id": ids[rows], "cos": cos})
+
+
+def _centroid_table(rows):
+    """(cids, cmat, cnorm) over cid-ordered (cid, cemb) rows, with |c|²
+    accumulated in dim order — the oracle's sequential list_dot_product
+    value."""
+    import numpy as np
+
+    cids = np.array([int(r["cid"]) for r in rows], dtype=np.int64)
+    cmat = np.array([r["cemb"] for r in rows], dtype=np.float64)  # (K, d)
+    cnorm = np.zeros(len(cids), dtype=np.float64)
+    for i in range(cmat.shape[1]):
+        cnorm += cmat[:, i] * cmat[:, i]
+    return cids, cmat, cnorm
+
+
+def _cell_dists(emb, cmat, cnorm):
+    """(n, K) coarse-quantizer distances d = |c|² − 2·e·c, e·c accumulated
+    in dim order, one add per element: bit-equal to the oracle's
+    sequential sums (a BLAS matmul's pairwise summation could flip an
+    argmin between near-equidistant centroids). argmin's first occurrence
+    is the lowest cid over a cid-ordered table."""
+    import numpy as np
+
+    acc = np.zeros((len(emb), len(cnorm)), dtype=np.float64)
+    for i in range(cmat.shape[1]):
+        acc += emb[:, i : i + 1] * cmat[None, :, i]
+    return cnorm[None, :] - 2.0 * acc
+
+
+def _probe_mask(qmat, cids, cmat, cnorm, n_probe: int):
+    """(K, Q) bool, computed on the driver: each query probes its
+    ``n_probe`` nearest cells by the (d, cid) order of the oracle's
+    row_number window. ``qmat`` must be (Q, dim), also when Q is 0."""
+    import numpy as np
+
+    qd = _cell_dists(qmat, cmat, cnorm)  # (Q, K)
+    mask = np.zeros((len(cids), len(qmat)), dtype=bool)
+    cid_to_idx = {int(c): j for j, c in enumerate(cids)}
+    cid_list = [int(c) for c in cids]
+    for qi in range(len(qmat)):
+        for _, cid in sorted(zip(qd[qi].tolist(), cid_list))[:n_probe]:
+            mask[cid_to_idx[cid], qi] = True
+    return mask
 
 
 def ann_topk_multitable(
@@ -164,7 +216,6 @@ def ann_topk_multitable(
     n_planes: int = 8,
     dim: int = 64,
     round_digits: int = 4,
-    unroll_dim: int | None = None,
     probe_radius: int = 0,
 ) -> DataFrame:
     """Multi-table LSH ANN (OR-amplification): L independent hyperplane
@@ -194,10 +245,10 @@ def ann_topk_multitable(
     knn/ann operators here share); an unbounded query side would instead
     use the (table, bucket) equi-join shape.
 
-    ``dim`` is the true vector dimension (sizes the hyperplanes);
-    ``unroll_dim`` is accepted for signature stability but unused — the
+    ``dim`` is the true vector dimension (sizes the hyperplanes); the
     fused scan scores in Arrow-batched numpy with oracle-identical
-    sequential IEEE accumulation (see _fused_multitable_scan)."""
+    sequential IEEE accumulation (see _fused_multitable_scan). An empty
+    query set returns an empty frame with the same columns."""
     import numpy as np
 
     tables = [make_planes(n_planes, dim, seed=t) for t in range(n_tables)]
@@ -234,15 +285,16 @@ def ann_topk_multitable(
         "multitable LSH query set",
     )
     qids = [r["id"] for r in q_rows]
-    qmat = np.array([r["emb"] for r in q_rows], dtype=np.float64)
+    # explicit shapes: an empty query set is (0, dim) / (L, 0, n_flips)
+    qmat = np.array([r["emb"] for r in q_rows], dtype=np.float64).reshape(len(q_rows), dim)
     qn2 = np.array([r["n2"] for r in q_rows], dtype=np.float64)
-    qprobes = [
+    qprobes = np.array(
         [
-            [_bits_py(r["emb"], tables[t]) ^ flip for flip in flips]
-            for r in q_rows
-        ]
-        for t in range(n_tables)
-    ]  # (L, Q, n_flips)
+            [[_bits_py(r["emb"], tables[t]) ^ flip for flip in flips] for r in q_rows]
+            for t in range(n_tables)
+        ],
+        dtype=np.int64,
+    ).reshape(n_tables, len(q_rows), len(flips))
     scored = _fused_multitable_scan(coll, qids, qmat, qn2, qprobes, tables)
     pairs = scored.select(
         "query_id", "neighbor_id", F.round("cos", round_digits).alias("cos")
@@ -267,14 +319,17 @@ def _cell_dist_structs(
     parse to the identical tree (same aggregate/zip_with lambdas, same
     literal doubles — functions/litfast rationale), so results and plans
     match; a Column stays on the classic builder."""
+    cents = []
+    for r in cent_rows:
+        cvec = [float(x) for x in r["cemb"]]
+        cn2 = 0.0
+        for x in cvec:  # sequential IEEE order == oracle's list_dot_product
+            cn2 += x * x
+        cents.append((cvec, cn2, int(r["cid"])))
     if isinstance(emb, str):
         ecol = f"`{emb}`"
         parts = []
-        for r in cent_rows:
-            cvec = [float(x) for x in r["cemb"]]
-            cn2 = 0.0
-            for x in cvec:  # sequential IEEE order == oracle's list_dot_product
-                cn2 += x * x
+        for cvec, cn2, cid in cents:
             arr = "array(" + ",".join(f"{x!r}D" for x in cvec) + ")"
             if dim is None:
                 d = (
@@ -286,17 +341,12 @@ def _cell_dist_structs(
                 for i in range(dim):
                     acc = f"({acc} + {ecol}[{i}] * {cvec[i]!r}D)"
                 d = f"{cn2!r}D - 2.0D * {acc}"
-            parts.append(f"struct({d} AS d, CAST({int(r['cid'])} AS BIGINT) AS cid)")
+            parts.append(f"struct({d} AS d, CAST({cid} AS BIGINT) AS cid)")
         return F.expr("array(" + ",".join(parts) + ")")
     choices = []
-    for r in cent_rows:
-        cvec = [float(x) for x in r["cemb"]]
-        cn2 = 0.0
-        for x in cvec:  # sequential IEEE order == oracle's list_dot_product
-            cn2 += x * x
-        clit = lit_array(cvec, "double")
-        d = F.lit(cn2) - F.lit(2.0) * dot(emb, clit, dim)
-        choices.append(F.struct(d.alias("d"), F.lit(int(r["cid"])).cast("long").alias("cid")))
+    for cvec, cn2, cid in cents:
+        d = F.lit(cn2) - F.lit(2.0) * dot(emb, lit_array(cvec, "double"), dim)
+        choices.append(F.struct(d.alias("d"), F.lit(cid).cast("long").alias("cid")))
     return F.array(*choices)
 
 
@@ -437,28 +487,17 @@ def semantic_keep(
     cent_rows = _index_rows(  # ascending order: argmin tie -> lowest cid
         centroids.orderBy("cid"), "semantic_keep centroid table"
     )
-    cids = np.array([int(r["cid"]) for r in cent_rows], dtype=np.int64)
-    cmat = np.array([[float(x) for x in r["cemb"]] for r in cent_rows], dtype=np.float64)
-    d_ = cmat.shape[1]
-    cnorm = np.zeros(len(cids), dtype=np.float64)
-    for i in range(d_):  # |c|^2 in the oracle's sequential order
-        cnorm += cmat[:, i] * cmat[:, i]
-    bc = collection.sparkSession.sparkContext.broadcast((cids, cmat, cnorm))
+    bc = collection.sparkSession.sparkContext.broadcast(_centroid_table(cent_rows))
 
     e = collection.select(F.col(id_col).alias("id"), as_double(vec_col).alias("emb"))
 
     def assign_batches(it):
         b_cids, b_cmat, b_cnorm = bc.value
-        dd = b_cmat.shape[1]
         for pdf in it:
             if len(pdf) == 0:
                 continue
             emb = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            acc = np.zeros((len(pdf), len(b_cids)), dtype=np.float64)
-            for i in range(dd):
-                acc += emb[:, i : i + 1] * b_cmat[None, :, i]
-            dmat = b_cnorm[None, :] - 2.0 * acc
-            pick = dmat.argmin(axis=1)  # first minimum == lowest cid (sorted)
+            pick = _cell_dists(emb, b_cmat, b_cnorm).argmin(axis=1)
             yield pd.DataFrame(
                 {"id": pdf["id"], "cid": b_cids[pick], "emb": pdf["emb"]}
             )
@@ -672,12 +711,7 @@ def ivfpq_topk(
         .orderBy("cid"),
         "IVF-PQ coarse centroid table",
     )
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r["cemb"] for r in cent_rows], dtype=np.float64)  # (Kc, d)
-    d_ = cmat.shape[1]
-    cnorm = np.zeros(len(cids), dtype=np.float64)
-    for i in range(d_):
-        cnorm += cmat[:, i] * cmat[:, i]
+    cids, cmat, cnorm = _centroid_table(cent_rows)
 
     # --- fine quantizer: int8 codewords, id-ordered (argmin tie == lowest cid)
     cw_rows = _index_rows(
@@ -705,23 +739,11 @@ def ivfpq_topk(
         "IVF-PQ query set",
     )
     qids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    # dim-ordered numpy accumulation: bit-equal to the scalar loop, and
-    # keeps the driver responsive once cells reach ~10^4+ (N/cell_stride)
-    probe_mask = np.zeros((len(cids), len(qids)), dtype=bool)  # (Kc, Q)
-    cid_to_idx = {int(c): j for j, c in enumerate(cids)}
     # explicit (Q, dim) shapes: an empty query set is (0, dim), not (0,)
     qfmat = np.array([r["emb"] for r in q_rows], dtype=np.float64).reshape(
-        len(q_rows), d_
+        len(q_rows), cmat.shape[1]
     )
-    qacc = np.zeros((len(qids), len(cids)), dtype=np.float64)
-    for i in range(d_):
-        qacc += qfmat[:, i : i + 1] * cmat[None, :, i]
-    qdmat = cnorm[None, :] - 2.0 * qacc  # (Q, Kc)
-    cid_list = [int(c) for c in cids]
-    for qi in range(len(qids)):
-        ds = list(zip(qdmat[qi].tolist(), cid_list))
-        for _, cid in sorted(ds)[:n_probe]:
-            probe_mask[cid_to_idx[cid], qi] = True
+    probe_mask = _probe_mask(qfmat, cids, cmat, cnorm, n_probe)  # (Kc, Q)
     qmat = np.array([r["qv"] for r in q_rows], dtype=np.int64).reshape(
         len(q_rows), cwmat.shape[1]
     )
@@ -741,16 +763,12 @@ def ivfpq_topk(
 
         b_cids, b_cmat, b_cnorm, b_qids, b_probe, b_csub, b_ccn, b_lut = bc.value
         nsub, _, sdim = b_csub.shape
-        dd = b_cmat.shape[1]
         for pdf in it:
             if len(pdf) == 0:
                 continue
             ids = pdf["id"].to_numpy()
             emb = np.array(pdf["emb"].tolist(), dtype=np.float64)  # (n, d)
-            acc = np.zeros((len(ids), len(b_cids)), dtype=np.float64)
-            for i in range(dd):  # dim-ordered: bit-equal to the oracle argmin
-                acc += emb[:, i : i + 1] * b_cmat[None, :, i]
-            pick = (b_cnorm[None, :] - 2.0 * acc).argmin(axis=1)
+            pick = _cell_dists(emb, b_cmat, b_cnorm).argmin(axis=1)
             hit = b_probe[pick]  # (n, Q)
             hit &= ids[:, None] != b_qids[None, :]
             keep = hit.any(axis=1)
@@ -1038,73 +1056,34 @@ def _fused_ivf_topk(
     import numpy as np
 
     cent_rows = _index_rows(centroids.orderBy("cid"), "IVF centroid table")  # K x dim
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r["cemb"] for r in cent_rows], dtype=np.float64)  # (K, d)
-    d_ = cmat.shape[1]
-    cnorm = np.zeros(len(cids), dtype=np.float64)
-    for i in range(d_):  # |c|^2 in the oracle's sequential order
-        cnorm += cmat[:, i] * cmat[:, i]
+    cids, cmat, cnorm = _centroid_table(cent_rows)
 
     q_rows = bounded_collect(
         _with_norms(queries, id_col, vec_col, dim).select("id", "emb", "n2"),
         "ANN query set",
     )
     qids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r["emb"] for r in q_rows], dtype=np.float64)
+    # explicit (Q, dim) shape: an empty query set is (0, dim), not (0,)
+    qmat = np.array([r["emb"] for r in q_rows], dtype=np.float64).reshape(
+        len(q_rows), cmat.shape[1]
+    )
     qn2 = np.array([r["n2"] for r in q_rows], dtype=np.float64)
-
-    # driver-side probe cells, the same (d, cid) ordering as the expr
-    # window. Dim-ordered numpy accumulation (one add per element) is the
-    # same IEEE doubles as the scalar loop it replaced — the replacement
-    # matters once centroids number ~10^4+ (N/stride grows with the
-    # collection), where a pure-Python Q x K x dim loop stalls the driver.
-    probe_mask = np.zeros((len(cids), len(qids)), dtype=bool)  # (K, Q)
-    cid_to_idx = {int(c): j for j, c in enumerate(cids)}
-    qacc = np.zeros((len(qids), len(cids)), dtype=np.float64)
-    for i in range(d_):
-        qacc += qmat[:, i : i + 1] * cmat[None, :, i]
-    qdmat = cnorm[None, :] - 2.0 * qacc  # (Q, K)
-    cid_list = [int(c) for c in cids]
-    for qi in range(len(qids)):
-        ds = list(zip(qdmat[qi].tolist(), cid_list))
-        for _, cid in sorted(ds)[:n_probe]:
-            probe_mask[cid_to_idx[cid], qi] = True
+    probe_mask = _probe_mask(qmat, cids, cmat, cnorm, n_probe)  # (K, Q)
 
     spark = collection.sparkSession
-    bc = spark.sparkContext.broadcast((cids, cmat, cnorm, qids, qmat, qn2, probe_mask))
+    bc = spark.sparkContext.broadcast((cmat, cnorm, qids, qmat, qn2, probe_mask))
     coll = _with_norms(collection, id_col, vec_col, dim)
     schema = "query_id long, neighbor_id long, cos double"
 
     def score_batches(it):
-        import pandas as pd
-
-        b_cids, b_cmat, b_cnorm, b_qids, b_qmat, b_qn2, b_probe = bc.value
-        dd = b_cmat.shape[1]
+        b_cmat, b_cnorm, b_qids, b_qmat, b_qn2, b_probe = bc.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
             emb = np.array(pdf["emb"].tolist(), dtype=np.float64)  # (n, d)
-            ids = pdf["id"].to_numpy()
-            acc = np.zeros((len(pdf), len(b_cids)), dtype=np.float64)
-            for i in range(dd):
-                acc += emb[:, i : i + 1] * b_cmat[None, :, i]
-            dmat = b_cnorm[None, :] - 2.0 * acc  # bit-equal to the expr form
-            pick = dmat.argmin(axis=1)  # ties -> lowest index == lowest cid
+            pick = _cell_dists(emb, b_cmat, b_cnorm).argmin(axis=1)
             hit = b_probe[pick]  # (n, Q): query probes this vector's cell
-            hit &= ids[:, None] != b_qids[None, :]
-            rows, cols = np.nonzero(hit)
-            if len(rows) == 0:
-                continue
-            a, b = emb[rows], b_qmat[cols]
-            dacc = np.zeros(len(rows), dtype=np.float64)
-            nacc = np.zeros(len(rows), dtype=np.float64)
-            for i in range(dd):
-                dacc += a[:, i] * b[:, i]
-                nacc += a[:, i] * a[:, i]
-            cos = dacc / np.sqrt(b_qn2[cols] * nacc)
-            yield pd.DataFrame(
-                {"query_id": b_qids[cols], "neighbor_id": ids[rows], "cos": cos}
-            )
+            yield from _cos_pairs(hit, pdf["id"].to_numpy(), emb, b_qids, b_qmat, b_qn2)
 
     scored = coll.select("id", "emb").mapInPandas(score_batches, schema=schema)
     pairs = scored.select(

@@ -72,28 +72,33 @@ def literal_split_pattern(sep: str) -> str:
     return sep
 
 
-def mg_sketch(stream: Iterable[str], m: int) -> dict[str, int]:
-    """One Misra–Gries pass: ≤ m counters; any item with count > N/(m+1)
-    is guaranteed present on return. Decrement-all costs O(m) but only
-    fires when the dict is full AND the item is new — amortized O(1) per
-    input over any stream (each decrement cancels one prior increment)."""
-    if m < 1:
-        raise ValueError(f"Misra–Gries capacity m must be >= 1, got {m}")
-    c: dict[str, int] = {}
-    for tok in stream:
+def mg_update(c: dict[str, int], tokens: Iterable[str], m: int) -> dict[str, int]:
+    """Fold ``tokens`` into the Misra–Gries counters ``c`` in place (≤ m
+    counters; returns ``c``). Callers pass a whole batch's token list per
+    call, so the loop runs without a Python call per token. Decrement-all
+    costs O(m) but only fires when the dict is full AND the item is new —
+    amortized O(1) per input over any stream (each decrement cancels one
+    prior increment)."""
+    for tok in tokens:
         if tok in c:
             c[tok] += 1
         elif len(c) < m:
             c[tok] = 1
         else:
-            dead = []
+            dead = [k for k in c if c[k] == 1]
             for k in c:
                 c[k] -= 1
-                if c[k] == 0:
-                    dead.append(k)
             for k in dead:
                 del c[k]
     return c
+
+
+def mg_sketch(stream: Iterable[str], m: int) -> dict[str, int]:
+    """One Misra–Gries pass: ≤ m counters; any item with count > N/(m+1)
+    is guaranteed present on return."""
+    if m < 1:
+        raise ValueError(f"Misra–Gries capacity m must be >= 1, got {m}")
+    return mg_update({}, stream, m)
 
 
 def mg_merge(sketches: Iterable[dict[str, int]], m: int) -> dict[str, int]:
@@ -126,24 +131,12 @@ def partition_sketches(df: DataFrame, text_col: str, m: int, sep: str = " ") -> 
         for pdf in batches:
             if pdf.empty:
                 continue
-            for text in pdf[text_col].tolist():
-                if text is None:
-                    continue
-                # NOTE: ''.split(sep) == [''] — the empty-string token is a
-                # real token on the JVM side too (split('', sep) -> ['']),
-                # so it must flow through the sketch like any other or an
-                # all-empty-doc corpus would break the superset guarantee
-                for tok in text.split(sep):
-                    if tok in c:
-                        c[tok] += 1
-                    elif len(c) < m:
-                        c[tok] = 1
-                    else:
-                        dead = [k for k in c if c[k] == 1]
-                        for k in c:
-                            c[k] -= 1
-                        for k in dead:
-                            del c[k]
+            # NOTE: ''.split(sep) == [''] — the empty-string token is a
+            # real token on the JVM side too (split('', sep) -> ['']),
+            # so it must flow through the sketch like any other or an
+            # all-empty-doc corpus would break the superset guarantee
+            texts = pdf[text_col].tolist()
+            mg_update(c, [t for x in texts if x is not None for t in x.split(sep)], m)
         yield pd.DataFrame({"token": list(c), "wt": list(c.values())}, columns=["token", "wt"])
 
     return df.select(text_col).mapInPandas(sketch_partition, _SKETCH_SCHEMA)
@@ -165,9 +158,7 @@ def tree_merge_sketches(sketch_df: DataFrame, m: int, n_groups: int) -> DataFram
         for pdf in batches:
             for tok, wt in zip(pdf["token"].tolist(), pdf["wt"].tolist()):
                 total[tok] = total.get(tok, 0) + wt
-        if len(total) > m:
-            cut = sorted(total.values(), reverse=True)[m]
-            total = {k: v - cut for k, v in total.items() if v > cut}
+        total = mg_merge([total], m)
         yield pd.DataFrame(
             {"token": list(total), "wt": list(total.values())},
             columns=["token", "wt"],
@@ -259,21 +250,14 @@ def grouped_partition_sketches(
         for pdf in batches:
             if pdf.empty:
                 continue
+            # each group's substream keeps its order, so gathering a
+            # batch's tokens per group first folds the same sequence
+            by_g: dict[str, list[str]] = {}
             for g, text in zip(pdf[group_col].tolist(), pdf[text_col].tolist()):
-                if g is None or text is None:
-                    continue
-                c = per_g.setdefault(g, {})
-                for tok in text.split(sep):
-                    if tok in c:
-                        c[tok] += 1
-                    elif len(c) < m:
-                        c[tok] = 1
-                    else:
-                        dead = [k for k in c if c[k] == 1]
-                        for k in c:
-                            c[k] -= 1
-                        for k in dead:
-                            del c[k]
+                if g is not None and text is not None:
+                    by_g.setdefault(g, []).extend(text.split(sep))
+            for g, toks in by_g.items():
+                mg_update(per_g.setdefault(g, {}), toks, m)
         yield pd.DataFrame(
             {
                 "g": [g for g, c in per_g.items() for _ in c],
@@ -305,9 +289,7 @@ def grouped_tree_merge(sketch_df: DataFrame, m: int) -> DataFrame:
                 c = per_g.setdefault(g, {})
                 c[tok] = c.get(tok, 0) + wt
         for g, total in per_g.items():
-            if len(total) > m:
-                cut = sorted(total.values(), reverse=True)[m]
-                per_g[g] = {k: v - cut for k, v in total.items() if v > cut}
+            per_g[g] = mg_merge([total], m)
         yield pd.DataFrame(
             {
                 "g": [g for g, c in per_g.items() for _ in c],

@@ -12,7 +12,8 @@ contract:
   absorbed map-side. Everything a trainer does afterwards is bounded by
   |distinct words| (~10^7-10^8 for 100 TB of web text), not corpus size.
 - :func:`merge_pair` — the JVM-side merge fold BPE and WordPiece both
-  replay per learned merge (WordPiece passes its own merged symbol).
+  replay per learned merge (WordPiece passes its own merged symbol), and
+  :func:`merge_loop`, the distributed training loop around it.
 - :class:`TokenizerModel` + :func:`train_tokenizer` /
   :func:`apply_tokenizer` — one train/apply contract over the three
   algorithms, so pipeline code (and the three-trainer cross-differential
@@ -26,6 +27,7 @@ the BASELINE-mandated LLM-extension surface.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -37,6 +39,7 @@ from ..functions.text import tokens
 __all__ = [
     "word_freq",
     "merge_pair",
+    "merge_loop",
     "TokenizerModel",
     "train_tokenizer",
     "apply_tokenizer",
@@ -83,6 +86,51 @@ def merge_pair(syms: Column, a: str, b: str, merged: str | None = None) -> Colum
         )
 
     return F.aggregate(syms, init, step, finish)
+
+
+def merge_loop(
+    state: DataFrame,
+    n_merges: int,
+    ranked: Callable[[DataFrame], DataFrame],
+    merged: Callable[[str, str], str],
+    tiny: bool = False,
+    persist_every: int = 4,
+) -> list[tuple[str, str]]:
+    """The distributed subword-merge loop BPE and WordPiece share, over a
+    (syms, freq) ``state`` table. Per iteration the driver collects one
+    row — the first of ``ranked(state)``, the pair frame sorted best-first
+    with a space-joined ``pair`` column — and runs one job; the merge is
+    appended to the plan lazily as :func:`merge_pair` with the symbol
+    ``merged(a, b)``. The lineage is truncated by a persist+count only
+    every ``persist_every`` iterations (an unbroken k-fold lineage would
+    recompute O(k) folds per iteration). ``tiny=True`` collapses the table
+    to one partition first. Stops early when no pair is left."""
+    if tiny:
+        state = state.coalesce(1)
+    state = state.persist()
+    state.count()  # materialize before the loop reuses it (CLAUDE.md)
+    pinned = state
+    merges: list[tuple[str, str]] = []
+    try:
+        for i in range(n_merges):
+            top = ranked(state).limit(1).collect()
+            if not top:
+                break  # every word fully merged to one symbol
+            # symbols never contain spaces (whitespace tokenizer), so the
+            # 2-shingle join key splits back unambiguously
+            a, b = top[0]["pair"].split(" ", 1)
+            merges.append((a, b))
+            state = state.select(
+                merge_pair(F.col("syms"), a, b, merged(a, b)).alias("syms"), "freq"
+            )
+            if (i + 1) % persist_every == 0:
+                state = state.persist()
+                state.count()
+                pinned.unpersist()
+                pinned = state
+    finally:
+        pinned.unpersist()
+    return merges
 
 
 @dataclass(frozen=True)

@@ -175,8 +175,9 @@ def video_frame_hashes(df, id_col: str = "media_id", payload_col: str = "payload
     """(id, frame_idx, h) rows: the 64-bit dHash of each sampled decoded
     frame (animated GIF or MJPEG-AVI — operators.multimodal._sampled_
     frames dispatch). Undecodable payloads yield no rows."""
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from .multimodal import _frame_rows, dhash_pixels
 
     out_schema = T.StructType(
         [
@@ -185,22 +186,10 @@ def video_frame_hashes(df, id_col: str = "media_id", payload_col: str = "payload
             T.StructField("h", T.LongType()),
         ]
     )
-
-    def _batches(it):
-        from .multimodal import _sampled_frames, dhash_pixels as dhash
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                sampled = _sampled_frames(bytes(payload), every_n, max_frames)
-                if sampled is None:
-                    continue
-                _, frames = sampled
-                for idx, px in frames:
-                    rows.append((int(mid), int(idx), dhash(px)))
-            yield pd.DataFrame(rows, columns=["id", "frame_idx", "h"])
-
-    return df.select(id_col, payload_col).mapInPandas(_batches, schema=out_schema)
+    return _frame_rows(
+        df, id_col, payload_col, every_n, max_frames, out_schema,
+        lambda mid, idx, n_frames, px: (mid, idx, dhash_pixels(px)),
+    )
 
 
 def video_neardup_pairs(
@@ -313,11 +302,11 @@ def video_frame_luma_stats(
     RGB frames use the integer milli-weight luma 299R + 587G + 114B
     (BT.601 x1000 — exact int64 arithmetic).
 
-    One Arrow map stage over the container walk + per-frame JPEG/GIF decode
-    (multimodal._sampled_frames dispatch); undecodable payloads yield no
-    rows (quarantine-by-omission)."""
-    import pandas as pd
+    One multimodal._frame_rows map stage (per-frame JPEG/GIF decode);
+    undecodable payloads yield no rows."""
     from pyspark.sql import types as T
+
+    from .multimodal import _frame_rows
 
     out_schema = T.StructType(
         [
@@ -329,30 +318,15 @@ def video_frame_luma_stats(
             T.StructField("luma_max", T.LongType()),
         ]
     )
-    cols = ["id", "frame_idx", "n_frames", "luma_sum", "luma_min", "luma_max"]
 
-    def _batches(it):
+    def row(mid, idx, n_frames, px):
         import numpy as np
 
-        from .multimodal import _sampled_frames
+        a = px.astype(np.int64)
+        if a.ndim == 3 and a.shape[2] >= 3:
+            luma = 299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]
+        else:
+            luma = a.reshape(a.shape[0], a.shape[1], -1)[:, :, 0]
+        return (mid, idx, n_frames, int(luma.sum()), int(luma.min()), int(luma.max()))
 
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                sampled = _sampled_frames(bytes(payload), every_n, max_frames)
-                if sampled is None:
-                    continue
-                n_frames, frames = sampled
-                for idx, px in frames:
-                    a = px.astype(np.int64)
-                    if a.ndim == 3 and a.shape[2] >= 3:
-                        luma = 299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]
-                    else:
-                        luma = a.reshape(a.shape[0], a.shape[1], -1)[:, :, 0]
-                    rows.append(
-                        (int(mid), int(idx), int(n_frames),
-                         int(luma.sum()), int(luma.min()), int(luma.max()))
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, payload_col).mapInPandas(_batches, schema=out_schema)
+    return _frame_rows(df, id_col, payload_col, every_n, max_frames, out_schema, row)

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
-from .tokenizer import merge_pair  # the shared merge fold (tokenizer.py)
+from .tokenizer import merge_loop  # the shared merge loop (tokenizer.py)
 
 __all__ = [
     "wordpiece_symbols",
@@ -113,42 +113,19 @@ def train_wordpiece(
     persist_every: int = 4,
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` WordPiece merges from a (word, freq) table.
-    Same loop shape and caching discipline as train_bpe (one argmax row to
-    the driver per iteration, lineage pinned every ``persist_every``), with
-    the likelihood score replacing the raw count and ##-positional symbols
-    replacing the bare char split."""
-    state = words.select(wordpiece_symbols("word").alias("syms"), "freq")
-    if tiny:
-        state = state.coalesce(1)
-    state = state.persist()
-    state.count()
-    pinned = state
-    merges: list[tuple[str, str]] = []
-    try:
-        for i in range(n_merges):
-            top = (
-                pair_scores(state)
-                .orderBy(F.desc("score"), F.asc("pair"))
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            a, b = top[0]["pair"].split(" ", 1)
-            merges.append((a, b))
-            # merged symbol keeps a's positional identity: a + strip_##(b)
-            state = state.select(
-                merge_pair(F.col("syms"), a, b, a + _strip_cont(b)).alias("syms"),
-                "freq",
-            )
-            if (i + 1) % persist_every == 0:
-                state = state.persist()
-                state.count()
-                pinned.unpersist()
-                pinned = state
-    finally:
-        pinned.unpersist()
-    return merges
+    The distributed loop is train_bpe's (tokenizer.merge_loop: one argmax
+    row to the driver per iteration, lineage pinned every
+    ``persist_every``), with the likelihood score replacing the raw count
+    and ##-positional symbols replacing the bare char split."""
+    return merge_loop(
+        words.select(wordpiece_symbols("word").alias("syms"), "freq"),
+        n_merges,
+        lambda state: pair_scores(state).orderBy(F.desc("score"), F.asc("pair")),
+        # merged symbol keeps a's positional identity: a + strip_##(b)
+        lambda a, b: a + _strip_cont(b),
+        tiny,
+        persist_every,
+    )
 
 
 def vocab_from_merges(

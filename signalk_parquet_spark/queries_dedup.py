@@ -19,6 +19,7 @@ from .functions.vectors import as_double as as_double_vec
 from .functions.vectors import dot as vec_dot
 from .functions.vectors import norm_sq as vec_norm_sq
 from .memo import MEMO
+from .operators.dedup import lsh_band_pairs, lsh_band_rows
 from .registry import load, register
 
 #: POSITIONAL word-3-gram list (order/multiplicity preserved — winnowing
@@ -195,26 +196,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
         F.col("id").alias("doc_id"), "shl"
     )  # session-shared shingle frame: sig + 2 verify joins reuse one cache
     sig = _sig_frame(spark, sf)
-    band_rows = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("band_idx"), F.col(f"band{j}").alias("band_val"))
-                for j in range(_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = lsh_band_pairs(lsh_band_rows(sig, "doc_id", _BANDS), "doc_id", "doc_a", "doc_b")
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("shl").alias("sh_a"))
     db = docs.select(F.col("doc_id").alias("doc_b"), F.col("shl").alias("sh_b"))
     jac = jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -273,15 +255,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = _shingled_docs(spark, sf).select("id", "shl")
     sig = _sig_frame(spark, sf)
-    band_rows = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("band_idx"), F.col(f"band{j}").alias("band_val"))
-                for j in range(_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
+    band_rows = lsh_band_rows(sig, "doc_id", _BANDS)
     is_new_band = F.col("doc_id") % 3 == 0
     is_new_doc = F.col("id") % 3 == 0
     return incremental_minhash_drops(
@@ -400,26 +374,7 @@ def minhash_estimate_error(spark: SparkSession, sf: str) -> DataFrame:
     signature."""
     docs = _shingled_docs(spark, sf).select(F.col("id").alias("doc_id"), "shl")
     sig = _sig_frame(spark, sf)
-    band_rows = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("band_idx"), F.col(f"band{j}").alias("band_val"))
-                for j in range(_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = lsh_band_pairs(lsh_band_rows(sig, "doc_id", _BANDS), "doc_id", "doc_a", "doc_b")
     matches = None
     for i in range(_K):
         term = F.when(F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}"), 1).otherwise(0)

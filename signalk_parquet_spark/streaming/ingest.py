@@ -97,8 +97,8 @@ def start_file_ingest(
     **filter_kw,
 ) -> StreamingQuery:
     """readStream(files) → filters → debounce → foreachBatch append to the
-    hot buffer. availableNow=True drains everything then stops (test mode);
-    otherwise it micro-batches forever like the reference's 30 s save loop."""
+    hot buffer, started by :func:`_start_job` (``available_now`` picks its
+    trigger)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
     stream = ingest_filters(stream, **filter_kw)
     stream = stream.withWatermark("signalk_timestamp", "48 hours")
@@ -106,7 +106,15 @@ def start_file_ingest(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         buffer.append(debounce(batch_df))
 
-    writer = stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir)
+    return _start_job(stream.writeStream, _sink, checkpoint_dir, available_now)
+
+
+def _start_job(writer, sink, checkpoint_dir: str, available_now: bool) -> StreamingQuery:
+    """Start ``writer`` as a foreachBatch(``sink``) job checkpointed at
+    ``checkpoint_dir``: availableNow drains everything then stops (test
+    mode); otherwise it micro-batches every 30 s like the reference's
+    save loop."""
+    writer = writer.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
     if available_now:
         return writer.trigger(availableNow=True).start()
     return writer.trigger(processingTime="30 seconds").start()
@@ -177,14 +185,7 @@ def start_rollup_job(
             return
         lake.write_rollup(batch_df, tier=tier, epoch=epoch_id)
 
-    writer = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="30 seconds").start()
+    return _start_job(agg.writeStream.outputMode("append"), _sink, checkpoint_dir, available_now)
 
 
 def start_incremental_maintenance(
@@ -242,13 +243,7 @@ def start_incremental_maintenance(
             buffer.export_day(lake, datetime(d.year, d.month, d.day, tzinfo=timezone.utc))
         rollup_incremental(lake, batch_df, tier, kind)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="30 seconds").start()
+    return _start_job(stream.writeStream, _sink, checkpoint_dir, available_now)
 
 
 def streaming_session_windows(

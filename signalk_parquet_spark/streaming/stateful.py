@@ -51,15 +51,39 @@ TRANSITION_SCHEMA = T.StructType(
 _TRANSITION_STATE = T.StructType([T.StructField("active", T.BooleanType())])
 
 
+def _state_fn(schema: T.StructType, default: tuple, fold, ttl_s: float | None = None):
+    """The applyInPandasWithState function every stateful operator here
+    shares; ``fold(key, state_tuple, pdfs)`` returns ``(new_state, rows)``
+    and is the operator's own logic. A group whose timeout fired has its
+    state removed and emits a typed empty frame; otherwise the state loads
+    as ``default`` when absent, is folded, updated and (with ``ttl_s``)
+    its timeout re-armed, and ``rows`` (None for none) is emitted with
+    ``schema``'s columns."""
+    cols = [f.name for f in schema.fields]
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            yield pd.DataFrame(columns=cols)
+            return
+        new_state, rows = fold(key, state.get if state.exists else default, pdfs)
+        state.update(new_state)
+        if ttl_s is not None:
+            state.setTimeoutDuration(int(ttl_s * 1000))
+        yield pd.DataFrame(rows, columns=cols)
+
+    return fn
+
+
 def make_threshold_transition_fn(threshold: float, op: str = "gt"):
     """Returns the applyInPandasWithState function for a gt/lt threshold.
     State = last condition value; only changes emit (hysteresis suppression,
     commands.ts:951-957)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (active,) = state.get if state.exists else (None,)
+    def fold(key, loaded, pdfs):
+        (active,) = loaded
         out: list[dict[str, Any]] = []
         for pdf in pdfs:
             pdf = pdf.sort_values("signalk_timestamp")
@@ -93,10 +117,9 @@ def make_threshold_transition_fn(threshold: float, op: str = "gt"):
                             "event": "activated" if cond else "deactivated",
                         }
                     )
-        state.update((bool(active) if active is not None else None,))
-        yield pd.DataFrame(out, columns=[f.name for f in TRANSITION_SCHEMA.fields])
+        return (bool(active) if active is not None else None,), out
 
-    return fn
+    return _state_fn(TRANSITION_SCHEMA, (None,), fold)
 
 
 def streaming_threshold_transitions(
@@ -128,10 +151,8 @@ _EMA_STATE = T.StructType([T.StructField("prev", T.DoubleType())])
 
 
 def make_ema_fn(alpha: float = 0.2):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (prev,) = state.get if state.exists else (None,)
+    def fold(key, loaded, pdfs):
+        (prev,) = loaded
         out: list[dict[str, Any]] = []
         for pdf in pdfs:
             pdf = pdf.sort_values("signalk_timestamp")
@@ -151,10 +172,9 @@ def make_ema_fn(alpha: float = 0.2):
                         "ema": prev,
                     }
                 )
-        state.update((prev,))
-        yield pd.DataFrame(out, columns=[f.name for f in EMA_SCHEMA.fields])
+        return (prev,), out
 
-    return fn
+    return _state_fn(EMA_SCHEMA, (None,), fold)
 
 
 def streaming_ema(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
@@ -249,16 +269,9 @@ def keep_first_fn(
     bucket idle past it is evicted (state removed, empty output) — the
     bounded-state mode: dedup then only promises to catch dups arriving
     within the TTL window."""
-    cols = [f.name for f in schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        ids, items = state.get if state.exists else ([], [])
+    def fold(key, loaded, pdfs):
+        ids, items = loaded
         ids, items = [int(i) for i in ids], [item(v) for v in items]
         kept = set(ids)
         out: list[dict[str, Any]] = []
@@ -282,12 +295,9 @@ def keep_first_fn(
                         ids.append(i)
                         items.append(it)
                         kept.add(i)
-        state.update((ids, [store(v) for v in items]))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=cols)
+        return (ids, [store(v) for v in items]), out
 
-    return fn
+    return _state_fn(schema, ([], []), fold, ttl_s)
 
 
 # --- streaming MinHash near-dup dedup -------------------------------------------------
@@ -983,14 +993,10 @@ def _make_mg_state_fn(m: int, ttl_s: float | None, schema: T.StructType, emit_ke
     With ``ttl_s``, a group idle past the TTL drops its counters — the
     windowed "trending lately" semantics."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in schema.fields])
-            return
-        toks, wts, n_seen = state.get if state.exists else ([], [], 0)
+    from ..operators.sketch import mg_update
+
+    def fold(key, loaded, pdfs):
+        toks, wts, n_seen = loaded
         c = dict(zip(list(toks), list(wts)))
         n_seen = int(n_seen)
         got = False
@@ -998,36 +1004,17 @@ def _make_mg_state_fn(m: int, ttl_s: float | None, schema: T.StructType, emit_ke
             if pdf.empty:
                 continue
             got = True
-            # zip over .tolist() columns, never iterrows (CLAUDE.md lesson)
-            for tok in pdf["token"].tolist():
-                n_seen += 1
-                if tok in c:
-                    c[tok] += 1
-                elif len(c) < m:
-                    c[tok] = 1
-                else:
-                    dead = [k for k in c if c[k] == 1]
-                    for k in c:
-                        c[k] -= 1
-                    for k in dead:
-                        del c[k]
-        state.update((list(c), [int(v) for v in c.values()], n_seen))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
+            # .tolist() columns, never iterrows (CLAUDE.md lesson)
+            batch = pdf["token"].tolist()
+            n_seen += len(batch)
+            mg_update(c, batch, m)
+        wt = [int(v) for v in c.values()]
+        rows = None
         if got and c:
-            yield pd.DataFrame(
-                {
-                    **emit_key(key),
-                    "token": list(c),
-                    "wt": [int(v) for v in c.values()],
-                    "n_seen": n_seen,
-                },
-                columns=[f.name for f in schema.fields],
-            )
-        else:
-            yield pd.DataFrame(columns=[f.name for f in schema.fields])
+            rows = {**emit_key(key), "token": list(c), "wt": wt, "n_seen": n_seen}
+        return (list(c), wt, n_seen), rows
 
-    return fn
+    return _state_fn(schema, ([], [], 0), fold, ttl_s)
 
 
 def make_heavy_hitters_fn(m: int, ttl_s: float | None = None):
@@ -1182,16 +1169,8 @@ def make_weighted_sample_fn(k: int, ttl_s: float | None = None):
     pure function of (id, salt), so a replay carries the identical key and
     set-dedup makes the state exactly-once by construction."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in WSAMPLE_SCHEMA.fields])
-            return
-        ids, wts, keys, n_seen = (
-            state.get if state.exists else ([], [], [], 0)
-        )
+    def fold(key, loaded, pdfs):
+        ids, wts, keys, n_seen = loaded
         entries = list(zip(list(keys), list(ids), list(wts)))
         seen = set(ids)
         n_seen = int(n_seen)
@@ -1212,31 +1191,16 @@ def make_weighted_sample_fn(k: int, ttl_s: float | None = None):
         # total order: key DESC, id ASC — the batch operator's ordering
         entries.sort(key=lambda t: (-t[0], t[1]))
         entries = entries[:k]
-        state.update(
-            (
-                [e[1] for e in entries],
-                [e[2] for e in entries],
-                [e[0] for e in entries],
-                n_seen,
-            )
-        )
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
+        top_ids = [e[1] for e in entries]
+        top_wts = [e[2] for e in entries]
+        top_keys = [e[0] for e in entries]
+        rows = None
         if got and entries:
-            yield pd.DataFrame(
-                {
-                    "grp": int(key[0]),
-                    "id": [e[1] for e in entries],
-                    "wt": [e[2] for e in entries],
-                    "skey": [e[0] for e in entries],
-                    "n_seen": n_seen,
-                },
-                columns=[f.name for f in WSAMPLE_SCHEMA.fields],
-            )
-        else:
-            yield pd.DataFrame(columns=[f.name for f in WSAMPLE_SCHEMA.fields])
+            rows = {"grp": int(key[0]), "id": top_ids, "wt": top_wts,
+                    "skey": top_keys, "n_seen": n_seen}
+        return (top_ids, top_wts, top_keys, n_seen), rows
 
-    return fn
+    return _state_fn(WSAMPLE_SCHEMA, ([], [], [], 0), fold, ttl_s)
 
 
 def streaming_weighted_sample(

@@ -843,13 +843,24 @@ _EMPTY_INPUT_CASES = [
         "struct<id:bigint,cid:bigint,keep:boolean>",
         id="semantic_keep-empty-collection",
     ),
+    pytest.param(
+        "ivf_topk",
+        "struct<query_id:bigint,neighbor_id:bigint,cos:double,rank:int>",
+        id="ivf_topk-numpy-empty-queries",
+    ),
+    pytest.param(
+        "ann_topk_multitable",
+        "struct<query_id:bigint,neighbor_id:bigint,cos:double,rank:int>",
+        id="ann_topk_multitable-empty-queries",
+    ),
 ]
 
 
 @pytest.mark.parametrize("op,schema", _EMPTY_INPUT_CASES)
 def test_vector_index_empty_input_gives_empty_frame(spark, op, schema):
-    """An empty query set (PQ, IVF-PQ) or an empty collection (SemDeDup)
-    yields an empty frame with the documented columns, not an exception:
+    """An empty query set (PQ, IVF-PQ, IVF, multi-table LSH) or an empty
+    collection (SemDeDup) yields an empty frame with the documented
+    columns, not an exception:
     a driver-collected empty set must still broadcast as a (0, dim)
     matrix."""
     from signalk_parquet_spark.operators import similarity as sim
@@ -864,6 +875,13 @@ def test_vector_index_empty_input_gives_empty_frame(spark, op, schema):
     elif op == "ivfpq_topk":
         out = sim.ivfpq_topk(emb, none, "vec_id", "embedding",
                              cell_stride=6, code_stride=6, n_probe=1, k=3)
+    elif op == "ivf_topk":
+        cents = sim.stride_centroids(emb, "vec_id", "embedding", 6)
+        out = sim.ivf_topk(emb, none, cents, "vec_id", "embedding",
+                           k=3, n_probe=1, assign="numpy")
+    elif op == "ann_topk_multitable":
+        out = sim.ann_topk_multitable(emb, none, "vec_id", "embedding",
+                                      k=3, n_tables=2, n_planes=4, dim=64)
     else:
         cents = sim.stride_centroids(emb, "vec_id", "embedding", 6)
         out = sim.semantic_keep(none, cents, "vec_id", "embedding", 0.9)

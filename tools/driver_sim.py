@@ -3,7 +3,10 @@ window: run each gate's Spark query AND its DuckDB oracle on the same
 parquet, canonicalize BOTH results the way the driver does (sorted
 columns, lexsorted rows), and compare exactly.
 
-This is strictly stronger than tools/canon_check.py (Spark side only) and
+Every checked result, gates without an oracle included, also goes through
+the driver's value hash (pd.util.hash_pandas_object): r4's only red row
+(doc_embed_hashed) was an output shape the driver could not hash — list
+cells — which the local comparator masked by tuple-izing lists. This
 complements tests/test_oracle_parity.py (whose comparator has historically
 diverged from the driver's — r3's Decimal coercion, r4's list tuple-izing
 both produced locally-green/driver-red rows). A green run here means the
@@ -37,6 +40,7 @@ def canon(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf[cols]
     if len(pdf):
         pdf = pdf.sort_values(cols).reset_index(drop=True)
+    pd.util.hash_pandas_object(pdf, index=False).sum()  # raises where the driver would
     return pdf
 
 
