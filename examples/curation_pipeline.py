@@ -133,6 +133,10 @@ def main() -> None:
         )
         .drop("gopher_keep", "c4_page_ok")
     )
+    # cut the lineage at every stage boundary: each stage joins onto
+    # `kept`, so without the checkpoint every count re-plans and re-runs
+    # the whole chain of joins above it
+    kept = kept.localCheckpoint()
     n1 = kept.count()
 
     # 2. dedup: drop exact copies, then resolve near-dups TRANSITIVELY —
@@ -148,6 +152,7 @@ def main() -> None:
     kept = kept.join(
         decisions.filter("kept").select(F.col("id").alias("doc_id")), "doc_id"
     )
+    kept = kept.localCheckpoint()
     n2 = kept.count()
 
     # 2b. copied-span screen + rewrite: drop documents that are MOSTLY
@@ -169,6 +174,7 @@ def main() -> None:
         .withColumnRenamed("cleaned", "text")
         .drop("n_removed")
     )
+    kept = kept.localCheckpoint()
     n2b = kept.count()
 
     # 2c. SEMANTIC dedup (SemDeDup): the lexical rungs above can't see
@@ -183,6 +189,7 @@ def main() -> None:
     kept = kept.join(
         sem.filter("keep").select(F.col("id").alias("doc_id")), "doc_id"
     )
+    kept = kept.localCheckpoint()
     n2c = kept.count()
 
     # 3. deterministic split + decontamination (drop leaked test docs).
@@ -204,6 +211,7 @@ def main() -> None:
         .distinct()
     )
     kept = kept.join(leaked, "doc_id", "left_anti")
+    kept = kept.localCheckpoint()
     n3 = kept.count()
     # the paraphrase-robust rung (r8): embedding-cosine leak pairs across
     # the same split — at pipeline scale the IVF screen
@@ -263,6 +271,7 @@ def main() -> None:
     kept = kept.join(F.broadcast(clip_thr), "lang").filter(
         F.col("n_chars").cast("double") <= F.col("p99")
     ).drop("p99")
+    kept = kept.localCheckpoint()
     n5b = kept.count()
 
     # 6. mix re-balancing: deterministically downsample the dominant
@@ -271,6 +280,7 @@ def main() -> None:
     kept = kept.join(
         sample.filter("kept").select(F.col("id").alias("doc_id")), "doc_id"
     )
+    kept = kept.localCheckpoint()
     n6 = kept.count()
     # 6b. domain-mixture rebalancing by epochs (Pile-style): every source
     # gets the same character budget via integer epochs + an exact

@@ -77,11 +77,11 @@ def parse_duration_ms(spec: str | int | float) -> int:
     raise ValueError(f"unparseable duration: {spec!r}")
 
 
-def default_resolution_ms(from_ts: datetime, to_ts: datetime, target_buckets: int = 500) -> int:
+def default_resolution_ms(from_ts: datetime, to_ts: datetime) -> int:
     """Reference default: (to-from)/500, clamped to >=1 ms
     (src/HistoryAPI.ts:957-959, src/history-provider.ts:190-196)."""
     span_ms = int((to_ts - from_ts).total_seconds() * 1000)
-    return max(1, span_ms // target_buckets)
+    return max(1, span_ms // 500)
 
 
 def parse_iso(ts: str) -> datetime:

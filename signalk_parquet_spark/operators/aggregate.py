@@ -65,13 +65,11 @@ def bucketed_agg(
     value_col: str,
     resolution_ms: int,
     method: str = "average",
-    group_cols: Sequence[str] = (),
     *,
     angular: bool = False,
-    out_value: str = "value",
-    out_bucket: str = "bucket_ts",
 ) -> DataFrame:
-    """GROUP BY tumbling bucket (+ group_cols) with one History API method.
+    """GROUP BY tumbling bucket with one History API method → (bucket_ts,
+    value).
 
     Emits the bucket as the reference's ISO-8601 Z string. The value column
     is try-cast to double for numeric methods (reference applies TRY_CAST at
@@ -82,8 +80,8 @@ def bucketed_agg(
     if method not in ("first", "last", "middle_index", "count"):
         v = v.cast("double")
     return (
-        df.groupBy(*group_cols, bucket_iso(ts_col, resolution_ms).alias(out_bucket))
-        .agg(method_agg(method, v, ts, angular=angular).alias(out_value))
+        df.groupBy(bucket_iso(ts_col, resolution_ms).alias("bucket_ts"))
+        .agg(method_agg(method, v, ts, angular=angular).alias("value"))
     )
 
 

@@ -24,6 +24,14 @@ from __future__ import annotations
 import io
 import struct
 
+#: STFT geometry shared by the spectral features and the fingerprint. The
+#: fingerprint's bit width (and so every bit-error-rate denominator)
+#: follows from N_FFT and FINGERPRINT_BANDS through fingerprint_bits().
+N_FFT = 256
+HOP = 128
+SPECTRAL_BANDS = 8
+FINGERPRINT_BANDS = 33
+
 
 def decode_wav_samples(payload: bytes):
     """PCM WAV → (sample_rate, n_channels, mono float64 array in [-1, 1]).
@@ -66,31 +74,30 @@ def _stft_power(x, n_fft: int, hop: int):
     return (spec.real**2 + spec.imag**2)
 
 
-def audio_spectral_features(
-    payload: bytes, n_fft: int = 256, hop: int = 128, n_bands: int = 8
-) -> list[float]:
-    """(centroid_hz, zero_crossing_rate, log10 mean power of ``n_bands``
-    equal-width frequency bands) — 2 + n_bands floats; NaNs when the
-    payload isn't decodable PCM WAV so downstream filters quarantine."""
+def audio_spectral_features(payload: bytes) -> list[float]:
+    """(centroid_hz, zero_crossing_rate, log10 mean power of
+    ``SPECTRAL_BANDS`` equal-width frequency bands) — 2 + SPECTRAL_BANDS
+    floats; NaNs when the payload isn't decodable PCM WAV so downstream
+    filters quarantine."""
     import numpy as np
 
     dec = decode_wav_samples(payload)
     if dec is None:
-        return [float("nan")] * (2 + n_bands)
+        return [float("nan")] * (2 + SPECTRAL_BANDS)
     rate, _nch, x = dec
     if x.size == 0:
         # a valid header with no PCM frames scores like SILENCE (the
         # log-power floor), not 0.0 — which on a log scale reads as LOUD
         # and sails through loudness screens
-        return [0.0, 0.0] + [-12.0] * n_bands
-    p = _stft_power(x, n_fft, hop)
+        return [0.0, 0.0] + [-12.0] * SPECTRAL_BANDS
+    p = _stft_power(x, N_FFT, HOP)
     mean_p = p.mean(axis=0)  # per-bin mean power over time
-    freqs = np.fft.rfftfreq(n_fft, d=1.0 / rate)
+    freqs = np.fft.rfftfreq(N_FFT, d=1.0 / rate)
     total = mean_p.sum()
     centroid = float((freqs * mean_p).sum() / total) if total > 0 else 0.0
     zcr = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))) if x.size > 1 else 0.0
     # equal-width bands over the positive spectrum (DC bin included in band 0)
-    edges = np.linspace(0, mean_p.size, n_bands + 1).astype(int)
+    edges = np.linspace(0, mean_p.size, SPECTRAL_BANDS + 1).astype(int)
     bands = [
         float(np.log10(mean_p[a:b].mean() + 1e-12))
         for a, b in zip(edges[:-1], edges[1:])
@@ -98,14 +105,12 @@ def audio_spectral_features(
     return [centroid, zcr] + bands
 
 
-def audio_fingerprint(
-    payload: bytes, n_fft: int = 256, hop: int = 128, n_bands: int = 33
-) -> list[int] | None:
+def audio_fingerprint(payload: bytes) -> list[int] | None:
     """Haitsma-Kalker sub-fingerprints: for each STFT frame n and band m,
     bit m is ``sign((E[n,m] - E[n,m+1]) - (E[n-1,m] - E[n-1,m+1]))`` over
     log-spaced energy bands → one integer per frame. The bit width is
-    ``fingerprint_bits(n_fft, n_bands)``, NOT n_bands-1: integer rounding
-    collapses the low log-spaced edges (25 bits at the defaults, where the
+    ``fingerprint_bits()``, NOT FINGERPRINT_BANDS-1: integer rounding
+    collapses the low log-spaced edges (25 bits at this geometry, where the
     paper's 2048-sample windows support the full 32) — every bit-error-
     rate denominator must come from fingerprint_bits. Returns None when
     the payload isn't decodable PCM WAV; [] when it is shorter than two
@@ -116,10 +121,10 @@ def audio_fingerprint(
     if dec is None:
         return None
     rate, _nch, x = dec
-    p = _stft_power(x, n_fft, hop)
+    p = _stft_power(x, N_FFT, HOP)
     if p.shape[0] < 2:
         return []
-    edges = _band_edges(p.shape[1], n_bands)
+    edges = _band_edges(p.shape[1], FINGERPRINT_BANDS)
     if len(edges) < 3:
         return []
     e = np.stack(
@@ -144,10 +149,10 @@ def _band_edges(n_bins: int, n_bands: int):
     )
 
 
-def fingerprint_bits(n_fft: int = 256, n_bands: int = 33) -> int:
-    """Actual bits per sub-fingerprint for the given STFT/band config —
-    the ONLY valid denominator for bit-error rates (25 at the defaults)."""
-    return len(_band_edges(n_fft // 2 + 1, n_bands)) - 2
+def fingerprint_bits() -> int:
+    """Actual bits per sub-fingerprint at the module's STFT/band geometry —
+    the ONLY valid denominator for bit-error rates (25)."""
+    return len(_band_edges(N_FFT // 2 + 1, FINGERPRINT_BANDS)) - 2
 
 
 def audio_fingerprints(

@@ -20,8 +20,8 @@ loop is exactly what breaks first at lake scale, so the Spark split:
   (``skip_synced_dirs=True`` = the StartupSync rule: if ANY file of a
   directory is remote, skip the whole directory).
 - ``distributed_copy``: executors copy their partition's files through
-  pyarrow.fs streams (one task never holds more than ``chunk`` bytes) —
-  N executors × concurrent tasks instead of one Node loop at
+  pyarrow.fs streams (one task never holds more than ``COPY_CHUNK``
+  bytes) — N executors × concurrent tasks instead of one Node loop at
   concurrency 3; ``delete_after`` mirrors deleteAfterUpload.
 
 Scale: listing and copying both shard by file; the only driver state is
@@ -42,9 +42,10 @@ from pyspark.sql import types as T
 
 from ..sources.hive_paths import EXCLUDED_SUBDIRS
 
-#: the reference's excluded subtrees (data-handler.ts:962-975) — the same
-#: four names every lake scan skips
-DEFAULT_EXCLUDED = EXCLUDED_SUBDIRS
+#: driver-side listing levels enumerated as executor seeds
+SEED_DEPTH = 2
+#: bytes per read/write piece in the distributed copy
+COPY_CHUNK = 8 << 20
 
 _LIST_SCHEMA = T.StructType(
     [
@@ -63,9 +64,9 @@ def _fs_for(root: str):
     )
 
 
-def list_files(spark: SparkSession, root: str, seed_depth: int = 2) -> DataFrame:
+def list_files(spark: SparkSession, root: str) -> DataFrame:
     """(rel_path, size, mtime_ms) of every file under ``root``. Seeds are
-    enumerated driver-side breadth-first DOWN TO ``seed_depth`` levels
+    enumerated driver-side breadth-first DOWN TO ``SEED_DEPTH`` levels
     (stopping early once there are enough to occupy the executors) so a
     canonical single-context lake (ONE top-level vessels.self dir) still
     fans out across its per-path subdirectories instead of degenerating
@@ -89,7 +90,7 @@ def list_files(spark: SparkSession, root: str, seed_depth: int = 2) -> DataFrame
         return spark.createDataFrame([], _LIST_SCHEMA)
     seeds = [(i.path, i.type == pafs.FileType.Directory) for i in infos]
     depth = 1
-    while depth < seed_depth and any(d for _, d in seeds) and len(seeds) < target:
+    while depth < SEED_DEPTH and any(d for _, d in seeds) and len(seeds) < target:
         expanded = []
         for path, is_dir in seeds:
             if is_dir:
@@ -149,21 +150,21 @@ def _dir_of(col):
 def sync_plan(
     local: DataFrame,
     remote: DataFrame,
-    excluded: tuple[str, ...] = DEFAULT_EXCLUDED,
     skip_synced_dirs: bool = False,
 ) -> DataFrame:
-    """(rel_path, size, action) for every local file: ``excluded`` for the
-    reference's skip-subtree rule, ``present`` when the same rel_path is
-    remote WITH THE SAME SIZE (a same-name file whose bytes changed —
-    re-export, repair — re-uploads rather than silently diverging; mtime
-    is deliberately NOT compared, it is not preserved across filesystems),
-    else ``upload``. With ``skip_synced_dirs`` the reference's coarser
+    """(rel_path, size, action) for every local file: ``excluded`` under
+    the reference's excluded subtrees (data-handler.ts:962-975, the same
+    ``EXCLUDED_SUBDIRS`` every lake scan skips), ``present`` when the
+    same rel_path is remote WITH THE SAME SIZE (a same-name file whose
+    bytes changed — re-export, repair — re-uploads rather than silently
+    diverging; mtime is deliberately NOT compared, it is not preserved
+    across filesystems), else ``upload``. With ``skip_synced_dirs`` the reference's coarser
     StartupSync rule applies instead: ANY remote file sharing the
     directory marks the whole directory synced (data-handler.ts:
     1078-1091) — directory granularity can't compare sizes, faithfully to
     the reference. Pure anti-join shape: the big sides never collect."""
     is_excluded = F.lit(False)
-    for d in excluded:
+    for d in EXCLUDED_SUBDIRS:
         is_excluded = is_excluded | F.col("rel_path").contains(f"/{d}/") | F.col(
             "rel_path"
         ).startswith(f"{d}/")
@@ -196,10 +197,9 @@ def distributed_copy(
     src_root: str,
     dst_root: str,
     delete_after: bool = False,
-    chunk: int = 8 << 20,
 ) -> dict:
     """Execute the plan's ``upload`` rows: each executor task streams its
-    files src→dst through pyarrow.fs in ``chunk``-byte pieces (bounded
+    files src→dst through pyarrow.fs in ``COPY_CHUNK``-byte pieces (bounded
     memory per task; works local↔local here and local↔s3 when deployed —
     same operator, different URI). Returns {'uploaded': n, 'bytes': b}
     (+ 'deleted' with ``delete_after``).
@@ -234,7 +234,7 @@ def distributed_copy(
                 n = 0
                 with sfs.open_input_stream(src) as r, dfs.open_output_stream(dst) as w:
                     while True:
-                        buf = r.read(chunk)
+                        buf = r.read(COPY_CHUNK)
                         if not buf:
                             break
                         w.write(buf)

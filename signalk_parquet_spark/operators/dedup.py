@@ -8,7 +8,7 @@ on 48-bit integer-hashed shingle sets (see SCALE.md).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -190,24 +190,20 @@ def prefix_jaccard_pairs(
     block_cols: list[str],
     threshold: float = 0.5,
     prepared: DataFrame | None = None,
-    rare_first: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (AllPairs /
     PPJoin, Bayardo et al. WWW'07): finds EVERY pair with Jaccard ≥
     ``threshold`` inside each block — no length-bucket recall trade.
 
-    ``rare_first`` (default since r13, when the gate's window slot landed
-    — the capability shipped r12 default-off to respect window rotation)
-    ranks each set's prefix by corpus document frequency, rarest first,
-    exactly like the containment family: prefix slots go to the tokens
-    least likely to collide, so candidate volume — the exchange at
+    Each set's prefix is ranked by corpus document frequency, rarest
+    first, exactly like the containment family: prefix slots go to the
+    tokens least likely to collide, so candidate volume — the exchange at
     cluster scale — collapses toward the true pair count on hot-token
-    corpora. ``rare_first=False`` keeps the zero-extra-window hash order
-    for small or unique-shingle corpora.
+    corpora.
 
     Each document explodes only the first ``|S| - ceil(t·|S|) + 1``
-    elements of its hash-sorted shingle set (the prefix); two sets with
+    elements of its shingle set in that order (the prefix); two sets with
     Jaccard ≥ t provably share a prefix element under the common order, so
     an equi-join on prefix tokens generates a candidate superset, and the
     exact-Jaccard verify keeps precisely the answer. Scale: the inverted
@@ -225,56 +221,42 @@ def prefix_jaccard_pairs(
     choice when a trustworthy blocking key exists; this operator is the
     EXACT fallback when none does.
 
-    ``prepared``: (id, *block_cols, shl) frame (shl need not be sorted —
-    sorting happens here); defaults to shingling ``df``.
+    ``prepared``: (id, *block_cols, shl) frame in any element order;
+    defaults to shingling ``df``.
     ``materialize=False``: skip the persist+count when ``prepared`` is
     already session-cached — the three consumers then recompute only the
-    sort_array projection from the cache (see containment_join; measured
-    −6% warm, the sort recompute eats most of the persist saving here).
+    size projection from the cache (see containment_join).
     """
     d = _shingle_frame(prepared, df, id_col, text_col, block_cols)
-    # rare_first keeps the INPUT arrays (the verify's Jaccard is
-    # order-insensitive and its prefix is computed on the exploded stream
-    # below); only the hash-order path still sorts, because ITS prefix is
-    # a slice of the stored array, which must be deterministically ordered.
-    shl0 = F.col("shl") if rare_first else F.sort_array("shl")
+    # the INPUT arrays are kept: the verify's Jaccard is order-insensitive
+    # and the prefix is computed on the exploded stream below
     d = (
-        d.select("id", *block_cols, shl0.alias("shl"))
+        d.select("id", *block_cols, F.col("shl").alias("shl"))
         .withColumn("sz", F.size("shl"))
     )
     pre_len = prefix_len(F.col("sz"), threshold).cast("int")
-    if not rare_first:
-        d = d.withColumn("pre", F.slice(F.col("shl"), 1, pre_len))
     if materialize:
         d = d.persist()
         # materialize once: the prepared frame feeds BOTH sides of the
         # candidate join and the verify step (three consumers)
         d.count()
-    if rare_first:
-        # AllPairs canonical ordering (Bayardo WWW'07), stream form (r13 —
-        # the containment_join r12 rewrite applied to the symmetric join):
-        # a COMMON global (df, tok) total order is all the symmetric
-        # prefix bound needs, so rank each doc's exploded tokens by
-        # (corpus df, tok) and keep the first sz − ⌈t·sz⌉ + 1 — the same
-        # token SET the former reorder-arrays-then-slice form produced,
-        # without the groupBy+collect_list+array_sort array rebuild.
-        # Prefixes then hold the least collision-prone shingles (693x
-        # candidate cut on the containment ramp's hot-shingle corpus; at
-        # cluster scale candidate volume IS the exchange).
-        from pyspark.sql import Window
-
-        exf = d.select("id", *block_cols, "sz", F.explode("shl").alias("tok"))
-        exf = exf.withColumn(
-            "_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-        )
-        rn = F.row_number().over(Window.partitionBy("id").orderBy("_df", "tok"))
-        ex = (
-            exf.withColumn("_rn", rn)
-            .filter(F.col("_rn") <= pre_len)
-            .select("id", *block_cols, "sz", "tok")
-        )
-    else:
-        ex = d.select("id", *block_cols, "sz", F.explode("pre").alias("tok"))
+    # AllPairs canonical ordering (Bayardo WWW'07), stream form: a COMMON
+    # global (df, tok) total order is all the symmetric prefix bound
+    # needs, so rank each doc's exploded tokens by (corpus df, tok) and
+    # keep the first sz − ⌈t·sz⌉ + 1, with no array rebuild. Prefixes
+    # then hold the least collision-prone shingles (693x candidate cut on
+    # the containment ramp's hot-shingle corpus; at cluster scale
+    # candidate volume IS the exchange).
+    exf = d.select("id", *block_cols, "sz", F.explode("shl").alias("tok"))
+    exf = exf.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
+    )
+    rn = F.row_number().over(Window.partitionBy("id").orderBy("_df", "tok"))
+    ex = (
+        exf.withColumn("_rn", rn)
+        .filter(F.col("_rn") <= pre_len)
+        .select("id", *block_cols, "sz", "tok")
+    )
     a, b = ex.alias("a"), ex.alias("b")
     # AllPairs length filter: jac >= t implies t*|A| <= |A∩B| <= min(|A|,|B|),
     # so both |B| >= t*|A| and |A| >= t*|B|. The epsilon loosens the bound by
@@ -303,7 +285,6 @@ def containment_pairs(
     block_cols: list[str],
     threshold: float = 0.8,
     prepared: DataFrame | None = None,
-    rare_first: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """EXACT set-CONTAINMENT self-join: every ORDERED pair (a, b), a ≠ b,
@@ -323,22 +304,19 @@ def containment_pairs(
     prefix outside B, A∩B would fit in the |A|−prefix = ⌈t·|A|⌉−1
     suffix — the pigeonhole bound, which holds for ANY per-doc order);
     the INDEX side (b) explodes fully, because containment puts no
-    upper bound on |B|. Because the order is free, ``rare_first``
-    (default) spends one df-count pass + an id-keyed reorder join to
-    sort each probe set RAREST-shingle-first (classic AllPairs
-    ordering, Bayardo WWW'07): the prefix then holds the tokens least
-    likely to collide. Measured on a stopword-heavy corpus
-    (python tools/ramp.py containment): candidates collapse to essentially
-    the true pair count — 33.8k vs the hash order's 23.4M at 320k docs
-    (693x) — and candidate growth turns LINEAR where both hash-prefix
-    and full-probe grow quadratically with corpus heat. Honest local
-    wall: the reorder's extra shingle-stream shuffle costs more than
-    the avoided candidate join below ~10^6 docs on one box (16.8 s vs
-    13.5 s at 320k), the same exchange-volume-vs-local-wall trade as
-    the grouped-MG family — at cluster scale candidate volume IS the
-    exchange, which is why rare-first is the default;
-    ``rare_first=False`` keeps the zero-extra-pass hash order for
-    small or unique-shingle corpora. The
+    upper bound on |B|. Because the order is free, each probe set is
+    ranked RAREST-shingle-first (classic AllPairs ordering, Bayardo
+    WWW'07; one df window over the shingle stream): the prefix then
+    holds the tokens least likely to collide. Measured on a
+    stopword-heavy corpus (python tools/ramp.py containment): candidates
+    collapse to essentially the true pair count — 33.8k vs a hash
+    order's 23.4M at 320k docs (693x) — and candidate growth turns
+    LINEAR where both hash-prefix and full-probe grow quadratically with
+    corpus heat. Honest local wall: the df ranking's extra shingle-stream
+    shuffle costs more than the avoided candidate join below ~10^6 docs
+    on one box (16.8 s vs 13.5 s at 320k, local[32]), the same
+    exchange-volume-vs-local-wall trade as the grouped-MG family — at
+    cluster scale candidate volume IS the exchange. The
     ceil is epsilon-LOOSENED (⌈x − 1e-9⌉) so float rounding can only
     LENGTHEN the prefix (admit a spurious candidate for verify to
     discard), never shorten it below the bound — t·sz is inexact in
@@ -359,7 +337,7 @@ def containment_pairs(
     contained side."""
     d = _shingle_frame(prepared, df, id_col, text_col, block_cols)
     return containment_join(
-        d, d, threshold, block_cols=block_cols, rare_first=rare_first,
+        d, d, threshold, block_cols=block_cols,
         exclude_same_id=True, materialize=materialize,
     )
 
@@ -369,7 +347,6 @@ def containment_join(
     index: DataFrame,
     threshold: float = 0.8,
     block_cols: list[str] | None = None,
-    rare_first: bool = True,
     exclude_same_id: bool = False,
     materialize: bool = True,
 ) -> DataFrame:
@@ -384,8 +361,8 @@ def containment_join(
     containment_pairs does — and the frame is prepared and persisted
     once, not twice.
 
-    ``rare_first`` orders each probe set by INDEX-side document
-    frequency, rarest first: a probe token absent from the index sorts
+    Each probe set is ordered by INDEX-side document frequency, rarest
+    first: a probe token absent from the index sorts
     first (df 0) and generates zero candidates, so prefix slots go to
     the tokens that actually discriminate — strictly better than
     self-corpus df for cross-frame probes, identical to it for the
@@ -403,16 +380,12 @@ def containment_join(
     consumer."""
     bc = list(block_cols or [])
     same = probe is index
-    # rare_first never materializes reordered ARRAYS (r12): the ordered
-    # set is only ever consumed as a prefix of the exploded stream, so
-    # the prefix is computed directly there (see below) and the persisted
-    # probe keeps its input arrays — the verify's array_intersect is
-    # order-insensitive. Only the hash-order path still needs sort_array
-    # (ITS prefix is a slice of the stored array, which must therefore be
-    # deterministically ordered).
-    shl0 = F.col("shl") if rare_first else F.sort_array("shl")
+    # no reordered ARRAYS are materialized: the ordered set is only ever
+    # consumed as a prefix of the exploded stream, so the prefix is
+    # computed directly there (see below) and the persisted probe keeps
+    # its input arrays — the verify's array_intersect is order-insensitive
     p = (
-        probe.select("id", *bc, shl0.alias("shl"))
+        probe.select("id", *bc, F.col("shl").alias("shl"))
         .withColumn("sz", F.size("shl").cast("long"))
         .filter(F.col("sz") > 0)
     )
@@ -432,44 +405,33 @@ def containment_join(
             ix = ix.persist()
             ix.count()
     pre_len = prefix_len(F.col("sz"), threshold)
-    if rare_first:
-        # Rarest-INDEX-shingle-first prefix, computed ON the exploded
-        # stream: rank each probe's tokens by (index df, tok) and keep the
-        # first sz − ⌈t·sz⌉ + 1 — the identical token SET the former
-        # reorder-arrays-then-slice form produced (pigeonhole is
-        # order-free; (df, tok) is a total order so the pick is
-        # deterministic), with the groupBy(id)+collect_list+array_sort
-        # array rebuild, its persist, and the slice's second explode all
-        # gone (r12: that rebuild was ~4 s of the gate's wall — the whole
-        # reorder now costs one window more than the hash-order path).
-        # Self-joins get df as count() over the same stream (no index
-        # pass, no join); cross-frame keeps the df-table join.
-        from pyspark.sql import Window
-
-        ex = p.select("id", *bc, "sz", F.explode("shl").alias("tok"))
-        if same:
-            ex = ex.withColumn(
-                "_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-            )
-        else:
-            dfreq = (
-                index.select(F.explode("shl").alias("tok"))
-                .groupBy("tok")
-                .agg(F.count(F.lit(1)).alias("_df"))
-            )
-            ex = ex.join(dfreq, "tok", "left").withColumn(
-                "_df", F.coalesce(F.col("_df"), F.lit(0))
-            )
-        rn = F.row_number().over(Window.partitionBy("id").orderBy("_df", "tok"))
-        a = (
-            ex.withColumn("_rn", rn)
-            .filter(F.col("_rn") <= pre_len)
-            .select("id", *bc, "sz", "tok")
-            .alias("a")
+    # Rarest-INDEX-shingle-first prefix, computed ON the exploded stream:
+    # rank each probe's tokens by (index df, tok) and keep the first
+    # sz − ⌈t·sz⌉ + 1 (pigeonhole is order-free; (df, tok) is a total
+    # order so the pick is deterministic), with no array rebuild. Self-
+    # joins get df as count() over the same stream (no index pass, no
+    # join); cross-frame keeps the df-table join.
+    ex = p.select("id", *bc, "sz", F.explode("shl").alias("tok"))
+    if same:
+        ex = ex.withColumn(
+            "_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
         )
     else:
-        pre = p.withColumn("pre", F.slice(F.col("shl"), 1, pre_len.cast("int")))
-        a = pre.select("id", *bc, "sz", F.explode("pre").alias("tok")).alias("a")
+        dfreq = (
+            index.select(F.explode("shl").alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("_df"))
+        )
+        ex = ex.join(dfreq, "tok", "left").withColumn(
+            "_df", F.coalesce(F.col("_df"), F.lit(0))
+        )
+    rn = F.row_number().over(Window.partitionBy("id").orderBy("_df", "tok"))
+    a = (
+        ex.withColumn("_rn", rn)
+        .filter(F.col("_rn") <= pre_len)
+        .select("id", *bc, "sz", "tok")
+        .alias("a")
+    )
     b = ix.select("id", *bc, "sz", F.explode("shl").alias("tok")).alias("b")
     t_eps = threshold - 1e-9
     cond = (F.col("a.tok") == F.col("b.tok"))

@@ -129,10 +129,7 @@ def rollup_incremental(
     scoped = raw.join(
         F.broadcast(touched), ["context", "path", "year", "day"], "left_semi"
     ).drop("tier", "year", "day")
-    lake.write_rollup(
-        roll(scoped, tier, ts_col=ts_col, **(roll_kwargs or {})), tier,
-        mode="overwrite",
-    )
+    lake.write_rollup(roll(scoped, tier, ts_col=ts_col, **(roll_kwargs or {})), tier)
     touched.unpersist()
     return n
 

@@ -72,7 +72,6 @@ def write_shards(
     out_dir: str,
     id_col: str,
     n_shards: int,
-    compression: str = "snappy",
 ) -> dict[str, Any]:
     """Shard the frame by content hash, write shard=K parquet subtrees, and
     commit a _manifest.json describing what landed. Returns the manifest.
@@ -98,7 +97,7 @@ def write_shards(
     (
         sharded.repartition(n_shards, "shard")
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", "snappy")
         .partitionBy("shard")
         .parquet(out_dir)
     )

@@ -17,6 +17,13 @@ from ..localrel import local_frame
 from ..functions.litfast import lit_array
 from ..functions.vectors import as_double, dot, hyperplane_bits, make_planes, norm_sq
 
+#: cosine scores are rounded to this many digits before ranking; every
+#: cos4 gate oracle rounds the same way
+ROUND_DIGITS = 4
+#: width of one product-quantization subspace; the PQ oracles slice
+#: 16-wide subvectors
+PQ_SUB_DIM = 16
+
 
 def _with_norms(df: DataFrame, id_col: str, vec_col: str, dim: int | None) -> DataFrame:
     return df.select(
@@ -30,7 +37,6 @@ def knn_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    round_digits: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k of each query against the collection (broadcast
@@ -42,7 +48,7 @@ def knn_topk(
     pairs = coll.join(F.broadcast(q), F.col("id") != F.col("query_id")).select(
         "query_id",
         F.col("id").alias("neighbor_id"),
-        F.round(dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), round_digits).alias("cos"),
+        F.round(dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), ROUND_DIGITS).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -56,7 +62,6 @@ def ann_topk(
     k: int = 5,
     n_planes: int = 8,
     dim: int = 64,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH buckets: candidates share
     the query's bucket (equality join replaces the scan), exact cosine
@@ -74,7 +79,7 @@ def ann_topk(
     pairs = coll.join(F.broadcast(q), ["bucket"]).filter(F.col("id") != F.col("query_id")).select(
         "query_id",
         F.col("id").alias("neighbor_id"),
-        F.round(dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), round_digits).alias("cos"),
+        F.round(dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), ROUND_DIGITS).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -215,7 +220,6 @@ def ann_topk_multitable(
     n_tables: int = 4,
     n_planes: int = 8,
     dim: int = 64,
-    round_digits: int = 4,
     probe_radius: int = 0,
 ) -> DataFrame:
     """Multi-table LSH ANN (OR-amplification): L independent hyperplane
@@ -297,7 +301,7 @@ def ann_topk_multitable(
     ).reshape(n_tables, len(q_rows), len(flips))
     scored = _fused_multitable_scan(coll, qids, qmat, qn2, qprobes, tables)
     pairs = scored.select(
-        "query_id", "neighbor_id", F.round("cos", round_digits).alias("cos")
+        "query_id", "neighbor_id", F.round("cos", ROUND_DIGITS).alias("cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -564,7 +568,6 @@ def pq_topk(
     vec_col: str,
     stride: int,
     n_sub: int = 4,
-    sub_dim: int = 16,
     k: int = 5,
 ) -> DataFrame:
     """Product-Quantization top-k over int8-quantized embeddings — the
@@ -590,7 +593,7 @@ def pq_topk(
     Scale shape: the codebook and query LUTs are driver-built BY CONTRACT
     (n_sub × K × queries integers — the broadcast contract of the ann
     family); ONE Arrow-batched map stage quantizes, encodes, and
-    ADC-scores each batch with n_sub (n x sub_dim) @ (sub_dim x K) int64
+    ADC-scores each batch with n_sub (n x PQ_SUB_DIM) @ (PQ_SUB_DIM x K) int64
     matmuls (exact at any summation order; 127^2 x 16 cannot overflow), so
     the only shuffle is the top-k window. At 100 TB the encoded table
     (n_sub bytes/vector + id) is what a deployment persists — 16x smaller
@@ -605,12 +608,12 @@ def pq_topk(
     cw_rows = _index_rows(
         e.filter(F.col("id") % stride == 0).orderBy("id"), "PQ codebook"
     )
-    # (n_sub, K, sub_dim) codeword matrix + (n_sub, K) |c|^2, id-ordered so
+    # (n_sub, K, PQ_SUB_DIM) codeword matrix + (n_sub, K) |c|^2, id-ordered so
     # np.argmin's first-occurrence tie == the oracle's lowest-cid tie
     cmat = np.array([r["qv"] for r in cw_rows], dtype=np.int64)  # (K, dim)
     csub = np.stack(
-        [cmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
-    )  # (n_sub, K, sub_dim)
+        [cmat[:, m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM] for m in range(n_sub)]
+    )  # (n_sub, K, PQ_SUB_DIM)
     cc = np.einsum("mkd,mkd->mk", csub, csub)  # (n_sub, K) exact int64
 
     q_rows = bounded_collect(
@@ -624,8 +627,8 @@ def pq_topk(
         len(q_rows), cmat.shape[1]
     )
     qsub = np.stack(
-        [qmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
-    )  # (n_sub, Q, sub_dim)
+        [qmat[:, m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM] for m in range(n_sub)]
+    )  # (n_sub, Q, PQ_SUB_DIM)
     lut = np.einsum("mqd,mkd->mqk", qsub, csub)  # (n_sub, Q, K) ADC tables
 
     spark = collection.sparkSession
@@ -677,7 +680,6 @@ def ivfpq_topk(
     code_stride: int,
     n_probe: int = 3,
     n_sub: int = 4,
-    sub_dim: int = 16,
     k: int = 5,
 ) -> DataFrame:
     """IVF-PQ: the standard industrial vector index (FAISS's IVFx,PQy) as a
@@ -722,8 +724,8 @@ def ivfpq_topk(
     )
     cwmat = np.array([r["qv"] for r in cw_rows], dtype=np.int64)  # (K, dim)
     csub = np.stack(
-        [cwmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
-    )  # (n_sub, K, sub_dim)
+        [cwmat[:, m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM] for m in range(n_sub)]
+    )  # (n_sub, K, PQ_SUB_DIM)
     ccn = np.einsum("mkd,mkd->mk", csub, csub)  # exact int64
 
     # --- queries: float side picks probe cells (plain-Python (d, cid)
@@ -748,7 +750,7 @@ def ivfpq_topk(
         len(q_rows), cwmat.shape[1]
     )
     qsub = np.stack(
-        [qmat[:, m * sub_dim : (m + 1) * sub_dim] for m in range(n_sub)]
+        [qmat[:, m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM] for m in range(n_sub)]
     )
     lut = np.einsum("mqd,mkd->mqk", qsub, csub)  # (n_sub, Q, K)
 
@@ -954,7 +956,6 @@ def ivf_topk(
     vec_col: str,
     k: int = 5,
     n_probe: int = 3,
-    round_digits: int = 4,
     dim: int | None = None,
     assign: str = "expr",
 ) -> DataFrame:
@@ -985,7 +986,7 @@ def ivf_topk(
     if assign == "numpy":
         return _fused_ivf_topk(
             collection, queries, centroids, id_col, vec_col,
-            k, n_probe, round_digits, dim,
+            k, n_probe, dim,
         )
     coll = _with_norms(collection, id_col, vec_col, dim)
     # |c|^2 once per centroid, not per pair — same float as the oracle's
@@ -1020,7 +1021,7 @@ def ivf_topk(
         "query_id",
         F.col("id").alias("neighbor_id"),
         F.round(
-            dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), round_digits
+            dot(F.col("qemb"), F.col("emb"), dim) / F.sqrt(F.col("qn2") * F.col("n2")), ROUND_DIGITS
         ).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
@@ -1035,7 +1036,6 @@ def _fused_ivf_topk(
     vec_col: str,
     k: int,
     n_probe: int,
-    round_digits: int,
     dim: int | None,
 ) -> DataFrame:
     """The whole IVF query as ONE Arrow-batched map stage + one top-k
@@ -1087,7 +1087,7 @@ def _fused_ivf_topk(
 
     scored = coll.select("id", "emb").mapInPandas(score_batches, schema=schema)
     pairs = scored.select(
-        "query_id", "neighbor_id", F.round("cos", round_digits).alias("cos")
+        "query_id", "neighbor_id", F.round("cos", ROUND_DIGITS).alias("cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -1100,7 +1100,6 @@ def hard_negatives(
     vec_col: str,
     label_col: str,
     k: int = 5,
-    round_digits: int = 4,
     dim: int | None = None,
     bucketed: bool = False,
     n_planes: int = 8,
@@ -1124,7 +1123,7 @@ def hard_negatives(
     plan-asserted, not assumed.
 
     Returns (query_id, neighbor_id, cos, rank) — ties by ascending
-    neighbor id, deterministic across engines at ``round_digits``."""
+    neighbor id, deterministic across engines at ``ROUND_DIGITS``."""
     from .retrieval import topk_per_key
 
     # one projection per side — labels ride the same select as the norms
@@ -1154,7 +1153,7 @@ def hard_negatives(
         F.round(
             dot(F.col("qemb"), F.col("emb"), dim)
             / F.sqrt(F.col("qn2") * F.col("n2")),
-            round_digits,
+            ROUND_DIGITS,
         ).alias("cos"),
     )
     return topk_per_key(

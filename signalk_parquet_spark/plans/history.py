@@ -166,13 +166,7 @@ class HistoryPlanner:
             if is_string_path(spec.path) and method in ("average", "mid"):
                 method = "first"  # string paths aggregate FIRST, never AVG
             out = bucketed_agg(
-                df,
-                "signalk_timestamp",
-                value_col,
-                res_ms,
-                method,
-                angular=angular,
-                out_bucket="bucket_ts",
+                df, "signalk_timestamp", value_col, res_ms, method, angular=angular
             )
             return out.select("bucket_ts", "value")
         # tier read path: lossless weighted re-aggregation (A8/A9)

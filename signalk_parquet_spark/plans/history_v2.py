@@ -82,7 +82,6 @@ class HistoryProviderV2:
         value_col = "value_text" if is_string_path(spec.path) else "value"
         method = "first" if is_string_path(spec.path) and spec.method in ("average", "mid") else spec.method
         out = bucketed_agg(
-            df, "signalk_timestamp", value_col, res_ms, method,
-            angular=angular, out_bucket="bucket_ts",
+            df, "signalk_timestamp", value_col, res_ms, method, angular=angular
         )
         return out.select("bucket_ts", "value")

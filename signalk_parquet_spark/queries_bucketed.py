@@ -97,7 +97,7 @@ def cobucketed_revenue(spark: SparkSession, sf: str) -> DataFrame:
     Exchange-free SMJ path (MERGE hint keeps the at-scale join shape even
     where the test-scale orders side would broadcast)."""
     li_t, od_t = ensure_bucketed_facts(spark, sf)
-    j = cobucketed_join(spark, li_t, od_t, ["orderkey"], force_sort_merge=True)
+    j = cobucketed_join(spark, li_t, od_t, ["orderkey"])
     return j.groupBy("o_orderpriority").agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
             "revenue"

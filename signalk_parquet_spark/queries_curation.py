@@ -557,13 +557,13 @@ _B_SPLIT_DD = f"""
 """
 
 
-def _bloom_pos_cols(g: str = "g", bits: int = _BLOOM_BITS) -> list:
-    """The K probe positions of a shingle column: disjoint 8-hex slices of
-    one md5 (matches _B_POS_DD). `bits` parameterizes the filter size —
+def _bloom_pos_cols(bits: int = _BLOOM_BITS) -> list:
+    """The K probe positions of shingle column ``g``: disjoint 8-hex slices
+    of one md5 (matches _B_POS_DD). `bits` parameterizes the filter size —
     the gates pin _BLOOM_BITS so the oracle is fixed; deployments size it
     as m ~ 16-24 bits per expected distinct benchmark n-gram (see python
     tools/ramp.py bloom for the measured saturation when undersized)."""
-    m = F.md5(F.col(g))
+    m = F.md5(F.col("g"))
     return [
         F.conv(F.substring(m, 1 + 8 * i, 8), 16, 10).cast("long") % bits
         for i in range(_BLOOM_K)

@@ -297,9 +297,6 @@ def dedup_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
         prepared=_shingled_docs(spark, sf).select("id", "lang", "shl"),
         # prepared is the session-cached shingle memo (r12, see
         # containment_pairs): consumers re-derive from cache, no 2nd cache.
-        # rare_first since r13: prefix ranked by corpus df on the exploded
-        # stream (the containment_join r12 form)
-        rare_first=True,
         materialize=False,
     )
 

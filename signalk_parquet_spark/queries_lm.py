@@ -546,9 +546,7 @@ def _lm_score_frame(spark: SparkSession, sf: str) -> DataFrame:
     return MEMO.get_or_build(spark, f"lm_score:{sf}", build)
 
 
-def perplexity_buckets_approx(
-    spark: SparkSession, sf: str, accuracy: int = 10000
-) -> DataFrame:
+def perplexity_buckets_approx(spark: SparkSession, sf: str) -> DataFrame:
     """The 100 TB production form of perplexity_buckets: per-language
     tercile CUTPOINTS from percentile_approx (a lang-count-sized frame,
     broadcast back), then a MAP-ONLY bucket assignment — no per-language
@@ -559,13 +557,13 @@ def perplexity_buckets_approx(
     construction, and >= 95% per-doc bucket agreement at test scale
     (disagreement is confined to docs within sketch error of a cutpoint).
 
-    `accuracy` is Spark's percentile_approx knob (error <= 1/accuracy of
-    the rank range); raise it to tighten the boundary band at the cost of
+    percentile_approx runs at accuracy 10000 (error <= 1/10000 of the rank
+    range); a higher accuracy tightens the boundary band at the cost of
     sketch memory, which grows per (lang) group, not per doc."""
     s = _lm_score_frame(spark, sf)  # memoized + materialized (see its doc)
     cuts = s.groupBy("lang").agg(
         F.percentile_approx(
-            "lm_score", F.array(F.lit(2.0 / 3.0), F.lit(1.0 / 3.0)), accuracy
+            "lm_score", F.array(F.lit(2.0 / 3.0), F.lit(1.0 / 3.0)), 10000
         ).alias("c")
     )
     return (

@@ -156,11 +156,11 @@ def evict_tables(spark: SparkSession, sf_dir: str) -> None:
         _TABLE_CACHE.pop(key).unpersist()
 
 
-def dd_bucket(resolution_ms: int, ts: str = "ts") -> str:
-    """DuckDB expression equal to functions.time.bucket_iso — the reference's
-    bucket rendering (src/HistoryAPI.ts:1776-1777)."""
+def dd_bucket(resolution_ms: int) -> str:
+    """DuckDB expression over column ``ts`` equal to functions.time.bucket_iso
+    — the reference's bucket rendering (src/HistoryAPI.ts:1776-1777)."""
     return (
-        f"strftime(epoch_ms(CAST(floor(epoch_ms({ts})/{resolution_ms})*{resolution_ms} AS BIGINT)), "
+        f"strftime(epoch_ms(CAST(floor(epoch_ms(ts)/{resolution_ms})*{resolution_ms} AS BIGINT)), "
         f"'%Y-%m-%dT%H:%M:%SZ')"
     )
 
@@ -265,11 +265,7 @@ def oracle_sql() -> dict[str, str]:
 #: semantics-EDITED gate, (2) gates with no driver row in any round, then
 #: (3) fill to 50 with the gates whose last green row is OLDEST.
 #: tools/window_check.py prints the result; a name listed here that is not
-#: registered raises at import (typo guard) — UNLESS an optional queries
-#: module was absent, in which case missing names drop out with a WARNING
-#: naming both lists (the same degradation _import_all's except clause
-#: grants the module itself, kept visible because a dropped name can't be
-#: attributed: it might be the absent module's — or a typo).
+#: registered raises at import (typo guard).
 #:
 #: r13 window (27 edited + 23 r09 = 50), generated from
 #: `tools/window_check.py --suggest` over the CORRECTNESS_r01-r12 union.
@@ -281,8 +277,8 @@ def oracle_sql() -> dict[str, str]:
 #: GATE_FINGERPRINTS was deliberately left un-refreshed in r12 so
 #: --suggest would rank exactly these EDIT and hand them driver slots
 #: under their new plans), and (b) the two gates edited THIS round:
-#: dedup_jaccard_prefix (prefix_jaccard_pairs flipped to rare_first=True
-#: — the standing flip-on-re-window TODO — in the containment_join
+#: dedup_jaccard_prefix (prefix_jaccard_pairs flipped to the rarest-first
+#: prefix — the standing flip-on-re-window TODO — in the containment_join
 #: stream form) and ivf_kmeans_recall (the kmeans_centroids driver-local
 #: Lloyd rung changes this oracle-less gate's declared recall values;
 #: re-declared floor in test_ivf_kmeans_recall_floor — the VERDICT-r12
@@ -355,31 +351,12 @@ _WINDOW_FIRST: tuple[str, ...] = (
 )
 
 
-#: optional queries modules _import_all found absent (their names are
-#: allowed to be missing from _WINDOW_FIRST resolution)
-_ABSENT_MODULES: list[str] = []
-
-
 def _apply_window_order() -> None:
     missing = [n for n in _WINDOW_FIRST if n not in REGISTRY]
-    if missing and not _ABSENT_MODULES:
-        # every module imported, so a missing name is a TYPO — fail loudly
-        raise KeyError(f"_WINDOW_FIRST names not registered: {missing}")
     if missing:
-        # a module is legitimately absent, so degrade rather than crash —
-        # but a missing name cannot be ATTRIBUTED to the absent module
-        # (its names were never registered), so a typo would also land
-        # here. Warn loudly with both lists so it can't pass silently
-        # (second-review catch: the degraded path disabled the typo guard
-        # for every name, invisibly).
-        import warnings
-
-        warnings.warn(
-            f"_WINDOW_FIRST names dropped (absent modules {_ABSENT_MODULES}"
-            f" — verify none of these is a typo): {missing}",
-            stacklevel=2,
-        )
-    front = {n: REGISTRY[n] for n in _WINDOW_FIRST if n in REGISTRY}
+        # every module is imported, so a missing name is a TYPO
+        raise KeyError(f"_WINDOW_FIRST names not registered: {missing}")
+    front = {n: REGISTRY[n] for n in _WINDOW_FIRST}
     rest = {n: v for n, v in REGISTRY.items() if n not in front}
     REGISTRY.clear()
     REGISTRY.update(front)
@@ -410,14 +387,5 @@ def _import_all() -> None:
         "queries_media",
         "queries_replay",  # post-window r5: rotates into the r6 window
     ):
-        try:
-            __import__(f"{__package__}.{mod}")
-        except ModuleNotFoundError as e:
-            # only tolerate the module itself being absent (optional extras);
-            # a missing dependency INSIDE a module must surface, not silently
-            # drop its queries from the driver window
-            if e.name != f"{__package__}.{mod}":
-                raise
-            if mod not in _ABSENT_MODULES:
-                _ABSENT_MODULES.append(mod)
+        __import__(f"{__package__}.{mod}")
     _apply_window_order()

@@ -47,7 +47,17 @@ def _default_driver_mem() -> str:
 #: minutes) took 40% and 18% longer. A long-lived deployment that runs the
 #: same heavy plans for hours can turn C2 back on by setting
 #: SPARK_GRAFT_DRIVER_JAVA_OPTS without the flag.
-DRIVER_JAVA_OPTS = "-XX:MetaspaceSize=1g -XX:MaxMetaspaceSize=3g -XX:TieredStopAtLevel=1"
+#:
+#: ReservedCodeCacheSize=240m: with tiered compilation stopped at C1 the
+#: JVM sizes the code cache at 48 MB, not 240 MB. A long session fills
+#: that: examples/curation_pipeline.py (sf0.001, 4 cores) printed
+#: "CodeCache is full. Compiler has been disabled." after 50 s, and every
+#: Spark stage compiled after that ran interpreted. With 240m the same run
+#: peaked at 60 MB used with the compiler still on.
+DRIVER_JAVA_OPTS = (
+    "-XX:MetaspaceSize=1g -XX:MaxMetaspaceSize=3g -XX:TieredStopAtLevel=1"
+    " -XX:ReservedCodeCacheSize=240m"
+)
 
 
 def driver_java_opts() -> str:

@@ -83,9 +83,7 @@ class Lake:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.parquet(self.roots[0])
 
-    def write_rollup(
-        self, df: DataFrame, tier: str, mode: str = "overwrite", epoch: int = 0
-    ) -> None:
+    def write_rollup(self, df: DataFrame, tier: str, epoch: int = 0) -> None:
         """Write a rollup tier (bucket_time-partitioned by year/day).
 
         The trailing epoch=<id> partition level exists for streaming
@@ -105,7 +103,7 @@ class Lake:
             .withColumn("epoch", F.lit(int(epoch)))
         )
         (
-            out.write.mode(mode)
+            out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*PARTITION_COLS, "epoch")
             .parquet(self.roots[0])

@@ -11,16 +11,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", compression: str = "snappy") -> None:
-    df.write.mode(mode).option("compression", compression).parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 READERS = {

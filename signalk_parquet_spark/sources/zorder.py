@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 #: cell — finer than any file's natural extent, so resolution never limits
 #: pruning; the interleaved key still fits comfortably in a long (32 bits).
 DEFAULT_BITS = 16
+#: key ranges (= output files) per z-ordered write
+ZORDER_FILES = 32
 
 
 def _quantize(col: Column, lo: float, hi: float, bits: int) -> Column:
@@ -64,11 +66,9 @@ def write_zordered(
     path: str,
     lat_col: str,
     lon_col: str,
-    n_files: int = 32,
-    bits: int = DEFAULT_BITS,
 ) -> None:
     """Write ``df`` as parquet clustered on the Morton key: range-partition
-    into ``n_files`` key ranges (one file each — file stats ARE the skip
+    into ``ZORDER_FILES`` key ranges (one file each — file stats ARE the skip
     index) and sort within each so row groups inside a file are clustered
     too. The key itself is not persisted: it's derivable, and dropping it
     keeps the schema identical to an unclustered write (readers can't tell
@@ -77,10 +77,10 @@ def write_zordered(
     At scale this is a maintenance pass (lifecycle.compact sibling): run it
     per partition-directory during compaction, so clustering rides an I/O
     pass that happens anyway and never blocks ingest."""
-    key = morton_key(lat_col, lon_col, bits).alias("__zkey")
+    key = morton_key(lat_col, lon_col).alias("__zkey")
     (
         df.withColumn("__zkey", key)
-        .repartitionByRange(n_files, "__zkey")
+        .repartitionByRange(ZORDER_FILES, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
         .write.mode("overwrite")
@@ -88,16 +88,16 @@ def write_zordered(
     )
 
 
-def morton_key_py(lat: float, lon: float, bits: int = DEFAULT_BITS) -> int:
-    """Driver-side reference implementation (tests compare the Column
-    expression against this bit-for-bit)."""
+def morton_key_py(lat: float, lon: float) -> int:
+    """Driver-side reference implementation at ``DEFAULT_BITS`` (tests
+    compare the Column expression against this bit-for-bit)."""
     def q(v: float, lo: float, hi: float) -> int:
         v = min(max(v, lo), hi)
-        return int((v - lo) / (hi - lo) * ((1 << bits) - 1))
+        return int((v - lo) / (hi - lo) * ((1 << DEFAULT_BITS) - 1))
 
     la, lo_ = q(lat, -90.0, 90.0), q(lon, -180.0, 180.0)
     key = 0
-    for i in range(bits):
+    for i in range(DEFAULT_BITS):
         key |= ((la >> i) & 1) << (2 * i)
         key |= ((lo_ >> i) & 1) << (2 * i + 1)
     return key

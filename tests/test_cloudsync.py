@@ -7,11 +7,11 @@ from __future__ import annotations
 import os
 
 from signalk_parquet_spark.operators.cloudsync import (
-    DEFAULT_EXCLUDED,
     distributed_copy,
     list_files,
     sync_plan,
 )
+from signalk_parquet_spark.sources.hive_paths import EXCLUDED_SUBDIRS
 
 
 def _mk(root, rel, content=b"x"):
@@ -52,7 +52,7 @@ def test_sync_plan_classifies_like_the_reference(spark, tmp_path):
     assert plan["vessels.self/env.wind/2024/05/01/data.parquet"] == "upload"
     assert plan["processed/old.parquet"] == "excluded"
     assert plan["vessels.self/nav.speed/failed/bad.parquet"] == "excluded"
-    assert set(DEFAULT_EXCLUDED) == {"processed", "repaired", "failed", "quarantine"}
+    assert set(EXCLUDED_SUBDIRS) == {"processed", "repaired", "failed", "quarantine"}
 
 
 def test_startup_dir_granularity_skips_whole_synced_dirs(spark, tmp_path):

@@ -556,17 +556,7 @@ def test_prefix_jaccard_matches_bruteforce(spark):
         "lang", F.lit("xx")
     )
     got = {(r["id_a"], r["id_b"]) for r in
-           prefix_jaccard_pairs(
-               df, "doc_id", "text", ["lang"], 0.5, rare_first=False
-           ).collect()}
-    # the rare-first AllPairs ordering (the default since r13) is a
-    # different common total order — the symmetric prefix bound only needs
-    # SOME common order, so the answer must be identical to the hash order
-    got_rare = {(r["id_a"], r["id_b"]) for r in
-                prefix_jaccard_pairs(
-                    df, "doc_id", "text", ["lang"], 0.5, rare_first=True
-                ).collect()}
-    assert got_rare == got
+           prefix_jaccard_pairs(df, "doc_id", "text", ["lang"], 0.5).collect()}
     # brute force over collected shingle sets
     from signalk_parquet_spark.functions.text import distinct_shingles, hashed_shingles
     sets = {r["doc_id"]: set(r["shl"]) for r in df.select(

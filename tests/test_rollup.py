@@ -10,6 +10,7 @@ from datetime import timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from signalk_parquet_spark.operators.aggregate import METHODS, bucketed_agg
 from signalk_parquet_spark.operators.rollup import (
     reaggregate_angular,
     reaggregate_scalar,
@@ -104,3 +105,71 @@ def test_position_rollup_representative_is_nearest_midpoint(spark):
     # bucket midpoint is t0+2.5s; nearest clean points are i=2 (2.5-2=0.5) and i=3 (0.5);
     # the reference prefers the point at/after the midpoint (aggregation-service.ts:632) -> i=3
     assert r["value_latitude"] == pytest.approx(47.5 + 3e-5)
+
+
+_TIER = ["context", "path", "bucket_time"]
+_SPAN = ["first_timestamp", "last_timestamp"]
+_STATS = ["value_avg", "value_min", "value_max", "sample_count"]
+_REAGG = ["context", "path", "bucket", "value"]
+
+
+
+
+_EMPTY_CASES = [
+    pytest.param(lambda d: rollup_scalar(d, "5s"), _TIER + _STATS + _SPAN, id="rollup_scalar"),
+    pytest.param(
+        lambda d: rollup_angular(d, "5s"),
+        _TIER + _STATS + _SPAN + ["value_sin_avg", "value_cos_avg"],
+        id="rollup_angular",
+    ),
+    pytest.param(
+        lambda d: rollup_angular(d, "5s", exact_partials=True),
+        _TIER + _STATS + ["value_sin_avg", "value_cos_avg"] + _SPAN
+        + ["value_sin_sum_nano", "value_cos_sum_nano"],
+        id="rollup_angular_exact",
+    ),
+    pytest.param(
+        lambda d: reaggregate_scalar(rollup_scalar(d, "5s"), 60_000),
+        _REAGG + ["value_min", "value_max", "sample_count"],
+        id="reaggregate_scalar",
+    ),
+    pytest.param(
+        lambda d: reaggregate_angular(rollup_angular(d, "5s"), 60_000),
+        _REAGG + ["sample_count"],
+        id="reaggregate_angular",
+    ),
+    pytest.param(
+        lambda d: reaggregate_angular(
+            rollup_angular(d, "5s", exact_partials=True), 60_000, exact_partials=True
+        ),
+        _REAGG + ["sample_count"],
+        id="reaggregate_angular_exact",
+    ),
+    pytest.param(
+        lambda d: rollup_position(d, "5s"),
+        _TIER + ["value_latitude", "value_longitude", "sample_count"] + _SPAN,
+        id="rollup_position",
+    ),
+] + [
+    pytest.param(
+        lambda d, m=m: bucketed_agg(d, "signalk_timestamp", "value", 60_000, m),
+        ["bucket_ts", "value"],
+        id=f"bucketed_agg_{m}",
+    )
+    for m in METHODS
+]
+
+
+@pytest.mark.parametrize("op, columns", _EMPTY_CASES)
+def test_tier_operator_empty_input_gives_empty_frame(spark, op, columns):
+    """Empty-input contract row: an empty record frame (position value
+    columns included) yields an empty frame with the operator's documented
+    columns, not an exception."""
+    from pyspark.sql import types as T
+
+    from signalk_parquet_spark.schema import record_schema
+
+    pos = {"latitude": T.DoubleType(), "longitude": T.DoubleType()}
+    out = op(spark.createDataFrame([], record_schema(pos)))
+    assert out.columns == columns
+    assert out.collect() == []

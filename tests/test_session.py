@@ -19,7 +19,8 @@ def test_driver_java_opts_default_and_override(monkeypatch):
 
 def test_driver_jvm_compiles_with_c1_only(spark):
     """The running driver JVM took the default flags: HotSpot reports
-    tiered compilation stopping at level 1 (C1, no C2)."""
+    tiered compilation stopping at level 1 (C1, no C2), with the code
+    cache reserved at 240 MB rather than the C1-only 48 MB."""
     if session.driver_java_opts() != session.DRIVER_JAVA_OPTS:
         pytest.skip("driver JVM flags overridden by SPARK_GRAFT_DRIVER_JAVA_OPTS")
     jvm = spark._jvm
@@ -27,3 +28,4 @@ def test_driver_jvm_compiles_with_c1_only(spark):
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
+    assert bean.getVMOption("ReservedCodeCacheSize").getValue() == str(240 << 20)

@@ -77,7 +77,7 @@ def test_zorder_layout_skips_files_and_preserves_results(spark, sf_smoke, tmp_pa
         .sortWithinPartitions("event_id")
         .write.parquet(natural)
     )
-    write_zordered(pos, zordered, "lat", "lon", n_files=32)
+    write_zordered(pos, zordered, "lat", "lon")
 
     # harbor-sized box (2° x 3°)
     box = (40.0, 42.0, -72.0, -69.0)
