@@ -86,9 +86,9 @@ def get_values_response(
 
 def discovery_response(planner: HistoryPlanner, context: str | None = None) -> dict:
     """The contexts/paths discovery endpoints (reference: /contexts, /paths
-    routes). Not metadata-only: each of the two lists runs a distinct()
-    over a mergeSchema read of every tier (Lake.discover_contexts and
-    Lake.discover_paths)."""
+    routes). Metadata-only: both lists are the lake's catalogued
+    context= and path= directory names (Lake.discover_contexts and
+    Lake.discover_paths), a listing with no Spark job."""
     return {
         "contexts": planner.lake.discover_contexts(),
         "paths": planner.lake.discover_paths(context=context),

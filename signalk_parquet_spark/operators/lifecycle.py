@@ -22,7 +22,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from ..sources.hive_paths import unsanitize_path
-from ..sources.lake import PARTITION_COLS, Lake, partition_values
+from ..sources.lake import CATALOG_DIR, Lake, partition_values
 
 TIER_RETENTION_MULTIPLIER = {"raw": 1, "5s": 2, "60s": 4, "1h": 12}
 
@@ -62,10 +62,12 @@ def retention_cleanup(
 ) -> list[str]:
     """Drop whole (tier, context, path, year, day) partitions older than the
     effective retention — a partition-directory delete, never a row scan
-    (day-granularity cutoff like the reference)."""
+    (day-granularity cutoff like the reference). A year, path or context
+    directory left without data goes too (a path's catalog goes with it),
+    so every directory name the lake's discovery lists has data under it."""
     removed: list[str] = []
     root = Path(lake.roots[0])
-    for day_dir in root.glob("tier=*/context=*/path=*/year=*/day=*"):
+    for day_dir in sorted(root.glob("tier=*/context=*/path=*/year=*/day=*")):
         parts = dict(p.split("=", 1) for p in day_dir.relative_to(root).parts)
         tier = parts["tier"]
         path = unsanitize_path(parts["path"])
@@ -76,6 +78,10 @@ def retention_cleanup(
             removed.append(str(day_dir))
             if not dry_run:
                 shutil.rmtree(day_dir)
+                for parent in day_dir.parents[:3]:  # year, path, context
+                    if any(e.name != CATALOG_DIR for e in parent.iterdir()):
+                        break
+                    shutil.rmtree(parent)
     return sorted(removed)
 
 
@@ -87,12 +93,14 @@ def compact_partition(lake: Lake, tier: str, context_s: str, path_s: str, year: 
     down to year live only in the directory names, a rollup tier keeps its
     trailing epoch level (a tier of mixed depth is unreadable, see
     Lake.write_rollup) and day stays zero-padded. Returns rows compacted."""
-    spark = lake.spark
-    src = f"{lake.roots[0]}/tier={tier}/context={context_s}/path={path_s}/year={year}"
-    # read at the year directory: the discovered partition columns are the
-    # leaf levels; dropping the upper ones also heals files an older
+    root = lake.roots[0]
+    key = f"{root}/tier={tier}/context={context_s}/path={path_s}"
+    src = f"{key}/year={year}"
+    # read at the year directory with the catalog's data columns: the
+    # discovered partition columns are the leaf levels, and the stored
+    # schema never holds the upper ones, which also heals files an older
     # compaction wrote with them as data columns
-    df = spark.read.option("mergeSchema", "true").parquet(src).drop(*PARTITION_COLS[:-1])
+    df = lake.spark.read.schema(lake.stored_schema(root, key)).parquet(src)
     n = df.count()
     ts_col = "signalk_timestamp" if tier == "raw" else "bucket_time"
     leaf = [c for c in ("day", "epoch") if c in df.columns]

@@ -61,19 +61,16 @@ class HistoryPlanner:
         reference's schema probe (union of value_* columns across the path's
         files, cached 30 min; schema-cache.ts:46-173). Ingest batches can
         union schemas across paths, so presence isn't enough: a component
-        counts only if it carries ANY non-null data for this path."""
+        counts only if it carries ANY non-null data for this path — a fact
+        the lake's writers record in its catalog, so no Spark job runs."""
         key = (context, path)
         if key not in self._comp_cache:
-            raw = self.lake.read(tier="raw", context=context, path=path)
-            cand = [
-                c for c in raw.columns
-                if c.startswith("value_") and c not in ("value_text", "value_bool", "value_json")
-            ]
-            if cand:
-                counts = raw.select([F.count(c).alias(c) for c in cand]).first()
-                self._comp_cache[key] = sorted(c for c in cand if counts[c] > 0)
-            else:
-                self._comp_cache[key] = []
+            nonnull = {
+                c
+                for e in self.lake.catalog_entries(tier="raw", context=context, path=path)
+                for c in e.get("nonnull", ())
+            }
+            self._comp_cache[key] = sorted(nonnull - {"value_text", "value_bool", "value_json"})
         return self._comp_cache[key]
 
     # ------------------------------------------------------------------
@@ -194,9 +191,15 @@ class HistoryPlanner:
         from ..operators.aggregate import method_agg
 
         ts = F.col("signalk_timestamp").cast("timestamp")
+        schema = df.schema
         aggs = []
         for c in comp_cols:
-            numeric = isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType))
+            if c not in schema.names:
+                # a side (the hot buffer) whose rows never held this path's
+                # objects lacks the column; it has no rows to aggregate
+                aggs.append(F.first(F.lit(None)).alias(c))
+                continue
+            numeric = isinstance(schema[c].dataType, (T.DoubleType, T.FloatType))
             method = spec.method if numeric else "first"
             aggs.append(method_agg(method, F.col(c), ts).alias(c))
         agged = df.groupBy(bucket_iso("signalk_timestamp", res_ms).alias("bucket_ts")).agg(*aggs)

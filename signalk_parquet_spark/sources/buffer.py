@@ -9,6 +9,9 @@ Exactly-once export (the `exported` flag + markDateExported protocol,
 sqlite-buffer.ts:1001-1027) becomes IDEMPOTENT OVERWRITE of the day
 partition in the cold lake: re-exporting a day rewrites the same partition
 instead of appending dupes — same guarantee, no per-row state.
+
+Every write also records its columns in the staging directory's schema
+catalog (sources/lake.py), so a read plans with no footer probe.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lake import Lake
+from .lake import Lake, catalog, merged_schema, record_catalog
 
 
 class HotBuffer:
@@ -28,7 +31,11 @@ class HotBuffer:
         self.staging_dir = staging_dir
 
     def append(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.staging_dir)
+        self._write(df, self.staging_dir, "append")
+
+    def _write(self, df: DataFrame, directory: str, mode: str) -> None:
+        df.write.mode(mode).parquet(directory)
+        record_catalog(self.spark, directory, df.schema)
 
     def read(
         self,
@@ -37,9 +44,10 @@ class HotBuffer:
         from_ts: datetime | None = None,
         to_ts: datetime | None = None,
     ) -> DataFrame:
-        if not os.path.exists(self.staging_dir):
+        entries = [e for es in catalog(self.spark, self.staging_dir).values() for e in es]
+        if not entries:  # no staging dir yet, or no data in it
             return self.spark.createDataFrame([], "context string, path string")
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.staging_dir)
+        df = self.spark.read.schema(merged_schema(entries)).parquet(self.staging_dir)
         if context:
             df = df.filter(F.col("context") == context)
         if path:
@@ -73,7 +81,7 @@ class HotBuffer:
         the reference, README.md:20) by compacting the staging dir."""
         keep = self.read(from_ts=older_than)
         tmp = self.staging_dir + ".compact"
-        keep.write.mode("overwrite").parquet(tmp)
+        self._write(keep, tmp, "overwrite")
         import shutil
 
         shutil.rmtree(self.staging_dir)
