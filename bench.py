@@ -3,6 +3,7 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"queries": {name: sec, ...}, "order": ..., "metric": ...,
 "unit": "sec", "n_queries": N, "sf": ..., "host": {...}, "value": total}.
+$SPARK_GRAFT_CPUS defaults to the cores this process may run on.
 
 KEY ORDER IS PART OF THE CONTRACT: the driver records only the LAST 2000
 chars of this line, so the headline keys (value/sf/host) must come AFTER

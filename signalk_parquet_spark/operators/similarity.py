@@ -60,13 +60,16 @@ def ann_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
+    planes: list[list[int]] | None = None,
+    dim: int | None = 64,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH buckets: candidates share
     the query's bucket (equality join replaces the scan), exact cosine
-    re-rank. Integer plane weights make bucket bits exact-arithmetic."""
-    planes = make_planes(n_planes, dim)
+    re-rank. Integer plane weights make bucket bits exact-arithmetic.
+    ``planes`` are as wide as the vectors (default: 8 planes of width
+    ``dim``, 64 when ``dim`` is None); ``dim`` picks the dot form (None:
+    the HOF dot, see functions.vectors)."""
+    planes = make_planes(8, dim or 64) if planes is None else planes
     coll = _with_norms(collection, id_col, vec_col, dim).withColumn(
         "bucket", hyperplane_bits(F.col("emb"), planes)
     )
@@ -1101,8 +1104,6 @@ def hard_negatives(
     label_col: str,
     k: int = 5,
     dim: int | None = None,
-    bucketed: bool = False,
-    n_planes: int = 8,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: per query,
     the top-k most-cosine-similar collection rows whose ``label_col``
@@ -1111,14 +1112,10 @@ def hard_negatives(
     most from (the standard mining step in retrieval-model training;
     public recipe, e.g. Karpukhin et al. 2020 DPR §4).
 
-    Default is the exact form: broadcast the (small) query set with its
-    labels, one map-only scan of the collection, the label-mismatch
-    predicate riding the same broadcast join as the id-inequality — the
-    collection never shuffles and no (label x label) pair list ever
-    materializes. ``bucketed=True`` is the scale path when the query set
-    stops being small: candidates must also share the query's
-    random-hyperplane LSH bucket, turning the scan into an equality join
-    (same recall story as ann_topk — tune with topk_recall). Top-k rides
+    Exact: broadcast the (small) query set with its labels, one map-only
+    scan of the collection, the label-mismatch predicate riding the same
+    broadcast join as the id-inequality — the collection never shuffles
+    and no (label x label) pair list ever materializes. Top-k rides
     retrieval.topk_per_key, so the WindowGroupLimit bound is
     plan-asserted, not assumed.
 
@@ -1138,14 +1135,7 @@ def hard_negatives(
         as_double(vec_col).alias("qemb"),
         F.col(label_col).alias("_qlbl"),
     ).withColumn("qn2", norm_sq(F.col("qemb"), dim))
-    if bucketed:
-        planes = make_planes(n_planes, dim or 64)
-        coll = coll.withColumn("bucket", hyperplane_bits(F.col("emb"), planes))
-        q = q.withColumn("bucket", hyperplane_bits(F.col("qemb"), planes))
-        pairs = coll.join(F.broadcast(q), ["bucket"])
-    else:
-        pairs = coll.crossJoin(F.broadcast(q))
-    pairs = pairs.filter(
+    pairs = coll.crossJoin(F.broadcast(q)).filter(
         (F.col("id") != F.col("query_id")) & (F.col("_lbl") != F.col("_qlbl"))
     ).select(
         "query_id",

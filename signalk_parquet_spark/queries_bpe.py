@@ -154,14 +154,15 @@ def _seed_logp(spark: SparkSession, sf: str) -> dict[str, float]:
     )
 
 
-@register(
-    "unigram_estep_counts",
-    f"""
-    WITH RECURSIVE w AS (
-      SELECT x AS word, count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS x FROM documents)
-      GROUP BY 1
-    ), seed AS (
+def _dd_ug_viterbi(carry_freq: bool) -> str:
+    """The unigram oracles' shared CTEs over a `w(word, freq)` CTE: the
+    seed vocabulary (`seed`/`chars`/`multi`/`vocab0`, then `vocab` with
+    its log-probabilities — operators/unigram.seed_vocab in SQL) and the
+    recursive enumeration of every segmentation (`paths`), ranked per
+    word in `best` (score DESC, seq ASC; rn = 1 is the Viterbi pick).
+    ``carry_freq`` keeps `freq` on the path rows."""
+    f, pf = ("freq, ", "p.freq, ") if carry_freq else ("", "")
+    return f"""seed AS (
       SELECT substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece, sum(freq) AS cnt
       FROM (SELECT word, freq, unnest(range(1, len(word) + 1)) AS i FROM w), range(1, {_UG_LEN + 1}) u(l)
       WHERE i + l <= len(word) + 1
@@ -182,21 +183,31 @@ def _seed_logp(spark: SparkSession, sf: str) -> dict[str, float]:
                - ln((SELECT CAST(sum(cnt) AS DOUBLE) FROM vocab0)) AS logp
       FROM vocab0
     ), paths AS (
-      SELECT word, freq, CAST(0 AS BIGINT) AS pos,
+      SELECT word, {f}CAST(0 AS BIGINT) AS pos,
              CAST(0.0 AS DOUBLE) AS score, CAST([] AS VARCHAR[]) AS seq
       FROM w
       UNION ALL
-      SELECT p.word, p.freq, p.pos + len(v.piece), p.score + v.logp,
+      SELECT p.word, {pf}p.pos + len(v.piece), p.score + v.logp,
              list_append(p.seq, v.piece)
       FROM paths p, vocab v
       WHERE p.pos < len(p.word)
         AND p.pos + len(v.piece) <= len(p.word)
         AND substr(p.word, CAST(p.pos + 1 AS INT), len(v.piece)) = v.piece
     ), best AS (
-      SELECT word, freq, seq,
+      SELECT word, {f}seq,
              row_number() OVER (PARTITION BY word ORDER BY score DESC, seq ASC) AS rn
       FROM paths WHERE pos = len(word)
-    )
+    )"""
+
+
+@register(
+    "unigram_estep_counts",
+    f"""
+    WITH RECURSIVE w AS (
+      SELECT x AS word, count(*) AS freq
+      FROM (SELECT unnest(string_split(text, ' ')) AS x FROM documents)
+      GROUP BY 1
+    ), {_dd_ug_viterbi(carry_freq=True)}
     SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt
     FROM (SELECT unnest(seq) AS piece, freq FROM best WHERE rn = 1)
     GROUP BY 1
@@ -235,42 +246,7 @@ def unigram_estep_counts(spark: SparkSession, sf: str) -> DataFrame:
       SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
     ), w AS (
       SELECT word, count(*) AS freq FROM dw GROUP BY 1
-    ), seed AS (
-      SELECT substr(word, CAST(i AS INT), CAST(l AS INT)) AS piece, sum(freq) AS cnt
-      FROM (SELECT word, freq, unnest(range(1, len(word) + 1)) AS i FROM w), range(1, {_UG_LEN + 1}) u(l)
-      WHERE i + l <= len(word) + 1
-      GROUP BY 1
-    ), chars AS (
-      SELECT piece, cnt FROM seed WHERE len(piece) = 1
-    ), multi AS (
-      SELECT piece, cnt, row_number() OVER (ORDER BY cnt DESC, piece ASC) AS rn
-      FROM seed WHERE len(piece) > 1
-    ), vocab0 AS (
-      SELECT piece, cnt FROM chars
-      UNION ALL
-      SELECT m.piece, m.cnt FROM multi m, (SELECT count(*) AS n FROM chars) c
-      WHERE m.rn <= {_UG_SEED} - c.n
-    ), vocab AS (
-      SELECT piece,
-             ln(CAST(cnt AS DOUBLE))
-               - ln((SELECT CAST(sum(cnt) AS DOUBLE) FROM vocab0)) AS logp
-      FROM vocab0
-    ), paths AS (
-      SELECT word, CAST(0 AS BIGINT) AS pos,
-             CAST(0.0 AS DOUBLE) AS score, CAST([] AS VARCHAR[]) AS seq
-      FROM w
-      UNION ALL
-      SELECT p.word, p.pos + len(v.piece), p.score + v.logp,
-             list_append(p.seq, v.piece)
-      FROM paths p, vocab v
-      WHERE p.pos < len(p.word)
-        AND p.pos + len(v.piece) <= len(p.word)
-        AND substr(p.word, CAST(p.pos + 1 AS INT), len(v.piece)) = v.piece
-    ), best AS (
-      SELECT word, seq,
-             row_number() OVER (PARTITION BY word ORDER BY score DESC, seq ASC) AS rn
-      FROM paths WHERE pos = len(word)
-    ), wp AS (
+    ), {_dd_ug_viterbi(carry_freq=False)}, wp AS (
       SELECT word, seq FROM best WHERE rn = 1
     ), dp AS (
       SELECT dw.doc_id, unnest(wp.seq) AS piece

@@ -610,9 +610,13 @@ def sma_1h_w5(spark: SparkSession, sf: str) -> DataFrame:
 
 # --- W7: EMA (sequential recurrence via applyInPandas) ---------------------------
 _EMA_ALPHA = 0.2
-@register(
-    "ema_1h_a02",
-    f"""
+
+
+def _dd_ema_sql(alpha: float, ema_col: str) -> str:
+    """EMA oracle: hourly micro-averages per event_type, then the recursive
+    CTE `e` applies ema = alpha*x + (1-alpha)*ema_prev down each series;
+    ``ema_col`` is the final SELECT's ema expression."""
+    return f"""
     WITH RECURSIVE a AS (
       SELECT event_type, {dd_bucket(H)} AS bucket_ts, round({dd_micro_avg("value")}, 6) AS avg_value
       FROM events GROUP BY 1, 2
@@ -623,11 +627,16 @@ _EMA_ALPHA = 0.2
       FROM s WHERE rn = 1
       UNION ALL
       SELECT s.event_type, s.bucket_ts, s.avg_value, s.rn,
-             {_EMA_ALPHA!r} * s.avg_value + {1.0 - _EMA_ALPHA!r} * e.ema
+             {alpha!r} * s.avg_value + {1.0 - alpha!r} * e.ema
       FROM s JOIN e ON s.event_type = e.event_type AND s.rn = e.rn + 1
     )
-    SELECT event_type, bucket_ts, avg_value, round(ema, 6) AS ema FROM e
-    """,
+    SELECT event_type, bucket_ts, avg_value, {ema_col} FROM e
+    """
+
+
+@register(
+    "ema_1h_a02",
+    _dd_ema_sql(_EMA_ALPHA, "round(ema, 6) AS ema"),
 )
 def ema_1h_a02(spark: SparkSession, sf: str) -> DataFrame:
     """SURVEY W7 — the reference's recursive JS EMA (src/HistoryAPI.ts:2081-2090)
@@ -643,22 +652,7 @@ def ema_1h_a02(spark: SparkSession, sf: str) -> DataFrame:
 # --- W7b: EMA with request-supplied alpha via the PathSpec grammar ----------------
 @register(
     "ema_pathspec_a05",
-    f"""
-    WITH RECURSIVE a AS (
-      SELECT event_type, {dd_bucket(H)} AS bucket_ts, round({dd_micro_avg("value")}, 6) AS avg_value
-      FROM events GROUP BY 1, 2
-    ), s AS (
-      SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY bucket_ts) AS rn FROM a
-    ), e AS (
-      SELECT event_type, bucket_ts, avg_value, rn, avg_value AS ema
-      FROM s WHERE rn = 1
-      UNION ALL
-      SELECT s.event_type, s.bucket_ts, s.avg_value, s.rn,
-             0.5 * s.avg_value + 0.5 * e.ema
-      FROM s JOIN e ON s.event_type = e.event_type AND s.rn = e.rn + 1
-    )
-    SELECT event_type, bucket_ts, avg_value, ema FROM e
-    """,
+    _dd_ema_sql(0.5, "ema"),
 )
 def ema_pathspec_a05(spark: SparkSession, sf: str) -> DataFrame:
     """EMA whose α arrives through the REQUEST — `value:ema:0.5` parsed by the
@@ -831,19 +825,32 @@ def _write_gpx_fixture() -> list[str]:
     return paths
 
 
+def _dd_lit(x, null: str = "NULL") -> str:
+    """DuckDB literal of one fixture value for the VALUES-list oracles:
+    ``null`` for None, TRUE/FALSE for a bool, CAST('repr' AS DOUBLE) for a
+    float (string->double parse is correctly rounded, while a DECIMAL
+    literal could round twice), else a quoted string."""
+    if x is None:
+        return null
+    if isinstance(x, bool):
+        return "TRUE" if x else "FALSE"
+    if isinstance(x, float):
+        return f"CAST('{x!r}' AS DOUBLE)"
+    return f"'{x}'"
+
+
 def _gpx_oracle() -> str:
     """DuckDB twin of the GPX import: same VALUES points; tag semantics per
     the reference (speed as-is, radians(course), ele) and the
     derive_missing extension's haversine/bearing written in the importer's
     IDENTICAL operation order (sources/gpx.py). Floats enter as
-    CAST('repr' AS DOUBLE) — string->double parse is correctly rounded,
-    while a DECIMAL literal could round twice. The trig calls land in the
+    CAST('repr' AS DOUBLE) (_dd_lit). The trig calls land in the
     same glibc from both engines (rule-10 same-libm residual, measured by
     tests/test_angular_margin.py); every value lands on the micro grid in
     INTEGER space on both sides, never by rounding a float (rule 2)."""
 
     def lit(x) -> str:
-        return "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{x!r}' AS DOUBLE)"
+        return _dd_lit(x, "CAST(NULL AS DOUBLE)")
 
     vals = ",\n      ".join(
         f"({trk}, {i}, {lit(lat)}, {lit(lon)},"
@@ -942,11 +949,16 @@ def rollup_incremental_1h(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental tier maintenance stated as its correctness contract:
     incremental-after-late-data == full recompute (the oracle IS the plain
     full recompute). The reference re-aggregates whole days in a loop
-    (aggregation-service.ts:853-864); operators/incremental.py recomputes
-    only touched buckets — discovery (distinct over late rows), scoped
-    re-agg (broadcast semi-join), anti-join+union merge. 'Late' here is a
-    deterministic 10% slice (event_id % 10 = 7) scattered across all
-    buckets' history, the worst-ish case for touched-set size."""
+    (aggregation-service.ts:853-864). This gate certifies the BUCKET-level
+    mechanism of operators/incremental.py, on a frame: touched_buckets
+    (distinct over late rows), scope_to_touched (broadcast semi-join),
+    bucketed_stats over the scoped rows, merge_tier (anti-join + union).
+    It does not run the lake-level rollup_incremental, which rebuilds
+    whole (context, path, year, day) partitions of a Lake; that form is
+    covered by tests/test_incremental.py and tools/ramps/incremental.py.
+    'Late' here is a deterministic 10% slice (event_id % 10 = 7) scattered
+    across all buckets' history, the worst-ish case for touched-set
+    size."""
     from .operators.incremental import merge_tier, scope_to_touched, touched_buckets
 
     e = load(spark, sf, "events")
@@ -979,11 +991,16 @@ def rollup_incremental_1h(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def rollup_incremental_angular(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental maintenance of the ANGULAR tier (r9 verdict Next #4):
-    rollup_incremental's kind='angular' path stated as the same contract
-    as the scalar gate — incremental-after-late-data == full recompute
-    (the oracle IS the plain full recompute). exact_partials makes the
-    equivalence exact BY CONSTRUCTION: touched buckets re-aggregate
+    """Incremental maintenance of the ANGULAR tier (r9 verdict Next #4),
+    the same contract as rollup_incremental_1h — incremental-after-late-data
+    == full recompute (the oracle IS the plain full recompute) — over the
+    same bucket-level mechanism: touched_buckets, scope_to_touched,
+    rollup_angular(exact_partials=True) over the scoped rows, merge_tier.
+    Like that gate it does not run operators/incremental.rollup_incremental
+    (the lake-level, whole-partition rebuild); its kind='angular' form is
+    covered by tests/test_incremental.py
+    (test_incremental_angular_equals_full_recompute). exact_partials makes
+    the equivalence exact BY CONSTRUCTION: touched buckets re-aggregate
     per-row nano-integer sin/cos partials whose BIGINT sums are
     summation-order-independent, and untouched buckets contain no late
     rows so their base-only aggregate is the full aggregate verbatim.
@@ -1077,17 +1094,10 @@ def _write_jsonl_fixture() -> str:
 
 
 def _jsonl_oracle() -> str:
-    def lit(x) -> str:
-        if x is None:
-            return "NULL"
-        if isinstance(x, float):
-            return f"CAST('{x!r}' AS DOUBLE)"
-        return f"'{x}'"
-
+    lit = _dd_lit
     vals = ",\n      ".join(
         f"({lit(ts)}, {lit(ctx)}, {lit(p)}, "
-        f"{'CAST(NULL AS DOUBLE)' if v is None else lit(v)}, "
-        f"{'CAST(NULL AS VARCHAR)' if vt is None else lit(vt)})"
+        f"{lit(v, 'CAST(NULL AS DOUBLE)')}, {lit(vt, 'CAST(NULL AS VARCHAR)')})"
         for ts, ctx, p, v, vt in _JSONL_ROWS
     )
     return f"""
@@ -1197,22 +1207,11 @@ def _delta_expected() -> list[tuple]:
 
 
 def _delta_oracle() -> str:
-    def lit(x) -> str:
-        if x is None:
-            return "NULL"
-        if isinstance(x, bool):
-            return "TRUE" if x else "FALSE"
-        if isinstance(x, float):
-            return f"CAST('{x!r}' AS DOUBLE)"
-        return f"'{x}'"
-
+    lit, dbl = _dd_lit, "CAST(NULL AS DOUBLE)"
     vals = ",\n      ".join(
-        f"({lit(ts)}, {lit(ctx)}, {lit(p)}, "
-        f"{'CAST(NULL AS DOUBLE)' if v is None else lit(v)}, "
-        f"{'CAST(NULL AS VARCHAR)' if vt is None else lit(vt)}, "
-        f"{'CAST(NULL AS BOOLEAN)' if vb is None else lit(vb)}, "
-        f"{'CAST(NULL AS DOUBLE)' if la is None else lit(la)}, "
-        f"{'CAST(NULL AS DOUBLE)' if lo is None else lit(lo)}, {lit(sl)})"
+        f"({lit(ts)}, {lit(ctx)}, {lit(p)}, {lit(v, dbl)}, "
+        f"{lit(vt, 'CAST(NULL AS VARCHAR)')}, {lit(vb, 'CAST(NULL AS BOOLEAN)')}, "
+        f"{lit(la, dbl)}, {lit(lo, dbl)}, {lit(sl)})"
         for ts, ctx, p, v, vt, vb, la, lo, sl in _delta_expected()
     )
     return f"""

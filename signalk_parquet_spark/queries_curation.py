@@ -34,6 +34,7 @@ from .functions.vectors import as_double as as_double_vec
 from .functions.vectors import dot as vec_dot
 from .functions.vectors import norm_sq as vec_norm_sq
 from .memo import MEMO
+from .queries_dedup import _dd_cell_assign
 from .registry import load, register
 
 _TRAIN_HI = "cd"  # md5 first byte < 0xcd -> train  (205/256 ~ 80.1%)
@@ -42,11 +43,24 @@ _VAL_HI = "e6"  # < 0xe6 -> val (another 25/256 ~ 9.8%), rest test
 
 def hash_split(id_col: str = "doc_id") -> F.Column:
     """The train/val/test split Column every split-dependent gate shares
-    (single source — the DuckDB twins interpolate _TRAIN_HI/_VAL_HI)."""
+    (single source — the DuckDB twins use dd_hash_split)."""
     hx = F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
     return (
         F.when(hx < _TRAIN_HI, "train").when(hx < _VAL_HI, "val").otherwise("test")
     )
+
+
+def dd_hash_split(id_col: str = "doc_id") -> str:
+    """hash_split's DuckDB twin: the `split` CASE of a SELECT list."""
+    hx = f"substr(md5(CAST({id_col} AS VARCHAR)), 1, 2)"
+    return (
+        f"CASE WHEN {hx} < '{_TRAIN_HI}' THEN 'train'\n"
+        f"                  WHEN {hx} < '{_VAL_HI}' THEN 'val'\n"
+        "                  ELSE 'test' END AS split"
+    )
+
+
+_DD_SPLIT = dd_hash_split()
 
 
 @register(
@@ -54,9 +68,7 @@ def hash_split(id_col: str = "doc_id") -> F.Column:
     f"""
     WITH s AS (
       SELECT lang, n_chars,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split
+             {_DD_SPLIT}
       FROM documents
     )
     SELECT lang, split, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -160,9 +172,7 @@ def _ngram_split_frame(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH s AS (
       SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split,
+             {_DD_SPLIT},
              list_distinct({_SH8_DD}) AS sh
       FROM documents
     ), tr AS (SELECT doc_id, unnest(sh) AS g FROM s WHERE split = 'train'),
@@ -206,9 +216,7 @@ def decontaminate_ngram(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH s AS (
       SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split,
+             {_DD_SPLIT},
              list_distinct({_SH8_DD}) AS sh
       FROM documents
     ), te AS (SELECT doc_id, sh FROM s WHERE split = 'test' AND len(sh) > 0),
@@ -314,11 +322,7 @@ _CELL_QUOTA = 20
     ), ad AS (
       SELECT e.vec_id, c.cid, c.cn2 - 2 * list_dot_product(e.emb, c.cemb) AS d
       FROM e CROSS JOIN c
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), r AS (
+    ), {_dd_cell_assign("vec_id, cid", "cid")}, r AS (
       SELECT vec_id, cid, row_number() OVER (
         PARTITION BY cid ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS pick
       FROM assign
@@ -539,9 +543,7 @@ _B_POS_DD = [
 _B_SPLIT_DD = f"""
     s AS (
       SELECT doc_id,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split,
+             {_DD_SPLIT},
              list_distinct({_SH8_DD}) AS sh
       FROM documents
     ),
@@ -1065,9 +1067,7 @@ _SEMDECON_TAU = 0.4
     f"""
     WITH e AS (
       SELECT vec_id, embedding AS emb,
-             CASE WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split
+             {dd_hash_split("vec_id")}
       FROM embeddings
     )
     SELECT te.vec_id AS test_vec, tr.vec_id AS train_vec

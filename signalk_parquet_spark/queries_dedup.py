@@ -553,8 +553,11 @@ def dedup_levenshtein(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # --- near-dup clustering: connected components over the pair relation -------------
-def _dd_cc_sql() -> str:
-    return f"""
+#: the near-dup pair screen and its connected-components closure (the
+#: recursive `reach`), ending in `rep(doc_id, cluster_rep)`: the
+#: min-label component of every doc in some pair — the shared prefix of
+#: the cluster and keep-list oracles
+_DD_CC_REP = f"""
     WITH RECURSIVE d AS (
       SELECT doc_id, lang, CAST(floor(length(text) / 20) AS BIGINT) AS len_bucket,
              {_HSHINGLES_DD} AS sh
@@ -575,7 +578,11 @@ def _dd_cc_sql() -> str:
     ), rep AS (
       SELECT node AS doc_id, min(label) AS cluster_rep FROM reach GROUP BY node
     )
-    SELECT doc_id, cluster_rep,
+    """
+
+
+def _dd_cc_sql() -> str:
+    return f"""{_DD_CC_REP}SELECT doc_id, cluster_rep,
            count(*) OVER (PARTITION BY cluster_rep) AS cluster_size
     FROM rep
     """
@@ -601,28 +608,7 @@ def _cc_labels(spark: SparkSession, sf: str) -> DataFrame:
 
 # --- corpus keep-list: the dedup pipeline's end product ---------------------------
 def _dd_keep_sql() -> str:
-    return f"""
-    WITH RECURSIVE d AS (
-      SELECT doc_id, lang, CAST(floor(length(text) / 20) AS BIGINT) AS len_bucket,
-             {_HSHINGLES_DD} AS sh
-      FROM documents
-    ), e AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM d a JOIN d b
-        ON a.lang = b.lang AND a.len_bucket BETWEEN b.len_bucket - 1 AND b.len_bucket + 1
-           AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
-    ), sym AS (
-      SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e
-    ), reach(node, label) AS (
-      SELECT src AS node, src AS label FROM sym
-      UNION
-      SELECT s.src AS node, r.label AS label FROM sym s JOIN reach r ON r.node = s.dst
-    ), rep AS (
-      SELECT node AS doc_id, min(label) AS cluster_rep FROM reach GROUP BY node
-    )
-    SELECT doc.doc_id AS id,
+    return f"""{_DD_CC_REP}SELECT doc.doc_id AS id,
            COALESCE(rep.cluster_rep, doc.doc_id) AS cluster_rep,
            (rep.cluster_rep IS NULL OR rep.cluster_rep = doc.doc_id) AS kept
     FROM documents doc LEFT JOIN rep ON rep.doc_id = doc.doc_id
@@ -630,9 +616,7 @@ def _dd_keep_sql() -> str:
 
 
 def _dd_keep_longest_sql() -> str:
-    base = _dd_keep_sql()
-    core = base[: base.index("SELECT doc.doc_id")]
-    return f"""{core.rstrip()}, lbl AS (
+    return f"""{_DD_CC_REP.rstrip()}, lbl AS (
       SELECT doc.doc_id, COALESCE(rep.cluster_rep, doc.doc_id) AS cluster_rep, doc.n_chars
       FROM documents doc LEFT JOIN rep ON rep.doc_id = doc.doc_id
     ), pick AS (
@@ -789,6 +773,56 @@ def dedup_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# --- the stride coarse quantizer's oracle CTEs ---------------------------------------
+# Every cell-blocked oracle (SemDeDup here; ann_ivf, cluster_balanced_sample,
+# ann_ivfpq, curation_diverse) composes these. They live in this module
+# because it registers first, so the later gate modules import them without
+# reordering the registry.
+def _dd_cell_assign(cols: str, cid: str) -> str:
+    """`assign` CTE: each vector's nearest cell in `ad(vec_id, d, cid)`,
+    (d, cell id) ordered — the argmin tie-break of the operators' cell
+    assignment."""
+    return f"""assign AS (
+      SELECT {cols} FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, {cid}) AS rn FROM ad
+      ) WHERE rn = 1
+    )"""
+
+
+def _dd_stride_cells(
+    stride: int,
+    assign: str = "vec_id, emb, cid",
+    *,
+    carry_emb: bool = True,
+    scan: str = "",
+    c: str = "c",
+    cid: str = "cid",
+) -> str:
+    """`c`/`ad`/`assign` CTEs over an `e(vec_id, emb)` CTE: centroids are
+    the vectors with vec_id % stride == 0, d = c·c - 2 e·c (ad keeps e.emb
+    when ``carry_emb``; ``scan`` filters it), ``assign`` selects its
+    columns. ``c``/``cid`` name the centroid CTE and its id column."""
+    ad = f"e.vec_id, e.emb, {c}.{cid}" if carry_emb else f"e.vec_id, {c}.{cid}"
+    return f"""{c} AS (
+      SELECT vec_id AS {cid}, emb AS cemb FROM e WHERE vec_id % {stride} = 0
+    ), ad AS (
+      SELECT {ad},
+             list_dot_product({c}.cemb, {c}.cemb) - 2 * list_dot_product(e.emb, {c}.cemb) AS d
+      FROM e CROSS JOIN {c}{scan}
+    ), {_dd_cell_assign(assign, cid)}"""
+
+
+def _dd_cell_probe(cols: str, n_query: int, n_probe: int, cid: str) -> str:
+    """`probe` CTE over `ad`: each query's (vec_id < n_query) n_probe
+    nearest cells, ``cols`` selected."""
+    return f"""probe AS (
+      SELECT {cols} FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, {cid}) AS rn
+        FROM ad WHERE vec_id < {n_query}
+      ) WHERE rn <= {n_probe}
+    )"""
+
+
 _SEM_TAU = 0.4  # drops 30/27/151 docs at sf0.001/0.01/0.1 — real signal at every SF
 _SEM_STRIDE = 125  # stride quantizer: 4 cells at 500 vecs, 16 at 2k (SQL-expressible)
 
@@ -798,17 +832,7 @@ _SEM_STRIDE = 125  # stride quantizer: 4 cells at 500 vecs, 16 at 2k (SQL-expres
     f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id % {_SEM_STRIDE} = 0
-    ), ad AS (
-      SELECT e.vec_id, e.emb, c.cid,
-             list_dot_product(c.cemb, c.cemb) - 2 * list_dot_product(e.emb, c.cemb) AS d
-      FROM e CROSS JOIN c
-    ), assign AS (
-      SELECT vec_id, emb, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), dropped AS (
+    ), {_dd_stride_cells(_SEM_STRIDE)}, dropped AS (
       SELECT DISTINCT b.vec_id FROM assign a JOIN assign b
         ON a.cid = b.cid AND a.vec_id < b.vec_id
       WHERE list_dot_product(a.emb, b.emb)
@@ -852,17 +876,7 @@ _SEM_SLICE = 300  # recall-evaluation slice: all true pairs among vec_id < 300
     f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id % {_SEM_STRIDE} = 0
-    ), ad AS (
-      SELECT e.vec_id, e.emb, c.cid,
-             list_dot_product(c.cemb, c.cemb) - 2 * list_dot_product(e.emb, c.cemb) AS d
-      FROM e CROSS JOIN c WHERE e.vec_id < {_SEM_SLICE}
-    ), assign AS (
-      SELECT vec_id, emb, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), tp AS (
+    ), {_dd_stride_cells(_SEM_STRIDE, scan=f" WHERE e.vec_id < {_SEM_SLICE}")}, tp AS (
       SELECT a.cid = b.cid AS captured
       FROM assign a JOIN assign b ON a.vec_id < b.vec_id
       WHERE list_dot_product(a.emb, b.emb)

@@ -19,54 +19,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries_pq import _QV_DD, _SUBDOT
+from .queries_dedup import _dd_cell_probe, _dd_stride_cells
+from .queries_pq import _QV_DD, _SUBDOT, _dd_pq_codes
+from .queries_similarity import _NQ, _TOPK, _dd_recall_sql, _dd_topk_tail
 from .registry import load, register
 
 _CELL_STRIDE = 125  # coarse cells: the IVF/SemDeDup stride-quantizer contract
 _CODE_STRIDE = 10  # PQ codebook: the pq_recall/SCALE-ladder K=50 contract
 _NPROBE = 2
 _NSUB = 4
-_NQ = 20
-_TOPK = 5
 
 
 def _dd_ivfpq_sql() -> str:
-    d_expr = f"c.cc - 2 * {_SUBDOT.format(a='s.sv', b='c.cv')}"
+    cells = _dd_stride_cells(
+        _CELL_STRIDE, "vec_id, ccid AS cell", carry_emb=False, c="cc", cid="ccid"
+    )
+    probe = _dd_cell_probe("vec_id AS query_id, ccid AS cell", _NQ, _NPROBE, "ccid")
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
              {_QV_DD} AS qv
       FROM embeddings
-    ), cc AS (
-      SELECT vec_id AS ccid, emb AS cemb FROM e WHERE vec_id % {_CELL_STRIDE} = 0
-    ), ad AS (
-      SELECT e.vec_id, cc.ccid,
-             list_dot_product(cc.cemb, cc.cemb) - 2 * list_dot_product(e.emb, cc.cemb) AS d
-      FROM e CROSS JOIN cc
-    ), assign AS (
-      SELECT vec_id, ccid AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, ccid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT vec_id AS query_id, ccid AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, ccid) AS rn
-        FROM ad WHERE vec_id < {_NQ}
-      ) WHERE rn <= {_NPROBE}
-    ), ms AS (SELECT unnest([{", ".join(str(m) for m in range(_NSUB))}]) AS m),
-    sub AS (
-      SELECT e.vec_id, ms.m, array_slice(e.qv, ms.m*16+1, ms.m*16+16) AS sv
-      FROM e CROSS JOIN ms
-    ), cw AS (
-      SELECT vec_id AS cid, m, sv AS cv,
-             {_SUBDOT.format(a="sv", b="sv")} AS cc
-      FROM sub WHERE vec_id % {_CODE_STRIDE} = 0
-    ), enc AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT s.vec_id, s.m, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY {d_expr}, c.cid) AS rn
-        FROM sub s JOIN cw c USING (m)
-      ) WHERE rn = 1
-    ), qs AS (SELECT vec_id AS query_id, m, sv AS qv FROM sub WHERE vec_id < {_NQ}),
+    ), {cells}, {probe}, {_dd_pq_codes(_CODE_STRIDE, _NSUB)},
     cand AS (
       SELECT p.query_id, a.vec_id AS neighbor_id, a.cell
       FROM probe p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.query_id
@@ -78,45 +52,10 @@ def _dd_ivfpq_sql() -> str:
       JOIN cw c ON c.m = enc.m AND c.cid = enc.cid
       JOIN qs q ON q.m = enc.m AND q.query_id = cand.query_id
       GROUP BY 1, 2, 3
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY pq_score DESC, neighbor_id) AS rank
-      FROM scores
-    )
-    SELECT query_id, neighbor_id, cell, pq_score, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail("pq_score", "scores", "query_id, neighbor_id, cell")}"""
 
 
-def _dd_ivfpq_recall_sql() -> str:
-    from .queries_similarity import _DD_COS
-
-    return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), xq AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
-    xr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round({_DD_COS.replace("eb", "e.emb")}, 4) DESC, e.vec_id
-               ) AS rank
-        FROM xq q JOIN e ON e.vec_id <> q.query_id
-      ) WHERE rank <= {_TOPK}
-    ),
-    ar AS (
-      SELECT query_id, neighbor_id FROM ({_dd_ivfpq_sql()})
-    )
-    SELECT xr.query_id,
-           count(*) AS n_exact,
-           count(ar.neighbor_id) AS n_hit,
-           CAST(count(ar.neighbor_id) AS DOUBLE) / count(*) AS recall
-    FROM xr LEFT JOIN ar
-      ON ar.query_id = xr.query_id AND ar.neighbor_id = xr.neighbor_id
-    GROUP BY xr.query_id
-    """
-
-
-@register("ivfpq_recall", _dd_ivfpq_recall_sql())
+@register("ivfpq_recall", _dd_recall_sql(_dd_ivfpq_sql()))
 def ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Recall@{k} of the composed IVF-PQ rung vs the float-exact top-k —
     closes the honest-evaluation set (every approximate rung now carries a

@@ -15,12 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .queries_similarity import _NQ, _TOPK, _dd_recall_sql, _dd_topk_tail
 from .registry import load, register
 
 _STRIDE = 125  # codewords = embeddings with vec_id % 125 == 0 (the IVF/SemDeDup quantizer contract)
 _NSUB = 4  # subspaces of 16 dims: 64 floats -> 4 small codes (16x vs int8)
-_NQ = 20
-_TOPK = 5
 
 _QV_DD = (
     "list_transform(embedding,"
@@ -29,12 +28,14 @@ _QV_DD = (
 _SUBDOT = "CAST(list_sum(list_transform(range(1,17), i -> {a}[i]*{b}[i])) AS BIGINT)"
 
 
-def _dd_pq_sql(stride: int = _STRIDE) -> str:
+def _dd_pq_codes(stride: int, n_sub: int) -> str:
+    """`ms`/`sub`/`cw`/`enc`/`qs` CTEs over an `e(vec_id, qv)` CTE of int8
+    vectors: 16-wide subvectors, the stride codebook (codewords = vectors
+    with vec_id % stride == 0, with their squared norms `cc`), every
+    subvector's argmin codeword, and the query subvectors — the PQ index
+    both PQ oracles rebuild."""
     d_expr = f"c.cc - 2 * {_SUBDOT.format(a='s.sv', b='c.cv')}"
-    return f"""
-    WITH e AS (
-      SELECT vec_id, {_QV_DD} AS qv FROM embeddings
-    ), ms AS (SELECT unnest([{", ".join(str(m) for m in range(_NSUB))}]) AS m),
+    return f"""ms AS (SELECT unnest([{", ".join(str(m) for m in range(n_sub))}]) AS m),
     sub AS (
       SELECT e.vec_id, ms.m, array_slice(e.qv, ms.m*16+1, ms.m*16+16) AS sv
       FROM e CROSS JOIN ms
@@ -48,19 +49,21 @@ def _dd_pq_sql(stride: int = _STRIDE) -> str:
                row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY {d_expr}, c.cid) AS rn
         FROM sub s JOIN cw c USING (m)
       ) WHERE rn = 1
-    ), qs AS (SELECT vec_id AS query_id, m, sv AS qv FROM sub WHERE vec_id < {_NQ}),
+    ), qs AS (SELECT vec_id AS query_id, m, sv AS qv FROM sub WHERE vec_id < {_NQ})"""
+
+
+def _dd_pq_sql(stride: int = _STRIDE) -> str:
+    return f"""
+    WITH e AS (
+      SELECT vec_id, {_QV_DD} AS qv FROM embeddings
+    ), {_dd_pq_codes(stride, _NSUB)},
     scores AS (
       SELECT q.query_id, enc.vec_id AS neighbor_id,
              CAST(sum({_SUBDOT.format(a="q.qv", b="c.cv")}) AS BIGINT) AS pq_score
       FROM enc JOIN cw c ON c.m = enc.m AND c.cid = enc.cid
       JOIN qs q ON q.m = enc.m AND q.query_id <> enc.vec_id
       GROUP BY 1, 2
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY pq_score DESC, neighbor_id) AS rank
-      FROM scores
-    )
-    SELECT query_id, neighbor_id, pq_score, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail("pq_score", "scores")}"""
 
 
 @register("ann_pq", _dd_pq_sql())
@@ -89,37 +92,7 @@ def ann_pq(spark: SparkSession, sf: str) -> DataFrame:
 _RECALL_STRIDE = 10
 
 
-def _dd_pq_recall_sql() -> str:
-    from .queries_similarity import _DD_COS
-
-    return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), xq AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
-    xr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round({_DD_COS.replace("eb", "e.emb")}, 4) DESC, e.vec_id
-               ) AS rank
-        FROM xq q JOIN e ON e.vec_id <> q.query_id
-      ) WHERE rank <= {_TOPK}
-    ),
-    ar AS (
-      SELECT query_id, neighbor_id FROM ({_dd_pq_sql(_RECALL_STRIDE)})
-    )
-    SELECT xr.query_id,
-           count(*) AS n_exact,
-           count(ar.neighbor_id) AS n_hit,
-           CAST(count(ar.neighbor_id) AS DOUBLE) / count(*) AS recall
-    FROM xr LEFT JOIN ar
-      ON ar.query_id = xr.query_id AND ar.neighbor_id = xr.neighbor_id
-    GROUP BY xr.query_id
-    """
-
-
-@register("pq_recall", _dd_pq_recall_sql())
+@register("pq_recall", _dd_recall_sql(_dd_pq_sql(_RECALL_STRIDE)))
 def pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Recall@{k} of the PQ/ADC rung against the float-exact top-k — the
     last missing rung in the gate-level honest-evaluation set (ann_recall:

@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.vectors import as_double, cosine, dot, hyperplane_bits, make_planes, norm_sq
+from .functions.vectors import as_double, dot, make_planes, norm_sq
 from .memo import MEMO
+from .queries_dedup import _dd_cell_probe, _dd_stride_cells
 from .registry import load, register
 
 # ranked top-k frames shared across similarity gates are memoized in MEMO
@@ -36,9 +37,23 @@ _DD_COS = (
 )
 
 
-@register(
-    "knn_bruteforce",
-    f"""
+def _dd_topk_tail(
+    score: str = "cos4", src: str = "pairs", cols: str = "query_id, neighbor_id"
+) -> str:
+    """The `r` CTE and final SELECT every top-k oracle ends with: rank each
+    query's rows of ``src`` by (``score`` DESC, neighbor_id) and keep the
+    top _TOPK — the operators' rank window in SQL."""
+    return f"""r AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, neighbor_id) AS rank
+      FROM {src}
+    )
+    SELECT {cols}, {score}, rank FROM r WHERE rank <= {_TOPK}
+    """
+
+
+#: exact cosine top-k of the query set: knn_bruteforce's oracle, and
+#: ann_ivf_kmeans's, whose every-cell probe must reproduce it
+_DD_KNN_SQL = f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
     ), q AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
@@ -46,37 +61,55 @@ _DD_COS = (
       SELECT q.query_id, e.vec_id AS neighbor_id,
              round({_DD_COS.replace("eb", "e.emb")} , 4) AS cos4
       FROM q JOIN e ON e.vec_id <> q.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos4 DESC, neighbor_id) AS rank
-      FROM pairs
+    ), {_dd_topk_tail()}"""
+
+
+def _dd_recall_sql(approx_sql: str) -> str:
+    """Recall@k oracle of an approximate top-k query: the exact ranking
+    `xr` left-joined to the approximate one `ar`, grouped per query — the
+    SQL twin of operators.similarity.topk_recall, shared by every recall
+    gate of the ANN ladder."""
+    return f"""
+    WITH e AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
+    ), xq AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
+    xr AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT q.query_id, e.vec_id AS neighbor_id,
+               row_number() OVER (
+                 PARTITION BY q.query_id
+                 ORDER BY round({_DD_COS.replace("eb", "e.emb")}, 4) DESC, e.vec_id
+               ) AS rank
+        FROM xq q JOIN e ON e.vec_id <> q.query_id
+      ) WHERE rank <= {_TOPK}
+    ),
+    ar AS (
+      SELECT query_id, neighbor_id FROM ({approx_sql})
     )
-    SELECT query_id, neighbor_id, cos4, rank FROM r WHERE rank <= {_TOPK}
-    """,
-)
+    SELECT xr.query_id,
+           count(*) AS n_exact,
+           count(ar.neighbor_id) AS n_hit,
+           CAST(count(ar.neighbor_id) AS DOUBLE) / count(*) AS recall
+    FROM xr LEFT JOIN ar
+      ON ar.query_id = xr.query_id AND ar.neighbor_id = xr.neighbor_id
+    GROUP BY xr.query_id
+    """
+
+
+@register("knn_bruteforce", _DD_KNN_SQL)
 def knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set, scan the collection once,
-    rank per query. The big side never shuffles. Norms are precomputed per
-    ROW before the join — computing them per PAIR would triple the inner-loop
-    work (the value is identical, so oracle parity is unaffected). The ranked
-    result is session-memoized: it doubles as the ground truth ann_recall
-    re-reads."""
+    """Exact cosine top-k (operators.similarity.knn_topk): broadcast the
+    query set, scan the collection once, rank per query. The big side never
+    shuffles; norms are precomputed per ROW before the join. The ranked
+    result is session-memoized: it doubles as the ground truth every recall
+    gate re-reads."""
+    from .operators.similarity import knn_topk
 
     def build() -> DataFrame:
-        e = load(spark, sf, "embeddings").select(
-            "vec_id", as_double("embedding").alias("emb")
-        ).withColumn("n2", norm_sq(F.col("emb"), _DIM))
-        q = e.filter(F.col("vec_id") < _NQ).select(
-            F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"), F.col("n2").alias("qn2")
-        )
-        pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("qemb"), F.col("emb"), _DIM) / F.sqrt(F.col("qn2") * F.col("n2")), 4
-            ).alias("cos4"),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("cos4").desc(), "neighbor_id")
-        return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= _TOPK)
+        e = load(spark, sf, "embeddings")
+        q = e.filter(F.col("vec_id") < _NQ)
+        out = knn_topk(e, q, "vec_id", "embedding", k=_TOPK, dim=_DIM)
+        return out.withColumnRenamed("cos", "cos4")
 
     return MEMO.get_or_build(spark, f"knn_topk|{sf}", build)
 
@@ -104,37 +137,22 @@ def _dd_ann_sql() -> str:
       SELECT q.query_id, b.vec_id AS neighbor_id,
              round({_DD_COS.replace("eb", "b.emb")}, 4) AS cos4
       FROM q JOIN b ON b.bucket = q.bucket AND b.vec_id <> q.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos4 DESC, neighbor_id) AS rank
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, cos4, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail()}"""
 
 
 @register("ann_lsh_bucketed", _dd_ann_sql())
 def ann_lsh_bucketed(spark: SparkSession, sf: str) -> DataFrame:
-    """ANN via random-hyperplane LSH: 8 integer-weight hyperplanes → 256
-    buckets → candidates share the query's bucket (equality join replaces the
-    full scan) → exact cosine re-rank. Integer plane weights make every
-    bucket bit an exact-arithmetic sign test — deterministic across engines."""
-    e = load(spark, sf, "embeddings").select(
-        "vec_id", as_double("embedding").alias("emb")
-    ).withColumn("n2", norm_sq(F.col("emb"), _DIM))
-    b = e.withColumn("bucket", hyperplane_bits(F.col("emb"), _PLANES))
-    q = b.filter(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-        F.col("n2").alias("qn2"), F.col("bucket"),
-    )
-    pairs = b.join(F.broadcast(q), ["bucket"]).filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qemb"), F.col("emb"), _DIM) / F.sqrt(F.col("qn2") * F.col("n2")), 4
-        ).alias("cos4"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos4").desc(), "neighbor_id")
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= _TOPK)
+    """ANN via random-hyperplane LSH (operators.similarity.ann_topk): 8
+    integer-weight hyperplanes → 256 buckets → candidates share the query's
+    bucket (equality join replaces the full scan) → exact cosine re-rank.
+    Integer plane weights make every bucket bit an exact-arithmetic sign
+    test — deterministic across engines."""
+    from .operators.similarity import ann_topk
+
+    e = load(spark, sf, "embeddings")
+    q = e.filter(F.col("vec_id") < _NQ)
+    out = ann_topk(e, q, "vec_id", "embedding", k=_TOPK, planes=_PLANES, dim=_DIM)
+    return out.withColumnRenamed("cos", "cos4")
 
 
 @register(
@@ -198,10 +216,7 @@ def ann_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     query set as the id-inequality, so the collection side stays one
     map-only scan (no label x label pair list, no shuffle of the big
     side); top-k goes through retrieval.topk_per_key, so the
-    WindowGroupLimit bound holds per query. The operator's
-    ``bucketed=True`` twin swaps the scan for the LSH-bucket equality
-    join when the query set itself is corpus-sized (recall measured with
-    topk_recall, like the ann family's other approximate rungs)."""
+    WindowGroupLimit bound holds per query."""
     from .operators.similarity import hard_negatives
 
     e = load(spark, sf, "embeddings")
@@ -279,12 +294,7 @@ def _dd_multitable_sql() -> str:
       FROM cand c
       JOIN e qe ON qe.vec_id = c.query_id
       JOIN e ne ON ne.vec_id = c.neighbor_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos4 DESC, neighbor_id) AS rank
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, cos4, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail()}"""
 
 
 @register("ann_lsh_multitable", _dd_multitable_sql())
@@ -315,35 +325,7 @@ def ann_lsh_multitable(spark: SparkSession, sf: str) -> DataFrame:
     return MEMO.get_or_build(spark, f"mt_topk|{sf}", build)
 
 
-def _dd_recall_sql() -> str:
-    return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), xq AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
-    xr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round({_DD_COS.replace("eb", "e.emb")}, 4) DESC, e.vec_id
-               ) AS rank
-        FROM xq q JOIN e ON e.vec_id <> q.query_id
-      ) WHERE rank <= {_TOPK}
-    ),
-    ar AS (
-      SELECT query_id, neighbor_id FROM ({_dd_multitable_sql()})
-    )
-    SELECT xr.query_id,
-           count(*) AS n_exact,
-           count(ar.neighbor_id) AS n_hit,
-           CAST(count(ar.neighbor_id) AS DOUBLE) / count(*) AS recall
-    FROM xr LEFT JOIN ar
-      ON ar.query_id = xr.query_id AND ar.neighbor_id = xr.neighbor_id
-    GROUP BY xr.query_id
-    """
-
-
-@register("ann_recall", _dd_recall_sql())
+@register("ann_recall", _dd_recall_sql(_dd_multitable_sql()))
 def ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Recall@{k} of the deployed ANN config (multi-table + multiprobe —
     ann_lsh_multitable) against the exact brute-force top-k, per query
@@ -364,36 +346,17 @@ _NPROBE = 3
 
 
 def _dd_ivf_sql() -> str:
+    probe = _dd_cell_probe("vec_id AS query_id, emb AS qemb, cid", _NQ, _NPROBE, "cid")
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id % {_STRIDE} = 0
-    ), ad AS (
-      SELECT e.vec_id, e.emb, c.cid,
-             list_dot_product(c.cemb, c.cemb) - 2 * list_dot_product(e.emb, c.cemb) AS d
-      FROM e CROSS JOIN c
-    ), assign AS (
-      SELECT vec_id, emb, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT vec_id AS query_id, emb AS qemb, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM ad WHERE vec_id < {_NQ}
-      ) WHERE rn <= {_NPROBE}
-    ), pairs AS (
+    ), {_dd_stride_cells(_STRIDE)}, {probe}, pairs AS (
       SELECT p.query_id, a.vec_id AS neighbor_id,
              round(list_dot_product(p.qemb, a.emb)
                    / sqrt(list_dot_product(p.qemb, p.qemb) * list_dot_product(a.emb, a.emb)),
                    4) AS cos4
       FROM probe p JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos4 DESC, neighbor_id) AS rank
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, cos4, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail()}"""
 
 
 @register("ann_ivf", _dd_ivf_sql())
@@ -418,35 +381,7 @@ def ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     return out.withColumnRenamed("cos", "cos4")
 
 
-def _dd_ivf_recall_sql() -> str:
-    return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), xq AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
-    xr AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round({_DD_COS.replace("eb", "e.emb")}, 4) DESC, e.vec_id
-               ) AS rank
-        FROM xq q JOIN e ON e.vec_id <> q.query_id
-      ) WHERE rank <= {_TOPK}
-    ),
-    ar AS (
-      SELECT query_id, neighbor_id FROM ({_dd_ivf_sql()})
-    )
-    SELECT xr.query_id,
-           count(*) AS n_exact,
-           count(ar.neighbor_id) AS n_hit,
-           CAST(count(ar.neighbor_id) AS DOUBLE) / count(*) AS recall
-    FROM xr LEFT JOIN ar
-      ON ar.query_id = xr.query_id AND ar.neighbor_id = xr.neighbor_id
-    GROUP BY xr.query_id
-    """
-
-
-@register("ivf_recall", _dd_ivf_recall_sql())
+@register("ivf_recall", _dd_recall_sql(_dd_ivf_sql()))
 def ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Recall@{k} of the IVF rung against the exact top-k — completes the
     honest-evaluation set (ann_recall covers the LSH rung, this covers
@@ -474,12 +409,7 @@ def _dd_sq_sql() -> str:
              CAST(list_sum(list_transform(range(1, len(qs.qa) + 1),
                                           i -> CAST(qs.qa[i] AS BIGINT) * e.qv[i])) AS BIGINT) AS iscore
       FROM qs JOIN e ON e.vec_id <> qs.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY iscore DESC, neighbor_id) AS rank
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, iscore, rank FROM r WHERE rank <= {_TOPK}
-    """
+    ), {_dd_topk_tail("iscore")}"""
 
 
 @register("ann_scalar_quant", _dd_sq_sql())
@@ -528,23 +458,7 @@ def _kmeans_cents(spark: SparkSession, sf: str) -> DataFrame:
     return MEMO.get_or_build(spark, f"kmeans_cents|{sf}", build)
 
 
-@register(
-    "ann_ivf_kmeans",
-    f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), q AS (SELECT vec_id AS query_id, emb AS ea FROM e WHERE vec_id < {_NQ}),
-    pairs AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             round({_DD_COS.replace("eb", "e.emb")} , 4) AS cos4
-      FROM q JOIN e ON e.vec_id <> q.query_id
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos4 DESC, neighbor_id) AS rank
-      FROM pairs
-    )
-    SELECT query_id, neighbor_id, cos4, rank FROM r WHERE rank <= {_TOPK}
-    """,
-)
+@register("ann_ivf_kmeans", _DD_KNN_SQL)
 def ann_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     """IVF over a LEARNED k-means coarse quantizer (MLlib KMeans — the real
     deployment path SCALE.md documents behind the stride stand-in), run
@@ -610,17 +524,7 @@ _BAL_QUOTA = 40
     f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings
-    ), c AS (
-      SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id % {_STRIDE} = 0
-    ), ad AS (
-      SELECT e.vec_id, c.cid,
-             list_dot_product(c.cemb, c.cemb) - 2 * list_dot_product(e.emb, c.cemb) AS d
-      FROM e CROSS JOIN c
-    ), assign AS (
-      SELECT vec_id, cid, d FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM ad
-      ) WHERE rn = 1
-    ), r AS (
+    ), {_dd_stride_cells(_STRIDE, "vec_id, cid, d", carry_emb=False)}, r AS (
       SELECT cid, vec_id AS id,
              row_number() OVER (PARTITION BY cid ORDER BY d, vec_id) AS rank
       FROM assign

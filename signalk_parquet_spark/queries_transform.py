@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries_curation import _TRAIN_HI, _VAL_HI, hash_split
+from .queries_curation import dd_hash_split, hash_split
 from .registry import load, register
 
 _K = 8  # words per span window (the dedup_substring_spans contract)
@@ -85,9 +85,7 @@ def scrub_duplicate_spans(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH s AS (
       SELECT doc_id, text,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
-                  ELSE 'test' END AS split
+             {dd_hash_split()}
       FROM documents
     ), tr AS (
       SELECT doc_id, string_split(text, ' ') AS w, {_POS_SPANS_DD} AS whs

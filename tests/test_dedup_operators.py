@@ -1188,23 +1188,10 @@ def test_hard_negatives_operator(spark):
     # the same-label near-dup (1 for query 0) is structurally absent
     assert 1 not in by_q[0]
 
-    # bucketed twin: a subset of the exact candidates, and the nearly
-    # parallel different-label vector 2 must share query 0's bucket
-    ann = hard_negatives(
-        emb, q, id_col="vec_id", vec_col="embedding", label_col="label",
-        k=3, dim=4, bucketed=True,
-    ).collect()
-    # different-label contract holds in bucketed mode too
-    labels = {nid: lb for nid, _, lb in rows}
-    qlabels = {0: 0, 1: 0}
-    assert all(labels[r["neighbor_id"]] != qlabels[r["query_id"]] for r in ann)
-    got0 = [r["neighbor_id"] for r in ann if r["query_id"] == 0]
-    assert 2 in got0 and 1 not in got0
-
 
 def test_hard_negatives_plan_shape(spark):
-    """100 TB invariants: query side broadcast (the one sanctioned BNLJ in
-    exact mode), top-k rides the WindowGroupLimit rewrite, no range
+    """100 TB invariants: query side broadcast (the one sanctioned BNLJ),
+    top-k rides the WindowGroupLimit rewrite, no range
     exchange, nothing row-at-a-time."""
     from signalk_parquet_spark.operators.similarity import hard_negatives
 
@@ -1219,13 +1206,6 @@ def test_hard_negatives_plan_shape(spark):
     assert "rangepartitioning" not in plan
     assert "batchevalpython" not in plan
     assert plan.count("broadcastnestedloopjoin") <= 1
-    # bucketed mode trades the BNLJ for a bucket equi-join
-    bplan = (
-        hard_negatives(emb, q, "vec_id", "embedding", "label", k=5, dim=4, bucketed=True)
-        ._jdf.queryExecution().executedPlan().toString().lower()
-    )
-    assert "broadcastnestedloopjoin" not in bplan
-    assert "broadcasthashjoin" in bplan
 
 
 def _py_containment(rows, t, n=3):

@@ -1,10 +1,20 @@
-"""The driver JVM's flags: the C1-only JIT default and its one override."""
+"""Session defaults: the core count, and the driver JVM's flags (the
+C1-only JIT default and its one override)."""
 
 from __future__ import annotations
 
 import pytest
 
 from signalk_parquet_spark import session
+
+
+def test_default_cpus_is_usable_cores_unless_overridden(monkeypatch):
+    import os
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert session.default_cpus() == "32"
 
 
 def test_driver_java_opts_default_and_override(monkeypatch):

@@ -106,6 +106,9 @@ def compute_fingerprints(sf_dir: str = _FP_SF) -> dict[str, str]:
 
     from signalk_parquet_spark.session import get_spark
 
+    # the manifest embeds defaultParallelism (87 gate plans carry it), so
+    # it is computed at local[32] on every host
+    os.environ["SPARK_GRAFT_CPUS"] = "32"
     spark = get_spark("gate-fingerprints")
     qs, oracles = registry.queries(), registry.oracle_sql()
     out: dict[str, str] = {}
